@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.{ScaledCorpus, Session}
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall times, plus an ingest
@@ -36,177 +38,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Shuffle parallelism must scale with DATA, not stay pinned at core
-      // count: the r9 10x scale check showed a plan whose per-task shuffle
-      // state was fine at sf0.1 crossing spill thresholds at 10x under a
-      // fixed 32 partitions. AQE starts every shuffle at cpus*8 partitions
-      // and coalesces small ones back down, so sf0.1 keeps ~cpu-count
-      // effective partitions while a 10x input spreads across 8x more
-      // tasks — the local-mode analog of letting partition count follow
-      // input bytes on a cluster.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The generated-class cache defaults to 100 entries; a 101-query
-      // suite holds several codegen stages per query, so by the time the
-      // late composites run the cache has been evicted end-to-end and
-      // EVERY run pays janino recompilation for every stage (~0.1-0.3s
-      // each). q99 measured 4.2s on both suite runs vs 1.6s steady-state
-      // in a fresh JVM — the delta was recompilation, not the plan. Size
-      // the cache to hold the whole suite, as a long-lived production
-      // session would.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
+    warmup(spark, sfDir, "bench")
 
-    /** Materialize: fold every output column into one hash-sum so the
-      * whole projection is computed, shuffled, and reduced.
-      */
-    def run(df: org.apache.spark.sql.DataFrame): Unit = {
-      val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-    }
-
-    // Warm the session at the smallest SF (class loading, codegen compiler,
-    // shuffle infra) so per-query timings reflect steady-state throughput —
-    // the reference's own eval treats the first query as warmup
-    // (eval/results/last.json: max 4285 ms "first query incl. warmup").
-    // The warmup dir derives from the bench dir (its sf0.001 sibling when
-    // present, or SPARK_GRAFT_WARM_DIR) instead of a hardcoded absolute
-    // path, and a skipped warmup is LOGGED: silently regaining cold-JIT
-    // skew is exactly what the isolation check exists to catch (r8).
-    warmupDir(sfDir) match {
-      case Some(wd) =>
-        try SparkEntry.queries.take(3).foreach { case (_, fn) => run(fn(spark, wd)) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
-      case None =>
-        System.err.println(s"[bench] warmup SKIPPED: no sf0.001 sibling of " +
-          s"$sfDir and SPARK_GRAFT_WARM_DIR unset — first-query timings " +
-          "will carry cold-JIT cost")
-    }
-
-    // write-time ANN indexing for this sfDir (probe queries then only scan
-    // the probed partitions). Each build is timed INDIVIDUALLY so the
-    // artifact itemizes where write-time cost goes, and one failed build
-    // doesn't silently void the rest of the block.
-    val buildDetail = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def build(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { f; true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] index build $name FAILED: " +
-            e.getMessage.linesIterator.nextOption().getOrElse(""))
-          false
-        }
-      buildDetail(name) = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
-    build("vector_ivf") {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      graft.sources.VectorStore.ensure(
-        spark, emb.filter(col("vec_id") =!= 0), "embedding", sfDir)
-    }
-    build("vector_pq") {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      graft.sources.VectorStore.ensurePq(
-        spark, emb.filter(col("vec_id") =!= 0), "embedding", sfDir)
-    }
-    // quality-classifier coefficients are a write-time artifact too
-    // (q67 serves the stored literals; training = index build)
-    build("quality_model") {
-      graft.operators.QualityModel.ensure(
-        spark, spark.read.parquet(s"$sfDir/documents.parquet"), sfDir)
-    }
-    // the corpus text index (q68) and MinHash band store (q96/q99
-    // probe the persisted corpus fingerprints) are the same class of
-    // write-time artifact: production ingests build them once; the
-    // timed queries measure SERVE. Same docsWide frame as the catalog
-    // so the manifest stamp matches and the queries reuse the build.
-    build("text_index") {
-      val docsW = graft.core.Tables.fanOut(
-        graft.core.Tables(spark, sfDir, "documents"))
-      graft.sources.TextIndex.ensure(spark, docsW, "doc_id", "text", sfDir)
-    }
-    build("band_store") {
-      val docsW = graft.core.Tables.fanOut(
-        graft.core.Tables(spark, sfDir, "documents"))
-      graft.sources.BandStore.ensure(spark, docsW, "doc_id", "text", sfDir)
-    }
-    // near-dup cluster-label table (q85/q99/q108/q117/q118/q126/q143/q147
-    // serve the persisted labels): the MinHash→verify→CC pass is
-    // publish-time work — the r16 top cost tier moved here
-    build("cluster_store") {
-      val docsW = graft.core.Tables.fanOut(
-        graft.core.Tables(spark, sfDir, "documents"))
-      graft.sources.ClusterStore.ensure(spark, docsW, "doc_id", "text",
-        sfDir, graft.sources.BandStore.ensure(spark, docsW, "doc_id",
-          "text", sfDir))
-    }
-    // frame vector store (q104): same write-time class
-    build("frame_store") {
-      graft.queries.PipelineCatalog.ensureFrameStore(spark, sfDir)
-    }
-    // dropzone skip ledger (q105): the two micro-batch ingests are
-    // write-time stream work; the timed query reads the accumulated
-    // ledger (r12 — q105 was 10.3 s with the builds in its timed path)
-    build("dz_ledger") {
-      graft.queries.IngestCatalog.ensureDzLedger(spark, sfDir)
-    }
-    // incremental text/IVF/PQ artifacts (q77/q78/q79) and the streaming
-    // dropzone stores (q87/q89/q90/q97 serve from them): the SAME
-    // write-time class, previously hydrated inside the first timed run —
-    // q87's run-1 carried a ~41 s gen-store build that min-of-2 silently
-    // discarded (r13 verdict #1). Production ingests build these at write
-    // time exactly like the stores above; the suite times SERVE.
-    build("inc_text_index") {
-      graft.queries.PipelineCatalog.q77EnsureIncremental(spark, sfDir)
-    }
-    build("inc_vector_ivf") {
-      graft.queries.PipelineCatalog.q78EnsureIncremental(spark, sfDir)
-    }
-    build("inc_vector_pq") {
-      graft.queries.PipelineCatalog.q79EnsureIncremental(spark, sfDir)
-    }
-    build("stream_stores") {
-      graft.queries.PipelineCatalog.q87EnsureStreaming(spark, sfDir)
-    }
-    // BPE merge induction (q120/q124/q129 serve from the memoized
-    // chain): a production pipeline trains the tokenizer once at write
-    // time; without this hoist the training would ride q120's first
-    // timed run and min-of-2 would discard it (the r13 #1 class)
-    build("bpe_merges") {
-      graft.queries.PipelineCatalog.ensureBpe(spark, sfDir)
-    }
-    build("bpe_merges_v2") {
-      graft.queries.PipelineCatalog.ensureBpeV2(spark, sfDir)
-    }
-    // loader manifest (q142/q146 serve from the persisted store): the
-    // packing fold is shard-publish-time work, same hoist rationale
-    build("loader_manifest") {
-      graft.queries.PipelineCatalog.ensureManifest(spark, sfDir)
-    }
-    build("inc_manifest") {
-      graft.queries.PipelineCatalog.q149EnsureIncremental(spark, sfDir)
-    }
-    build("stream_manifest") {
-      graft.queries.PipelineCatalog.q150EnsureStreaming(spark, sfDir)
-    }
-    build("inc_clusters") {
-      graft.queries.PipelineCatalog.q154EnsureIncremental(spark, sfDir)
-    }
-    build("stream_clusters") {
-      graft.queries.PipelineCatalog.q155EnsureStreaming(spark, sfDir)
-    }
+    val buildDetail = buildStores(spark, sfDir)
     val indexBuild =
       if (buildDetail.values.forall(_ < 0)) -1.0
       else buildDetail.values.filter(_ >= 0).sum
@@ -246,7 +82,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def timeOnce(): Double = {
         val t0 = System.nanoTime()
-        run(fn(spark, sfDir))
+        Session.materialize(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
       val gc0 = gcMillis()
@@ -289,27 +125,27 @@ object Bench {
     // identical code (r6 judge measured 4.25M then 8.44M chars/s
     // back-to-back), which let the one headline throughput figure
     // "regress" or "improve" by luck.
+    def ingestPass(docs: DataFrame): Double = {
+      val t0 = System.nanoTime()
+      docs.select(col("doc_id"),
+          posexplode(graft.operators.Chunker.chunkTextCol(col("text"), 800, 100))
+            .as(Seq("idx", "chunk")))
+        .withColumn("vector", graft.operators.DevEmbed.devEmbed(col("chunk"), 64))
+        .select(count(lit(1)), sum(element_at(col("vector"), 1))).head()
+      (System.nanoTime() - t0) / 1e9
+    }
     val ingestTp =
       try {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         val totalChars = docs.agg(sum(length(col("text")))).head().getLong(0)
-        def ingestOnce(): Double = {
-          val t0 = System.nanoTime()
-          docs.select(col("doc_id"),
-              posexplode(graft.operators.Chunker.chunkTextCol(col("text"), 800, 100))
-                .as(Seq("idx", "chunk")))
-            .withColumn("vector", graft.operators.DevEmbed.devEmbed(col("chunk"), 64))
-            .select(count(lit(1)), sum(element_at(col("vector"), 1))).head()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val a = ingestOnce()
+        val a = ingestPass(docs)
         cooldown()
-        val b = ingestOnce()
+        val b = ingestPass(docs)
         cooldown()
         // third pass, same rationale as the adaptive query policy: this is
         // the block's widest-spread figure (r10 cold runs: 5.5-11 M
         // chars/s on identical code) and it is the ONE headline throughput
-        val c = ingestOnce()
+        val c = ingestPass(docs)
         totalChars / Seq(a, b, c).min
       } catch { case _: Throwable => -1.0 }
 
@@ -385,11 +221,11 @@ object Bench {
           .localCheckpoint()
         case class SkewRun(secs: Double, maxMs: Long, medMs: Long,
             maxRows: Long, medRows: Long)
-        def measure(df: org.apache.spark.sql.DataFrame): SkewRun = {
+        def measure(df: DataFrame): SkewRun = {
           tasks.synchronized(tasks.clear())
           spark.sparkContext.addSparkListener(listener)
           val t0 = System.nanoTime()
-          run(df)
+          Session.materialize(df)
           val secs = (System.nanoTime() - t0) / 1e9
           Thread.sleep(500) // let the listener bus drain
           spark.sparkContext.removeSparkListener(listener)
@@ -427,7 +263,7 @@ object Bench {
           s"""{"rows":${nReal * k + hotRows},"hot_fraction":0.30,""" +
             s""""plain":${vj(plain)},"aqe":${vj(aqe)},"salted":${vj(salted)}}"""
         } finally {
-          conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+          conf.set("spark.sql.autoBroadcastJoinThreshold", Session.BroadcastThresholdBytes.toString)
           conf.set("spark.sql.adaptive.enabled", "true")
           conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "false")
           conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256MB")
@@ -455,7 +291,7 @@ object Bench {
     // Done-bar (r10 prescription): salted keeps max task ≤ 4× its stage
     // median on time AND rows; the window row_ratio proves the stress.
     val spanSkew: String =
-      try graft.tools.SpanSkewStress.json(spark, sfDir, run)
+      try graft.tools.SpanSkewStress.json(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] span skew stress failed: ${e.getMessage}")
         "null"
@@ -464,75 +300,22 @@ object Bench {
     val suiteByName = results.map(r => r._1 -> r._2).toMap
 
     // sf~1 scale spot-check (r8 Next #3): every scale claim so far is
-    // extrapolated from sf0.1; this measures it. Build a REPSx corpus by
-    // unioning REPS letter-permuted replicas of the documents table
-    // (translate() with a per-replica alphabet permutation keeps every
-    // char count, line length and within-replica duplicate structure
-    // identical while making shingle sets across replicas disjoint — a
-    // plain copy would weld each doc into a REPS-clique of near-dups and
-    // quadratically explode pair outputs, measuring a different workload,
-    // not a bigger one). The 8 heaviest lineages run twice each (min-of-2,
-    // same as the suite, so one-time artifact builds don't masquerade as
-    // per-query cost); ratio = scaled/suite against the suite's own min.
-    // Super-linear red flag = ratio well above REPS (the judge bar: ~15x
-    // at REPS=10). A wall-clock budget bounds the whole block so a
-    // pathological lineage can't eat the bench run — anything unvisited
-    // is reported in "skipped", never silently dropped.
-    // REPSx letter-permuted corpus under /tmp, manifest-gated — factored
-    // by reps so the scale check can measure TWO scale points (a curve
-    // separates fixed cost from growth slope; one ratio cannot).
-    def ensureScaledCorpus(reps: Int): (String, Double) = {
-      val srcDocs = new java.io.File(s"$sfDir/documents.parquet")
-      val sig = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${srcDocs.getAbsolutePath}#scale$reps".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft-scale-$sig")
-      val mfPath = java.nio.file.Paths.get(dir.toString, "_graft_manifest.json")
-      val expected = {
-        val stamp = graft.sources.GenStore.sourceStamp(srcDocs)
-        s"""{"source_stamp":"$stamp","reps":$reps,"scenario":"scale-v1"}"""
-      }
-      val genT0 = System.nanoTime()
-      if (!(java.nio.file.Files.exists(mfPath) &&
-          java.nio.file.Files.readString(mfPath) == expected)) {
-        if (dir.exists()) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir.toPath).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-        }
-        java.nio.file.Files.createDirectories(dir.toPath)
-        graft.core.Tables.names.filter(_ != "documents").foreach { n =>
-          java.nio.file.Files.createSymbolicLink(
-            java.nio.file.Paths.get(dir.toString, s"$n.parquet"),
-            java.nio.file.Paths.get(s"$sfDir/$n.parquet"))
-        }
-        val docs = spark.read.parquet(srcDocs.toString)
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-        val alpha = "abcdefghijklmnopqrstuvwxyz"
-        // deterministic per-replica permutation (LCG-seeded Fisher-Yates)
-        def perm(rep: Int): String = {
-          val a = alpha.toCharArray
-          var x = rep.toLong * 2654435761L + 1013904223L
-          for (i <- a.length - 1 to 1 by -1) {
-            x = (x * 6364136223846793005L + 1442695040888963407L) & Long.MaxValue
-            val j = (x % (i + 1)).toInt
-            val t = a(i); a(i) = a(j); a(j) = t
-          }
-          new String(a)
-        }
-        val scaled = (0 until reps).map { r =>
-          val base = docs.withColumn("doc_id", col("doc_id") + lit(r.toLong * maxId))
-          if (r == 0) base
-          else {
-            val p = perm(r)
-            base.withColumn("text", translate(col("text"),
-              alpha + alpha.toUpperCase, p + p.toUpperCase))
-          }
-        }.reduce(_ unionByName _)
-        scaled.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        java.nio.file.Files.writeString(mfPath, expected)
-      }
-      (dir.toString, (System.nanoTime() - genT0) / 1e9)
+    // extrapolated from sf0.1; this measures it on the REPSx
+    // letter-permuted corpus ([[ScaledCorpus]]). The 8 heaviest lineages
+    // run twice each (min-of-2, same as the suite, so one-time artifact
+    // builds don't masquerade as per-query cost); ratio = scaled/suite
+    // against the suite's own min. Super-linear red flag = ratio well
+    // above REPS (the judge bar: ~15x at REPS=10). A wall-clock budget
+    // bounds the whole block so a pathological lineage can't eat the
+    // bench run — anything unvisited is reported in "skipped", never
+    // silently dropped. The corpus is factored by reps so the scale check
+    // can measure TWO scale points (a curve separates fixed cost from
+    // growth slope; one ratio cannot). Returns (dir, generation seconds;
+    // ~0 when the corpus already exists).
+    def scaledCorpus(reps: Int): (String, Double) = {
+      val t0 = System.nanoTime()
+      val dir = ScaledCorpus.ensure(spark, sfDir, reps)
+      (dir, (System.nanoTime() - t0) / 1e9)
     }
 
     // Lineages whose FIRST scaled run constructs a persisted artifact for
@@ -563,7 +346,7 @@ object Bench {
               else {
                 if (i > 1) cooldown() // same hygiene as the suite between reps
                 val t0 = System.nanoTime()
-                run(SparkEntry.queries(name)(spark, dirPath))
+                Session.materialize(SparkEntry.queries(name)(spark, dirPath))
                 Some((System.nanoTime() - t0) / 1e9)
               }
             }
@@ -602,7 +385,7 @@ object Bench {
       else try {
         val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "10").toInt
         val budgetSec = sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET_SEC", "1500").toDouble
-        val (dirPath, genSec) = ensureScaledCorpus(reps)
+        val (dirPath, genSec) = scaledCorpus(reps)
         scaleDir10 = Some(dirPath)
         val deadline = System.nanoTime() + (budgetSec * 1e9).toLong
         // Cheap lineages first so their ratios are banked before the
@@ -626,16 +409,7 @@ object Bench {
           else try {
             val docs = spark.read.parquet(s"$dirPath/documents.parquet")
             val chars = docs.agg(sum(length(col("text")))).head().getLong(0)
-            val runs = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              docs.select(col("doc_id"),
-                  posexplode(graft.operators.Chunker.chunkTextCol(col("text"), 800, 100))
-                    .as(Seq("idx", "chunk")))
-                .withColumn("vector", graft.operators.DevEmbed.devEmbed(col("chunk"), 64))
-                .select(count(lit(1)), sum(element_at(col("vector"), 1))).head()
-              val t = (System.nanoTime() - t0) / 1e9
-              cooldown(); t
-            }
+            val runs = (1 to 2).map { _ => val t = ingestPass(docs); cooldown(); t }
             val tp = chars / runs.min
             val tpRatio = if (ingestTp > 0 && tp > 0) ingestTp / tp else -1.0
             Some(f"""\"ingest\":{"suite_chars_per_sec":$ingestTp,"scaled_chars_per_sec":$tp,""" +
@@ -653,7 +427,7 @@ object Bench {
           if (reps2 <= 0 || reps2 >= reps) None
           else if (System.nanoTime() > deadline) { skipped ::= "curve"; None }
           else try {
-            val (dir2, gen2) = ensureScaledCorpus(reps2)
+            val (dir2, gen2) = scaledCorpus(reps2)
             val (e2, sk2) = scaleEntries(dir2,
               Seq("q88_span_removal", "q96_inc_near_dup",
                 "q107_sequence_packing", "q120_bpe_merges"), deadline,
@@ -682,7 +456,7 @@ object Bench {
           if (reps3 <= reps) None
           else if (System.nanoTime() > deadline) { skipped ::= "curve30"; None }
           else try {
-            val (dir3, gen3) = ensureScaledCorpus(reps3)
+            val (dir3, gen3) = scaledCorpus(reps3)
             val (e3, sk3) = scaleEntries(dir3,
               Seq("q88_span_removal", "q96_inc_near_dup", "q85_dedup_apply",
                 "q107_sequence_packing", "q112_packed_manifest",
@@ -716,7 +490,7 @@ object Bench {
           else if ((deadline - System.nanoTime()) / 1e9 < minHeadroomSec) {
             skipped ::= "curve100"; None
           } else try {
-            val (dir4, gen4) = ensureScaledCorpus(reps4)
+            val (dir4, gen4) = scaledCorpus(reps4)
             val (e4, sk4) = scaleEntries(dir4,
               Seq("q96_inc_near_dup", "q85_dedup_apply",
                 "q107_sequence_packing", "q112_packed_manifest",
@@ -774,42 +548,18 @@ object Bench {
       .filterNot(failed.contains)
     val (isolated: Seq[(String, Double)], scaleRecheck: String,
         reDrawJson: String) = {
-      val s2 = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          (cpus.toInt * 8).toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .getOrCreate()
-      s2.sparkContext.setLogLevel("WARN")
-      def run2(df: org.apache.spark.sql.DataFrame): Unit = {
-        val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-        df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-      }
-      warmupDir(sfDir) match {
-        case Some(wd) =>
-          try SparkEntry.queries.take(3).foreach { case (_, fn) => run2(fn(s2, wd)) }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] isolated warmup failed: ${e.getMessage}") }
-        case None =>
-          System.err.println("[bench] isolated warmup SKIPPED: no warmup " +
-            "dir — isolated numbers may carry cold-JIT cost (r8 mode)")
-      }
-      val out = sampleNames.map { name =>
-        val t = try {
+      // fresh-context min-of-2 of one query; -1 when it fails
+      def bestOf2(s: SparkSession, name: String, dir: String): Double =
+        try {
           (1 to 2).map { _ =>
             val t0 = System.nanoTime()
-            run2(SparkEntry.queries(name)(s2, sfDir))
+            Session.materialize(SparkEntry.queries(name)(s, dir))
             (System.nanoTime() - t0) / 1e9
           }.min
         } catch { case _: Throwable => -1.0 }
-        name -> t
-      }
+      val s2 = Session.local(cpus)
+      warmup(s2, sfDir, "bench isolated")
+      val out = sampleNames.map(name => name -> bestOf2(s2, name, sfDir))
       // Re-measure the WORST scaled entry in this fresh context (same
       // discipline as the suite's isolation sample): the r9 scaled
       // numbers showed 4x in-suite spread on identical plans — a scaled
@@ -821,13 +571,7 @@ object Bench {
         (name, suite, scaled) <- scaleMeasured
           .filter(_._2 > 0).sortBy(e => e._3 / e._2).lastOption
       } yield {
-        val iso = try {
-          (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            run2(SparkEntry.queries(name)(s2, dir10))
-            (System.nanoTime() - t0) / 1e9
-          }.min
-        } catch { case _: Throwable => -1.0 }
+        val iso = bestOf2(s2, name, dir10)
         val agree = if (iso > 0 && scaled > 0)
           math.max(iso, scaled) / math.min(iso, scaled) else -1.0
         f"""{"name":"$name","suite_sec":$suite,"scaled_sec":$scaled,""" +
@@ -851,36 +595,11 @@ object Bench {
         (name, isoT)
       }
       val reDraw = if (offendersHere.isEmpty) Seq.empty[String] else {
-        val s3 = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            (cpus.toInt * 8).toString)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.sql.codegen.cache.maxEntries", "5000")
-          .getOrCreate()
-        s3.sparkContext.setLogLevel("WARN")
-        def run3(df: org.apache.spark.sql.DataFrame): Unit = {
-          val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-          df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-        }
-        warmupDir(sfDir).foreach { wd =>
-          try SparkEntry.queries.take(3).foreach { case (_, fn) => run3(fn(s3, wd)) }
-          catch { case _: Throwable => }
-        }
+        val s3 = Session.local(cpus)
+        warmup(s3, sfDir, "bench re-draw")
         val rows = offendersHere.map { case (name, isoT) =>
           val suite = suiteByName(name)
-          val t = try {
-            (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              run3(SparkEntry.queries(name)(s3, sfDir))
-              (System.nanoTime() - t0) / 1e9
-            }.min
-          } catch { case _: Throwable => -1.0 }
+          val t = bestOf2(s3, name, sfDir)
           val verdict =
             if (t < 0) "unmeasured"
             else if (t <= 2.0 * math.max(isoT, 0.5)) "ambient"
@@ -1020,5 +739,144 @@ object Bench {
         System.err.println(s"[bench] sidecar write $p failed: ${e.getMessage}") }
     }
     println(summaryLine)
+  }
+
+  /** Warm `spark` at the warmup dir (class loading, codegen compiler,
+    * shuffle infra) so per-query timings reflect steady-state throughput —
+    * the reference's own eval treats the first query as warmup
+    * (eval/results/last.json: max 4285 ms "first query incl. warmup").
+    * The warmup dir derives from the bench dir (its sf0.001 sibling when
+    * present, or SPARK_GRAFT_WARM_DIR) instead of a hardcoded absolute
+    * path, and a skipped warmup is LOGGED: silently regaining cold-JIT
+    * skew is exactly what the isolation check exists to catch (r8).
+    */
+  def warmup(spark: SparkSession, sfDir: String, tag: String): Unit =
+    warmupDir(sfDir) match {
+      case Some(wd) =>
+        try SparkEntry.queries.take(3).foreach { case (_, fn) =>
+          Session.materialize(fn(spark, wd)) }
+        catch { case e: Throwable =>
+          System.err.println(s"[$tag] warmup failed: ${e.getMessage}") }
+      case None =>
+        System.err.println(s"[$tag] warmup SKIPPED: no sf0.001 sibling of " +
+          s"$sfDir and SPARK_GRAFT_WARM_DIR unset — first-query timings " +
+          "will carry cold-JIT cost")
+    }
+
+  /** Every write-time store build for `sfDir`, each timed INDIVIDUALLY
+    * (seconds; -1 for a failed build, logged) so the artifact itemizes
+    * where write-time cost goes, and one failed build doesn't silently
+    * void the rest. Probe queries then only scan the probed partitions.
+    */
+  def buildStores(spark: SparkSession, sfDir: String): collection.Map[String, Double] = {
+    val buildDetail = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def build(name: String)(f: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      val ok =
+        try { f; true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] index build $name FAILED: " +
+            e.getMessage.linesIterator.nextOption().getOrElse(""))
+          false
+        }
+      buildDetail(name) = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+    }
+    build("vector_ivf") {
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      graft.sources.VectorStore.ensure(
+        spark, emb.filter(col("vec_id") =!= 0), "embedding", sfDir)
+    }
+    build("vector_pq") {
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      graft.sources.VectorStore.ensurePq(
+        spark, emb.filter(col("vec_id") =!= 0), "embedding", sfDir)
+    }
+    // quality-classifier coefficients are a write-time artifact too
+    // (q67 serves the stored literals; training = index build)
+    build("quality_model") {
+      graft.operators.QualityModel.ensure(
+        spark, spark.read.parquet(s"$sfDir/documents.parquet"), sfDir)
+    }
+    // the corpus text index (q68) and MinHash band store (q96/q99
+    // probe the persisted corpus fingerprints) are the same class of
+    // write-time artifact: production ingests build them once; the
+    // timed queries measure SERVE. Same docsWide frame as the catalog
+    // so the manifest stamp matches and the queries reuse the build.
+    build("text_index") {
+      val docsW = graft.core.Tables.fanOut(
+        graft.core.Tables(spark, sfDir, "documents"))
+      graft.sources.TextIndex.ensure(spark, docsW, "doc_id", "text", sfDir)
+    }
+    build("band_store") {
+      val docsW = graft.core.Tables.fanOut(
+        graft.core.Tables(spark, sfDir, "documents"))
+      graft.sources.BandStore.ensure(spark, docsW, "doc_id", "text", sfDir)
+    }
+    // near-dup cluster-label table (q85/q99/q108/q117/q118/q126/q143/q147
+    // serve the persisted labels): the MinHash→verify→CC pass is
+    // publish-time work — the r16 top cost tier moved here
+    build("cluster_store") {
+      val docsW = graft.core.Tables.fanOut(
+        graft.core.Tables(spark, sfDir, "documents"))
+      graft.sources.ClusterStore.ensure(spark, docsW, "doc_id", "text",
+        sfDir, graft.sources.BandStore.ensure(spark, docsW, "doc_id",
+          "text", sfDir))
+    }
+    // frame vector store (q104): same write-time class
+    build("frame_store") {
+      graft.queries.PipelineCatalog.ensureFrameStore(spark, sfDir)
+    }
+    // dropzone skip ledger (q105): the two micro-batch ingests are
+    // write-time stream work; the timed query reads the accumulated
+    // ledger (r12 — q105 was 10.3 s with the builds in its timed path)
+    build("dz_ledger") {
+      graft.queries.IngestCatalog.ensureDzLedger(spark, sfDir)
+    }
+    // incremental text/IVF/PQ artifacts (q77/q78/q79) and the streaming
+    // dropzone stores (q87/q89/q90/q97 serve from them): the SAME
+    // write-time class, previously hydrated inside the first timed run —
+    // q87's run-1 carried a ~41 s gen-store build that min-of-2 silently
+    // discarded (r13 verdict #1). Production ingests build these at write
+    // time exactly like the stores above; the suite times SERVE.
+    build("inc_text_index") {
+      graft.queries.PipelineCatalog.q77EnsureIncremental(spark, sfDir)
+    }
+    build("inc_vector_ivf") {
+      graft.queries.PipelineCatalog.q78EnsureIncremental(spark, sfDir)
+    }
+    build("inc_vector_pq") {
+      graft.queries.PipelineCatalog.q79EnsureIncremental(spark, sfDir)
+    }
+    build("stream_stores") {
+      graft.queries.PipelineCatalog.q87EnsureStreaming(spark, sfDir)
+    }
+    // BPE merge induction (q120/q124/q129 serve from the memoized
+    // chain): a production pipeline trains the tokenizer once at write
+    // time; without this hoist the training would ride q120's first
+    // timed run and min-of-2 would discard it (the r13 #1 class)
+    build("bpe_merges") {
+      graft.queries.PipelineCatalog.ensureBpe(spark, sfDir)
+    }
+    build("bpe_merges_v2") {
+      graft.queries.PipelineCatalog.ensureBpeV2(spark, sfDir)
+    }
+    // loader manifest (q142/q146 serve from the persisted store): the
+    // packing fold is shard-publish-time work, same hoist rationale
+    build("loader_manifest") {
+      graft.queries.PipelineCatalog.ensureManifest(spark, sfDir)
+    }
+    build("inc_manifest") {
+      graft.queries.PipelineCatalog.q149EnsureIncremental(spark, sfDir)
+    }
+    build("stream_manifest") {
+      graft.queries.PipelineCatalog.q150EnsureStreaming(spark, sfDir)
+    }
+    build("inc_clusters") {
+      graft.queries.PipelineCatalog.q154EnsureIncremental(spark, sfDir)
+    }
+    build("stream_clusters") {
+      graft.queries.PipelineCatalog.q155EnsureStreaming(spark, sfDir)
+    }
+    buildDetail
   }
 }

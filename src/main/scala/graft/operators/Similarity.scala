@@ -226,30 +226,22 @@ object Similarity {
   /** Shared tail of the curve forms: explode each scored row (carrying
     * its rank under `rankCol`) to every tier in `tiers` at or above that
     * rank, then one [[SearchOps.reduceTopKPerQuery]] keyed by the
-    * composite (tier, query) — the per-tier result is row-identical to
-    * reducing each tier's filtered subset separately (same candidate
-    * sets, same (score DESC, id ASC) tie-break).
+    * composite struct(tier, query_id) — the per-tier result is
+    * row-identical to reducing each tier's filtered subset separately
+    * (same candidate sets, same (score DESC, id ASC) tie-break), for any
+    * query id type.
     */
-  private def curveReduce(scored: DataFrame, rankCol: String,
+  private[graft] def curveReduce(scored: DataFrame, rankCol: String,
       tiers: Seq[Int], k: Int, tierCol: String): DataFrame = {
-    // the composite heap key is concat_ws("#", tier, query_id): a STRING
-    // query id containing '#' could collide across tiers ("1#2#x" is tier 1
-    // of "2#x" and tier 12 of "x" read greedily) — guard the latent case
-    // instead of leaving it to silent wrong answers (r17 advice)
-    require(!scored.schema("query_id").dataType
-      .isInstanceOf[org.apache.spark.sql.types.StringType],
-      "curveReduce: string query_id could collide with the '#' tier " +
-        "separator; use a numeric query id")
     val tierArr = array(tiers.sorted.map(lit): _*)
     val exploded = scored
       .withColumn(tierCol,
         explode(filter(tierArr, p => p >= col(rankCol))))
       .drop(rankCol)
-      .withColumn("__qid", col("query_id"))
       .withColumn("query_id",
-        concat_ws("#", col(tierCol), col("query_id")))
+        struct(col(tierCol).as("tier"), col("query_id").as("id")))
     graft.operators.SearchOps.reduceTopKPerQuery(exploded, k, idCol = "vec_id")
-      .withColumn("query_id", col("__qid")).drop("__qid")
+      .withColumn("query_id", col("query_id.id"))
   }
 
   /** PQ search: ADC candidate generation over the CODES table (m bytes per

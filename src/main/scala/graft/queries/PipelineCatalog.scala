@@ -2,7 +2,7 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -5266,7 +5266,17 @@ object PipelineCatalog {
   // structured ChatExport rows, not the formatted text.
   // -------------------------------------------------------------------------
 
-  private val ChatTurnRe = "^\\[[^\\]]+\\] (user|assistant): "
+  private[graft] val ChatTurnRe = "^\\[[^\\]]+\\] (user|assistant): "
+
+  /** q114's role of a chat line from its whole [[ChatTurnRe]] match
+    * (`regexp_extract(line, ChatTurnRe, 0)`, see q114): a null match — a
+    * null line — stays null instead of falling through to "assistant".
+    */
+  private[graft] def chatTurnRole(m: Column): Column =
+    when(m.isNull, lit(null).cast("string"))
+      .when(m === "", lit(""))
+      .when(m.endsWith("user: "), lit("user"))
+      .otherwise(lit("assistant"))
 
   val q114SftMask: Q = (s, d) => {
     // ONE regex execution per line instead of two (r17 verdict #6): the
@@ -5283,9 +5293,7 @@ object PipelineCatalog {
         posexplode(split(col("text"), "\n\n")).as(Seq("turn_idx", "line")))
       .withColumn("__m", regexp_extract(col("line"), ChatTurnRe, 0))
       .select(col("conv_id"), col("turn_idx"),
-        when(col("__m") === "", lit(""))
-          .when(col("__m").endsWith("user: "), lit("user"))
-          .otherwise(lit("assistant")).as("role"),
+        chatTurnRole(col("__m")).as("role"),
         col("line").substr(length(col("__m")) + 1, length(col("line")))
           .as("content"))
       .withColumn("n_tok",

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** Diagnostic: BPE induction wall-time vs merge depth (r14 verdict Next
   * #1 — "prove the tokenizer family past K=6"). Builds the Heaps-bounded
@@ -96,16 +97,7 @@ object BpeDepth {
       println(s"""{"metric":"bpe_depth","sf":"synth:$n","n_words":${table.length},"n_init_symbols":$nSyms,"table_build_collect_ms":${f"$genMs%.1f"},"depths":[${rows.mkString(",")}]}""")
       return
     }
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val t0 = System.nanoTime()
     val w0 = graft.queries.PipelineCatalog.bpeWordTable(spark, sfDir)

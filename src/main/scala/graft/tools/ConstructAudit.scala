@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Plan-construction eagerness audit (r12): the r11 verdict caught
   * q88/q99 running a full `docs.count()` job every time their lineage
@@ -101,15 +101,7 @@ object ConstructAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
 
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** Diagnostic: materialize a HIGH-DUP synthetic corpus — every doc_id
   * divisible by `mod` is re-published byte-identically at an offset id
@@ -17,15 +18,7 @@ object HighDupDraw {
     val src = args(0)
     val out = args(1)
     val mod = if (args.length > 2) args(2).toLong else 3L
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val dir = new java.io.File(out)
     if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
     java.nio.file.Files.createDirectories(dir.toPath)

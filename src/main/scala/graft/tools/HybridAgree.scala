@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Measurement: rank agreement of the store-served approximate hybrid
   * (q151 — IVF dense arm × TextIndex sparse arm × RRF) against the exact
@@ -16,16 +16,7 @@ import org.apache.spark.sql.SparkSession
 object HybridAgree {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     def ranked(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.collect().map(_.getLong(0)).toSeq
     val exact = ranked(graft.SparkEntry.queries("q61_hybrid_rrf")(spark, sfDir))

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
+import graft.core.Session.materialize
 
 /** Component-level timing for the incremental/streaming near-dup probes
   * (q96/q97/q127) — attributes their serve cost across store read, batch
@@ -14,25 +16,7 @@ object ProbeProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def mat(df: DataFrame): Unit = {
-      val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-    }
+    val spark = Session.local()
     def time(label: String)(f: => Unit): Unit = {
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -43,7 +27,7 @@ object ProbeProfile {
     val docs = graft.core.Tables.fanOut(
       graft.core.Tables(spark, sfDir, "documents"))
     // warmup: one full pass of each kernel class
-    mat(docs.select(col("doc_id"),
+    materialize(docs.select(col("doc_id"),
       graft.functions.BandMinhash.bandMinhash(
         graft.operators.WordShingles.wordShingles(col("text")), 32, 8).as("b")))
 
@@ -53,13 +37,13 @@ object ProbeProfile {
       when(pmod(col("doc_id"), lit(4)) === 0, concat(col("text"), lit(" v2")))
         .otherwise(array_join(reverse(split(trim(col("text")), " ")), " "))
         .as("text"))
-    time("q96 store.rows read")(mat(store.rows))
-    time("q96 batch fingerprint")(mat(graft.sources.BandStore.bandRows(
+    time("q96 store.rows read")(materialize(store.rows))
+    time("q96 batch fingerprint")(materialize(graft.sources.BandStore.bandRows(
       batch96, "doc_id", "text", 32, 8)))
     time("q96 candidates (eager probe)") {
       graft.operators.Dedup.nearDupCandidates(batch96, store, "doc_id", "text").count()
     }
-    time("q96 full incrementalNearDup")(mat(
+    time("q96 full incrementalNearDup")(materialize(
       graft.operators.Dedup.incrementalNearDuplicates(
         batch96, docs, store, "doc_id", "text", threshold = 0.5)))
 
@@ -72,13 +56,13 @@ object ProbeProfile {
       when(pmod(col("doc_id"), lit(4)) === 0, concat(col("text"), lit(" v2")))
         .otherwise(array_join(reverse(split(trim(col("text")), " ")), " "))
         .as("text"))
-    time("q97 store.rows read")(mat(store97.rows))
-    time("q97 batch fingerprint")(mat(graft.sources.BandStore.bandRows(
+    time("q97 store.rows read")(materialize(store97.rows))
+    time("q97 batch fingerprint")(materialize(graft.sources.BandStore.bandRows(
       batch97, "doc", "text", 32, 8)))
     time("q97 candidates (eager probe)") {
       graft.operators.Dedup.nearDupCandidates(batch97, store97, "doc", "text").count()
     }
-    time("q97 full incrementalNearDup")(mat(
+    time("q97 full incrementalNearDup")(materialize(
       graft.operators.Dedup.incrementalNearDuplicates(
         batch97, corpus97, store97, "doc", "text", threshold = 0.5)))
 
@@ -90,9 +74,9 @@ object ProbeProfile {
         .when(cls === 1, concat(col("text"), lit(" v2")))
         .otherwise(array_join(reverse(split(trim(col("text")), " ")), " "))
         .as("text"))
-    time("q127 corpus sig distinct")(mat(
+    time("q127 corpus sig distinct")(materialize(
       docs.select(sha2(col("text"), 256).as("sig")).distinct()))
-    time("q127 dump sigs + semijoin")(mat(
+    time("q127 dump sigs + semijoin")(materialize(
       dump.select(col("doc_id"), sha2(col("text"), 256).as("sig"))
         .join(docs.select(sha2(col("text"), 256).as("sig")).distinct(),
           Seq("sig"), "left_semi")))
@@ -100,7 +84,7 @@ object ProbeProfile {
       graft.operators.Dedup.incrementalNearDuplicates(dump, docs, store,
         "doc_id", "text", threshold = 0.5).count()
     }
-    time("q127 token counts over dump")(mat(
+    time("q127 token counts over dump")(materialize(
       dump.select(col("source"),
         size(graft.operators.TextAnalytics.tokens(col("text"))).cast("long")
           .as("n_tok"))))

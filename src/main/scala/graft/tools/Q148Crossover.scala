@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** Measurement (r16 verdict Next #6): q148's per-OCCURRENCE apply_bpe map
   * vs the distinct-word-JOIN rewrite, on a corpus with a chosen
@@ -26,17 +28,7 @@ object Q148Crossover {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 5
     val depth = if (args.length > 2) args(2).toInt else 6
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val merges: IndexedSeq[(String, String)] =
       if (depth <= 6) {
         val (_, bests) = graft.queries.PipelineCatalog.bpeChainForAudit(spark, sfDir)
@@ -89,9 +81,7 @@ object Q148Crossover {
     def time(mk: => DataFrame): Double = {
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        val df = mk
-        df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
-          .agg(expr("bit_xor(h)")).head()
+        Session.materialize(mk)
         (System.nanoTime() - t0) / 1e9
       }
       ts.min

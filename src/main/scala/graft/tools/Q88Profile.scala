@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.core.{ScaledCorpus, Session}
 
 /** Task-granularity profile of q88's 30x scale curve (r13 prescription #5).
   *
@@ -15,6 +14,8 @@ import org.apache.spark.sql.functions._
   * loadavg, not reproducible).
   *
   * Usage: runMain graft.tools.Q88Profile [reps] [scaleDir]
+  * (scaleDir defaults to the 30x [[ScaledCorpus]] of SPARK_GRAFT_SF_DIR,
+  * built when absent.)
   * Output: one JSON line per run + a summary line.
   */
 object Q88Profile {
@@ -25,32 +26,8 @@ object Q88Profile {
   def main(args: Array[String]): Unit = {
     val reps = if (args.length > 0) args(0).toInt else 5
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val scaleDir = if (args.length > 1) args(1) else {
-      // same signature scheme as Bench.ensureScaledCorpus at reps=30
-      val srcDocs = new java.io.File(s"$baseDir/documents.parquet")
-      val sig = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${srcDocs.getAbsolutePath}#scale30".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-scale-$sig").toString
-    }
-    require(new java.io.File(s"$scaleDir/documents.parquet").exists(),
-      s"no 30x corpus at $scaleDir — run Bench once to generate it")
+    val spark = Session.local()
+    val scaleDir = args.lift(1).getOrElse(ScaledCorpus.ensure(spark, baseDir, 30))
 
     val tasks = scala.collection.mutable
       .ArrayBuffer.empty[(Int, Long, Long, Long, Long)]
@@ -68,10 +45,6 @@ object Q88Profile {
         }
     }
 
-    def run(df: org.apache.spark.sql.DataFrame): Unit = {
-      val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-    }
     def loadAvg(): Double =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
@@ -86,7 +59,7 @@ object Q88Profile {
       tasks.synchronized(tasks.clear())
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      run(graft.SparkEntry.queries("q88_span_removal")(spark, dir))
+      Session.materialize(graft.SparkEntry.queries("q88_span_removal")(spark, dir))
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500)
       spark.sparkContext.removeSparkListener(listener)

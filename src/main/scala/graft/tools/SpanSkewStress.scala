@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.Curation
 
 /** Hot-CLASS stress for the q88/q99 span-removal keeper step (r11,
@@ -31,8 +32,7 @@ object SpanSkewStress {
   final case class SkewRun(secs: Double, maxMs: Long, medMs: Long,
       maxRows: Long, medRows: Long)
 
-  def json(spark: SparkSession, sfDir: String,
-      materialize: DataFrame => Unit): String = {
+  def json(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val tasks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     val listener = new SparkListener {
@@ -71,7 +71,7 @@ object SpanSkewStress {
       tasks.synchronized(tasks.clear())
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      materialize(df)
+      Session.materialize(df)
       val secs = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
@@ -119,7 +119,7 @@ object SpanSkewStress {
         s""""window":${vj(window)},"window_aqe":${vj(windowAqe)},""" +
         s""""salted":${vj(salted)}}"""
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+      conf.set("spark.sql.autoBroadcastJoinThreshold", Session.BroadcastThresholdBytes.toString)
       conf.set("spark.sql.adaptive.enabled", "true")
       conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "false")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256MB")
@@ -130,20 +130,8 @@ object SpanSkewStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def materialize(df: DataFrame): Unit = {
-      val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-    }
-    println(json(spark, sfDir, materialize))
+    val spark = Session.local()
+    println(json(spark, sfDir))
     spark.stop()
   }
 }

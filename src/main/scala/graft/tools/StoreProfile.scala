@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.core.Session
 
 /** Fixed-cost profiler for the GenStore-backed serving lineages (r8 Wrong
   * #3: q89/q90/q97/q88/q85 regressed ~0.7-1.1 s vs r7 after the GenStore
@@ -20,46 +19,14 @@ object StoreProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep session knobs aligned with Bench/QueryTime — a profile taken
-      // under a different partition/codegen config can't explain a bench
-      // number (the confound this tool exists to rule out)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def run(df: org.apache.spark.sql.DataFrame): Unit = {
-      val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-    }
-    // same warmup as Bench — derived from sfDir, skip LOGGED, not silent
-    graft.Bench.warmupDir(sfDir) match {
-      case Some(wd) =>
-        try graft.SparkEntry.queries.take(3).foreach { case (_, fn) =>
-          run(fn(spark, wd))
-        } catch { case e: Throwable =>
-          System.err.println(s"[profile] warmup failed: ${e.getMessage}") }
-      case None =>
-        System.err.println("[profile] warmup SKIPPED: no sf0.001 sibling " +
-          s"of $sfDir and SPARK_GRAFT_WARM_DIR unset")
-    }
+    val spark = Session.local()
+    graft.Bench.warmup(spark, sfDir, "profile")
 
     val names = Seq("q89_stream_ivf", "q90_stream_pq", "q97_stream_near_dup",
       "q88_span_removal", "q85_dedup_apply")
 
     // pre-ensure all artifacts so every timed run is serve-only
-    names.foreach { n => try run(graft.SparkEntry.queries(n)(spark, sfDir))
+    names.foreach { n => try Session.materialize(graft.SparkEntry.queries(n)(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"ensure $n: ${e.getMessage}") } }
 
     final case class Job(id: Int, t0: Long, var sec: Double, desc: String)
@@ -85,7 +52,7 @@ object StoreProfile {
           spark.sparkContext.addSparkListener(listener)
         }
         val t0 = System.nanoTime()
-        run(fn(spark, sfDir))
+        Session.materialize(fn(spark, sfDir))
         val sec = (System.nanoTime() - t0) / 1e9
         if (profiled) {
           Thread.sleep(300)

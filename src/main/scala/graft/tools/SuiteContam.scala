@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** Diagnostic: is the late-suite inflation of heavy queries (q97 3.4 s
   * in-suite vs 0.5 s steady-state, r10) SparkContext state or JVM state?
@@ -13,39 +14,22 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.SuiteContam <probe> [sfDir] [nWarm]
   */
 object SuiteContam {
-  private def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      (cpus.toInt * 8).toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.codegen.cache.maxEntries", "5000")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = {
     val probe = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val nWarm = if (args.length > 2) args(2).toInt else 40
-    val cpus = Runtime.getRuntime.availableProcessors().toString
 
     // construction inside the timer, matching Bench (see QueryTime note)
     def run(s: SparkSession, name: String): Double = {
       val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(s, sfDir)
-      val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
+      Session.materialize(graft.SparkEntry.queries(name)(s, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
     def cool(s: SparkSession): Unit = {
       s.catalog.clearCache(); System.gc(); System.gc(); Thread.sleep(200)
     }
 
-    var spark = session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    var spark = Session.local()
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filterNot(Set(probe, "q18_jaccard_pairs", "q28_embedding_near_dup"))
       .take(nWarm)
@@ -59,8 +43,7 @@ object SuiteContam {
       inSession.map(t => f"$t%.2f").mkString(" "))
 
     spark.stop()
-    spark = session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    spark = Session.local()
     val afterRestart = (1 to 2).map { _ => cool(spark); run(spark, probe) }
     println(f"[contam] $probe after context RESTART (same JVM): " +
       afterRestart.map(t => f"$t%.2f").mkString(" "))

@@ -656,6 +656,21 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("q114 role: a null line gives a null role, not \"assistant\"") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val lines = Seq(Some("[2024-01-01] user: hi"), Some("[t] assistant: yo"),
+      Some("no header"), Some(""), None).toDF("line")
+    val roles = lines.select(col("line"), graft.queries.PipelineCatalog.chatTurnRole(
+        regexp_extract(col("line"), graft.queries.PipelineCatalog.ChatTurnRe, 0)))
+      .collect().map(r => Option(r.getString(0)) -> Option(r.getString(1))).toMap
+    assert(roles == Map(
+      Some("[2024-01-01] user: hi") -> Some("user"),
+      Some("[t] assistant: yo") -> Some("assistant"),
+      Some("no header") -> Some(""), Some("") -> Some(""),
+      None -> None))
+  }
+
   test("packed manifest: cut-exact docs and a zero-fill tail (crafted corpus)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -1391,6 +1406,33 @@ class QueriesSpec extends AnyFunSuite {
     assert(mean(1) <= mean(2) + 1e-9 && mean(2) <= mean(4) + 1e-9 &&
       mean(4) <= mean(8) + 1e-9,
       s"mean recall not monotone in nProbe: $mean")
+  }
+
+  test("curve reduction keys on (tier, query): string ids with '#' match per-tier reduction") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // string ids, some holding '#' (the old composite key's separator)
+    val qids = Seq("x", "2#x", "1#2#x", "12#x")
+    val scored = (for {
+      (q, qi) <- qids.zipWithIndex
+      v <- 0L until 40L
+    } yield (q, v, ((v * 7 + qi * 13) % 17) / 17.0, (v % 13 + 1).toInt))
+      .toDF("query_id", "vec_id", "score", "__rank")
+    val tiers = Seq(1, 2, 12)
+    val k = 3
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("tier"), col("query_id"), col("vec_id"), col("rank"))
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getInt(3)))
+        .toSet
+    val curve = rows(graft.operators.Similarity.curveReduce(
+      scored, "__rank", tiers, k, "tier"))
+    val perTier = tiers.map { t =>
+      rows(graft.operators.SearchOps.reduceTopKPerQuery(
+          scored.filter(col("__rank") <= t).drop("__rank"), k, idCol = "vec_id")
+        .withColumn("tier", lit(t)))
+    }.reduce(_ ++ _)
+    assert(curve == perTier)
+    assert(curve.size == tiers.size * qids.size * k)
   }
 
   test("q122: curve is monotone in the threshold; greedy savings lower-bound q85's CC drops") {
