@@ -311,11 +311,14 @@ object SearchOps {
       .agg(count(lit(1)).as("tf"))
     val df = postings.groupBy(col("term"))
       .agg(countDistinct(col("doc")).as("df"))
-    bm25Formula(tf, df, stats, k1, b)
+    bm25Formula(tf.join(broadcast(df), Seq("term")).crossJoin(broadcast(stats)),
+      col("n"), col("avgdl"), k1, b)
   }
 
-  /** Okapi scoring tail shared by the inline and indexed paths:
-    * `(doc, dl, term, tf)` × broadcast `(term, df)` × broadcast stats.
+  /** Okapi scoring tail shared by the inline and indexed paths over
+    * `(doc, dl, term, tf, df)` rows, with the corpus stats `n` and `avgdl`
+    * as columns (the inline path's data-derived stats) or literals (the
+    * index's exact-integer stats) — the same formula either way.
     * The per-doc total folds the 2-3 per-term scores in term order
     * (float addition is non-associative and sum()'s partial-aggregation
     * order follows partitioning) so it is bit-stable across runs AND
@@ -323,15 +326,14 @@ object SearchOps {
     * 6dp-grid boundary flake. The array is |query terms|-sized;
     * interpreted HOF cost is nil.
     */
-  private def bm25Formula(tf: DataFrame, dfT: DataFrame, stats: DataFrame,
+  private def bm25Formula(tfDf: DataFrame, n: Column, avgdl: Column,
       k1: Double, b: Double): DataFrame =
-    tf.join(broadcast(dfT), Seq("term"))
-      .crossJoin(broadcast(stats))
+    tfDf
       .withColumn("idf",
-        log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+        log(lit(1.0) + (n - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
       .withColumn("score_t",
         col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl") / col("avgdl")))))
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl") / avgdl))))
       .groupBy(col("doc"))
       .agg(aggregate(
         sort_array(collect_list(struct(col("term"), col("score_t")))),
@@ -340,27 +342,26 @@ object SearchOps {
 
   /** BM25 over the persisted [[graft.sources.TextIndex]] — the SERVING
     * path: literal query terms map to their portable term-hash buckets in
-    * the JVM, so the postings and df scans carry `term_bucket IN (…)`
-    * partition filters (source-level pruning: ≤|terms| of 64 partitions
-    * read) plus a `term IN (…)` pushed filter that parquet row-group
-    * min/max stats resolve against the in-partition term sort. Corpus
-    * stats come from the index manifest as exact integers. NO scan of the
-    * corpus, NO tokenization, identical scores to [[bm25Scores]] (same
-    * formula, same fold order, avgdl derived by the same single double
-    * division).
+    * the JVM, and only those buckets' postings directories are opened
+    * (≤|terms| of 64 per generation), with a `term IN (…)` pushed filter
+    * that parquet row-group min/max stats resolve against the
+    * in-partition term sort. One pass: df is the distinct-doc count over
+    * the same live tf rows (a window by term), and the corpus stats are
+    * literals from the index's exact integers. NO scan of the corpus, NO
+    * tokenization, identical scores to [[bm25Scores]] (same formula, same
+    * fold order, avgdl derived by the same single double division).
     */
   def bm25ScoresIndexed(index: graft.sources.TextIndex.Index,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val buckets = terms.map(graft.sources.TextIndex.bucketOf).distinct
-    val tf = index.postings
+    // the opened roots already hold only these buckets; the partition
+    // filter keeps that pruning visible in the plan
+    val tf = index.postingsOfBuckets(buckets)
       .filter(col("term_bucket").isin(buckets: _*) && col("term").isin(terms: _*))
       .select(col("doc"), col("dl"), col("term"), col("tf"))
-    val dfT = index.df
-      .filter(col("term_bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = index.postings.sparkSession.range(1)
-      .select(lit(index.n).as("n"), lit(index.avgdl).as("avgdl"))
-    bm25Formula(tf, dfT, stats, k1, b)
+      .withColumn("df",
+        size(collect_set(col("doc")).over(Window.partitionBy(col("term")))).cast("long"))
+    bm25Formula(tf, lit(index.n), lit(index.avgdl), k1, b)
   }
 
   /** Reciprocal-rank fusion of rankings (`(doc, rank)` frames):
@@ -368,6 +369,11 @@ object SearchOps {
     * combiner, pure rational arithmetic (no score normalization games,
     * deterministic across engines). Docs absent from a ranking simply
     * contribute nothing.
+    *
+    * Contract: each ranking is a limit-bounded top-k list. The union is
+    * reduced on ONE partition, so the fuse runs with no exchange; an
+    * unbounded ranking would funnel through one task (as in
+    * [[boundedRank]]).
     */
   def rrfFuse(rankings: Seq[DataFrame], kRrf: Int = 60): DataFrame =
     rankings.zipWithIndex
@@ -377,6 +383,7 @@ object SearchOps {
             (lit(1.0) / (lit(kRrf.toDouble) + col("rank"))).as("contrib")).as("c"))
       }
       .reduce(_ unionByName _)
+      .coalesce(1)
       .groupBy(col("doc"))
       // same determinism contract as bm25Scores: fold contributions in
       // ranking order (≤ |rankings| elements) rather than sum() in

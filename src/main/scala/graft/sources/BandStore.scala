@@ -91,9 +91,9 @@ object BandStore {
   private def bandsDir(path: String) =
     new java.io.File(GenStore.tableDir(path, "bands"))
 
-  private def liveRows(spark: SparkSession, path: String, rows: DataFrame): DataFrame =
-    GenStore.liveRows(spark, path, rows, rowKey = "c_id", tombCol = "doc",
-      maxGen = GenStore.committedGen(statsPath(path)))
+  private def liveBands(spark: SparkSession, path: String): DataFrame =
+    GenStore.liveTable(spark, path, "bands", rowKey = "c_id", tombCol = "doc",
+      statsPath(path))
 
   def exists(path: String): Boolean =
     GenStore.hasParquetData(bandsDir(path)) ||
@@ -162,9 +162,7 @@ object BandStore {
   def compact(spark: SparkSession, path: String): Unit = {
     val (_, lastBatch) = readStats(path)
     val next = GenStore.epochOf(path) + 1
-    val live = liveRows(spark, path,
-        GenStore.seg(spark, bandsDir(path).toString))
-      .localCheckpoint()
+    val live = liveBands(spark, path).localCheckpoint()
     GenStore.writeTable(live.withColumn("gen", lit(0L)),
       "bh_bucket", Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
     GenStore.setEpoch(path, next)
@@ -181,8 +179,7 @@ object BandStore {
   }
 
   def read(spark: SparkSession, path: String, numHashes: Int, bands: Int): Store =
-    Store(liveRows(spark, path,
-      GenStore.seg(spark, bandsDir(path).toString)), numHashes, bands)
+    Store(liveBands(spark, path), numHashes, bands)
 
   /** Load the store for `docs`, building it if absent/stale — index at
     * ingest: Verify/Bench build once per sfDir, probes only read.

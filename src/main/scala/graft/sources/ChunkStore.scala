@@ -31,8 +31,11 @@ object ChunkStore {
   private def withBucket(chunks: DataFrame, numBuckets: Int): DataFrame =
     chunks.withColumn("doc_bucket", pmod(xxhash64(col("document_id")), lit(numBuckets)))
 
+  /** The stored chunks, opened with the schema of one data file's footer
+    * ([[GenStore.open]]): no schema-inference job, only the file listing.
+    */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    GenStore.open(spark, path)
 
   /** The bucket count is a TABLE property: replace-by-document only works
     * if every writer buckets identically, so the count chosen at creation
@@ -73,8 +76,8 @@ object ChunkStore {
     val keyed = withBucket(docIds.select(col("document_id")).distinct(), n)
     val buckets = keyed.select("doc_bucket").distinct()
       .collect().map(_.getLong(0)) // small: ≤ n values
-    if (buckets.isEmpty) spark.read.parquet(path).limit(0)
-    else spark.read.parquet(path)
+    if (buckets.isEmpty) read(spark, path).limit(0)
+    else read(spark, path)
       .filter(col("doc_bucket").isin(buckets.toIndexedSeq: _*))
       .join(broadcast(keyed.select(col("document_id"))),
         Seq("document_id"), "left_semi")
@@ -116,7 +119,7 @@ object ChunkStore {
       // survivors: rows in affected buckets belonging to OTHER documents;
       // localCheckpoint materializes them so the dynamic overwrite below
       // does not read from the files it replaces.
-      val survivors = spark.read.parquet(path)
+      val survivors = read(spark, path)
         .filter(col("doc_bucket").isin(buckets.toIndexedSeq: _*)) // partition-pruned scan
         .join(docs, Seq("document_id"), "left_anti")
         .localCheckpoint()
@@ -149,7 +152,7 @@ object ChunkStore {
     val buckets = keyed.select("doc_bucket").distinct()
       .collect().map(_.getLong(0)) // small: ≤ n values
     if (buckets.isEmpty) return
-    val survivors = spark.read.parquet(path)
+    val survivors = read(spark, path)
       .filter(col("doc_bucket").isin(buckets.toIndexedSeq: _*))
       .join(keyed.select(col("document_id")), Seq("document_id"), "left_anti")
       .localCheckpoint() // snapshot before overwriting the same buckets
@@ -186,7 +189,7 @@ object ChunkStore {
     */
   def compact(spark: SparkSession, path: String, filesPerBucket: Int = 1): Unit = {
     val buckets = readTableBuckets(spark, path).getOrElse(DefaultBuckets)
-    val all = spark.read.parquet(path).localCheckpoint()
+    val all = read(spark, path).localCheckpoint()
     all
       .repartition(buckets * filesPerBucket, col("doc_bucket"))
       .write.partitionBy("doc_bucket").mode("overwrite")

@@ -195,10 +195,8 @@ object ClusterStore {
   }
 
   private def liveLabels(spark: SparkSession, path: String): DataFrame =
-    GenStore.liveRows(spark, path,
-        GenStore.seg(spark, clustersDir(path).toString),
-        rowKey = "doc_id", tombCol = "doc",
-        maxGen = GenStore.committedGen(statsPath(path)))
+    GenStore.liveTable(spark, path, "clusters",
+        rowKey = "doc_id", tombCol = "doc", statsPath(path))
       .select(col("doc_id"), col("cluster_id"))
 
   /** Serve frame: `(doc_id, cluster_id, is_canonical)` for clustered docs

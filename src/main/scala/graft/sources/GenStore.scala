@@ -61,8 +61,9 @@ object GenStore {
 
   object Probe {
     private val counts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    def inc(op: String): Unit =
-      counts.computeIfAbsent(op, _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+    def inc(op: String): Unit = add(op, 1L)
+    def add(op: String, n: Long): Unit =
+      counts.computeIfAbsent(op, _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(n)
     def reset(): Unit = counts.clear()
     def snapshot(): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
@@ -240,9 +241,10 @@ object GenStore {
     * r11: the empty case writes NO data file at all — only a
     * `_graft_empty.json` sidecar recording the canonical post-partition
     * schema (data columns in order, partition columns last as INT, the
-    * exact shape a partitioned read infers). [[seg]] synthesizes an empty
-    * frame from the sidecar; the first real append lands partitioned as
-    * always and simply shadows the marker.
+    * exact shape a partitioned read infers). [[tableSchema]] falls back to
+    * the sidecar when no data file exists, so the table opens as an empty
+    * frame; the first real append lands partitioned as always and simply
+    * shadows the marker.
     */
   def writeTable(df: org.apache.spark.sql.DataFrame,
       repartitionCol: String, partitionCols: Seq[String],
@@ -294,25 +296,111 @@ object GenStore {
   private def quoteJson(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
+  // ---------------------------------------------------------------------
+  // Store open: the schema from one committed footer, no inference job
+  // ---------------------------------------------------------------------
+  // `spark.read.parquet(dir)` infers the schema with a Spark job that
+  // reads a footer, and every serve paid it per open. The engine writes
+  // every store file through Spark, so each footer carries the exact row
+  // schema under Spark's own key — the same key mergeSchema=false
+  // inference reads. Reading that one footer on the driver and handing
+  // the schema to the reader leaves only the file listing.
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** First data file under `dir` in sorted order, with the `k=v`
+    * partition column names on its path. Hidden names (`_`/`.` prefixed,
+    * Spark's listing rule) are skipped, and so are `gen=N` directories
+    * above `maxGen`: a segment past the committed generation may be torn
+    * by a crash and is never opened.
+    */
+  private def firstDataFile(dir: java.io.File, maxGen: Long): Option[(java.io.File, Seq[String])] = {
+    def walk(f: java.io.File, parts: Seq[String]): Option[(java.io.File, Seq[String])] =
+      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+        .sortBy(_.getName).iterator
+        .map { c =>
+          val name = c.getName
+          if (c.isFile) Option.when(name.endsWith(".parquet"))((c, parts))
+          else name.split("=", 2) match {
+            case Array("gen", g) if g.toLongOption.exists(_ > maxGen) => None
+            case Array(k, _) => walk(c, parts :+ k)
+            case _ => None
+          }
+        }
+        .collectFirst { case Some(hit) => hit }
+    walk(dir, Nil)
+  }
+
+  /** The Spark row schema recorded in one parquet file's footer; a file
+    * without it was not written by this engine and fails loudly.
+    */
+  private def footerSchema(spark: SparkSession, file: java.io.File)
+      : org.apache.spark.sql.types.StructType = {
+    Probe.inc("footer_read")
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toURI), spark.sparkContext.hadoopConfiguration)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val json =
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close()
+    if (json == null)
+      throw new IllegalStateException(s"store file $file has no Spark schema ($SparkSchemaKey)")
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+
+  /** The schema a partitioned read of `dir` infers: the footer schema of
+    * its first committed data file plus the path's partition columns
+    * ([[canonicalSchema]]). A table holding only uncommitted segments
+    * takes the first of those (its rows are gated out anyway); a table
+    * last written empty takes the [[EmptyMarker]]'s recorded schema.
+    */
+  def tableSchema(spark: SparkSession, dir: String,
+      maxGen: Long = Long.MaxValue): Option[org.apache.spark.sql.types.StructType] = {
+    val d = new java.io.File(dir)
+    firstDataFile(d, maxGen).orElse(firstDataFile(d, Long.MaxValue))
+      .map { case (f, parts) => canonicalSchema(footerSchema(spark, f), parts) }
+      .orElse(readSidecar(java.nio.file.Paths.get(dir, EmptyMarker))
+        .flatMap(n => Option(n.get("schema_ddl")).map(_.asText()))
+        .map(org.apache.spark.sql.types.StructType.fromDDL))
+  }
+
+  /** Open a store table with no schema-inference job. */
+  def open(spark: SparkSession, dir: String, maxGen: Long = Long.MaxValue): DataFrame =
+    openRoots(spark, dir, Seq(dir), maxGen)
+
+  /** Open only `roots` (directories at or below `dir`, which stays the
+    * partition base path) with `dir`'s schema — a serve that knows its
+    * partitions lists just those. No roots is an empty frame; a table with
+    * no data and no marker fails with Spark's own error.
+    */
+  def openRoots(spark: SparkSession, dir: String, roots: Seq[String],
+      maxGen: Long = Long.MaxValue): DataFrame =
+    tableSchema(spark, dir, maxGen) match {
+      case None => spark.read.parquet(dir)
+      case Some(s) =>
+        Probe.add("listed_roots", roots.size.toLong)
+        if (roots.isEmpty)
+          spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
+        else spark.read.schema(s).option("basePath", dir).parquet(roots: _*)
+    }
+
   /** Read a gen-partitioned segment table with its canonical schema: the
     * gen partition DIRECTORY round-trips through partition-type inference
     * as int — normalize back to the long the rows were written with so
-    * caller schemas are layout-independent. A table last written EMPTY
-    * has no data files at all, only the [[EmptyMarker]] sidecar — those
-    * synthesize an empty frame with the recorded canonical schema (real
-    * data, once appended, takes priority over a stale marker).
+    * caller schemas are layout-independent. `maxGen` is the store's
+    * committed generation; a table last written EMPTY reads as an empty
+    * frame of the [[EmptyMarker]]'s schema.
     */
-  def seg(spark: SparkSession, dir: String): DataFrame = {
+  def seg(spark: SparkSession, dir: String, maxGen: Long = Long.MaxValue): DataFrame =
+    segRoots(spark, dir, Seq(dir), maxGen)
+
+  /** [[seg]] over only `roots` under `dir` (see [[openRoots]]). */
+  def segRoots(spark: SparkSession, dir: String, roots: Seq[String],
+      maxGen: Long = Long.MaxValue): DataFrame = {
     Probe.inc("seg_open")
-    val base =
-      if (hasParquetData(new java.io.File(dir))) spark.read.parquet(dir)
-      else readSidecar(java.nio.file.Paths.get(dir, EmptyMarker))
-        .flatMap(n => Option(n.get("schema_ddl")).map(_.asText()))
-        .map(ddl => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(ddl)))
-        .getOrElse(spark.read.parquet(dir)) // no data, no marker: fail loud
-    base.withColumn("gen", col("gen").cast("long"))
+    openRoots(spark, dir, roots, maxGen).withColumn("gen", col("gen").cast("long"))
   }
 
   // ---------------------------------------------------------------------
@@ -443,7 +531,7 @@ object GenStore {
       if (maxGen == Long.MaxValue) rows else rows.filter(col("gen") <= maxGen)
     if (!hasParquetData(tombstonesDir(path))) rowsG
     else {
-      val tombAll = seg(spark, tableDir(path, "tombstones"))
+      val tombAll = seg(spark, tableDir(path, "tombstones"), maxGen)
       val tombG =
         if (maxGen == Long.MaxValue) tombAll
         else tombAll.filter(col("gen") <= maxGen)
@@ -460,6 +548,17 @@ object GenStore {
       joined.filter(col("__tomb_gen").isNull || col("gen") >= col("__tomb_gen"))
         .drop("__tomb_id", "__tomb_gen")
     }
+  }
+
+  /** The live rows of segment table `name` of the store at `path`: [[seg]]
+    * and [[liveRows]] under the one committed generation `statsPath`
+    * records ([[committedGen]]).
+    */
+  def liveTable(spark: SparkSession, path: String, name: String,
+      rowKey: String, tombCol: String, statsPath: java.nio.file.Path): DataFrame = {
+    val maxGen = committedGen(statsPath)
+    liveRows(spark, path, seg(spark, tableDir(path, name), maxGen),
+      rowKey, tombCol, maxGen)
   }
 
   /** The committed-generation gate value for [[liveRows]]' `maxGen`: the

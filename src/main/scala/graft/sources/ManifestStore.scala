@@ -249,12 +249,12 @@ object ManifestStore {
     */
   def read(spark: SparkSession, path: String): Store = {
     val maxGen = GenStore.committedGen(statsPath(path))
-    val spans = GenStore.seg(spark, spansDir(path).toString)
+    val spans = GenStore.seg(spark, spansDir(path).toString, maxGen)
       .filter(col("gen") <= maxGen)
       .select(col("epoch").cast("long").as("epoch"), col("shard"),
         col("seq_id"), col("doc_id"), col("doc_tok_start"),
         col("seq_tok_start"), col("n_tok"))
-    val sigs = GenStore.seg(spark, GenStore.tableDir(path, "sigs"))
+    val sigs = GenStore.seg(spark, GenStore.tableDir(path, "sigs"), maxGen)
       .filter(col("gen") <= maxGen)
       .groupBy(col("epoch"), col("shard"))
       .agg(expr("bit_xor(shard_sig)").as("shard_sig"),

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * stats arithmetic.
   *
   * Per-term document frequency is NOT stored: df for a query term is
-  * `countDistinct(doc)` over that term's LIVE postings — the rows the
+  * the distinct-doc count over that term's LIVE postings — the rows the
   * query already reads — so it stays exact under any upsert/delete
   * history at zero extra scan cost. (A stored df table cannot be
   * delta-maintained without knowing a replaced doc's OLD terms, which
@@ -53,8 +53,49 @@ object TextIndex {
   val TermBuckets = 64
   val DocBuckets = 64
 
-  case class Index(postings: DataFrame, df: DataFrame, n: Long, sumDl: Long) {
+  /** A committed index as [[read]] found it: the exact-integer stats, the
+    * epoch and the committed generation, all from metadata. The tables
+    * open only when asked for: [[postings]] and [[df]] are whole-table
+    * views (compaction, catalog queries, tests), [[postingsOfBuckets]] is
+    * the serving open that lists only the query's term buckets.
+    */
+  final class Index private[TextIndex] (spark: SparkSession, path: String,
+      epoch: Long, maxGen: Long, val n: Long, val sumDl: Long) {
     def avgdl: Double = sumDl.toDouble / n
+
+    private def postingsDir = s"$path/postings/e$epoch"
+
+    private def live(rows: DataFrame): DataFrame =
+      GenStore.liveRows(spark, path, rows, rowKey = "doc", tombCol = "doc", maxGen)
+
+    /** Live postings `(term, doc, dl, tf, gen, term_bucket)`. */
+    lazy val postings: DataFrame = live(GenStore.seg(spark, postingsDir, maxGen))
+
+    /** df as a view over LIVE postings: a filter on (term_bucket, term) —
+      * both grouping keys — pushes below the aggregate to the pruned scan.
+      */
+    lazy val df: DataFrame = postings
+      .groupBy(col("term_bucket"), col("term"))
+      .agg(countDistinct(col("doc")).as("df"))
+
+    /** Live postings of `buckets` only: the committed `gen=N/term_bucket=b`
+      * directories that exist, at most gens × |buckets| roots, which the
+      * driver lists without a Spark job.
+      */
+    def postingsOfBuckets(buckets: Seq[Long]): DataFrame = {
+      val gens = Option(new java.io.File(postingsDir).listFiles())
+        .getOrElse(Array.empty[java.io.File]).toSeq
+        .filter(g => g.getName.startsWith("gen=") &&
+          g.getName.drop(4).toLongOption.exists(_ <= maxGen))
+        .sortBy(_.getName)
+      val roots = for {
+        g <- gens
+        b <- buckets.distinct
+        d = new java.io.File(g, s"term_bucket=$b")
+        if d.isDirectory
+      } yield d.toString
+      live(GenStore.segRoots(spark, postingsDir, roots, maxGen))
+    }
   }
 
   /** Compaction triggers — the shared [[GenStore.Policy]] record; this
@@ -191,9 +232,9 @@ object TextIndex {
       .parquet(s"$path/doclens/e$epoch")
   }
 
-  private def liveRows(spark: SparkSession, path: String, rows: DataFrame): DataFrame =
-    GenStore.liveRows(spark, path, rows, rowKey = "doc", tombCol = "doc",
-      maxGen = GenStore.committedGen(statsPath(path)))
+  private def liveTable(spark: SparkSession, path: String, name: String): DataFrame =
+    GenStore.liveTable(spark, path, name, rowKey = "doc", tombCol = "doc",
+      statsPath(path))
 
   /** The LIVE doclens rows of the affected ids — the upsert's only read
     * of pre-existing state: (doc_bucket, doc) equi-join so partition
@@ -203,7 +244,7 @@ object TextIndex {
       affected: DataFrame): DataFrame = {
     val keyed = affected.select(col("doc"))
       .withColumn("doc_bucket", docBucketCol(col("doc")))
-    liveRows(spark, path, GenStore.seg(spark, GenStore.tableDir(path, "doclens")))
+    liveTable(spark, path, "doclens")
       .join(broadcast(keyed), Seq("doc_bucket", "doc"))
   }
 
@@ -302,12 +343,8 @@ object TextIndex {
   def compact(spark: SparkSession, path: String): Unit = {
     val (n, sumDl, _, lastBatch) = readStats(path)
     val next = GenStore.epochOf(path) + 1
-    val live = liveRows(spark, path,
-      GenStore.seg(spark, GenStore.tableDir(path, "postings")))
-      .localCheckpoint()
-    val doclens = liveRows(spark, path,
-      GenStore.seg(spark, GenStore.tableDir(path, "doclens")))
-      .localCheckpoint()
+    val live = liveTable(spark, path, "postings").localCheckpoint()
+    val doclens = liveTable(spark, path, "doclens").localCheckpoint()
     // writeTable keeps a fully-emptied index readable (GenStore r10 note)
     GenStore.writeTable(live.withColumn("gen", lit(0L)),
       "term_bucket", Seq("gen", "term_bucket"),
@@ -320,17 +357,13 @@ object TextIndex {
     GenStore.gcEpochs(path, Seq("postings", "doclens", "tombstones"), next)
   }
 
+  /** The committed index at `path` from its metadata only (stats sidecar
+    * and epoch pointer): no table is opened and no Spark job runs.
+    */
   def read(spark: SparkSession, path: String): Index = {
     val (n, sumDl, _, _) = readStats(path)
-    val postings = liveRows(spark, path,
-      GenStore.seg(spark, GenStore.tableDir(path, "postings")))
-    // df as a view over LIVE postings: a filter on (term_bucket, term) —
-    // both grouping keys — pushes below the aggregate to the pruned scan,
-    // so a query's df costs the same rows it already reads for tf
-    val df = postings
-      .groupBy(col("term_bucket"), col("term"))
-      .agg(countDistinct(col("doc")).as("df"))
-    Index(postings, df, n, sumDl)
+    new Index(spark, path, GenStore.epochOf(path),
+      GenStore.committedGen(statsPath(path)), n, sumDl)
   }
 
   /** Load the index for a corpus, building it first if absent or stale —

@@ -123,8 +123,7 @@ object VectorStore {
 
   def read(spark: SparkSession, path: String, planes: Int, dim: Int,
       idCol: String = "vec_id"): Index =
-    Index(liveRows(spark, path,
-      GenStore.seg(spark, GenStore.tableDir(path, "vectors")), idCol),
+    Index(liveRows(spark, path, "vectors", idCol),
       readCentroids(path), planes, dim)
 
   // ---------------------------------------------------------------------
@@ -183,10 +182,10 @@ object VectorStore {
     * GenStore aliases to a reserved name before the join exactly so that
     * case works).
     */
-  private def liveRows(spark: SparkSession, path: String, rows: DataFrame,
+  private def liveRows(spark: SparkSession, path: String, table: String,
       idCol: String): DataFrame =
-    GenStore.liveRows(spark, path, rows, rowKey = idCol, tombCol = "id",
-      maxGen = GenStore.committedGen(incStatsPath(path)))
+    GenStore.liveTable(spark, path, table, rowKey = idCol, tombCol = "id",
+      incStatsPath(path))
 
   /** The delta's labelled segment rows — cell/bucket assignment from the
     * stored centroid literals ONLY (test-guarded: no scan of the stored
@@ -270,8 +269,7 @@ object VectorStore {
   def compactVectors(spark: SparkSession, path: String,
       idCol: String = "vec_id", sub: String = "vectors"): Unit = {
     val next = GenStore.epochOf(path) + 1
-    val live = liveRows(spark, path,
-      GenStore.seg(spark, GenStore.tableDir(path, sub)), idCol)
+    val live = liveRows(spark, path, sub, idCol)
       .withColumn("gen", lit(0L))
       .localCheckpoint()
     // fold into the NEXT epoch (overwrite clears any orphan of a crashed
@@ -495,8 +493,7 @@ object VectorStore {
   def readPq(spark: SparkSession, path: String,
       idCol: String = "vec_id"): PqIndex = {
     val cbs = readPqCodebooks(path)
-    PqIndex(liveRows(spark, path,
-      GenStore.seg(spark, GenStore.tableDir(path, "codes")), idCol),
+    PqIndex(liveRows(spark, path, "codes", idCol),
       cbs, cbs.length, cbs(0)(0).length, cbs(0).length)
   }
 

@@ -1,0 +1,202 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.{BandStore, ChunkStore, ClusterStore, FileIngest, GenStore,
+  ManifestStore, TextIndex, VectorStore}
+
+/** The store-open path ([[GenStore.open]]): the schema read from one
+  * committed footer must be exactly what Spark's inference gives for
+  * every persisted layout, with the same rows; a torn uncommitted segment
+  * must stay invisible; and the opens a serve pays must not submit the
+  * schema-inference job.
+  */
+class StoreOpenSpec extends AnyFunSuite {
+
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def tmp(tag: String): String =
+    Files.createTempDirectory(s"graft-open-spec-$tag").resolve("store").toString
+
+  private def docsDF(rows: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+  }
+
+  private def ids(xs: Long*): DataFrame = {
+    import spark.implicits._
+    xs.toDF("doc_id")
+  }
+
+  /** Order-free row image: one JSON line per row. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*))).collect()
+      .map(_.getString(0)).sorted.toSeq
+
+  private def assertOpensLikeInference(dir: String): Unit = {
+    val opened = GenStore.open(spark, dir)
+    val inferred = spark.read.parquet(dir)
+    assert(opened.schema == inferred.schema, s"schema differs for $dir")
+    val rows = rowsOf(opened)
+    assert(rows.nonEmpty, s"no rows under $dir")
+    assert(rows == rowsOf(inferred), s"rows differ for $dir")
+  }
+
+  private val vocab = (0 until 60).map(i => s"w$i")
+  private def text(i: Int, n: Int): String =
+    (0 until n).map(j => vocab((i * 7 + j * 3) % vocab.size)).mkString(" ")
+  private val corpus: Seq[(Long, String)] = (0 until 40).map(i => (i.toLong, text(i, 12)))
+
+  private def chunkStore(files: Int): String = {
+    val dz: Path = Files.createTempDirectory("graft-open-spec-dz")
+    (0 until files).foreach(i => Files.writeString(dz.resolve(s"f$i.txt"), s"document $i body ${text(i, 8)}"))
+    val store = tmp("chunks")
+    ChunkStore.upsert(FileIngest.ingestDirectory(spark, dz.toString, 200, 40), store)
+    store
+  }
+
+  /** Text index after write → replace/add upsert → delete upsert (no
+    * auto-compaction), so postings, doclens and tombstones all hold
+    * several generations.
+    */
+  private def churnedTextIndex(): String = {
+    val path = tmp("tindex")
+    TextIndex.write(docsDF(corpus), "doc_id", "text", path,
+      policy = TextIndex.Policy(maxSegments = 100L, maxDeadFraction = 1.1))
+    TextIndex.upsert(spark, docsDF(Seq(3L -> "w1 w2 fresh", 99L -> "w5 new doc")),
+      "doc_id", "text", ids(), path)
+    TextIndex.upsert(spark, docsDF(Nil), "doc_id", "text", ids(4L, 5L), path)
+    path
+  }
+
+  test("every store layout opens with inference's schema and rows") {
+    assertOpensLikeInference(chunkStore(12))
+
+    val ti = churnedTextIndex()
+    Seq("postings", "doclens", "tombstones").foreach(t =>
+      assertOpensLikeInference(GenStore.tableDir(ti, t)))
+
+    val vs = tmp("vectors")
+    val vecs = (0 until 20).map(i => (i.toLong, Array.tabulate(4)(j => ((i * 5 + j) % 7).toDouble)))
+    import spark.implicits._
+    VectorStore.write(vecs.toDF("vec_id", "embedding"), "embedding", vs, planes = 2, dim = 4, k = 2)
+    VectorStore.upsertVectors(spark, Seq((1L, Array(1.0, 0.0, 0.0, 0.0))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", Seq(2L).toDF("vec_id"), vs, planes = 2, dim = 4)
+    Seq("vectors", "tombstones").foreach(t => assertOpensLikeInference(GenStore.tableDir(vs, t)))
+
+    val bs = tmp("bands")
+    BandStore.write(docsDF(corpus), "doc_id", "text", bs, 32, 8)
+    BandStore.upsert(spark, docsDF(Seq(1L -> text(2, 12))), "doc_id", "text", ids(7L), bs, 32, 8)
+    Seq("bands", "tombstones").foreach(t => assertOpensLikeInference(GenStore.tableDir(bs, t)))
+
+    val cs = tmp("clusters")
+    val dupes = corpus ++ corpus.take(6).map { case (i, t) => (i + 1000L, t + " tail") }
+    val bands = tmp("cluster-bands")
+    BandStore.write(docsDF(dupes), "doc_id", "text", bands, 32, 8)
+    ClusterStore.write(docsDF(dupes), BandStore.read(spark, bands, 32, 8), "doc_id", "text", cs, 0.5)
+    assertOpensLikeInference(GenStore.tableDir(cs, "clusters"))
+
+    val ms = tmp("manifest")
+    ManifestStore.write(docsDF(corpus), "doc_id", "text", ms,
+      ManifestStore.Params(epochs = 2, buckets = 1000L, seqLen = 16L, shards = 4L))
+    Seq("spans", "sigs").foreach(t => assertOpensLikeInference(GenStore.tableDir(ms, t)))
+  }
+
+  test("a torn uncommitted segment neither breaks the open nor adds rows") {
+    val path = tmp("torn")
+    // gen 1 adds only (no tombstones); gen 2 deletes, so the tombstone
+    // table's only committed generation is 2 — and `gen=10` sorts first
+    TextIndex.write(docsDF(corpus), "doc_id", "text", path)
+    TextIndex.upsert(spark, docsDF(Seq(50L -> "w1 w9 added")), "doc_id", "text", ids(), path)
+    TextIndex.upsert(spark, docsDF(Nil), "doc_id", "text", ids(6L), path)
+    val terms = Seq("w1", "w9", "w30")
+    val before = TextIndex.read(spark, path)
+    val postingsBefore = rowsOf(before.postings)
+    val scoresBefore = rowsOf(graft.operators.SearchOps.bm25ScoresIndexed(before, terms))
+
+    def plantTorn(table: String, sub: String): Unit = {
+      val dir = GenStore.tableDir(path, table)
+      val good = Files.walk(java.nio.file.Paths.get(dir)).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get()
+      val bytes = Files.readAllBytes(good)
+      val torn = java.nio.file.Paths.get(dir, sub)
+      Files.createDirectories(torn)
+      Files.write(torn.resolve("part-00000-torn.c000.snappy.parquet"), bytes.take(bytes.length / 2))
+    }
+    plantTorn("tombstones", "gen=10")
+    plantTorn("postings", s"gen=10/term_bucket=${TextIndex.bucketOf("w1")}")
+
+    val tombDir = GenStore.tableDir(path, "tombstones")
+    intercept[Exception](GenStore.tableSchema(spark, tombDir)) // the ungated walk hits the torn footer
+    assert(GenStore.tableSchema(spark, tombDir, maxGen = 2L) ==
+      GenStore.tableSchema(spark, tombDir, maxGen = 9L))
+    val after = TextIndex.read(spark, path)
+    assert(rowsOf(after.postings) == postingsBefore)
+    assert(rowsOf(graft.operators.SearchOps.bm25ScoresIndexed(after, terms)) == scoresBefore)
+  }
+
+  /** Spark jobs submitted while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val group = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(group, "store open")
+    try {
+      val r = body
+      // listener events post asynchronously; a job a call submits is
+      // enqueued before the call returns
+      Thread.sleep(1500)
+      (r, jobs.get())
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  test("serve opens: TextIndex.read submits no job, ChunkStore.read at most the listing") {
+    val store = chunkStore(120)
+    val buckets = Files.list(java.nio.file.Paths.get(store))
+      .filter(_.getFileName.toString.startsWith("doc_bucket=")).count()
+    assert(buckets > 32, s"only $buckets buckets: the store must exceed the parallel-listing threshold")
+    val ti = churnedTextIndex()
+    val (idx, tiJobs) = jobsDuring(TextIndex.read(spark, ti))
+    assert(tiJobs == 0, s"TextIndex.read submitted $tiJobs jobs")
+    val (_, bmJobs) = jobsDuring(
+      graft.operators.SearchOps.bm25ScoresIndexed(idx, Seq("w1", "w2")).queryExecution.executedPlan)
+    assert(bmJobs == 0, s"planning the indexed BM25 submitted $bmJobs jobs")
+    val (_, csJobs) = jobsDuring(ChunkStore.read(spark, store).schema)
+    assert(csJobs <= 1, s"ChunkStore.read submitted $csJobs jobs")
+  }
+
+  test("a store file without Spark's schema key fails loudly, naming the file") {
+    val dir = Files.createTempDirectory("graft-open-spec-foreign").resolve("t")
+    spark.range(3).write.parquet(dir.toString)
+    val f = Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get()
+    // rewrite one file through parquet-hadoop directly: no Spark metadata
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; }")
+    Files.list(dir).forEach(p => Files.delete(p))
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(f.toUri)).withConf(conf).withType(schema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("id", 1L))
+    finally w.close()
+    val e = intercept[IllegalStateException](GenStore.open(spark, dir.toString))
+    assert(e.getMessage.contains(f.getFileName.toString), e.getMessage)
+  }
+}

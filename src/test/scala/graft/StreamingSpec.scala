@@ -518,11 +518,16 @@ class StreamingSpec extends AnyFunSuite {
         graft.sources.FileIngest.ingestDirectory(spark, dropzone.toString, 200, 40),
         store, numBuckets = 4)
     }
-    def parquetFiles = {
+    // data files of the bucket partitions only: a parquet sidecar beside
+    // them is not chunk data and must not count
+    def bucketFiles: Seq[Path] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Path.of(store)).iterator().asScala
-        .count(p => p.toString.endsWith(".parquet"))
+        .filter(p => p.toString.endsWith(".parquet") &&
+          p.getParent.getFileName.toString.startsWith("doc_bucket="))
+        .toSeq
     }
+    def parquetFiles = bucketFiles.size
     val before = ChunkStore.read(spark, store).select("id").collect().map(_.getString(0)).sorted.toSeq
     val filesBefore = parquetFiles
     // r17: upsert clusters by doc_bucket before the partitioned write, so
@@ -539,12 +544,7 @@ class StreamingSpec extends AnyFunSuite {
     // compact()'s own contract: exactly filesPerBucket (default 1) data
     // files inside every doc_bucket directory — not merely "no worse than
     // before" (r17's <= let a no-op compact pass silently).
-    val perBucket = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Path.of(store)).iterator().asScala
-        .filter(_.toString.endsWith(".parquet"))
-        .toSeq.groupBy(_.getParent).view.mapValues(_.size).toMap
-    }
+    val perBucket = bucketFiles.groupBy(_.getParent).view.mapValues(_.size).toMap
     assert(perBucket.nonEmpty && perBucket.values.forall(_ == 1),
       s"compact(filesPerBucket=1) must leave one file per bucket, got $perBucket")
   }
