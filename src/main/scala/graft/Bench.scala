@@ -28,7 +28,7 @@ object Bench {
 
   /** Warmup data: the sf0.001 sibling of `sfDir` (same parent dir), or
     * `SPARK_GRAFT_WARM_DIR`; None — reported, never silent — when neither
-    * holds a documents table. Shared with [[graft.tools.StoreProfile]].
+    * holds a documents table.
     */
   def warmupDir(sfDir: String): Option[String] =
     (sys.env.get("SPARK_GRAFT_WARM_DIR").toSeq ++
@@ -72,12 +72,6 @@ object Bench {
     def gcMillis(): Long = {
       var s = 0L; gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime)); s
     }
-    def cooldown(): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
-      Thread.sleep(200)
-      System.gc()
-    }
     var failed = List.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def timeOnce(): Double = {
@@ -113,7 +107,7 @@ object Bench {
       val gcSec = (gcMillis() - gc0) / 1e3
       val rt = Runtime.getRuntime
       val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-      cooldown()
+      Session.cooldown(spark)
       (name, if (runsTimed.exists(_ >= 0)) runsTimed.filter(_ >= 0).min else -1.0,
         runsTimed, gcSec, heapMb)
     }
@@ -139,9 +133,9 @@ object Bench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         val totalChars = docs.agg(sum(length(col("text")))).head().getLong(0)
         val a = ingestPass(docs)
-        cooldown()
+        Session.cooldown(spark)
         val b = ingestPass(docs)
-        cooldown()
+        Session.cooldown(spark)
         // third pass, same rationale as the adaptive query policy: this is
         // the block's widest-spread figure (r10 cold runs: 5.5-11 M
         // chars/s on identical code) and it is the ONE headline throughput
@@ -149,153 +143,18 @@ object Bench {
         totalChars / Seq(a, b, c).min
       } catch { case _: Throwable => -1.0 }
 
-    // Skew stress (r6 Next #4): one hot key owning ~30% of rows, driven
-    // through the q74-shaped line-frequency equi-join at bench scale (the
-    // documents table's lines, corpus replicated to SPARK_GRAFT_SKEW_ROWS).
-    // Three variants over the SAME lineage:
-    //   plain  — shuffled hash join with AQE fully OFF: proves the stress
-    //            is real (the hot key's reducer owns ~30% of the stage;
-    //            even AQE's plain partition COALESCING otherwise narrows
-    //            the gap by merging the small partitions);
-    //   aqe    — AQE skew-join, thresholds lowered to engage at bench
-    //            bytes (the 256MB default only engages at cluster scale);
-    //   salted — the explicit SkewJoin.saltedJoin with AQE fully OFF:
-    //            salting ALONE bounds the variance, the form for
-    //            pipelines that KNOW their hot keys.
-    // A task-metrics listener grades each run inside the JOIN stage (the
-    // stage reading the most shuffle records): max/median task duration
-    // AND max/median shuffle records per task. The row ratio is the
-    // scale-true signal — at bench bytes a task's fixed overhead
-    // (~hundreds of ms) partly masks the hot reducer's extra rows, but at
-    // 100 TB the per-row work dominates and the row imbalance IS the time
-    // imbalance. Done-bar: the mitigated variants keep every task <= 4x
-    // its stage median on BOTH axes; the plain variant's row ratio is
-    // what proves the stress is real.
-    val skewStress: String =
-      try {
-        import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-        val tasks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-        val listener = new SparkListener {
-          override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-            tasks.synchronized {
-              if (e.taskInfo != null && e.taskInfo.successful) {
-                val recs = Option(e.taskMetrics)
-                  .map(_.shuffleReadMetrics.recordsRead).getOrElse(0L)
-                tasks += ((e.stageId, e.taskInfo.duration, recs))
-              }
-            }
-        }
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val real = docs
-          .select(col("doc_id"), explode(split(col("text"), "\n")).as("line"))
-          .filter(length(col("line")) > 0)
-        val nReal = real.count()
-        val target = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "3000000").toLong
-        val k = math.max(1L, target / math.max(nReal, 1L))
-        // every row carries an incompressible payload, like a real corpus
-        // row carries content beyond its join key. Without it the hot
-        // partition — one string repeated a million times — lz4-compresses
-        // to less than a MEDIAN partition of diverse lines, and AQE's
-        // BYTE-based skew detector provably cannot see the row skew (first
-        // cut of this stress measured exactly that: row_ratio 14, AQE
-        // inert).
-        val replicated = real
-          .crossJoin(spark.range(k).select(col("id").as("rep")))
-          .withColumn("pad",
-            md5(concat_ws("-", col("doc_id"), col("rep"), col("line"))))
-        val hotRows = (nReal * k * 3) / 7 // hot / (real + hot) ~= 0.30
-        val hot = spark.range(hotRows).select(
-          lit(-1L).as("doc_id"), lit("graft-hot-boilerplate").as("line"),
-          col("id").as("rep"),
-          md5(concat_ws("-", lit("hot"), col("id"))).as("pad"))
-        // Materialize BOTH sides before measuring: (a) the measured work
-        // is then the join itself, not corpus generation; (b) AQE's
-        // OptimizeSkewedJoin can only rewrite a join whose children are
-        // direct shuffle reads — with dim left as a lazy aggregate, the
-        // join reuses the agg's partitioning (final HashAggregate above
-        // the stage) and the rule can NEVER split the hot partition, a
-        // precondition worth knowing at 100 TB: skew-join your
-        // materialized tables, not your just-aggregated ones.
-        val fact = replicated.unionByName(hot).localCheckpoint()
-        val dim = fact.groupBy("line").agg(count(lit(1)).as("line_count"))
-          .localCheckpoint()
-        case class SkewRun(secs: Double, maxMs: Long, medMs: Long,
-            maxRows: Long, medRows: Long)
-        def measure(df: DataFrame): SkewRun = {
-          tasks.synchronized(tasks.clear())
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          Session.materialize(df)
-          val secs = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500) // let the listener bus drain
-          spark.sparkContext.removeSparkListener(listener)
-          val byStage = tasks.synchronized(tasks.toVector).groupBy(_._1)
-            .filter(_._2.size >= 4)
-          if (byStage.isEmpty) SkewRun(secs, -1L, -1L, -1L, -1L)
-          else {
-            // the join stage = the one reading the most shuffle records
-            val join = byStage.values.maxBy(_.map(_._3).sum)
-            val ds = join.map(_._2).sorted
-            val rs = join.map(_._3).sorted
-            // floors: sub-centisecond tasks compare scheduler noise
-            SkewRun(secs, ds.last, math.max(ds(ds.size / 2), 10L),
-              rs.last, math.max(rs(rs.size / 2), 1L))
-          }
-        }
-        def vj(v: SkewRun): String =
-          f"""{"sec":${v.secs}%.3f,"max_task_ms":${v.maxMs},""" +
-            f""""median_task_ms":${v.medMs},"time_ratio":${v.maxMs.toDouble / v.medMs}%.2f,""" +
-            f""""max_task_rows":${v.maxRows},"median_task_rows":${v.medRows},""" +
-            f""""row_ratio":${v.maxRows.toDouble / v.medRows}%.2f}"""
-        val conf = spark.conf
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
-          conf.set("spark.sql.adaptive.enabled", "false")
-          val plain = measure(fact.join(dim.hint("shuffle_hash"), Seq("line")))
-          conf.set("spark.sql.adaptive.enabled", "true")
-          conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-          conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4MB")
-          conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2MB")
-          val aqe = measure(fact.join(dim.hint("shuffle_hash"), Seq("line")))
-          conf.set("spark.sql.adaptive.enabled", "false")
-          val salted = measure(
-            graft.operators.SkewJoin.saltedJoin(fact, dim, "line", 16))
-          s"""{"rows":${nReal * k + hotRows},"hot_fraction":0.30,""" +
-            s""""plain":${vj(plain)},"aqe":${vj(aqe)},"salted":${vj(salted)}}"""
-        } finally {
-          conf.set("spark.sql.autoBroadcastJoinThreshold", Session.BroadcastThresholdBytes.toString)
-          conf.set("spark.sql.adaptive.enabled", "true")
-          conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "false")
-          conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256MB")
-          conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] skew stress failed: ${e.getMessage}")
-        "null"
-      }
-
-    // Hot-CLASS stress for the q88/q99 span-removal keeper step (r11,
-    // VERDICT r10 next-round #1): the skew_stress above grades a hot JOIN
-    // key; this block grades the hot SHINGLE CLASS — one boilerplate
-    // 8-gram (a license header) owning ~30% of all positional-shingle
-    // rows, the shape a 100 TB crawl guarantees. Basis = the REAL
-    // positional-hash lineage over this sfDir's documents (replica-remapped
-    // to the stress row count) + the synthetic hot class. Three variants
-    // of the same keeper/shared-by-≥2 computation:
-    //   window     — r10's min/max window over (h1,h2), AQE off: the hot
-    //                class sorts in ONE task (the named scale-killer);
-    //   window_aqe — same with AQE on: proves AQE cannot split a window
-    //                partition (unlike a skewed join);
-    //   salted     — the shipped Curation.classBounds two-phase fold, AQE
-    //                off: structure alone must bound the variance.
-    // Done-bar (r10 prescription): salted keeps max task ≤ 4× its stage
-    // median on time AND rows; the window row_ratio proves the stress.
-    val spanSkew: String =
-      try graft.tools.SpanSkewStress.json(spark, sfDir)
+    // Skew stresses (r6 Next #4, r11): a hot JOIN key through the
+    // q74-shaped line-frequency join, and a hot SHINGLE CLASS through the
+    // q88/q99 span-removal keeper step — each unmitigated, under AQE and
+    // mitigated, graded inside its heaviest stage ([[graft.tools.SkewStress]]).
+    def stress(what: String)(run: => String): String =
+      try run
       catch { case e: Throwable =>
-        System.err.println(s"[bench] span skew stress failed: ${e.getMessage}")
+        System.err.println(s"[bench] $what failed: ${e.getMessage}")
         "null"
       }
+    val skewStress = stress("skew stress")(graft.tools.SkewStress.joinKey(spark, sfDir))
+    val spanSkew = stress("span skew stress")(graft.tools.SkewStress.shingleClass(spark, sfDir))
 
     val suiteByName = results.map(r => r._1 -> r._2).toMap
 
@@ -344,7 +203,7 @@ object Bench {
             (1 to nRuns).flatMap { i =>
               if (i > 1 && System.nanoTime() > deadline) None
               else {
-                if (i > 1) cooldown() // same hygiene as the suite between reps
+                if (i > 1) Session.cooldown(spark) // same hygiene as the suite between reps
                 val t0 = System.nanoTime()
                 Session.materialize(SparkEntry.queries(name)(spark, dirPath))
                 Some((System.nanoTime() - t0) / 1e9)
@@ -355,7 +214,7 @@ object Bench {
               e.getMessage.linesIterator.nextOption().getOrElse(""))
             Seq(-1.0)
           }
-          cooldown()
+          Session.cooldown(spark)
           val suite = suiteByName.getOrElse(name, -1.0)
           val ok = runs.filter(_ >= 0)
           if (storeBackedScale(name)) {
@@ -409,7 +268,7 @@ object Bench {
           else try {
             val docs = spark.read.parquet(s"$dirPath/documents.parquet")
             val chars = docs.agg(sum(length(col("text")))).head().getLong(0)
-            val runs = (1 to 2).map { _ => val t = ingestPass(docs); cooldown(); t }
+            val runs = (1 to 2).map { _ => val t = ingestPass(docs); Session.cooldown(spark); t }
             val tp = chars / runs.min
             val tpRatio = if (ingestTp > 0 && tp > 0) ingestTp / tp else -1.0
             Some(f"""\"ingest\":{"suite_chars_per_sec":$ingestTp,"scaled_chars_per_sec":$tp,""" +

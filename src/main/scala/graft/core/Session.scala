@@ -66,6 +66,17 @@ object Session {
     spark
   }
 
+  /** The between-runs hygiene of every timing loop: drop cached frames and
+    * let the ContextCleaner release broadcast/shuffle state (its driver
+    * refs are weakly held, so they go on GC) before the next timed run.
+    */
+  def cooldown(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    System.gc()
+    Thread.sleep(200)
+    System.gc()
+  }
+
   /** Materialize: fold every output column into one xxhash64 / bit_xor
     * value, so the whole projection is computed, shuffled and reduced —
     * a bare `count()` lets Catalyst prune projection-only work. The fold

@@ -39,13 +39,6 @@ object GenStore {
     */
   val MaxTombstoneBroadcastBytes: Long = 64L << 20
 
-  /** Per-operation counters for the store lifecycle's driver-side
-    * filesystem round-trips and Spark-scan opens — the observability the
-    * r8 verdict asked for ("count filesystem round-trips per store per
-    * processBatch"). Always on: a ConcurrentHashMap increment per METADATA
-    * operation is noise next to the file stat it counts. `tools/StoreProfile`
-    * resets + dumps around one batch/serve to attribute fixed costs.
-    */
   /** Test-only fault injection for the crash-consistency fuzz
     * (ReconcileSpec/CrashFuzzSpec): production leaves `hook` as a no-op;
     * a spec installs a countdown hook that throws at the N-th lifecycle
@@ -59,12 +52,20 @@ object GenStore {
     @inline def hit(name: String): Unit = hook(name)
   }
 
+  /** Per-operation counters for the store lifecycle's driver-side
+    * filesystem round-trips and Spark-scan opens — the observability the
+    * r8 verdict asked for ("count filesystem round-trips per store per
+    * processBatch"). Always on: a ConcurrentHashMap increment per METADATA
+    * operation is noise next to the file stat it counts.
+    * `Telemetry.profile` reports the delta over one call, which
+    * `runMain graft.tools.QueryTime <query> <sfDir> profile` prints for one
+    * serve to attribute fixed costs.
+    */
   object Probe {
     private val counts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
     def inc(op: String): Unit = add(op, 1L)
     def add(op: String, n: Long): Unit =
       counts.computeIfAbsent(op, _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(n)
-    def reset(): Unit = counts.clear()
     def snapshot(): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
       counts.asScala.map { case (k, v) => k -> v.get() }.toMap

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.Session
+import graft.core.{Session, Telemetry}
 
 /** Plan-construction eagerness audit (r12): the r11 verdict caught
   * q88/q99 running a full `docs.count()` job every time their lineage
@@ -103,48 +103,21 @@ object ConstructAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = Session.local(4)
 
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        js.stageInfos.foreach(s => jobs.add(Stage(s.name, s.numTasks))); ()
-      }
-    })
-
     def construct(name: String): Unit = {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       df.queryExecution.executedPlan
       ()
     }
 
-    import scala.jdk.CollectionConverters._
-    // Deterministic listener-bus drain: the bus is FIFO, so once a
-    // sentinel job (run AFTER the pass) is visible to the listener, every
-    // event the pass emitted has been delivered. The old fixed
-    // Thread.sleep(300) was a timing guess — a GC pause during q99's
-    // ~87-stage pass could lag delivery past it, leak pass-1 stages into
-    // pass 2, and trip the magnitude ceilings with a FALSE suspect.
-    val SentinelName = "auditDrainSentinel"
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      sc.setCallSite(SentinelName)
-      try spark.range(1).count() finally sc.clearCallSite()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!jobs.iterator.asScala.exists(_.name.contains(SentinelName)) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(10)
-    }
     var flagged = 0
     val verbose = sys.env.get("GRAFT_AUDIT_VERBOSE").contains("1")
     graft.SparkEntry.queries.keys.foreach { name =>
       try {
         construct(name) // pass 1: absorb one-time ensure builds
-        drain()
-        jobs.clear()
-        construct(name) // pass 2: steady-state construction
-        drain()
-        val steady = jobs.iterator.asScala.toList
-          .filterNot(_.name.contains(SentinelName))
+        // pass 2: steady-state construction; the profile holds exactly the
+        // jobs it started, including those on broadcast/subquery threads
+        val (_, prof) = Telemetry.profile(spark, name)(construct(name))
+        val steady = prof.jobs.flatMap(_.stages).map(s => Stage(s.name, s.tasks))
         val bad = suspectsFor(steady)
         val summary = steady.groupBy(s => classify(s.name)).view
           .map { case (k, ss) => s"$k:${ss.size}(max ${

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{ScaledCorpus, Session}
 
 /** Per-query CORE-scaling draw at a compute-bound size (r17 verdict #8):
@@ -47,10 +45,6 @@ object CoreScaling {
     val hi = args.lift(2).map(_.toInt).getOrElse(Session.cpus)
     val lo = args.lift(3).map(_.toInt).getOrElse(math.max(2, hi / 4))
 
-    def cooldown(s: SparkSession): Unit = {
-      s.sqlContext.clearCache(); System.gc(); System.gc(); Thread.sleep(200)
-    }
-
     def measure(cpus: Int, dir: String,
         warmStores: Boolean): Seq[(String, Double)] = {
       val s = Session.local(cpus)
@@ -59,10 +53,10 @@ object CoreScaling {
       val out = Queries.map { name =>
         val t = try {
           if (warmStores) {
-            Session.materialize(graft.SparkEntry.queries(name)(s, dir)); cooldown(s)
+            Session.materialize(graft.SparkEntry.queries(name)(s, dir)); Session.cooldown(s)
           }
           (1 to 2).map { i =>
-            if (i > 1) cooldown(s)
+            if (i > 1) Session.cooldown(s)
             val t0 = System.nanoTime()
             Session.materialize(graft.SparkEntry.queries(name)(s, dir))
             (System.nanoTime() - t0) / 1e9
@@ -72,7 +66,7 @@ object CoreScaling {
             e.getMessage.linesIterator.nextOption().getOrElse(""))
           -1.0
         }
-        cooldown(s)
+        Session.cooldown(s)
         println(f"[corescale] $name%-26s @${cpus}%2dc  $t%7.2f s")
         name -> t
       }

@@ -2,13 +2,14 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Session
+import graft.core.{Session, Telemetry}
 import graft.core.Session.materialize
 
 /** Component-level timing for the incremental/streaming near-dup probes
   * (q96/q97/q127) — attributes their serve cost across store read, batch
   * fingerprint, candidate probe, and exact verification, so optimization
-  * targets the measured stage instead of the lineage as a whole.
+  * targets the measured stage instead of the lineage as a whole. Each
+  * component runs under [[Telemetry.profile]].
   *
   * Usage: runMain graft.tools.ProbeProfile [sfDir] [reps]
   */
@@ -17,11 +18,15 @@ object ProbeProfile {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val spark = Session.local()
+    // reps profiled runs; the fastest one's jobs and slowest stage are
+    // printed beside the run vector
     def time(label: String)(f: => Unit): Unit = {
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[probe] $label%-34s ${ts.map(t => f"$t%.2f").mkString(" ")} (min ${ts.min}%.2f)")
+      val ps = (1 to reps).map(_ => Telemetry.profile(spark, label)(f)._2)
+      val best = ps.minBy(_.wallMs)
+      val top = best.stages.maxByOption(_.wallMs)
+        .fold("")(s => s" slowest stage ${s.wallMs} ms ${s.name.take(40)}")
+      println(f"[probe] $label%-34s ${ps.map(p => f"${p.wallMs / 1e3}%.2f").mkString(" ")} " +
+        f"(min ${best.wallMs / 1e3}%.2f) jobs=${best.jobs.size}$top")
     }
 
     val docs = graft.core.Tables.fanOut(

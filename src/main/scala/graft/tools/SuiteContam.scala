@@ -25,26 +25,23 @@ object SuiteContam {
       Session.materialize(graft.SparkEntry.queries(name)(s, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
-    def cool(s: SparkSession): Unit = {
-      s.catalog.clearCache(); System.gc(); System.gc(); Thread.sleep(200)
-    }
 
     var spark = Session.local()
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filterNot(Set(probe, "q18_jaccard_pairs", "q28_embedding_near_dup"))
       .take(nWarm)
     names.foreach { n =>
-      try { run(spark, n); cool(spark) }
+      try { run(spark, n); Session.cooldown(spark) }
       catch { case e: Throwable =>
         System.err.println(s"[contam] $n failed: ${e.getMessage}") }
     }
-    val inSession = (1 to 2).map { _ => cool(spark); run(spark, probe) }
+    val inSession = (1 to 2).map { _ => Session.cooldown(spark); run(spark, probe) }
     println(f"[contam] $probe after $nWarm queries, same context: " +
       inSession.map(t => f"$t%.2f").mkString(" "))
 
     spark.stop()
     spark = Session.local()
-    val afterRestart = (1 to 2).map { _ => cool(spark); run(spark, probe) }
+    val afterRestart = (1 to 2).map { _ => Session.cooldown(spark); run(spark, probe) }
     println(f"[contam] $probe after context RESTART (same JVM): " +
       afterRestart.map(t => f"$t%.2f").mkString(" "))
     spark.stop()

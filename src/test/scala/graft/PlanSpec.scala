@@ -673,37 +673,27 @@ class PlanSpec extends AnyFunSuite {
     // eager scan of the corpus lineage every time q88/q99 was CONSTRUCTED.
     // The gate now reads optimizedPlan.stats; building the frame must
     // launch no Spark job at all.
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        started.add(js.stageInfos.map(_.name).mkString("|")); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (df, prof) = graft.core.Telemetry.profile(spark, "q88 construction") {
       val df = SparkEntry.queries("q88_span_removal")(spark, Sf)
       df.queryExecution.executedPlan // force full planning, still no action
-      // listener events post asynchronously; give the bus time to drain —
-      // an eager count() inside construction is synchronous, so its
-      // JobStart would long since be enqueued. The ONE job construction
-      // legitimately runs is parquet schema inference ("parquet at" —
-      // bounded footer metadata, per-table fixed cost); anything else
-      // (count/head/collect-shaped stages) is an eager gate regression.
-      Thread.sleep(1500)
-      import scala.jdk.CollectionConverters._
-      val offending = started.iterator.asScala.toList
-        .filterNot(_.split('|').forall(_.startsWith("parquet at ")))
-      assert(offending.isEmpty,
-        s"constructing q88 launched data job(s): $offending — the span-form " +
-        "gate regressed to an eager action")
-      // and with accurate small-corpus stats the gate must still pick the
-      // window form (salted-by-default would mean the estimate was lost)
-      assert(df.queryExecution.executedPlan.toString
-          .contains("windowspecdefinition"),
-        "tiny corpus no longer selects the window span form — plan-stats " +
-        "estimate unavailable?")
-    } finally spark.sparkContext.removeSparkListener(l)
+      df
+    }
+    // The ONE job construction legitimately runs is parquet schema
+    // inference ("parquet at" — bounded footer metadata, per-table fixed
+    // cost); anything else (count/head/collect-shaped stages) is an eager
+    // gate regression.
+    val started = prof.jobs.map(_.stages.map(_.name).mkString("|"))
+    val offending = started
+      .filterNot(_.split('|').forall(_.startsWith("parquet at ")))
+    assert(offending.isEmpty,
+      s"constructing q88 launched data job(s): $offending — the span-form " +
+      "gate regressed to an eager action")
+    // and with accurate small-corpus stats the gate must still pick the
+    // window form (salted-by-default would mean the estimate was lost)
+    assert(df.queryExecution.executedPlan.toString
+        .contains("windowspecdefinition"),
+      "tiny corpus no longer selects the window span form — plan-stats " +
+      "estimate unavailable?")
   }
 
   test("span-form gate direction: planted row stats flip window->salted at the gate (r12 prescription #5)") {

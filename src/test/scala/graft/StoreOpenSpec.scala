@@ -145,25 +145,8 @@ class StoreOpenSpec extends AnyFunSuite {
 
   /** Spark jobs submitted while `body` runs. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val group = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, "store open")
-    try {
-      val r = body
-      // listener events post asynchronously; a job a call submits is
-      // enqueued before the call returns
-      Thread.sleep(1500)
-      (r, jobs.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    val (r, prof) = graft.core.Telemetry.profile(spark, "store open")(body)
+    (r, prof.jobs.size)
   }
 
   test("serve opens: TextIndex.read submits no job, ChunkStore.read at most the listing") {

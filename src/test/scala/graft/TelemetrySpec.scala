@@ -1,10 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Telemetry
 import graft.functions.Registry
+import graft.sources.GenStore
 
 class TelemetrySpec extends AnyFunSuite {
 
@@ -23,10 +29,8 @@ class TelemetrySpec extends AnyFunSuite {
       ("c3", "d2", "csv", "b.csv", 0, "x | y"))
       .toDF("id", "document_id", "kind", "path", "idx", "text")
     Telemetry.observeIngest(chunks, runId = "test-run").count()
-    // listener fires asynchronously on success; poll briefly for delivery
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (Telemetry.metrics("test-run").isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
+    // the listener fires asynchronously on success
+    Telemetry.drain(spark)
     val m = Telemetry.metrics("test-run")
     assert(m.isDefined, "metrics row not captured")
     assert(m.get.getAs[Long]("chunks") == 3)
@@ -102,5 +106,62 @@ class TelemetrySpec extends AnyFunSuite {
       .count().collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(salted == plain)
     assert(plain.contains(("hot", "H", 1000L)))
+  }
+
+  test("profile: per-stage shuffle figures, jobs scoped to the body, probe delta") {
+    val sc = spark.sparkContext
+    def jobAt(site: String, parts: Int): Long = {
+      sc.setCallSite(site)
+      try sc.parallelize(1 to 50, parts).count() finally sc.clearCallSite()
+    }
+    def call[T](f: => T): java.util.concurrent.Callable[T] = () => f
+    // started before the profile, so it carries no profile tag
+    val other = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      other.submit(call(())).get()
+      val (rows, p) = Telemetry.profile(spark, "groupBy") {
+        GenStore.Probe.inc("telemetry_spec_probe")
+        other.submit(call(jobAt("outside-body", 3))).get()
+        jobAt("inside-body", 2)
+        spark.range(0, 1000, 1, 4).groupBy((col("id") % 10).as("k")).count().collect()
+      }
+      assert(rows.length == 10)
+      val names = p.jobs.flatMap(_.stages.map(_.name))
+      assert(names.exists(_.startsWith("inside-body")), names)
+      assert(!names.exists(_.startsWith("outside-body")), names)
+      assert(p.probe.get("telemetry_spec_probe").contains(1L), p.probe)
+
+      // map side: 4 tasks, each writing one partial count per key
+      val written = p.stages.filter(_.writeBytes > 0)
+      assert(written.size == 1, p.json)
+      assert(written.head.tasks == 4)
+      assert(written.head.writeRecords == 40)
+      val read = p.stages.filter(_.readRecords > 0)
+      assert(read.size == 1, p.json)
+      assert(read.head.readRecords == written.head.writeRecords)
+      assert(read.head.readBytes > 0)
+      assert(p.stages.forall(s => s.wallMs >= 0 && s.maxTaskMs >= s.medianTaskMs))
+      // the caller's (absent) tag is restored
+      assert(sc.getLocalProperty(Telemetry.ProfileProperty) == null)
+
+      // a nested profile's job counts for both profiles
+      val ((_, inner), outer) = Telemetry.profile(spark, "outer") {
+        Telemetry.profile(spark, "inner")(jobAt("nested", 1))
+      }
+      assert(inner.jobs.size == 1 && outer.jobs.size == 1, (inner.json, outer.json))
+      assert(sc.getLocalProperty(Telemetry.ProfileProperty) == null)
+    } finally other.shutdown()
+  }
+
+  test("SparkListener is subclassed and registered in src/main only inside core/Telemetry.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val listener = """(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener(Interface)?\b|addSparkListener""".r
+    val hits = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => listener.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString).toSet
+    assert(hits == Set("graft/core/Telemetry.scala"),
+      s"SparkListeners outside core/Telemetry: ${hits - "graft/core/Telemetry.scala"}")
   }
 }
