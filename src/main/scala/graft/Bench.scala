@@ -709,8 +709,8 @@ object Bench {
     build("stream_stores") {
       graft.queries.PipelineCatalog.q87EnsureStreaming(spark, sfDir)
     }
-    // BPE merge induction (q120/q124/q129 serve from the memoized
-    // chain): a production pipeline trains the tokenizer once at write
+    // BPE merge induction (q120/q124/q129 serve from the persisted
+    // artifact): a production pipeline trains the tokenizer once at write
     // time; without this hoist the training would ride q120's first
     // timed run and min-of-2 would discard it (the r13 #1 class)
     build("bpe_merges") {

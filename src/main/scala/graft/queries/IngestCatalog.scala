@@ -1086,6 +1086,13 @@ object IngestCatalog {
   // of the same record.
   // -------------------------------------------------------------------------
 
+  /** Scenario tag stamped into the dz-ledger manifest; bump to invalidate
+    * stale artifacts. Shared with StreamingSpec so the rebuild test asserts
+    * against the real constant instead of a copy that can drift (r17's
+    * driver-red test was exactly that drift: v1 asserted, v2 written).
+    */
+  private[graft] val DzLedgerScenario = "dzledger-v2"
+
   /** Write-time build of the accumulated dropzone skip ledger q105 reads:
     * the two micro-batches run ONCE per corpus stamp (manifest-gated like
     * the other persisted artifacts — Bench pre-builds it in its
@@ -1094,43 +1101,23 @@ object IngestCatalog {
     * at 10.3 s because both `Dropzone.processBatch` builds ran inside the
     * timed path). Returns the ledger directory.
     */
-  /** Scenario tag stamped into the dz-ledger manifest; bump to invalidate
-    * stale artifacts. Shared with StreamingSpec so the rebuild test asserts
-    * against the real constant instead of a copy that can drift (r17's
-    * driver-red test was exactly that drift: v1 asserted, v2 written).
-    */
-  private[graft] val DzLedgerScenario = "dzledger-v2"
-
-  private[graft] def ensureDzLedger(s: SparkSession, d: String): String = {
-    val root = GenStore.artifactPath(d, "documents.parquet", "_graft_dzledger",
-      "graft-dzledger")
-    val stamp = GenStore.sourceStamp(new java.io.File(s"$d/documents.parquet"))
+  private[graft] def ensureDzLedger(s: SparkSession, d: String): String =
     // r17 OPT: chunk at the production 800/100 instead of 100/20 — the
     // ledger rows q101/q105 serve are recorded BEFORE chunking (scan-level
     // drops), so the chunk grain is scenario-incidental; 100/20 made the
     // build chunk+embed the whole kept corpus at ~8× the chunk count for
     // an artifact no declared query reads. Scenario bumped to v2 so stale
-    // v1 artifacts rebuild.
-    val expected =
-      s"""{"source_stamp":"$stamp","batches":2,"chunk":[800,100],"scenario":"$DzLedgerScenario"}"""
-    GenStore.ensureFresh(root, expected) {
-      // a stale corpus leaves old chunks + ledger rows behind — clear the
-      // subtrees so the rebuild starts from the stream's t0 (the manifest
-      // commits LAST, so a crash here just rebuilds again)
-      for (sub <- Seq("chunks", "ledger")) {
-        val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    // v1 artifacts rebuild. A stale corpus's chunks and ledger rows are
+    // cleared by the gate, so the rebuild starts from the stream's t0.
+    GenStore.ensureArtifact(d, "documents.parquet", "dzledger",
+      s""""batches":2,"chunk":[800,100],"scenario":"$DzLedgerScenario"""") { root =>
       Seq(0, 1).foreach { p =>
         graft.streaming.Dropzone.processBatch(
           s, ledgerFiles(s, d, Some(p)), "dz", s"$root/chunks",
           800, 100, 8, skipUnchangedFiles = true,
           batchId = p.toLong, skipLedgerPath = Some(s"$root/ledger"))
       }
-    }
-    s"$root/ledger"
-  }
+    } + "/ledger"
 
   val q105StreamSkipLedger: Q = (s, d) => {
     val ledger = ensureDzLedger(s, d)

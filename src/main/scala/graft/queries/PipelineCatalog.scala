@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.Uuid5
 import graft.operators.{Chunker, Dedup, DevEmbed, QualityModel, Similarity, TextAnalytics}
+import graft.sources.GenStore
 
 /** Pipeline / text-analytics operator queries: the reference's dataflow
   * stages (chunk → embed → search, SURVEY §2.8) plus the training-data
@@ -1425,32 +1426,12 @@ object PipelineCatalog {
   // postings, tf, df all repaired by exact delta arithmetic.
   // -------------------------------------------------------------------------
 
-  private def q77Path(d: String): String = {
-    val root = sys.env.get("GRAFT_INDEX_DIR")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s"$d/documents.parquet").getAbsolutePath
-        .concat("#tindex-inc").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    new java.io.File(root, s"graft-tindex-inc-$sig").toString
-  }
-
   /** Build-base + upsert-delta once per corpus version (the manifest
     * records the final state); every later call only serves.
     */
-  private[graft] def q77EnsureIncremental(s: SparkSession, d: String): String = {
-    val path = q77Path(d)
-    val mfPath = java.nio.file.Paths.get(path, "_graft_manifest.json")
-    val expected = {
-      val stamp = graft.sources.GenStore.sourceStamp(
-        new java.io.File(s"$d/documents.parquet"))
-      s"""{"source_stamp":"$stamp","scenario":"base+delta-v1","tokenize":"ws-split-v2","layout":"seg-v5"}"""
-    }
-    val fresh = java.nio.file.Files.exists(mfPath) &&
-      java.nio.file.Files.readString(mfPath) == expected
-    if (!fresh) {
-      val dir = new java.io.File(path)
-      if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  private[graft] def q77EnsureIncremental(s: SparkSession, d: String): String =
+    GenStore.ensureArtifact(d, "documents.parquet", "tindex-inc",
+      """"scenario":"base+delta-v1","tokenize":"ws-split-v2","layout":"seg-v5"""") { path =>
       val docs = docsWide(s, d).select(col("doc_id"), col("text"))
       val stale = docs.filter(col("doc_id") % 10 === 0)
         .withColumn("text", concat(col("text"), lit(" spark spark stale draft")))
@@ -1465,10 +1446,7 @@ object PipelineCatalog {
       val delta = docs.filter(col("doc_id") % 2 === 1 || col("doc_id") % 10 === 0)
       val deleted = extras.select(col("doc_id"))
       graft.sources.TextIndex.upsert(s, delta, "doc_id", "text", deleted, path)
-      graft.sources.GenStore.atomicWrite(mfPath, expected)
     }
-    path
-  }
 
   val q77IncTextIndex: Q = (s, d) => {
     val idx = graft.sources.TextIndex.read(s, q77EnsureIncremental(s, d))
@@ -1496,16 +1474,6 @@ object PipelineCatalog {
   @volatile private var lastIncIvfCentroids: Option[Array[Array[Double]]] = None
   @volatile private var lastIncPqCodebooks: Option[Array[Array[Array[Double]]]] = None
 
-  private def incVecPath(d: String, tag: String): String = {
-    val root = sys.env.get("GRAFT_INDEX_DIR")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s"$d/embeddings.parquet").getAbsolutePath
-        .concat("#" + tag).getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    new java.io.File(root, s"graft-$tag-$sig").toString
-  }
-
   /** The add/replace/delete frames shared by the IVF and PQ scenarios. */
   private def incVecScenario(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1522,33 +1490,15 @@ object PipelineCatalog {
     (base, delta, extras.select(col("vec_id")))
   }
 
-  private def incScenarioFresh(path: String, d: String, tag: String): Boolean = {
-    val mfPath = java.nio.file.Paths.get(path, "_graft_scenario.json")
-    val stamp = graft.sources.GenStore.sourceStamp(
-      new java.io.File(s"$d/embeddings.parquet"))
-    // -v2: epoch-pointer layout (stale -v1 artifacts have no e<K> dirs)
-    val expected = s"""{"source_stamp":"$stamp","scenario":"$tag-v2"}"""
-    val fresh = java.nio.file.Files.exists(mfPath) &&
-      java.nio.file.Files.readString(mfPath) == expected
-    if (!fresh) {
-      val dir = new java.io.File(path)
-      if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      dir.mkdirs()
-      graft.sources.GenStore.atomicWrite(mfPath, expected)
-      false
-    } else true
-  }
-
-  private[graft] def q78EnsureIncremental(s: SparkSession, d: String): String = {
-    val path = incVecPath(d, "vstore-inc")
-    if (!incScenarioFresh(path, d, "vstore-inc")) {
+  // -v2 in the scenario: the epoch-pointer layout
+  private[graft] def q78EnsureIncremental(s: SparkSession, d: String): String =
+    GenStore.ensureArtifact(d, "embeddings.parquet", "vstore-inc",
+      """"scenario":"vstore-inc-v2"""") { path =>
       val (base, delta, deleted) = incVecScenario(s, d)
       graft.sources.VectorStore.write(base, "embedding", path)
       graft.sources.VectorStore.upsertVectors(
         s, delta, "vec_id", "embedding", deleted, path)
     }
-    path
-  }
 
   val q78IncIvf: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
@@ -1564,8 +1514,8 @@ object PipelineCatalog {
 
   private[graft] def q79EnsureIncremental(s: SparkSession, d: String): String = {
     val ivfPath = q78EnsureIncremental(s, d)
-    val path = incVecPath(d, "pqstore-inc")
-    if (!incScenarioFresh(path, d, "pqstore-inc")) {
+    GenStore.ensureArtifact(d, "embeddings.parquet", "pqstore-inc",
+      """"scenario":"pqstore-inc-v2"""") { path =>
       val centroids = graft.sources.VectorStore
         .read(s, ivfPath, planes = 8, dim = 64).centroids
       val (base, delta, deleted) = incVecScenario(s, d)
@@ -1574,7 +1524,6 @@ object PipelineCatalog {
       graft.sources.VectorStore.upsertPqCodes(
         s, delta, "vec_id", "embedding", deleted, path, centroids)
     }
-    path
   }
 
   val q79IncPq: Q = (s, d) => {
@@ -3124,31 +3073,12 @@ object PipelineCatalog {
   @volatile private var lastStreamIvfCentroids: Option[Array[Array[Double]]] = None
   @volatile private var lastStreamPqCodebooks: Option[Array[Array[Array[Double]]]] = None
 
-  private def q87Root(d: String): String = {
-    val root = sys.env.get("GRAFT_INDEX_DIR")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s"$d/documents.parquet").getAbsolutePath
-        .concat("#dz-stream").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    new java.io.File(root, s"graft-dz-stream-$sig").toString
-  }
-
   /** Drive the micro-batch scenario once per corpus version; later calls
     * only serve from the maintained artifacts (q77/q78 contract).
     */
-  private[graft] def q87EnsureStreaming(s: SparkSession, d: String): String = {
-    val root = q87Root(d)
-    val mfPath = java.nio.file.Paths.get(root, "_graft_manifest.json")
-    val stamp = graft.sources.GenStore.sourceStamp(
-      new java.io.File(s"$d/documents.parquet"))
-    val expected = s"""{"source_stamp":"$stamp","scenario":"dz-stream-v2"}"""
-    val fresh = java.nio.file.Files.exists(mfPath) &&
-      java.nio.file.Files.readString(mfPath) == expected
-    if (!fresh) {
-      val dir = new java.io.File(root)
-      if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      dir.mkdirs()
+  private[graft] def q87EnsureStreaming(s: SparkSession, d: String): String =
+    GenStore.ensureArtifact(d, "documents.parquet", "dz-stream",
+      """"scenario":"dz-stream-v2"""") { root =>
       val docs = docsWide(s, d).select(col("doc_id"), col("text"))
       // a micro-batch as the binaryFile source delivers it: (path,
       // content, length) — content is the document text byte-exact
@@ -3184,10 +3114,7 @@ object PipelineCatalog {
       run(batch0, 0L) // adds: evens, with stale tens + the padded shrink doc
       run(batch0, 0L) // restart re-delivery of the SAME batch id: no-op
       run(batch1, 1L) // odds + corrected tens + corrected (shrunk) doc
-      graft.sources.GenStore.atomicWrite(mfPath, expected)
     }
-    root
-  }
 
   val q87StreamBm25: Q = (s, d) => {
     val root = q87EnsureStreaming(s, d)
@@ -4401,37 +4328,24 @@ object PipelineCatalog {
   /** doc_id (min, span) per corpus dir — one probe per JVM, not per
     * construction (the r11 q88 count-gate lesson applied to q109).
     *
-    * The memo key carries a cheap dir FINGERPRINT (file names + sizes +
-    * mtimes of the documents footprint), not the path alone: a corpus dir
-    * rewritten in-process (regenerated testdata, refreshed dropzone
-    * output) would otherwise serve a stale span, making q109's packed
-    * order key non-monotone — doc_id − mn can bleed into the adjacent
-    * quality level and silently mis-order the selection, with the
-    * overflow `require` validating only the stale span. On a non-local
-    * URI (driver-side stat not meaningful) the fingerprint degrades to
-    * the path and the contract is corpus-dir-immutable-per-JVM — which
-    * every production layout here satisfies (write-once corpus dirs).
+    * The memo key carries the documents table's [[GenStore.sourceStamp]],
+    * not the path alone: a corpus dir rewritten in-process (regenerated
+    * testdata, refreshed dropzone output) would otherwise serve a stale
+    * span, making q109's packed order key non-monotone — doc_id − mn can
+    * bleed into the adjacent quality level and silently mis-order the
+    * selection, with the overflow `require` validating only the stale
+    * span. The values are plain longs, so the map holds no Spark state.
     */
   private val idBoundsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 
-  private def docsFingerprint(d: String): String = {
-    val f = new java.io.File(d, "documents.parquet")
-    def stat(x: java.io.File) = s"${x.getName}:${x.length}:${x.lastModified}"
-    if (f.isDirectory)
-      Option(f.listFiles)
-        .map(_.sortBy(_.getName).map(stat).mkString(";"))
-        .getOrElse(stat(f))
-    else if (f.isFile) stat(f)
-    else d
-  }
-
   /** Memoized (min_id, span) of the documents table — the one eager probe
     * the budget/packing kernels share: a narrow min/max over the pruned
-    * int64 id column, paid once per (dir, fingerprint).
+    * int64 id column, paid once per (dir, stamp).
     */
   private def docIdBounds(s: SparkSession, d: String): (Long, Long) =
-    idBoundsCache.computeIfAbsent(d + "\u0000" + docsFingerprint(d), { _ =>
+    idBoundsCache.computeIfAbsent(
+      d + "\u0000" + GenStore.sourceStamp(new java.io.File(d, "documents.parquet")), { _ =>
       val b = Tables(s, d, "documents")
         .agg(min(col("doc_id")).cast("long"), max(col("doc_id")).cast("long"))
         .head()
@@ -5463,23 +5377,17 @@ object PipelineCatalog {
     * pre-builds it with the other ingest-time artifacts). Returns the
     * store path.
     */
-  private[graft] def ensureFrameStore(s: SparkSession, d: String): String = {
-    import graft.sources.{GenStore, VectorStore}
-    val path = GenStore.artifactPath(d, "documents.parquet",
-      "_graft_frames", "graft-framestore", key = "#frames16")
-    val stamp = GenStore.sourceStamp(new java.io.File(s"$d/documents.parquet"))
+  private[graft] def ensureFrameStore(s: SparkSession, d: String): String =
     // every_ms is part of the artifact identity: a changed sampling grid
     // produces a different frame corpus and must invalidate the store
-    val expected = s"""{"source_stamp":"$stamp","planes":8,"dim":$FrameDim,""" +
-      s""""k":$FrameCells,"every_ms":$FrameEveryMs,"scenario":"frames-v1"}"""
-    GenStore.ensureFresh(path, expected) {
-      VectorStore.write(
+    GenStore.ensureArtifact(d, "documents.parquet", "framestore",
+      s""""planes":8,"dim":$FrameDim,"k":$FrameCells,"every_ms":$FrameEveryMs,""" +
+        """"scenario":"frames-v1"""") { path =>
+      graft.sources.VectorStore.write(
         videoFrameVectors(s, d)
           .withColumn("fid", concat(col("path"), lit("#"), col("frame_ms"))),
         "fvec", path, planes = 8, dim = FrameDim, k = FrameCells)
     }
-    path
-  }
 
   val q104FrameAnn: Q = (s, d) => {
     import graft.sources.VectorStore
@@ -5598,8 +5506,8 @@ object PipelineCatalog {
 
   /** Apply one learned merge: the 1-row winning-pair frame broadcasts in
     * and the wrapped-symbolization replace folds its occurrences — the
-    * ONE definition of merge application (bpeChain rounds, q129's
-    * per-source replay).
+    * chained definition of merge application, kept as the parity
+    * reference the one-expression apply_bpe is pinned against.
     */
   private[graft] def applyMerge(df: DataFrame, best: DataFrame): DataFrame =
     df.crossJoin(broadcast(
@@ -5623,49 +5531,56 @@ object PipelineCatalog {
     else df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Memoized per corpus dir + file fingerprint (the idBoundsCache
-    * contract): q120, q124 and q129 all serve from ONE induction per
-    * JVM/corpus — the checkpointed word table and 1-row merge frames
-    * stay valid for the SparkContext's lifetime, and a rewritten corpus
-    * dir re-trains via the fingerprint key.
+  /** A persisted BPE induction ([[bpeChain]]): the learned
+    * (lhs, rhs, pair_count) merges, read from the artifact's sidecar, and
+    * the Heaps-bounded word table they were trained on, which only q124
+    * opens.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (IndexedSeq[DataFrame], IndexedSeq[DataFrame])]()
+  private final case class BpeModel(root: String,
+      merges: IndexedSeq[(String, String, Long)]) {
+    def words(s: SparkSession): DataFrame = GenStore.open(s, s"$root/words")
+    def pairs: IndexedSeq[(String, String)] = merges.map(m => (m._1, m._2))
+  }
 
-  /** Evict entries keyed to a DIFFERENT applicationId than the live one:
-    * checkpointed frames of a stopped context are unusable AND pin big
-    * lineages for the JVM lifetime — a fresh-context re-measure (Bench's
-    * isolation block) would otherwise leak one full cache generation per
-    * restart. Keys are "appId dir fingerprint", so a prefix test suffices.
-    */
-  private def evictStaleContexts[V](
-      m: java.util.concurrent.ConcurrentHashMap[String, V],
-      appId: String): Unit =
-    m.keySet.removeIf(k => !k.startsWith(appId + " "))
+  private val BpeMergesFile = "merges.json"
 
-  /** The shared BPE induction: the checkpointed word-count table in its
-    * initial symbolization (ws(0)) plus, per round i, the 1-row winning
-    * merge (bests(i-1)) and the post-merge symbolizations (ws(i)). q120
-    * reports the merges; q124 measures what they buy; q129 replays the
-    * merges per source.
+  /** The shared BPE induction (v1 [a-z]+ alphabet, or v2 full alphabet),
+    * a write-time artifact of the documents table built once per
+    * (stamp, alphabet, depth) by [[GenStore.ensureArtifact]]: the build
+    * writes the word table as parquet, trains driver-local over it and
+    * writes the learned merges as a JSON sidecar. Every later call reads
+    * the sidecar on the driver and submits no Spark job. q120/q152 list
+    * the merges, q124 measures what they buy, q129/q136/q148/q153 apply
+    * them to their own word tables.
     */
-  private def bpeChain(s: SparkSession, d: String)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) =
-    // keyed on the applicationId too: cached CHECKPOINTED frames are
-    // bound to their SparkContext, and a fresh-context re-measure in the
-    // same JVM (Bench's isolation block) must re-train, not touch frames
-    // of a stopped context (idBoundsCache caches plain longs — exempt)
-    {
-      evictStaleContexts(bpeCache, s.sparkContext.applicationId)
-      bpeCache.computeIfAbsent(
-        s.sparkContext.applicationId + " " + d + " " + docsFingerprint(d), { _ =>
-          bpeTrain(s, d)
-        })
+  private def bpeChain(s: SparkSession, d: String, v2: Boolean = false): BpeModel = {
+    val (tag, scenario) = if (v2) ("bpe-v2", "bpe-v2-full") else ("bpe-v1", "bpe-v1-az")
+    val root = GenStore.ensureArtifact(d, "documents.parquet", tag,
+        s""""scenario":"$scenario","merges":$BpeMerges""") { path =>
+      val w0 = if (v2) bpeWordTableV2(s, d) else bpeWordTable(s, d)
+      w0.write.parquet(s"$path/words")
+      val table = w0.select(col("freq"), col("r")).collect().map { row =>
+        (row.getLong(0), row.getString(1).trim.split("  "))
+      }
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val arr = json.createArrayNode()
+      trainBpeLocal(table, BpeMerges).foreach { case (l, r, c) =>
+        arr.addObject().put("lhs", l).put("rhs", r).put("pair_count", c)
+      }
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path, BpeMergesFile),
+        json.writeValueAsString(arr))
     }
+    val node = GenStore.readSidecar(java.nio.file.Paths.get(root, BpeMergesFile))
+      .getOrElse(throw new IllegalStateException(s"BPE artifact $root: unreadable $BpeMergesFile"))
+    import scala.jdk.CollectionConverters._
+    BpeModel(root, node.elements().asScala.map { m =>
+      (m.get("lhs").asText(), m.get("rhs").asText(), m.get("pair_count").asLong())
+    }.toIndexedSeq)
+  }
 
   /** The Heaps-bounded training table: distinct lowercase [a-z]+ words
     * with corpus frequencies, in the char-wrapped symbolization. ONE
-    * corpus scan, checkpointed once per (dir, fingerprint).
+    * corpus scan, checkpointed; [[bpeChain]] persists it.
     */
   private[graft] def bpeWordTable(s: SparkSession, d: String): DataFrame =
     docsWide(s, d)
@@ -5807,83 +5722,48 @@ object PipelineCatalog {
     merges.toIndexedSeq
   }
 
-  private def bpeTrain(s: SparkSession, d: String)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) =
-    bpeTrainFrom(s, bpeWordTable(s, d))
-
-  private def bpeTrainFrom(s: SparkSession, w0: DataFrame)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
-    // collect the Heaps-bounded table ONCE and induce driver-local; the
-    // learned merges come back as 1-row LocalRelations so every consumer
-    // (q120's listing, q124's depth frames, q129's replay, q136's drift
-    // batch) sees exactly the frames the per-round-job shape produced
-    val table = w0.select(col("freq"), col("r")).collect().map { row =>
-      (row.getLong(0), row.getString(1).trim.split("  "))
-    }
-    val merges = trainBpeLocal(table, BpeMerges)
-    import s.implicits._
-    // pair exhaustion (an alphabet-free or pathologically tiny corpus)
-    // degrades EXACTLY like the distributed chain did: the exhausted
-    // round's best is an EMPTY frame, applyMerge's crossJoin empties the
-    // symbolization, and q120/q124/q129 report nothing/null — the
-    // degradation mode QueriesSpec pins (never a crash or a NaN)
-    val bests = (0 until BpeMerges).map { i =>
-      merges.lift(i) match {
-        case Some((l, r, c)) => Seq((l, r, c)).toDF("lhs", "rhs", "pair_count")
-        case None =>
-          Seq.empty[(String, String, Long)].toDF("lhs", "rhs", "pair_count")
-      }
-    }
-    val ws = scala.collection.mutable.ArrayBuffer(w0)
-    bests.foreach { best => ws += applyMerge(ws.last, best) }
-    (ws.toIndexedSeq, bests.toIndexedSeq)
-  }
-
-  /** The learned merge list as driver-side pairs, stopping at the first
-    * exhausted round (an empty best frame — the degradation contract).
-    * The bests are LocalRelations built from the driver-local trainer, so
-    * collecting them is driver-only work, no Spark jobs.
-    */
-  private def collectMerges(bests: Seq[DataFrame]): IndexedSeq[(String, String)] =
-    bests.iterator
-      .map(_.select(col("lhs"), col("rhs")).collect())
-      .takeWhile(_.nonEmpty)
-      .map(a => (a(0).getString(0), a(0).getString(1)))
-      .toIndexedSeq
-
   /** The whole learned vocabulary applied in ONE codegen'd expression
-    * (SCALING row 30) — replaces the K-stage `bests.foldLeft(applyMerge)`
-    * plan whose operator count grew with merge depth. Exhaustion keeps
-    * the chained form's degradation: any empty round empties the frame
-    * (the crossJoin-with-empty behavior q124/q129/q136 specs pin).
+    * (SCALING row 30) — replaces the K-stage `applyMerge` fold whose
+    * operator count grew with merge depth. An exhausted induction (fewer
+    * than K merges) empties the frame, the degradation contract the
+    * q124/q129/q136 specs pin.
     */
-  private def applyBpeFull(s: SparkSession, df: DataFrame,
-      bests: Seq[DataFrame]): DataFrame = {
-    val merges = collectMerges(bests)
-    if (merges.size < bests.size) df.filter(lit(false))
-    else df.withColumn("r",
-      graft.functions.ApplyBpe.applyBpe(col("r"), merges, s))
-  }
+  private def applyBpeFull(s: SparkSession, df: DataFrame, bpe: BpeModel): DataFrame =
+    if (bpe.merges.size < BpeMerges) df.filter(lit(false))
+    else df.withColumn("r", graft.functions.ApplyBpe.applyBpe(col("r"), bpe.pairs, s))
 
   /** Test-only window into the induction so the mutation audit can apply
-    * the SAME learned merges in a perturbed order (family 35).
+    * the SAME learned merges in a perturbed order (family 35): one 1-row
+    * frame per round, empty past exhaustion.
     */
-  private[graft] def bpeChainForAudit(s: SparkSession, d: String)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = bpeChain(s, d)
-
-  /** Bench hook: warm the memoized induction so suite timings measure
-    * SERVE (training = write-time work, itemized in index_build_sec).
-    */
-  private[graft] def ensureBpe(s: SparkSession, d: String): Unit =
-    bpeChain(s, d)
-
-  val q120BpeMerges: Q = (s, d) => {
-    val (_, bests) = bpeChain(s, d)
-    bests.zipWithIndex.map { case (best, i0) =>
-      best.select(lit((i0 + 1).toLong).as("merge_rank"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("pair_count"))
-    }.reduce(_ union _).orderBy(col("merge_rank"))
+  private[graft] def bpeChainForAudit(s: SparkSession, d: String): IndexedSeq[DataFrame] = {
+    import s.implicits._
+    val merges = bpeChain(s, d).merges
+    (0 until BpeMerges).map(i => merges.lift(i).toSeq.toDF("lhs", "rhs", "pair_count"))
   }
+
+  /** The learned merge pairs in learned order (tools apply them). */
+  private[graft] def bpeMerges(s: SparkSession, d: String): IndexedSeq[(String, String)] =
+    bpeChain(s, d).pairs
+
+  /** Bench hook: build the persisted induction so suite timings measure
+    * SERVE (training = write-time work, itemized in index_build_sec).
+    * Returns the artifact root.
+    */
+  private[graft] def ensureBpe(s: SparkSession, d: String): String =
+    bpeChain(s, d).root
+
+  /** The merge listing as a LocalRelation of the learned merges: building
+    * it submits no Spark job.
+    */
+  private def bpeListing(s: SparkSession, bpe: BpeModel): DataFrame = {
+    import s.implicits._
+    bpe.merges.zipWithIndex.map { case ((l, r, c), i0) => ((i0 + 1).toLong, l, r, l + r, c) }
+      .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
+      .orderBy(col("merge_rank"))
+  }
+
+  val q120BpeMerges: Q = (s, d) => bpeListing(s, bpeChain(s, d))
 
   /** Full unrolled replay: round i extracts adjacent pairs from w{i-1}'s
     * symbolizations, takes the same deterministic argmax, and applies the
@@ -6274,9 +6154,9 @@ object PipelineCatalog {
     // table (the prefix merges[0..r) automaton), not the r-stage chained
     // frame — SCALING row 30; depth r past exhaustion stays the empty
     // frame (null totals), the chained degradation contract
-    val (ws, bests) = bpeChain(s, d)
-    val merges = collectMerges(bests)
-    val w0 = ws(0)
+    val bpe = bpeChain(s, d)
+    val merges = bpe.pairs
+    val w0 = bpe.words(s)
     (0 to BpeMerges).map { r =>
       val base =
         if (r == 0) w0
@@ -6805,7 +6685,7 @@ object PipelineCatalog {
   // -------------------------------------------------------------------------
 
   val q129FertilityBySource: Q = (s, d) => {
-    val (_, bests) = bpeChain(s, d)
+    val bpe = bpeChain(s, d)
     val sw0 = docsWide(s, d)
       .select(col("source"),
         explode(TextAnalytics.tokens(lower(col("text")))).as("word"))
@@ -6813,7 +6693,7 @@ object PipelineCatalog {
       .groupBy(col("source"), col("word")).agg(count(lit(1)).as("freq"))
       .select(col("source"), col("freq"),
         graft.functions.CharInterleave.charInterleave(col("word")).as("r"))
-    val applied = applyBpeFull(s, sw0, bests)
+    val applied = applyBpeFull(s, sw0, bpe)
     fertilityAgg(applied, Seq("source"))
       .select(col("source"), col("total_symbols"), col("total_chars"),
         rnd(col("total_chars").cast("double") / col("total_symbols"), 6)
@@ -7538,14 +7418,14 @@ object PipelineCatalog {
   // axis). 100 TB: the batch word table is Heaps-bounded per slice; the
   // merge applications are ONE apply_bpe expression (broadcast automaton,
   // SCALING row 30 — depth-independent plan); the
-  // induction itself is the memoized write-time artifact.
+  // induction itself is the persisted write-time artifact.
   // -------------------------------------------------------------------------
 
   private val DriftAlpha = "abcdefghijklmnopqrstuvwxyz"
   private val DriftPermuted = "qwertyuiopasdfghjklzxcvbnm"
 
   val q136TokenizerDrift: Q = (s, d) => {
-    val (_, bests) = bpeChain(s, d)
+    val bpe = bpeChain(s, d)
     val docs = docsWide(s, d)
     val batch = docs.select(
       when(col("doc_id") % 2 === 0, lit("stable")).otherwise(lit("shifted"))
@@ -7559,7 +7439,7 @@ object PipelineCatalog {
       .groupBy(col("slice"), col("word")).agg(count(lit(1)).as("freq"))
       .select(col("slice"), col("freq"),
         graft.functions.CharInterleave.charInterleave(col("word")).as("r"))
-    val applied = applyBpeFull(s, sw0, bests)
+    val applied = applyBpeFull(s, sw0, bpe)
     fertilityAgg(applied, Seq("slice"))
       .select(col("slice"), col("total_symbols"), col("total_chars"),
         rnd(col("total_chars").cast("double") / col("total_symbols"), 6)
@@ -8221,12 +8101,6 @@ object PipelineCatalog {
   // the BandStore/GenStore artifact it was always documented to be.
   // -------------------------------------------------------------------------
 
-  /** Memoized per (dir, fingerprint) like [[bpeCache]]: q142's manifest
-    * and q146's datasheet both read the SAME persisted store.
-    */
-  private val spansCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.sources.ManifestStore.Store]()
-
   private[graft] def manifestParams = graft.sources.ManifestStore.Params(
     ShuffleEpochs, ShuffleBuckets, PackSeqLen, ShardCount.toLong)
 
@@ -8240,15 +8114,9 @@ object PipelineCatalog {
     * epochs, q112's bounded explode) lives in ManifestStore.spanRows.
     */
   private def loaderManifest(s: SparkSession, d: String)
-      : graft.sources.ManifestStore.Store = {
-    // applicationId in the key: same stopped-context hazard as bpeCache
-    evictStaleContexts(spansCache, s.sparkContext.applicationId)
-    spansCache.computeIfAbsent(
-      s.sparkContext.applicationId + " " + d + " " + docsFingerprint(d), { _ =>
-        graft.sources.ManifestStore.ensure(
-          s, docsWide(s, d), "doc_id", "text", d, manifestParams)
-      })
-  }
+      : graft.sources.ManifestStore.Store =
+    graft.sources.ManifestStore.ensure(
+      s, docsWide(s, d), "doc_id", "text", d, manifestParams)
 
   /** Bench hook: hydrate the manifest store so suite timings measure
     * SERVE (the build is write-time work, itemized in index_build_sec).
@@ -8785,8 +8653,7 @@ object PipelineCatalog {
   // -------------------------------------------------------------------------
 
   val q148BpeTokenize: Q = (s, d) => {
-    val (_, bests) = bpeChain(s, d)
-    val merges = collectMerges(bests)
+    val merges = bpeMerges(s, d)
     val words = docsWide(s, d)
       .select(col("doc_id"),
         explode(TextAnalytics.tokens(lower(col("text")))).as("word"))
@@ -8903,29 +8770,14 @@ object PipelineCatalog {
         graft.functions.CharInterleave.charInterleave(col("word")).as("r"))
       .localCheckpoint()
 
-  private def bpeChainV2(s: SparkSession, d: String)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
-    evictStaleContexts(bpeCache, s.sparkContext.applicationId)
-    bpeCache.computeIfAbsent(
-      s.sparkContext.applicationId + " " + d + " " + docsFingerprint(d) + "#v2",
-      { _ => bpeTrainFrom(s, bpeWordTableV2(s, d)) })
-  }
-
   /** Bench hook — v2 training is write-time work like v1's. */
-  private[graft] def ensureBpeV2(s: SparkSession, d: String): Unit =
-    bpeChainV2(s, d)
+  private[graft] def ensureBpeV2(s: SparkSession, d: String): String =
+    bpeChain(s, d, v2 = true).root
 
-  val q152BpeMergesV2: Q = (s, d) => {
-    val (_, bests) = bpeChainV2(s, d)
-    bests.zipWithIndex.map { case (best, i0) =>
-      best.select(lit((i0 + 1).toLong).as("merge_rank"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("pair_count"))
-    }.reduce(_ union _).orderBy(col("merge_rank"))
-  }
+  val q152BpeMergesV2: Q = (s, d) => bpeListing(s, bpeChain(s, d, v2 = true))
 
   val q153BpeTokenizeV2: Q = (s, d) => {
-    val (_, bests) = bpeChainV2(s, d)
-    val merges = collectMerges(bests)
+    val merges = bpeChain(s, d, v2 = true).pairs
     val words = v2DocTokens(s, d)
     val applied = graft.functions.ApplyBpe.applyBpe(
       graft.functions.CharInterleave.charInterleave(col("word")), merges, s)
@@ -9022,23 +8874,9 @@ object PipelineCatalog {
   // path — the append's cost is O(delta + straddle), never a repack.
   // -------------------------------------------------------------------------
 
-  private def q149Path(d: String): String =
-    graft.sources.GenStore.artifactPath(d, "documents.parquet",
-      "_graft_manifest_inc", "graft-manifestinc")
-
-  private[graft] def q149EnsureIncremental(s: SparkSession, d: String): String = {
-    val path = q149Path(d)
-    val mfPath = java.nio.file.Paths.get(path, "_graft_scenario.json")
-    val expected = {
-      val stamp = graft.sources.GenStore.sourceStamp(
-        new java.io.File(s"$d/documents.parquet"))
-      s"""{"source_stamp":"$stamp","scenario":"manifest-base+append-v1.1","epochs":$ShuffleEpochs,"buckets":$ShuffleBuckets,"seq_len":$PackSeqLen,"shards":$ShardCount}"""
-    }
-    val fresh = java.nio.file.Files.exists(mfPath) &&
-      java.nio.file.Files.readString(mfPath) == expected
-    if (!fresh) {
-      val dir = new java.io.File(path)
-      if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  private[graft] def q149EnsureIncremental(s: SparkSession, d: String): String =
+    GenStore.ensureArtifact(d, "documents.parquet", "manifest-inc",
+      s""""scenario":"manifest-base+append-v1.1","epochs":$ShuffleEpochs,"buckets":$ShuffleBuckets,"seq_len":$PackSeqLen,"shards":$ShardCount""") { path =>
       val docs = docsWide(s, d).select(col("doc_id"), col("text"))
       graft.sources.ManifestStore.write(
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", path,
@@ -9046,10 +8884,7 @@ object PipelineCatalog {
       graft.sources.ManifestStore.append(s,
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", path,
         manifestParams)
-      graft.sources.GenStore.atomicWrite(mfPath, expected)
     }
-    path
-  }
 
   val q149IncManifest: Q = (s, d) => serveManifest(
     graft.sources.ManifestStore.read(s, q149EnsureIncremental(s, d)))
@@ -9140,33 +8975,12 @@ object PipelineCatalog {
 
   private val Q150Dropzone = "dzm"
 
-  private def q150Root(d: String): String = {
-    val root = sys.env.get("GRAFT_INDEX_DIR")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s"$d/documents.parquet").getAbsolutePath
-        .concat("#manifest-stream").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    new java.io.File(root, s"graft-manifest-stream-$sig").toString
-  }
-
   /** Drive the micro-batch scenario once per corpus version (q87's
     * contract); later calls serve from the maintained manifest.
     */
-  private[graft] def q150EnsureStreaming(s: SparkSession, d: String): String = {
-    val root = q150Root(d)
-    val mfPath = java.nio.file.Paths.get(root, "_graft_scenario.json")
-    val expected = {
-      val stamp = graft.sources.GenStore.sourceStamp(
-        new java.io.File(s"$d/documents.parquet"))
-      s"""{"source_stamp":"$stamp","scenario":"manifest-stream-v1","epochs":$ShuffleEpochs,"buckets":$ShuffleBuckets,"seq_len":$PackSeqLen,"shards":$ShardCount}"""
-    }
-    val fresh = java.nio.file.Files.exists(mfPath) &&
-      java.nio.file.Files.readString(mfPath) == expected
-    if (!fresh) {
-      val dir = new java.io.File(root)
-      if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      dir.mkdirs()
+  private[graft] def q150EnsureStreaming(s: SparkSession, d: String): String =
+    GenStore.ensureArtifact(d, "documents.parquet", "manifest-stream",
+      s""""scenario":"manifest-stream-v1","epochs":$ShuffleEpochs,"buckets":$ShuffleBuckets,"seq_len":$PackSeqLen,"shards":$ShardCount""") { root =>
       val docs = docsWide(s, d).select(col("doc_id"), col("text"))
       def files(ds: DataFrame): DataFrame =
         ds.select(
@@ -9183,10 +8997,7 @@ object PipelineCatalog {
       run(docs.filter(col("doc_id") % 2 === 0), 0L) // base packing
       run(docs.filter(col("doc_id") % 2 === 1), 1L) // tail append
       run(docs.filter(col("doc_id") % 2 === 1), 1L) // restart replay: no-op
-      graft.sources.GenStore.atomicWrite(mfPath, expected)
-    }
-    s"$root/manifest"
-  }
+    } + "/manifest"
 
   val q150StreamManifest: Q = (s, d) => serveManifest(
     graft.sources.ManifestStore.read(s, q150EnsureStreaming(s, d)))
@@ -9211,27 +9022,13 @@ object PipelineCatalog {
   private val Q154NewPair = Seq(8L, 245L)
   private val Q154Bridge = 45L
 
-  private[graft] def q154Path(d: String): String =
-    graft.sources.GenStore.artifactPath(d, "documents.parquet",
-      "_graft_clusters_inc", "graft-clusterinc")
-
-  private[graft] def q154EnsureIncremental(s: SparkSession, d: String): String = {
-    val path = q154Path(d)
-    val bandPath = graft.sources.GenStore.artifactPath(d, "documents.parquet",
-      "_graft_bands_inc", "graft-bandinc")
-    val mfPath = java.nio.file.Paths.get(path, "_graft_scenario.json")
-    val expected = {
-      val stamp = graft.sources.GenStore.sourceStamp(
-        new java.io.File(s"$d/documents.parquet"))
-      s"""{"source_stamp":"$stamp","scenario":"clusters-base+append-v1","new_pair":[${Q154NewPair.mkString(",")}],"bridge":$Q154Bridge}"""
-    }
-    val fresh = java.nio.file.Files.exists(mfPath) &&
-      java.nio.file.Files.readString(mfPath) == expected
-    if (!fresh) {
-      for (p <- Seq(path, bandPath)) {
-        val dir = new java.io.File(p)
-        if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      }
+  /** The cluster store and the band store it probes share one artifact
+    * root (q155's layout); returns the cluster store path.
+    */
+  private[graft] def q154EnsureIncremental(s: SparkSession, d: String): String =
+    GenStore.ensureArtifact(d, "documents.parquet", "clusters-inc",
+      s""""scenario":"clusters-base+append-v1","new_pair":[${Q154NewPair.mkString(",")}],"bridge":$Q154Bridge""") { root =>
+      val (path, bandPath) = (s"$root/clusters", s"$root/bands")
       import s.implicits._
       val docs = docsWide(s, d).select(col("doc_id"), col("text"))
       val held = Q154NewPair :+ Q154Bridge
@@ -9251,10 +9048,7 @@ object PipelineCatalog {
       }
       deliver(docs.filter(col("doc_id").isin(Q154NewPair: _*)), 1L)
       deliver(docs.filter(col("doc_id") === Q154Bridge), 2L)
-      graft.sources.GenStore.atomicWrite(mfPath, expected)
-    }
-    path
-  }
+    } + "/clusters"
 
   val q154IncClusters: Q = (s, d) =>
     graft.sources.ClusterStore.read(s, q154EnsureIncremental(s, d))
@@ -9280,30 +9074,9 @@ object PipelineCatalog {
 
   private val Q155Dropzone = "dzc"
 
-  private def q155Root(d: String): String = {
-    val root = sys.env.get("GRAFT_INDEX_DIR")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s"$d/documents.parquet").getAbsolutePath
-        .concat("#cluster-stream").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    new java.io.File(root, s"graft-cluster-stream-$sig").toString
-  }
-
-  private[graft] def q155EnsureStreaming(s: SparkSession, d: String): String = {
-    val root = q155Root(d)
-    val mfPath = java.nio.file.Paths.get(root, "_graft_scenario.json")
-    val expected = {
-      val stamp = graft.sources.GenStore.sourceStamp(
-        new java.io.File(s"$d/documents.parquet"))
-      s"""{"source_stamp":"$stamp","scenario":"cluster-stream-v1","new_pair":[${Q154NewPair.mkString(",")}],"bridge":$Q154Bridge}"""
-    }
-    val fresh = java.nio.file.Files.exists(mfPath) &&
-      java.nio.file.Files.readString(mfPath) == expected
-    if (!fresh) {
-      val dir = new java.io.File(root)
-      if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      dir.mkdirs()
+  private[graft] def q155EnsureStreaming(s: SparkSession, d: String): String =
+    GenStore.ensureArtifact(d, "documents.parquet", "cluster-stream",
+      s""""scenario":"cluster-stream-v1","new_pair":[${Q154NewPair.mkString(",")}],"bridge":$Q154Bridge""") { root =>
       val docs = docsWide(s, d).select(col("doc_id"), col("text"))
       def files(ds: DataFrame): DataFrame =
         ds.select(
@@ -9332,10 +9105,7 @@ object PipelineCatalog {
       run(docs.filter(col("doc_id") === Q154Bridge), 2L)
       // restart replay of the bridge batch: watermark + skip-unchanged
       run(docs.filter(col("doc_id") === Q154Bridge), 2L)
-      graft.sources.GenStore.atomicWrite(mfPath, expected)
-    }
-    s"$root/clusters"
-  }
+    } + "/clusters"
 
   val q155StreamClusters: Q = (s, d) => {
     val lab = graft.sources.ClusterStore.read(s, q155EnsureStreaming(s, d))

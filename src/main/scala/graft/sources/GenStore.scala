@@ -84,7 +84,9 @@ object GenStore {
     * but is opt-IN: a `canWrite` probe is not authorization (it returns
     * true for a privileged process even on data that is contractually
     * read-only, and an engine must never scribble index state next to
-    * input data it does not own).
+    * input data it does not own). Every artifact resolves here, the
+    * query-built scenario stores and the BPE model included (through
+    * [[ensureArtifact]]), so all of them honour `GRAFT_INDEX_BESIDE`.
     */
   def artifactPath(sfDir: String, table: String, suffix: String,
       fallbackTag: String, key: String = ""): String = {
@@ -146,6 +148,26 @@ object GenStore {
       build
       atomicWrite(mfPath, expected)
     }
+  }
+
+  /** The one gate for an artifact a query derives from a source table
+    * (scenario stores, the BPE model, the frame store, the dz ledger):
+    * the artifact lives at [[artifactPath]] under `tag`, and its manifest
+    * is the source's [[sourceStamp]] plus the caller's `identity` JSON
+    * members (scenario name, parameters). A stale or absent manifest
+    * empties the directory, runs `build(path)` and commits the manifest
+    * LAST, so a crash anywhere in the build leaves no manifest and the
+    * next call rebuilds from an empty directory. Returns the path.
+    */
+  def ensureArtifact(sfDir: String, table: String, tag: String,
+      identity: String)(build: String => Unit): String = {
+    val path = artifactPath(sfDir, table, s"_graft_$tag", s"graft-$tag", s"#$tag")
+    val stamp = sourceStamp(new java.io.File(s"$sfDir/$table"))
+    ensureFresh(path, s"""{"source_stamp":"$stamp",$identity}""") {
+      org.apache.commons.io.FileUtils.cleanDirectory(new java.io.File(path))
+      build(path)
+    }
+    path
   }
 
   // ---------------------------------------------------------------------

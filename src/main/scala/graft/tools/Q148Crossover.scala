@@ -30,14 +30,8 @@ object Q148Crossover {
     val depth = if (args.length > 2) args(2).toInt else 6
     val spark = Session.local()
     val merges: IndexedSeq[(String, String)] =
-      if (depth <= 6) {
-        val (_, bests) = graft.queries.PipelineCatalog.bpeChainForAudit(spark, sfDir)
-        bests.iterator
-          .map(_.select(col("lhs"), col("rhs")).collect())
-          .takeWhile(_.nonEmpty)
-          .map(a => (a(0).getString(0), a(0).getString(1)))
-          .toIndexedSeq
-      } else {
+      if (depth <= 6) graft.queries.PipelineCatalog.bpeMerges(spark, sfDir)
+      else {
         val table = graft.queries.PipelineCatalog.bpeWordTable(spark, sfDir)
           .select(col("freq"), col("r")).collect()
           .map(r => (r.getLong(0), r.getString(1).trim.split("  ")))

@@ -248,4 +248,47 @@ class CrashFuzzSpec extends AnyFunSuite {
     }
     assert(completed && n > 3, s"expected >=3 compact crash points, saw ${n - 2}")
   }
+
+  // ---------------------------------------------------------------------
+  // Query-built scenario stores (q78 IVF, q79 PQ): the artifact gate
+  // ---------------------------------------------------------------------
+
+  /** A corpus dir holding a private copy of sf0.001's embeddings: the
+    * scenario artifacts are keyed on the table's absolute path, so they
+    * belong to this test alone.
+    */
+  private def embeddingsCopy(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-fuzz-$tag")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get("/root/testdata/sf0.001/embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    dir.toString
+  }
+
+  test("q78/q79 scenario stores: a kill at any build point is rebuilt, never served") {
+    import graft.core.Session.materialize
+    import graft.queries.PipelineCatalog
+    def folds(d: String) = (materialize(PipelineCatalog.q78IncIvf(spark, d)),
+      materialize(PipelineCatalog.q79IncPq(spark, d)))
+    val d = embeddingsCopy("scenario")
+    val clean = folds(d)
+    val roots = Seq(PipelineCatalog.q78EnsureIncremental(spark, d),
+      PipelineCatalog.q79EnsureIncremental(spark, d))
+    for ((name, root, ensure) <- Seq[(String, String, String => String)](
+        ("q78", roots(0), PipelineCatalog.q78EnsureIncremental(spark, _)),
+        ("q79", roots(1), PipelineCatalog.q79EnsureIncremental(spark, _)))) {
+      var n = 1
+      var completed = false
+      while (!completed && n <= 40) {
+        // a stale artifact: the next ensure builds it from scratch
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+        completed = !crashAt(n)(ensure(d))
+        assert(folds(d) == clean,
+          s"$name: serving after a kill at build point $n differs from a clean build")
+        n += 1
+      }
+      assert(completed && n > 3, s"$name: expected >=2 build crash points, saw ${n - 2}")
+    }
+    roots.foreach(r => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
+  }
 }

@@ -1297,7 +1297,7 @@ class MutationAuditSpec extends AnyFunSuite {
     // chained merges silently never fire.
     import graft.operators.TextAnalytics
     def build(learnedOrder: Boolean) = {
-      val (_, bests) = graft.queries.PipelineCatalog.bpeChainForAudit(spark, Sf01)
+      val bests = graft.queries.PipelineCatalog.bpeChainForAudit(spark, Sf01)
       val sw0 = docsWide(Sf01)
         .select(col("source"),
           explode(TextAnalytics.tokens(lower(col("text")))).as("word"))
@@ -1584,7 +1584,7 @@ class MutationAuditSpec extends AnyFunSuite {
     // quietly swaps the synthesis would make the whole query vacuous.
     import graft.queries.PipelineCatalog
     def build(permute: Boolean) = {
-      val (_, bests) = PipelineCatalog.bpeChainForAudit(spark, Sf01)
+      val bests = PipelineCatalog.bpeChainForAudit(spark, Sf01)
       val docs = docsWide(Sf01)
       val shifted =
         if (permute)

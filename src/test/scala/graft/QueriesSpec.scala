@@ -1238,6 +1238,72 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("BPE artifact: q120/q152 serve the persisted merges with no Spark job; a rewritten corpus rebuilds") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions._
+    import graft.queries.PipelineCatalog
+    // the artifact is keyed on the table's absolute path: a private copy
+    // of the corpus keeps this test's artifacts its own
+    val dir = Files.createTempDirectory("graft-bpe-artifact")
+    Files.list(Paths.get(Sf)).forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
+    val d = dir.toString
+    def listing(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+    // sf0.001's merge listings
+    val v1 = Seq((1L, "e", "r", "er", 4650L), (2L, "o", "r", "or", 2880L),
+      (3L, "i", "n", "in", 2858L), (4L, "o", "w", "ow", 2763L),
+      (5L, "s", "t", "st", 2721L), (6L, "l", "u", "lu", 1928L))
+    val v2 = Seq((1L, "e", "r", "er", 4841L), (2L, "o", "r", "or", 2978L),
+      (3L, "i", "n", "in", 2945L), (4L, "o", "w", "ow", 2858L),
+      (5L, "s", "t", "st", 2825L), (6L, "l", "u", "lu", 1993L))
+    val roots = Seq(PipelineCatalog.ensureBpe(spark, d), PipelineCatalog.ensureBpeV2(spark, d))
+    for ((q, want) <- Seq("q120_bpe_merges" -> v1, "q152_bpe_merges_v2" -> v2)) {
+      val (df, prof) = graft.core.Telemetry.profile(spark, q)(SparkEntry.queries(q)(spark, d))
+      assert(prof.jobs.isEmpty, s"$q construction submitted Spark jobs: ${prof.json}")
+      assert(listing(df) == want, s"$q listing drifted")
+    }
+
+    // a rewritten documents table (half the corpus) changes the stamp:
+    // the next serve retrains instead of serving the stale merges
+    val manifests = roots.map(Paths.get(_, "_graft_manifest.json"))
+    val before = manifests.map(Files.readString(_))
+    Files.delete(dir.resolve("documents.parquet"))
+    spark.read.parquet(s"$Sf/documents.parquet").filter(col("doc_id") % 2 === 0)
+      .write.parquet(s"$d/documents.parquet")
+    val stamp = graft.sources.GenStore.sourceStamp(new java.io.File(s"$d/documents.parquet"))
+    val got = listing(SparkEntry.queries("q120_bpe_merges")(spark, d))
+    val table = PipelineCatalog.bpeWordTable(spark, d).select(col("freq"), col("r")).collect()
+      .map(r => (r.getLong(0), r.getString(1).trim.split("  ")))
+    val retrained = PipelineCatalog.trainBpeLocal(table, 6)
+    assert(got.map(m => (m._2, m._3, m._5)) == retrained && got != v1,
+      "q120 served merges of the old corpus")
+    assert(PipelineCatalog.ensureBpeV2(spark, d) == roots(1))
+    val after = manifests.map(Files.readString(_))
+    after.zip(before).foreach { case (a, b) =>
+      assert(a != b && a.contains(stamp), s"manifest not rebuilt for the new stamp: $a")
+    }
+    roots.foreach(r => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("queries/ derive artifacts only through GenStore.ensureArtifact: no hand-rolled gates or global frame caches") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/queries")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val banned = Seq("GRAFT_INDEX_DIR", "MessageDigest", "Files.readString",
+      "atomicWrite", "deleteDirectory", "evictStaleContexts")
+    val frameMap = """ConcurrentHashMap\s*\[[^\]]*\b(DataFrame|Store)\b""".r
+    val hits = Files.list(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        (banned.filter(src.contains) ++ frameMap.findFirstIn(src))
+          .map(h => s"${root.relativize(p)}: $h")
+      }.toList
+    assert(hits.isEmpty, s"hand-rolled artifact gates or frame caches in queries/: $hits")
+  }
+
   test("q120: driver-local BPE trainer matches the distributed inducer round-for-round") {
     import org.apache.spark.sql.functions._
     import graft.queries.PipelineCatalog
