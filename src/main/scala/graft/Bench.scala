@@ -640,22 +640,12 @@ object Bench {
         }
       buildDetail(name) = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
-    build("vector_ivf") {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      graft.sources.VectorStore.ensure(
-        spark, emb.filter(col("vec_id") =!= 0), "embedding", sfDir)
-    }
-    build("vector_pq") {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      graft.sources.VectorStore.ensurePq(
-        spark, emb.filter(col("vec_id") =!= 0), "embedding", sfDir)
-    }
+    // the catalog's own accessors: the queries then serve these builds
+    build("vector_ivf") { graft.queries.PipelineCatalog.ivfIndex(spark, sfDir) }
+    build("vector_pq") { graft.queries.PipelineCatalog.pqIndex(spark, sfDir) }
     // quality-classifier coefficients are a write-time artifact too
     // (q67 serves the stored literals; training = index build)
-    build("quality_model") {
-      graft.operators.QualityModel.ensure(
-        spark, spark.read.parquet(s"$sfDir/documents.parquet"), sfDir)
-    }
+    build("quality_model") { graft.queries.PipelineCatalog.qcWeights(spark, sfDir) }
     // the corpus text index (q68) and MinHash band store (q96/q99
     // probe the persisted corpus fingerprints) are the same class of
     // write-time artifact: production ingests build them once; the

@@ -41,7 +41,9 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Catalog.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check.
+    * the same parquet tables at `sfDir`. Every key has an oracle
+    * (QueriesSpec enforces the 1:1 key sets); the entries that embed
+    * trained literals read them from the artifacts their query serves.
     */
-  def oracleSql: Map[String, String] = Catalog.oracles
+  def oracleSql: Map[String, (SparkSession, String) => String] = Catalog.oracles
 }

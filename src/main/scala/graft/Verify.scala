@@ -14,29 +14,41 @@ object Verify {
     // bench times
     val spark = graft.core.Session.local()
     new java.io.File(outDir).mkdirs()
-    // A query that throws (analysis or execution) must surface as a RED row
-    // in the driver's compare, never a silently-missing one: dump a
-    // single-row parquet whose only column is `err` — guaranteed
-    // rows/schema/hash mismatch against the real oracle — plus errors.json
-    // with the full messages for diagnosis.
+    // A query or oracle that throws must surface as a RED row in the
+    // DuckDB compare, never a silently-missing one: dump a single-row
+    // parquet whose only column is `err` — guaranteed rows/schema/hash
+    // mismatch against the real oracle — plus errors.json with the full
+    // messages for diagnosis.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
-        try {
-          import spark.implicits._
-          Seq(errors(name)).toDF("err").coalesce(1)
-            .write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
-          System.err.println(s"[verify] $name err-stub write failed: ${e2.getMessage}")
-        }
+    def fail(name: String, e: Throwable): Unit = {
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+      errors(name) = errors.get(name).fold(msg)(prev => s"$prev; $msg")
+      try {
+        import spark.implicits._
+        Seq(errors(name)).toDF("err").coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e2: Throwable =>
+        System.err.println(s"[verify] $name err-stub write failed: ${e2.getMessage}")
       }
     }
+    def selected(name: String): Boolean = only.forall(_.exists(name.contains))
+    SparkEntry.queries.filter { case (name, _) => selected(name) }
+      .foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable => fail(name, e) }
+      }
+    // An oracle that cannot be authored keeps its key with SQL whose
+    // column cannot match the err stub, so the compare stays red.
+    val oracles = SparkEntry.oracleSql.filter { case (name, _) => selected(name) }
+      .map { case (name, oracle) =>
+        name -> (try oracle(spark, sfDir)
+          catch { case e: Throwable =>
+            fail(name, e)
+            "SELECT 'oracle failed' AS oracle_err"
+          })
+      }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -49,9 +61,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.exists(k.contains)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/errors.json"),
       errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))

@@ -22,6 +22,8 @@ import graft.core.Tables
   */
 object Catalog {
   type Q = (SparkSession, String) => DataFrame
+  /** A query's DuckDB replay SQL over the tables in `sfDir`. */
+  type Oracle = (SparkSession, String) => String
 
   private def tbl(s: SparkSession, d: String, n: String) = Tables(s, d, n)
 
@@ -371,9 +373,10 @@ object Catalog {
     "q12_full_outer_merge" -> q12FullOuterMerge,
   ) ++ PipelineCatalog.queries ++ IngestCatalog.queries
 
-  // `def`: PipelineCatalog.oracles is dynamic (q27's SQL embeds centroids
-  // trained during the query run — see PipelineCatalog.lastIvfCentroids)
-  def oracles: ListMap[String, String] = ListMap(
+  /** Every query's oracle: the fixed SQL strings lifted once, plus the
+    * entries that embed the trained literals their query serves.
+    */
+  val oracles: ListMap[String, Oracle] = (ListMap(
     "q01_pricing_summary" -> q01Sql,
     "q02_filter_pushdown" -> q02Sql,
     "q03_regional_revenue" -> q03Sql,
@@ -386,5 +389,7 @@ object Catalog {
     "q10_daily_activity" -> q10Sql,
     "q11_doc_rollup" -> q11Sql,
     "q12_full_outer_merge" -> q12Sql,
-  ) ++ PipelineCatalog.oracles ++ IngestCatalog.oracles
+  ) ++ PipelineCatalog.fixedOracles ++ IngestCatalog.oracles).map {
+    case (name, sql) => name -> ((_: SparkSession, _: String) => sql)
+  } ++ PipelineCatalog.artifactOracles
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.Uuid5
 import graft.operators.{Chunker, Dedup, DevEmbed, QualityModel, Similarity, TextAnalytics}
-import graft.sources.GenStore
+import graft.sources.{GenStore, VectorStore}
 
 /** Pipeline / text-analytics operator queries: the reference's dataflow
   * stages (chunk → embed → search, SURVEY §2.8) plus the training-data
@@ -30,6 +30,25 @@ object PipelineCatalog {
     */
   private def docsWide(s: SparkSession, d: String) =
     Tables.fanOut(Tables(s, d, "documents"))
+
+  // The shared trained artifacts. Each has exactly one accessor, called by
+  // every query that serves it AND by its oracle, so the oracle embeds the
+  // literals the query served. Each builds once per source stamp; later
+  // calls read the manifest and the JSON sidecar.
+
+  /** IVF index (cells + centroids) over every embedding but the probe. */
+  private[graft] def ivfIndex(s: SparkSession, d: String): VectorStore.Index =
+    VectorStore.ensure(
+      s, tbl(s, d, "embeddings").filter(col("vec_id") =!= 0), "embedding", d)
+
+  /** PQ codes + codebooks, cell-partitioned by [[ivfIndex]]'s centroids. */
+  private[graft] def pqIndex(s: SparkSession, d: String): VectorStore.PqIndex =
+    VectorStore.ensurePq(
+      s, tbl(s, d, "embeddings").filter(col("vec_id") =!= 0), "embedding", d)
+
+  /** Quality-classifier coefficients trained on the documents. */
+  private[graft] def qcWeights(s: SparkSession, d: String): Array[Double] =
+    QualityModel.ensure(s, docsWide(s, d), d)
 
   private val ChunkSize = 100
   private val ChunkOverlap = 20
@@ -459,8 +478,7 @@ object PipelineCatalog {
     // Probe the at-rest layout: bucket is a PARTITION column of the
     // persisted vector store, so the Hamming-ball `isin` prunes the scan
     // at the source (PlanSpec asserts PartitionFilters).
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
+    val store = ivfIndex(s, d)
     Similarity.annTopK(store.vectors, "embedding", qv, 10, 8, 64, probeRadius = 2)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -517,21 +535,14 @@ object PipelineCatalog {
   // NearestCell identity (1 + ‖c‖² − 2·nv·c over exported centroid
   // literals), so the oracle replays assignment + probe selection + cosine
   // bit-for-bit in DuckDB: full hash-match, same contract as q25's planes.
-  // The centroids come out of the query's own index build (seeded MLlib
-  // k-means, deterministic) and are published to the oracle builder below.
+  // The centroids come out of the shared index build (seeded MLlib
+  // k-means, deterministic); the oracle reads them through [[ivfIndex]].
   // NOTE: the synthetic embeddings are near-uniform random vectors — the
   // worst case for ANY partition-pruning ANN (measured recall ~= scan
   // fraction; IvfTune sweep). nProbe=8/k=16 halves the scan for ~0.86
   // recall here; clustered real-world embeddings fare far better at much
   // lower probe ratios.
   // -------------------------------------------------------------------------
-
-  /** Centroids of the last q27 index build — read by [[oracles]] so the
-    * DuckDB replay embeds the SAME trained centroids as literals (Verify
-    * runs every query BEFORE dumping oracle SQL). Absent until q27 runs →
-    * the oracle entry is omitted and the driver records rows-only.
-    */
-  @volatile private var lastIvfCentroids: Option[Array[Array[Double]]] = None
 
   val q27AnnIvf: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
@@ -540,9 +551,7 @@ object PipelineCatalog {
     // The k-means index is built at WRITE time (VectorStore.ensure builds
     // once per sfDir); the query only selects nProbe cells and scans those
     // partitions — no training job inside query wall-time.
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
+    val store = ivfIndex(s, d)
     Similarity.ivfTopK(store.vectors, "embedding", store.centroids, qv, 10, nProbe = 8)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -1467,12 +1476,9 @@ object PipelineCatalog {
   // replacement lands in wrong cells with wrong codes → hash mismatch);
   // transient vectors are deleted by the upsert. The final live state is
   // exactly the corpus, so the oracles are the full q27/q69 replays from
-  // the PUBLISHED base-trained literals — proving the incremental
-  // artifact is value-identical to assignment of the true corpus.
+  // the STORED base-trained literals — proving the incremental artifact
+  // is value-identical to assignment of the true corpus.
   // -------------------------------------------------------------------------
-
-  @volatile private var lastIncIvfCentroids: Option[Array[Array[Double]]] = None
-  @volatile private var lastIncPqCodebooks: Option[Array[Array[Array[Double]]]] = None
 
   /** The add/replace/delete frames shared by the IVF and PQ scenarios. */
   private def incVecScenario(s: SparkSession, d: String)
@@ -1506,7 +1512,6 @@ object PipelineCatalog {
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
     val store = graft.sources.VectorStore.read(
       s, q78EnsureIncremental(s, d), planes = 8, dim = 64)
-    lastIncIvfCentroids = Some(store.centroids)
     Similarity.ivfTopK(store.vectors, "embedding", store.centroids, qv, 10, nProbe = 8)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -1531,7 +1536,6 @@ object PipelineCatalog {
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
     val pq = graft.sources.VectorStore.readPq(s, q79EnsureIncremental(s, d))
-    lastIncPqCodebooks = Some(pq.codebooks)
     Similarity.pqTopK(pq.codes, pq.codebooks,
         emb.filter(col("vec_id") =!= 0), "embedding", qv, 10, rerank = 50)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
@@ -1548,9 +1552,7 @@ object PipelineCatalog {
 
   val q62BatchAnn: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
+    val store = ivfIndex(s, d)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("qv"))
@@ -1619,18 +1621,11 @@ object PipelineCatalog {
   // asserted in PqSpec, and real clustered embeddings fare far better.
   // -------------------------------------------------------------------------
 
-  /** Codebooks of the last q69 PQ build — same publish-after-run contract
-    * as [[lastIvfCentroids]].
-    */
-  @volatile private var lastPqCodebooks: Option[Array[Array[Array[Double]]]] = None
-
   val q69AnnPq: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val pq = graft.sources.VectorStore.ensurePq(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastPqCodebooks = Some(pq.codebooks)
+    val pq = pqIndex(s, d)
     Similarity.pqTopK(pq.codes, pq.codebooks,
         emb.filter(col("vec_id") =!= 0), "embedding", qv, 10, rerank = 50)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
@@ -1958,13 +1953,6 @@ object PipelineCatalog {
   private val QcB = QualityModel.B
   private val QcTau = QualityModel.Tau
 
-  /** Coefficients served by the last q67 run — published to [[oracles]]
-    * exactly like [[lastIvfCentroids]]. Since r8 they also persist on disk
-    * beside the documents table (QualityModel's sidecar), so a fresh JVM
-    * can re-author the oracle without re-running training.
-    */
-  @volatile private var lastQcWeights: Option[Array[Double]] = None
-
   val q67QualityClassifier: Q = (s, d) => {
     val docs = docsWide(s, d)
     // write-time artifact: ensure trains ONCE per (source stamp, params)
@@ -1972,8 +1960,7 @@ object PipelineCatalog {
     // and the query below is the single-narrow-pass serving scan —
     // training never runs in query wall-time (the IVF-centroid contract;
     // drift-triggered refresh via QualityModel.retrainIfStale)
-    val w = QualityModel.ensure(s, docs, d)
-    lastQcWeights = Some(w.clone())
+    val w = qcWeights(s, d)
 
     QualityModel.features(docs)
       .withColumn("quality_logit", rnd(QualityModel.zCol(w), 6))
@@ -2409,10 +2396,7 @@ object PipelineCatalog {
   private val SemDedupTau = 0.4
 
   val q82SemDedup: Q = (s, d) => {
-    val emb = tbl(s, d, "embeddings")
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
+    val store = ivfIndex(s, d)
     val m = store.vectors.select(col("vec_id"), col("cell"),
       col("embedding").cast("array<double>").as("v"))
     val dups = m
@@ -2429,7 +2413,7 @@ object PipelineCatalog {
       .orderBy(col("vec_id"))
   }
 
-  /** Cell assignment replayed from the published centroid literals (the
+  /** Cell assignment replayed from the stored centroid literals (the
     * q27 machinery), then the within-cell lower-id pair count in SQL.
     */
   private def q82Sql(cs: Array[Array[Double]]): String = {
@@ -2687,9 +2671,7 @@ object PipelineCatalog {
 
   val q73BatchPq: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
-    val pq = graft.sources.VectorStore.ensurePq(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastPqCodebooks = Some(pq.codebooks)
+    val pq = pqIndex(s, d)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("qv"))
@@ -2969,12 +2951,8 @@ object PipelineCatalog {
     val emb = tbl(s, d, "embeddings")
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    val pq = graft.sources.VectorStore.ensurePq(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
-    lastPqCodebooks = Some(pq.codebooks)
+    val store = ivfIndex(s, d)
+    val pq = pqIndex(s, d)
     Similarity.ivfPqTopK(pq.codes, pq.codebooks, store.centroids,
         emb.filter(col("vec_id") =!= 0), "embedding", qv,
         k = 10, nProbe = 8, rerank = 50)
@@ -3069,9 +3047,6 @@ object PipelineCatalog {
   private val Q87PqM = 4
   private val Q87PqKsub = 16
   private val Q87QText = "fast hash join on sorted data"
-
-  @volatile private var lastStreamIvfCentroids: Option[Array[Array[Double]]] = None
-  @volatile private var lastStreamPqCodebooks: Option[Array[Array[Array[Double]]]] = None
 
   /** Drive the micro-batch scenario once per corpus version; later calls
     * only serve from the maintained artifacts (q77/q78 contract).
@@ -3184,7 +3159,6 @@ object PipelineCatalog {
     val root = q87EnsureStreaming(s, d)
     val store = graft.sources.VectorStore.read(
       s, s"$root/vstore", planes = 8, dim = Q87Dim, idCol = "id")
-    lastStreamIvfCentroids = Some(store.centroids)
     val qv = q87QueryVec(s)
     val probes = Similarity.cellDistances(l2n(qv), store.centroids).zipWithIndex
       .map { case (dist, i) => (i, dist) }
@@ -3205,7 +3179,6 @@ object PipelineCatalog {
     val store = graft.sources.VectorStore.read(
       s, s"$root/vstore", planes = 8, dim = Q87Dim, idCol = "id")
     val pq = graft.sources.VectorStore.readPq(s, s"$root/pq", idCol = "id")
-    lastStreamPqCodebooks = Some(pq.codebooks)
     val qv = q87QueryVec(s)
     val meta = q87ChunkMeta(s, root)
     val cand = pq.codes
@@ -3523,10 +3496,7 @@ object PipelineCatalog {
 
   val q95ClusterBalance: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val emb = tbl(s, d, "embeddings")
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
+    val store = ivfIndex(s, d)
     val w = Window.partitionBy(col("cell"))
       .orderBy(TextAnalytics.hash60(col("vec_id").cast("string")), col("vec_id"))
     store.vectors.select(col("vec_id"), col("cell"))
@@ -3536,7 +3506,7 @@ object PipelineCatalog {
       .orderBy(col("vec_id"))
   }
 
-  /** Cell assignment replayed from the published centroid literals (the
+  /** Cell assignment replayed from the stored centroid literals (the
     * q27/q82 machinery), then the per-cell hash-rank quota in SQL.
     */
   private def q95Sql(cs: Array[Array[Double]]): String = {
@@ -5361,15 +5331,14 @@ object PipelineCatalog {
   // are written ONCE at ingest into the same cell-partitioned layout the
   // q27/q69 serving family probes (write-time k-means, portable
   // NearestCell assignment, epoch-committed), and the query selects
-  // nProbe cells and scans ONLY those partitions. The oracle is dynamic
-  // (q27's pattern): the trained centroids export as literals after the
-  // build, and DuckDB replays frame grid → dev-embed → normalize → cell
-  // assignment → probe selection → cosine top-k bit-for-bit. 100 TB:
+  // nProbe cells and scans ONLY those partitions. The oracle embeds the
+  // store's trained centroids as literals (q27's pattern), and DuckDB
+  // replays frame grid → dev-embed → normalize → cell assignment → probe
+  // selection → cosine top-k bit-for-bit. 100 TB:
   // frame corpus >> video corpus (hours × fps), which is exactly when
   // brute scan dies and the at-rest ANN layout is the only serving shape.
   // -------------------------------------------------------------------------
 
-  @volatile private var lastFrameIvfCentroids: Option[Array[Array[Double]]] = None
   private val FrameCells = 8
   private val FrameProbe = 4
 
@@ -5390,10 +5359,8 @@ object PipelineCatalog {
     }
 
   val q104FrameAnn: Q = (s, d) => {
-    import graft.sources.VectorStore
     val path = ensureFrameStore(s, d)
     val store = VectorStore.read(s, path, 8, FrameDim, idCol = "fid")
-    lastFrameIvfCentroids = Some(store.centroids)
     val qv = s.range(1)
       .select(graft.operators.DevEmbed.devEmbed(lit(VideoQueryText), FrameDim))
       .head().getSeq[Double](0).toArray
@@ -5844,9 +5811,7 @@ object PipelineCatalog {
 
   val q121AnnRecall: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
+    val store = ivfIndex(s, d)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("qv"))
@@ -6568,13 +6533,11 @@ object PipelineCatalog {
   val q128PqRecall: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
     val vectors = emb.filter(col("vec_id") =!= 0)
-    val pq = graft.sources.VectorStore.ensurePq(s, vectors, "embedding", d)
-    lastPqCodebooks = Some(pq.codebooks)
+    val pq = pqIndex(s, d)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("qv"))
-    val store = graft.sources.VectorStore.ensure(s, vectors, "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
+    val store = ivfIndex(s, d)
     val exact = Similarity.ivfBatchTopK(store.vectors, "embedding",
         store.centroids, queries, RecallK, nProbe = store.centroids.length)
       .select(col("query_id"), col("vec_id"))
@@ -7025,8 +6988,7 @@ object PipelineCatalog {
 
   val q132QualityCalibration: Q = (s, d) => {
     val docs = docsWide(s, d)
-    val w = QualityModel.ensure(s, docs, d)
-    lastQcWeights = Some(w.clone())
+    val w = qcWeights(s, d)
     QualityModel.features(docs)
       .withColumn("logit6", rnd(QualityModel.zCol(w), 6))
       .withColumn("bin",
@@ -7736,8 +7698,7 @@ object PipelineCatalog {
 
   val q139ReviewQueue: Q = (s, d) => {
     val docs = docsWide(s, d)
-    val w = QualityModel.ensure(s, docs, d)
-    lastQcWeights = Some(w.clone())
+    val w = qcWeights(s, d)
     // late materialization: rank on the NARROW (doc_id, logit) frame —
     // both cuts are TakeOrderedAndProject heaps — and only then fetch
     // text for the 2K winners via a broadcast join; the snippet column
@@ -7760,7 +7721,7 @@ object PipelineCatalog {
   }
 
   /** Both queue ends replayed from the exported coefficient literals
-    * (the q67/q132 dynamic-oracle contract) + the P6 snippet truncation.
+    * (the q67/q132 coefficient-literal contract) + the P6 snippet truncation.
     */
   private def q139Sql(w: Array[Double]): String = {
     val wvals = w.zipWithIndex
@@ -9130,7 +9091,7 @@ object PipelineCatalog {
   // 100 TB serving tier actually runs: both arms are store reads with
   // partition pruning, no corpus text scan, no full-vector scan. The
   // oracle replays the whole fused ranking from the trained centroid
-  // LITERALS (q27's dynamic-oracle technique): assignment → 8-probe
+  // LITERALS (q27's centroid-literal technique): assignment → 8-probe
   // selection → in-probe cosine top-50 over document vectors → rank,
   // fused with the BM25 top-50 replay by 1/(60+rank) — rational
   // arithmetic over engine-exact integer ranks, so the fusion
@@ -9152,9 +9113,7 @@ object PipelineCatalog {
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head()
       .getSeq[Double](0).toArray
-    val store = graft.sources.VectorStore.ensure(
-      s, emb.filter(col("vec_id") =!= 0), "embedding", d)
-    lastIvfCentroids = Some(store.centroids)
+    val store = ivfIndex(s, d)
     // dense arm: IVF-pruned scan over DOCUMENT vectors only (the serving
     // index a production tier would hold), then the bounded rank
     val denseTop = Similarity.ivfTopK(
@@ -9359,37 +9318,47 @@ object PipelineCatalog {
     "q104_frame_ann" -> q104FrameAnn,
   )
 
-  /** `def`, not `val`: the q27 oracle can only be authored AFTER the query
-    * has run (its literals are the trained centroids); Verify reads this
-    * map after all queries, so the entry materializes exactly when valid.
+  /** Oracles whose SQL embeds trained literals — IVF centroids, PQ
+    * codebooks, quality-classifier weights — read through the same
+    * accessor or store path the query serves, so they exist whatever ran
+    * before. The incremental and streamed stores' final live state is the
+    * corpus, so q78/q79 reuse the full q27/q69 replays.
     */
-  def oracles: ListMap[String, String] = staticOracles ++
-    lastQcWeights.map(w => "q67_quality_classifier" -> q67Sql(w)) ++
-    lastQcWeights.map(w => "q132_quality_calibration" -> q132Sql(w)) ++
-    lastQcWeights.map(w => "q139_review_queue" -> q139Sql(w)) ++
-    lastIvfCentroids.map(cs => "q27_ann_ivf" -> q27Sql(cs)) ++
-    lastIvfCentroids.map(cs => "q62_batch_ann" -> q62Sql(cs)) ++
-    lastIvfCentroids.map(cs => "q121_ann_recall" -> q121Sql(cs)) ++
-    lastIvfCentroids.map(cs => "q151_hybrid_served" -> q151Sql(cs)) ++
-    lastPqCodebooks.map(cbs => "q69_ann_pq" -> q69Sql(cbs)) ++
-    lastPqCodebooks.map(cbs => "q73_batch_pq" -> q73Sql(cbs)) ++
-    lastPqCodebooks.map(cbs => "q128_pq_recall" -> q128Sql(cbs)) ++
-    (for { cs <- lastIvfCentroids; cbs <- lastPqCodebooks }
-      yield "q76_ivf_pq" -> q76Sql(cs, cbs)) ++
-    // incremental artifacts: final live state = the corpus, so the full
-    // q27/q69 replays apply verbatim — just from the BASE-trained literals
-    lastIvfCentroids.map(cs => "q82_sem_dedup" -> q82Sql(cs)) ++
-    lastIvfCentroids.map(cs => "q95_cluster_balance" -> q95Sql(cs)) ++
-    lastIncIvfCentroids.map(cs => "q78_inc_ivf" -> q27Sql(cs)) ++
-    lastIncPqCodebooks.map(cbs => "q79_inc_pq" -> q69Sql(cbs)) ++
-    // streaming-maintained artifacts: final live state = the corpus, so
-    // the replays run over the chunker+devembed CTEs from the
-    // STREAM-trained literals
-    lastStreamIvfCentroids.map(cs => "q89_stream_ivf" -> q89Sql(cs)) ++
-    lastStreamPqCodebooks.map(cbs => "q90_stream_pq" -> q90Sql(cbs)) ++
-    lastFrameIvfCentroids.map(cs => "q104_frame_ann" -> q104Sql(cs))
+  private[graft] val artifactOracles: ListMap[String, Catalog.Oracle] = {
+    def ivf(sql: Array[Array[Double]] => String): Catalog.Oracle =
+      (s, d) => sql(ivfIndex(s, d).centroids)
+    def pq(sql: Array[Array[Array[Double]]] => String): Catalog.Oracle =
+      (s, d) => sql(pqIndex(s, d).codebooks)
+    def qc(sql: Array[Double] => String): Catalog.Oracle =
+      (s, d) => sql(qcWeights(s, d))
+    ListMap(
+      "q27_ann_ivf" -> ivf(q27Sql),
+      "q62_batch_ann" -> ivf(q62Sql),
+      "q82_sem_dedup" -> ivf(q82Sql),
+      "q95_cluster_balance" -> ivf(q95Sql),
+      "q121_ann_recall" -> ivf(q121Sql),
+      "q151_hybrid_served" -> ivf(q151Sql),
+      "q69_ann_pq" -> pq(q69Sql),
+      "q73_batch_pq" -> pq(q73Sql),
+      "q128_pq_recall" -> pq(q128Sql),
+      "q67_quality_classifier" -> qc(q67Sql),
+      "q132_quality_calibration" -> qc(q132Sql),
+      "q139_review_queue" -> qc(q139Sql),
+      ("q76_ivf_pq", (s, d) => q76Sql(ivfIndex(s, d).centroids, pqIndex(s, d).codebooks)),
+      ("q78_inc_ivf", (s, d) =>
+        q27Sql(VectorStore.readCentroids(q78EnsureIncremental(s, d)))),
+      ("q79_inc_pq", (s, d) =>
+        q69Sql(VectorStore.readPq(s, q79EnsureIncremental(s, d)).codebooks)),
+      ("q89_stream_ivf", (s, d) =>
+        q89Sql(VectorStore.readCentroids(s"${q87EnsureStreaming(s, d)}/vstore"))),
+      ("q90_stream_pq", (s, d) => q90Sql(VectorStore.readPq(
+        s, s"${q87EnsureStreaming(s, d)}/pq", idCol = "id").codebooks)),
+      ("q104_frame_ann", (s, d) =>
+        q104Sql(VectorStore.readCentroids(ensureFrameStore(s, d)))),
+    )
+  }
 
-  private val staticOracles: ListMap[String, String] = ListMap(
+  private[queries] val fixedOracles: ListMap[String, String] = ListMap(
     "q13_chunks" -> q13Sql,
     "q14_chunk_ids" -> q14Sql,
     "q15_embed_dev" -> q15Sql,

@@ -75,28 +75,22 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("queries and oracles are in exact 1:1 correspondence") {
-    val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphanOracles.isEmpty, s"oracle without query: $orphanOracles")
     // the dangerous direction: a query registered WITHOUT an oracle
     // silently degrades to a rows-only check at the driver — the
-    // zero-rows-only invariant (README) is enforced here. Twelve oracles
-    // are DYNAMIC (their SQL embeds centroid/codebook/coefficient
-    // literals trained during the query run, so they appear only after
-    // execution — Verify's run-then-dump order); pin that set exactly so
-    // a NEW query without an oracle still fails.
-    val dynamic = Set(
-      "q27_ann_ivf", "q62_batch_ann", "q67_quality_classifier",
-      "q69_ann_pq", "q73_batch_pq", "q76_ivf_pq", "q78_inc_ivf",
-      "q79_inc_pq", "q82_sem_dedup", "q89_stream_ivf", "q90_stream_pq",
-      "q95_cluster_balance", "q104_frame_ann")
-    val unchecked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- dynamic
-    assert(unchecked.isEmpty, s"query without oracle (rows-only!): $unchecked")
-    assert(dynamic.subsetOf(SparkEntry.queries.keySet))
-    // prove the dynamic mechanism on the cheapest member: after the query
-    // runs, its oracle materializes with the trained literals embedded
-    SparkEntry.queries("q27_ann_ivf")(spark, Sf).collect()
-    assert(SparkEntry.oracleSql.contains("q27_ann_ivf"),
-      "dynamic oracle did not materialize after its query ran")
+    // zero-rows-only invariant (README) is enforced here, no exemptions
+    val oracles = SparkEntry.oracleSql
+    val queries = SparkEntry.queries.keySet
+    assert(oracles.keySet -- queries == Set.empty, "oracle without query")
+    assert(queries -- oracles.keySet == Set.empty, "query without oracle (rows-only!)")
+    // every oracle authors its SQL whatever ran before in this JVM ...
+    val before = oracles.map { case (name, oracle) => name -> oracle(spark, Sf) }
+    // ... and one that embeds trained literals embeds exactly the ones
+    // its query serves
+    graft.queries.PipelineCatalog.artifactOracles.keys.foreach { name =>
+      SparkEntry.queries(name)(spark, Sf).count()
+      assert(oracles(name)(spark, Sf) == before(name),
+        s"$name: oracle SQL changed after its query ran")
+    }
   }
 
   test("entry returns k=12 ranked sources") {
@@ -1291,17 +1285,23 @@ class QueriesSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala/graft/queries")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    // JVM-global mutable state too: an oracle must read its literals from
+    // the artifact, never from a var a query body assigned
     val banned = Seq("GRAFT_INDEX_DIR", "MessageDigest", "Files.readString",
-      "atomicWrite", "deleteDirectory", "evictStaleContexts")
+      "atomicWrite", "deleteDirectory", "evictStaleContexts", "@volatile",
+      "private var")
     val frameMap = """ConcurrentHashMap\s*\[[^\]]*\b(DataFrame|Store)\b""".r
     val hits = Files.list(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val src = Files.readString(p)
-        (banned.filter(src.contains) ++ frameMap.findFirstIn(src))
-          .map(h => s"${root.relativize(p)}: $h")
+        val lines = src.linesIterator.zipWithIndex
+          .filter { case (l, _) => banned.exists(l.contains) }
+          .map { case (l, i) => s"${root.relativize(p)}:${i + 1}: ${l.trim}" }
+        lines ++ frameMap.findFirstIn(src).map(h => s"${root.relativize(p)}: $h")
       }.toList
-    assert(hits.isEmpty, s"hand-rolled artifact gates or frame caches in queries/: $hits")
+    assert(hits.isEmpty,
+      s"hand-rolled artifact gates, frame caches or mutable globals in queries/:\n${hits.mkString("\n")}")
   }
 
   test("q120: driver-local BPE trainer matches the distributed inducer round-for-round") {

@@ -99,20 +99,21 @@ def main(sf_dir, out_dir, names=None):
             failures += 1
         else:
             print(f"OK        {name}: {len(gr)} rows")
-    # rows-only queries (no oracle): just report counts (skipped when a
-    # name filter is active — everything outside the filter is untested
-    # by intent, not rows-only)
+    # an output without an oracle is a failure: every query has one, so a
+    # rows-only output means an oracle went missing (skipped when a name
+    # filter is active — everything outside the filter is untested by
+    # intent, not rows-only)
     import os
     for entry in [] if names else sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, entry)
         if os.path.isdir(path) and entry not in oracle:
+            failures += 1
             try:
                 n = con.execute(
                     f"SELECT count(*) FROM read_parquet('{path}/*.parquet')").fetchone()[0]
                 print(f"ROWS-ONLY {entry}: {n} rows")
             except Exception as e:
                 print(f"ERROR     {entry}: {e}")
-                failures += 1
     print(f"== {failures} failure(s)")
     return 1 if failures else 0
 
