@@ -14,8 +14,30 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A table opened with the schema its footer gives
+    * ([[graft.sources.GenStore.footerSchema]], derived as inference
+    * derives it), so the load runs no schema-inference job.
+    */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    schemaFile(spark, path)
+      .map(f => graft.sources.GenStore.footerSchema(spark, f, engineWritten = false))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The table's one file, or the first data file of a flat Spark-written
+    * directory (its part files share one schema); None for a missing path
+    * or any other layout, which then infers.
+    */
+  private def schemaFile(spark: SparkSession, path: String): Option[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None // Spark's read raises its own error
+    else if (!fs.getFileStatus(p).isDirectory) Some(p)
+    else fs.listStatus(p).filter(_.isFile).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .sortBy(_.getName).headOption
+  }
 
   /** `events` with `ts` normalized to epoch-µs BIGINT, whatever the parquet
     * physical type of the generation at hand: older testdata ships

@@ -618,9 +618,112 @@ object Dedup {
     * dedup pipeline runs AFTER pair finding: transitive closure groups
     * a~b, b~c into one cluster whose id is the smallest member, and the
     * smallest member is the canonical survivor (deterministic, engine-
-    * portable: pure integer mins).
+    * portable: pure integer mins). Output: one `(node, cluster_id,
+    * is_canonical)` row per distinct endpoint.
     *
-    * Iterative min-label propagation WITH pointer jumping: each round every
+    * The pairs are checkpointed once. A graph whose edge rows fit
+    * `spark.sql.autoBroadcastJoinThreshold` (the bound past which Spark
+    * stops collecting a join side to the driver) is collected and solved
+    * by a min-label union-find on the driver, and the labels come back as
+    * a LocalRelation: one scan job instead of the ~2 jobs per round of
+    * [[propagateClusters]], whose fixed costs dominate a graph of a few
+    * hundred edges. A larger graph, a disabled threshold, a null id or
+    * an id type other than int, bigint or string runs [[propagateClusters]]
+    * on the checkpointed pairs. Both give identical rows: the minimum node
+    * per component under Spark's ordering (strings by UTF-8 bytes), the
+    * same id type and the same schema.
+    */
+  def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
+      maxIters: Int = 20): DataFrame = {
+    val ends = pairs.select(col(aCol).as("x"), col(bCol).as("y")).localCheckpoint()
+    smallEdges(ends) match {
+      case Some(es) => unionFindLabels(ends, es)
+      case None => propagateClusters(ends, "x", "y", maxIters)
+    }
+  }
+
+  /** The id type the driver path supports: both ends the same int,
+    * bigint or (default-collation) string type.
+    */
+  private def driverIdType(ends: DataFrame): Option[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val Seq(x, y) = ends.schema.fields.toSeq.map(_.dataType)
+    Option.when(x == y && (x == IntegerType || x == LongType || x == StringType))(x)
+  }
+
+  /** The checkpointed `(x, y)` rows, if their bytes fit the broadcast
+    * threshold and no end is null. One job: each partition stops at its
+    * share of the threshold, so the driver never receives more than the
+    * threshold in total.
+    */
+  private def smallEdges(ends: DataFrame): Option[Array[(Any, Any)]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import org.apache.spark.sql.types.StringType
+    val limit = ends.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    driverIdType(ends).filter(_ => limit > 0).flatMap { dt =>
+      val rdd = ends.queryExecution.toRdd
+      val share = math.max(1L, limit / math.max(1, rdd.getNumPartitions))
+      val str = dt == StringType
+      val parts = ends.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
+        var bytes = 0L
+        var fits = true
+        while (fits && rows.hasNext) {
+          val r = rows.next()
+          bytes += (r match { case u: UnsafeRow => u.getSizeInBytes.toLong; case _ => 32L })
+          fits = bytes <= share && !r.isNullAt(0) && !r.isNullAt(1)
+          if (fits) out += (
+            if (str) (r.getUTF8String(0).toString, r.getUTF8String(1).toString)
+            else (r.get(0, dt), r.get(1, dt)))
+        }
+        Option.when(fits)(out.toArray)
+      })
+      Option.when(parts.forall(_.isDefined))(parts.flatMap(_.get))
+    }
+  }
+
+  /** Min-label union-find over collected edges: nodes are ranked once in
+    * Spark's order (strings by UTF-8 bytes, not UTF-16 code units), every
+    * union keeps the lower rank as the root, so each root is its
+    * component's minimum.
+    */
+  private def unionFindLabels(ends: DataFrame, edges: Array[(Any, Any)]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val ord: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
+      case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x: java.lang.Long, y: java.lang.Long) => x.compareTo(y)
+      case (x: java.lang.Integer, y: java.lang.Integer) => x.compareTo(y)
+      case _ => throw new IllegalArgumentException(s"unsupported id pair ($a, $b)")
+    }
+    val nodes = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.toArray.distinct.sorted(ord)
+    val rank = nodes.iterator.zipWithIndex.toMap
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(i: Int): Int = {
+      var j = i
+      while (parent(j) != j) { parent(j) = parent(parent(j)); j = parent(j) }
+      j
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(rank(a)), find(rank(b)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val dt = ends.schema("x").dataType
+    val nullable = ends.schema.fields.exists(_.nullable)
+    val schema = StructType(Seq(StructField("node", dt, nullable),
+      StructField("cluster_id", dt, nullable), StructField("is_canonical", BooleanType, nullable)))
+    val rows = nodes.indices.map { i =>
+      val root = find(i)
+      Row(nodes(i), nodes(root), root == i)
+    }
+    import scala.jdk.CollectionConverters._
+    ends.sparkSession.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The distributed connected components behind [[duplicateClusters]]:
+    * iterative min-label propagation WITH pointer jumping. Each round every
     * node takes the min of (its own label, its neighbours' labels, its
     * label's label). The neighbour step alone needs diameter rounds; the
     * label-of-label hop halves the remaining pointer chains each round, so
@@ -636,7 +739,7 @@ object Dedup {
     * canonical survivor — silent under-deduplication), so this THROWS
     * rather than returning them.
     */
-  def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
+  private[graft] def propagateClusters(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 20): DataFrame = {
     val edges = pairs.select(col(aCol).as("x"), col(bCol).as("y"))
       .unionByName(pairs.select(col(bCol).as("x"), col(aCol).as("y")))

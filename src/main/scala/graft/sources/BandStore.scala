@@ -114,7 +114,7 @@ object BandStore {
     GenStore.writeTable(
       bandRows(docs, idCol, textCol, numHashes, bands)
         .withColumn("gen", lit(0L)),
-      "bh_bucket", Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
+      Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
     GenStore.setEpoch(path, next)
     GenStore.writePolicy(path, policy)
     writeStats(path, gen = 0L,
@@ -140,16 +140,13 @@ object BandStore {
     val affected = delta.select(col(idCol).as("doc"))
       .unionByName(deletedIds.select(col(deletedIds.columns.head).as("doc")))
     GenStore.appendTombstones(path, affected, tombCol = "doc", gen = nextGen)
-    bandRows(delta, idCol, textCol, numHashes, bands)
-      .withColumn("gen", lit(nextGen))
-      // r17 OPT (§6 small files): cluster by the partition column before
-      // the partitioned write — without this every write task emitted a
-      // file into every bucket (the sf0.1 streaming store accumulated
-      // 1,730 band files; every later probe paid the listing+open tax:
-      // q97's store read measured 1.16 s vs 0.24 s for the compact store)
-      .repartition(col("bh_bucket"))
-      .write.mode("append").partitionBy("gen", "bh_bucket")
-      .parquet(GenStore.tableDir(path, "bands"))
+    // one file per bucket per write: when every write task emitted a file
+    // into every bucket, the sf0.1 streaming store accumulated 1,730 band
+    // files and every later probe paid the listing+open tax (q97's store
+    // read measured 1.16 s vs 0.24 s for the compact store)
+    GenStore.writeBucketed(
+      bandRows(delta, idCol, textCol, numHashes, bands).withColumn("gen", lit(nextGen)),
+      Seq("gen", "bh_bucket"), GenStore.tableDir(path, "bands"))
     writeStats(path, nextGen, if (batchId >= 0) batchId else lastBatch)
     maybeCompact(spark, path)
   }
@@ -164,7 +161,7 @@ object BandStore {
     val next = GenStore.epochOf(path) + 1
     val live = liveBands(spark, path).localCheckpoint()
     GenStore.writeTable(live.withColumn("gen", lit(0L)),
-      "bh_bucket", Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
+      Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
     GenStore.setEpoch(path, next)
     writeStats(path, gen = 0L, lastBatch = lastBatch)
     GenStore.gcEpochs(path, Seq("bands", "tombstones"), next)

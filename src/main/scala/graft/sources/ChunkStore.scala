@@ -100,13 +100,11 @@ object ChunkStore {
     // compaction rewrite under leaked dynamic mode silently KEEPS the
     // partitions it meant to drop)
     if (!exists) {
-      // r17 OPT (§6 small files): cluster by the partition column so each
-      // bucket gets one file per write, not one per write task — the
-      // sf0.1 streaming chunk store had accumulated 3,025 files and every
-      // read (skipUnchanged, q87ChunkMeta, survivors scans) paid for it
-      incoming.repartition(col("doc_bucket"))
-        .write.partitionBy("doc_bucket").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
+      // one file per bucket per write (GenStore.writeBucketed) — the
+      // sf0.1 streaming chunk store had accumulated 3,025 files when every
+      // write task wrote into every bucket, and every read paid for it
+      GenStore.writeBucketed(incoming, Seq("doc_bucket"), path,
+        mode = "overwrite", partitionOverwriteMode = "dynamic")
       writeTableBuckets(spark, path, buckets0)
     } else {
       val buckets = incoming.select("doc_bucket").distinct()
@@ -123,10 +121,8 @@ object ChunkStore {
         .filter(col("doc_bucket").isin(buckets.toIndexedSeq: _*)) // partition-pruned scan
         .join(docs, Seq("document_id"), "left_anti")
         .localCheckpoint()
-      survivors.unionByName(incoming)
-        .repartition(col("doc_bucket")) // r17 OPT (§6): see the write branch
-        .write.partitionBy("doc_bucket").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
+      GenStore.writeBucketed(survivors.unionByName(incoming),
+        Seq("doc_bucket"), path, mode = "overwrite", partitionOverwriteMode = "dynamic")
       writeTableBuckets(spark, path, buckets0) // re-assert, cheap
     }
   }
@@ -161,10 +157,8 @@ object ChunkStore {
     val survivorBuckets = survivors.select(col("doc_bucket").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSet
     if (survivorBuckets.nonEmpty)
-      survivors
-        .repartition(col("doc_bucket")) // r17 OPT (§6): see upsert
-        .write.partitionBy("doc_bucket").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
+      GenStore.writeBucketed(survivors, Seq("doc_bucket"), path,
+        mode = "overwrite", partitionOverwriteMode = "dynamic")
     // a dynamic overwrite only rewrites partitions PRESENT in the written
     // data — a bucket whose every row was deleted has no survivors and
     // would silently keep serving its old files; drop those partition

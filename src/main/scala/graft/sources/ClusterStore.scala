@@ -112,7 +112,7 @@ object ClusterStore {
       docs.select(col(idCol).as("doc_id"), col(textCol).as("text")),
       store, "doc_id", "text", threshold)
     GenStore.writeTable(labelRows(pairs).withColumn("gen", lit(0L)),
-      "bucket", Seq("gen", "bucket"), Nil, s"$path/clusters/e$next")
+      Seq("gen", "bucket"), Nil, s"$path/clusters/e$next")
     GenStore.setEpoch(path, next)
     writeStats(path, gen = 0L,
       lastBatch = if (batchId >= 0) batchId else prevLast)
@@ -185,12 +185,8 @@ object ClusterStore {
       .localCheckpoint() // feeds the tombstone write AND the segment write
     GenStore.appendTombstones(path, upserts.select(col("doc_id")),
       tombCol = "doc", gen = nextGen)
-    upserts.withColumn("gen", lit(nextGen))
-      // r17 OPT (§6): one file per touched bucket per gen, not one per
-      // write task per bucket — same fix as BandStore.upsert
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("gen", "bucket")
-      .parquet(GenStore.tableDir(path, "clusters"))
+    GenStore.writeBucketed(upserts.withColumn("gen", lit(nextGen)),
+      Seq("gen", "bucket"), GenStore.tableDir(path, "clusters"))
     writeStats(path, nextGen, if (batchId >= 0) batchId else lastBatch)
   }
 

@@ -269,10 +269,8 @@ object GenStore {
     * frame; the first real append lands partitioned as always and simply
     * shadows the marker.
     */
-  def writeTable(df: org.apache.spark.sql.DataFrame,
-      repartitionCol: String, partitionCols: Seq[String],
+  def writeTable(df: org.apache.spark.sql.DataFrame, partitionCols: Seq[String],
       sortCols: Seq[String], path: String): Unit = {
-    import org.apache.spark.sql.functions.col
     val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (cached.isEmpty) {
@@ -283,18 +281,36 @@ object GenStore {
         atomicWrite(java.nio.file.Paths.get(path, EmptyMarker),
           s"""{"schema_ddl":${quoteJson(canonicalSchema(cached.schema, partitionCols).toDDL)}}""")
       } else {
-        val rep = cached.repartition(col(repartitionCol))
-        val sorted =
-          if (sortCols.nonEmpty)
-            rep.sortWithinPartitions(sortCols.map(col): _*)
-          else rep
         // static-mode overwrite truncates the whole table path first, so
         // a stale empty-marker from a previous all-deleted state is gone
-        sorted.write.mode("overwrite").option("partitionOverwriteMode", "static")
-          .partitionBy(partitionCols: _*).parquet(path)
+        writeBucketed(cached, partitionCols, path,
+          mode = "overwrite", sortCols = sortCols)
       }
       CrashPoints.hit("table-written")
     } finally cached.unpersist()
+  }
+
+  /** The one bucket-partitioned write of every store: shuffle by the
+    * bucket column (the last of `partitionCols`; the ones before it are
+    * constant within a write, like `gen`) into `defaultParallelism`
+    * partitions, then `partitionBy` — each bucket hashes to exactly one
+    * task, so it gets one file per write, and the bucket files are written
+    * by all cores at once. A `repartition(col)` without a count lets AQE
+    * coalesce the shuffle by bytes, and a frame of a few hundred KB then
+    * lands in ONE task that writes all 64 bucket files one after another;
+    * a shuffle by number is never coalesced. `sortCols` order the rows
+    * inside each file; `partitionOverwriteMode` matters only for mode
+    * "overwrite".
+    */
+  def writeBucketed(df: DataFrame, partitionCols: Seq[String], path: String,
+      mode: String = "append", sortCols: Seq[String] = Nil,
+      partitionOverwriteMode: String = "static"): Unit = {
+    val spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      col(partitionCols.last))
+    val sorted =
+      if (sortCols.isEmpty) spread else spread.sortWithinPartitions(sortCols.map(col): _*)
+    sorted.write.mode(mode).option("partitionOverwriteMode", partitionOverwriteMode)
+      .partitionBy(partitionCols: _*).parquet(path)
   }
 
   /** Sidecar recording that a table was last written EMPTY, carrying the
@@ -355,22 +371,31 @@ object GenStore {
     walk(dir, Nil)
   }
 
-  /** The Spark row schema recorded in one parquet file's footer; a file
-    * without it was not written by this engine and fails loudly.
+  /** The row schema one parquet file's footer gives, derived as Spark's
+    * inference derives it: the Spark row schema a Spark writer recorded
+    * under [[SparkSchemaKey]], else the parquet schema through Spark's own
+    * converter under the session's SQLConf (binary as string, INT96, NTZ
+    * inference and `nanosAsLong` included). A store file must carry the
+    * key (`engineWritten`): one without it was not written by this engine
+    * and fails loudly, naming the file.
     */
-  private def footerSchema(spark: SparkSession, file: java.io.File)
-      : org.apache.spark.sql.types.StructType = {
+  def footerSchema(spark: SparkSession, file: org.apache.hadoop.fs.Path,
+      engineWritten: Boolean = true): org.apache.spark.sql.types.StructType = {
     Probe.inc("footer_read")
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toURI), spark.sparkContext.hadoopConfiguration)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    val json =
-      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-      finally reader.close()
-    if (json == null)
-      throw new IllegalStateException(s"store file $file has no Spark schema ($SparkSchemaKey)")
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(SparkSchemaKey)) match {
+      case Some(json) =>
+        org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
+      case None if engineWritten =>
+        throw new IllegalStateException(s"store file $file has no Spark schema ($SparkSchemaKey)")
+      case None =>
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
+          spark.sessionState.conf).convert(meta.getSchema)
+    }
   }
 
   /** The schema a partitioned read of `dir` infers: the footer schema of
@@ -383,7 +408,8 @@ object GenStore {
       maxGen: Long = Long.MaxValue): Option[org.apache.spark.sql.types.StructType] = {
     val d = new java.io.File(dir)
     firstDataFile(d, maxGen).orElse(firstDataFile(d, Long.MaxValue))
-      .map { case (f, parts) => canonicalSchema(footerSchema(spark, f), parts) }
+      .map { case (f, parts) =>
+        canonicalSchema(footerSchema(spark, new org.apache.hadoop.fs.Path(f.toURI)), parts) }
       .orElse(readSidecar(java.nio.file.Paths.get(dir, EmptyMarker))
         .flatMap(n => Option(n.get("schema_ddl")).map(_.asText()))
         .map(org.apache.spark.sql.types.StructType.fromDDL))
@@ -396,7 +422,8 @@ object GenStore {
   /** Open only `roots` (directories at or below `dir`, which stays the
     * partition base path) with `dir`'s schema — a serve that knows its
     * partitions lists just those. No roots is an empty frame; a table with
-    * no data and no marker fails with Spark's own error.
+    * no data and no marker, or a root that does not exist, fails with
+    * Spark's own error.
     */
   def openRoots(spark: SparkSession, dir: String, roots: Seq[String],
       maxGen: Long = Long.MaxValue): DataFrame =
@@ -406,8 +433,96 @@ object GenStore {
         Probe.add("listed_roots", roots.size.toLong)
         if (roots.isEmpty)
           spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-        else spark.read.schema(s).option("basePath", dir).parquet(roots: _*)
+        else listedRelation(spark, dir, roots, s)
+          .getOrElse(spark.read.schema(s).option("basePath", dir).parquet(roots: _*))
     }
+
+  // ---------------------------------------------------------------------
+  // Store open: the leaf files listed on the driver, no listing job
+  // ---------------------------------------------------------------------
+  // Spark lists the roots of a read in a Spark job once there are more
+  // than `parallelPartitionDiscoveryThreshold` (32) of them, and a store
+  // with 64 bucket directories paid that job on every open. A store is a
+  // few hundred local files, so the driver lists them itself with Spark's
+  // hidden-name rule and hands them to the file index through a
+  // pre-filled FileStatusCache: the index finds every root cached and
+  // lists nothing. The relation is built as `spark.read` builds it (the
+  // same index class, partition inference, basePath and nullable data
+  // schema), so plans and rows are unchanged.
+
+  /** Spark's listing rule (`HadoopFSUtils.shouldFilterOutPathName`):
+    * `_`/`.` names are hidden unless they name a partition (`_k=v`) or a
+    * parquet summary file, and so are files still being copied.
+    */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+
+  /** Every leaf file under `p` (itself when it is a file). */
+  private def leafFiles(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).toSeq.filterNot(st => hiddenName(st.getPath.getName))
+      .flatMap(st => if (st.isDirectory) leafFiles(fs, st.getPath) else Seq(st))
+
+  /** A FileStatusCache holding what the driver listed; an invalidation
+    * (`refreshByPath` on a cached plan) empties it, so a refresh lists
+    * again through Spark.
+    */
+  private final class ListedFiles(listed: Seq[(org.apache.hadoop.fs.Path,
+      Array[org.apache.hadoop.fs.FileStatus])])
+      extends org.apache.spark.sql.execution.datasources.FileStatusCache {
+    private val files = new java.util.concurrent.ConcurrentHashMap[
+      org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus]]()
+    listed.foreach { case (p, fs) => files.put(p, fs) }
+    override def getLeafFiles(path: org.apache.hadoop.fs.Path) = Option(files.get(path))
+    override def putLeafFiles(path: org.apache.hadoop.fs.Path,
+        leafFiles: Array[org.apache.hadoop.fs.FileStatus]): Unit = files.put(path, leafFiles)
+    override def invalidateAll(): Unit = files.clear()
+  }
+
+  private def asNullable(t: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+      case m: MapType =>
+        MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+  }
+
+  /** The parquet relation over `roots` with base path `dir` and schema
+    * `s`, its leaf files listed here; None when a root does not exist (the
+    * caller's `spark.read` then raises Spark's own error).
+    */
+  private def listedRelation(spark: SparkSession, dir: String, roots: Seq[String],
+      s: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val conf = spark.sparkContext.hadoopConfiguration
+    val paths = roots.map { r =>
+      val p = new org.apache.hadoop.fs.Path(r)
+      val fs = p.getFileSystem(conf)
+      (fs, fs.makeQualified(p))
+    }
+    if (!paths.forall { case (fs, p) => fs.exists(p) }) None
+    else {
+      val listed = paths.map { case (fs, p) => p -> leafFiles(fs, p).toArray }
+      Probe.add("listed_files", listed.map(_._2.length.toLong).sum)
+      val options = Map("basePath" -> dir)
+      val index = new InMemoryFileIndex(spark, paths.map(_._2), options, Some(s),
+        new ListedFiles(listed))
+      val partitionSchema = index.partitionSchema
+      val dataSchema = org.apache.spark.sql.types.StructType(
+        s.filterNot(f => partitionSchema.exists(_.name.equalsIgnoreCase(f.name))))
+      Some(spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+        asNullable(dataSchema).asInstanceOf[org.apache.spark.sql.types.StructType],
+        None, new ParquetFileFormat, options)(spark)))
+    }
+  }
 
   /** Read a gen-partitioned segment table with its canonical schema: the
     * gen partition DIRECTORY round-trips through partition-type inference

@@ -190,10 +190,10 @@ object ManifestStore {
     val toks = tokCounts(docs, idCol, textCol).localCheckpoint()
     val spans = spanRows(toks, baseTok = 0L, p).localCheckpoint()
     GenStore.writeTable(spans.withColumn("gen", lit(0L)),
-      "shard", Seq("gen", "epoch"), Seq("seq_id", "seq_tok_start"),
+      Seq("gen", "epoch"), Seq("seq_id", "seq_tok_start"),
       s"$path/spans/e$next")
     GenStore.writeTable(sigRows(spans).withColumn("gen", lit(0L)),
-      "shard", Seq("gen"), Nil, s"$path/sigs/e$next")
+      Seq("gen"), Nil, s"$path/sigs/e$next")
     val total = toks.agg(sum(col("n_tok"))).head()
     writeStats(path, epoch = next, gen = 0L,
       lastBatch = if (batchId >= 0) batchId else prevLast,
@@ -224,13 +224,10 @@ object ManifestStore {
     GenStore.dropPartialGen(spark, path, Seq("spans", "sigs"), nextGen)
     val toks = tokCounts(delta, idCol, textCol).localCheckpoint()
     val spans = spanRows(toks, baseTok, p).localCheckpoint()
-    spans.withColumn("gen", lit(nextGen))
-      // r17 OPT (§6): one file per epoch per gen, not one per write task
-      // per epoch — same fix as BandStore.upsert (the sf0.1 manifest
-      // stores had accumulated 2,600+ tiny span/sig files)
-      .repartition(col("epoch"))
-      .write.mode("append").partitionBy("gen", "epoch")
-      .parquet(GenStore.tableDir(path, "spans"))
+    // one file per epoch per gen (the sf0.1 manifest stores had
+    // accumulated 2,600+ tiny span/sig files at one per write task)
+    GenStore.writeBucketed(spans.withColumn("gen", lit(nextGen)),
+      Seq("gen", "epoch"), GenStore.tableDir(path, "spans"))
     sigRows(spans).withColumn("gen", lit(nextGen))
       .repartition(1) // shard-count-bounded partials: one file per gen
       .write.mode("append").partitionBy("gen")

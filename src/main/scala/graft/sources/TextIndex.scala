@@ -218,18 +218,12 @@ object TextIndex {
       mode: String, epoch: Long): Unit = {
     // overwrite here means FULL replace — pin static per-writer so a
     // session-level dynamic overwrite mode cannot leave dead partitions
-    segmentPostings(withDl, gen)
-      .repartition(col("term_bucket"))
-      .sortWithinPartitions(col("term_bucket"), col("term"))
-      .write.mode(mode).option("partitionOverwriteMode", "static")
-      .partitionBy("gen", "term_bucket")
-      .parquet(s"$path/postings/e$epoch")
+    GenStore.writeBucketed(segmentPostings(withDl, gen),
+      Seq("gen", "term_bucket"), s"$path/postings/e$epoch", mode,
+      sortCols = Seq("term_bucket", "term"))
     GenStore.CrashPoints.hit("postings-segment-written")
-    segmentDoclens(withDl, gen)
-      .repartition(col("doc_bucket"))
-      .write.mode(mode).option("partitionOverwriteMode", "static")
-      .partitionBy("gen", "doc_bucket")
-      .parquet(s"$path/doclens/e$epoch")
+    GenStore.writeBucketed(segmentDoclens(withDl, gen),
+      Seq("gen", "doc_bucket"), s"$path/doclens/e$epoch", mode)
   }
 
   private def liveTable(spark: SparkSession, path: String, name: String): DataFrame =
@@ -347,10 +341,10 @@ object TextIndex {
     val doclens = liveTable(spark, path, "doclens").localCheckpoint()
     // writeTable keeps a fully-emptied index readable (GenStore r10 note)
     GenStore.writeTable(live.withColumn("gen", lit(0L)),
-      "term_bucket", Seq("gen", "term_bucket"),
+      Seq("gen", "term_bucket"),
       Seq("term_bucket", "term"), s"$path/postings/e$next")
     GenStore.writeTable(doclens.withColumn("gen", lit(0L)),
-      "doc_bucket", Seq("gen", "doc_bucket"),
+      Seq("gen", "doc_bucket"),
       Nil, s"$path/doclens/e$next")
     GenStore.setEpoch(path, next)
     writeStats(path, n, sumDl, gen = 0L, lastBatch)

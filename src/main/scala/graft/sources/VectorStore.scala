@@ -74,15 +74,12 @@ object VectorStore {
     // full rebuilds land in the NEXT epoch and commit via the atomic
     // pointer flip: a crash mid-rebuild leaves the old epoch serving
     val next = GenStore.epochOf(path) + 1
-    indexed.drop("features")
+    val rows = indexed.drop("features")
       .withColumn("bucket",
         Similarity.bucketCol(col(vecCol).cast("array<double>"), planes, dim))
       .withColumn("gen", lit(0L))
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("bucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("gen", "cell")
-      .parquet(s"$path/vectors/e$next")
+    GenStore.writeBucketed(rows, Seq("gen", "cell"), s"$path/vectors/e$next",
+      mode = "overwrite", sortCols = Seq("cell", "bucket"))
     val json = model.clusterCenters
       .map(_.toArray.mkString("[", ",", "]")).mkString("[", ",", "]")
     GenStore.atomicWrite(
@@ -95,7 +92,7 @@ object VectorStore {
     val prevLast = readIncStats(path)._4
     GenStore.writePolicy(path, policy)
     writeIncStats(path,
-      emb.sparkSession.read.parquet(s"$path/vectors/e$next").count(), 0L, 0L,
+      GenStore.open(emb.sparkSession, s"$path/vectors/e$next").count(), 0L, 0L,
       if (batchId >= 0) batchId else prevLast)
     GenStore.gcEpochs(path, Seq("vectors", "tombstones"), next)
   }
@@ -223,11 +220,8 @@ object VectorStore {
       delta.select(col(idCol).as("id"))
         .unionByName(deletedIds.select(col(deletedIds.columns.head).as("id"))),
       tombCol = "id", gen = nextGen)
-    assignDelta(delta, vecCol, centroids, planes, dim, nextGen)
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("bucket"))
-      .write.mode("append").partitionBy("gen", "cell")
-      .parquet(GenStore.tableDir(path, "vectors"))
+    GenStore.writeBucketed(assignDelta(delta, vecCol, centroids, planes, dim, nextGen),
+      Seq("gen", "cell"), GenStore.tableDir(path, "vectors"), sortCols = Seq("cell", "bucket"))
     writeIncStats(path, baseN, appendedN + nDelta, nextGen,
       if (batchId >= 0) batchId else lastBatch)
     maybeCompact(spark, path, idCol, sub = "vectors")
@@ -277,7 +271,7 @@ object VectorStore {
     // tombstones in one atomic step — no window where stale tombstones
     // can kill freshly folded rows
     // writeTable keeps a fully-tombstoned store readable (GenStore r10)
-    GenStore.writeTable(live, "cell", Seq("gen", "cell"), Nil,
+    GenStore.writeTable(live, Seq("gen", "cell"), Nil,
       s"$path/$sub/e$next")
     GenStore.setEpoch(path, next)
     val (baseN, appendedN, _, lastBatch) = readIncStats(path)
@@ -359,15 +353,14 @@ object VectorStore {
     // IVF-PQ layout: codes partitioned by the SAME portable cell
     // assignment as the vector store, so a probed search prunes code
     // partitions at the source before any ADC arithmetic
-    nv.withColumn("codes",
-        graft.functions.VectorFunctions.pqEncode(col("nv"), codebooks))
-      .withColumn("cell", graft.functions.VectorFunctions.nearestCell(
-        col(vecCol).cast("array<double>"), centroids))
-      .drop("nv", vecCol)
-      .withColumn("gen", lit(0L))
-      .repartition(col("cell"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("gen", "cell").parquet(s"$path/codes/e$next")
+    GenStore.writeBucketed(
+      nv.withColumn("codes",
+          graft.functions.VectorFunctions.pqEncode(col("nv"), codebooks))
+        .withColumn("cell", graft.functions.VectorFunctions.nearestCell(
+          col(vecCol).cast("array<double>"), centroids))
+        .drop("nv", vecCol)
+        .withColumn("gen", lit(0L)),
+      Seq("gen", "cell"), s"$path/codes/e$next", mode = "overwrite")
     val json = codebooks.map(_.map(_.mkString("[", ",", "]"))
       .mkString("[", ",", "]")).mkString("[", ",", "]")
     GenStore.atomicWrite(
@@ -379,7 +372,7 @@ object VectorStore {
     val prevLast = readIncStats(path)._4
     GenStore.writePolicy(path, policy)
     writeIncStats(path,
-      emb.sparkSession.read.parquet(s"$path/codes/e$next").count(), 0L, 0L, prevLast)
+      GenStore.open(emb.sparkSession, s"$path/codes/e$next").count(), 0L, 0L, prevLast)
     // training-time mean reconstruction error — the denominator the
     // quality-drift ratio compares every future delta against
     val baseQerr = {
@@ -460,18 +453,17 @@ object VectorStore {
       delta.select(col(idCol).as("id"))
         .unionByName(deletedIds.select(col(deletedIds.columns.head).as("id"))),
       tombCol = "id", gen = nextGen)
-    delta
-      .withColumn("nv", graft.functions.VectorFunctions.l2Normalize(
-        col(vecCol).cast("array<double>")))
-      .withColumn("codes",
-        graft.functions.VectorFunctions.pqEncode(col("nv"), codebooks))
-      .withColumn("cell", graft.functions.VectorFunctions.nearestCell(
-        col(vecCol).cast("array<double>"), centroids))
-      .drop("nv", vecCol)
-      .withColumn("gen", lit(nextGen))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("gen", "cell")
-      .parquet(GenStore.tableDir(path, "codes"))
+    GenStore.writeBucketed(
+      delta
+        .withColumn("nv", graft.functions.VectorFunctions.l2Normalize(
+          col(vecCol).cast("array<double>")))
+        .withColumn("codes",
+          graft.functions.VectorFunctions.pqEncode(col("nv"), codebooks))
+        .withColumn("cell", graft.functions.VectorFunctions.nearestCell(
+          col(vecCol).cast("array<double>"), centroids))
+        .drop("nv", vecCol)
+        .withColumn("gen", lit(nextGen)),
+      Seq("gen", "cell"), GenStore.tableDir(path, "codes"))
     writeIncStats(path, baseN, appendedN + nDelta, nextGen,
       if (batchId >= 0) batchId else lastBatch)
     // accumulate the delta's quantization error into the quality sidecar

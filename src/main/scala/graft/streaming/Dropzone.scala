@@ -489,7 +489,8 @@ object Dropzone {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else {
       spark.catalog.refreshByPath(path) // batches land out-of-band
-      spark.read.parquet(path).withColumn("batch", col("batch").cast("long"))
+      graft.sources.GenStore.open(spark, path)
+        .withColumn("batch", col("batch").cast("long"))
     }
   }
 }

@@ -12,7 +12,7 @@ import graft.sources.BandStore
   * no-ops, and churn must stay policy-bounded with serving state
   * unchanged across compactions.
   */
-class BandStoreSpec extends AnyFunSuite {
+class BandStoreSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -21,7 +21,7 @@ class BandStoreSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("bandstore-spec").toString
+    scratchDir("bandstore-spec").toString
 
   private def docsDF(rows: Seq[(Long, String)]) = {
     import spark.implicits._

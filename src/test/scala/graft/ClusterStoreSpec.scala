@@ -16,7 +16,7 @@ import graft.sources.{BandStore, ClusterStore}
   * committed-gen gate, and the served labels must equal the inline
   * MinHash→verify→CC pass on the real corpus.
   */
-class ClusterStoreSpec extends AnyFunSuite {
+class ClusterStoreSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -25,7 +25,7 @@ class ClusterStoreSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    scratchDir(prefix).toString
 
   private def docsDF(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._

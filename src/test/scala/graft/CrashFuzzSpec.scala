@@ -24,7 +24,7 @@ import graft.sources.{BandStore, GenStore, TextIndex, VectorStore}
   * TextIndex's two artifacts) did not. A replay of the same batch then
   * converges to exactly the post state.
   */
-class CrashFuzzSpec extends AnyFunSuite {
+class CrashFuzzSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -48,8 +48,7 @@ class CrashFuzzSpec extends AnyFunSuite {
   }
 
   private def freshPath(tag: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-fuzz-$tag").toFile
-    dir.deleteOnExit()
+    val dir = scratchDir(s"graft-fuzz-$tag").toFile
     new java.io.File(dir, "idx").toString
   }
 
@@ -258,7 +257,7 @@ class CrashFuzzSpec extends AnyFunSuite {
     * belong to this test alone.
     */
   private def embeddingsCopy(tag: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-fuzz-$tag")
+    val dir = scratchDir(s"graft-fuzz-$tag")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/embeddings.parquet"),
       dir.resolve("embeddings.parquet"))

@@ -25,7 +25,7 @@ class DedupClusterSpec extends AnyFunSuite {
     // neighbour propagation alone could NOT converge — label-of-label
     // halves the chains each round (~8 rounds for 200 nodes)
     val pairs = (0 until 200).map(i => (i.toLong, i + 1L)).toDF("a_id", "b_id")
-    val out = Dedup.duplicateClusters(pairs, "a_id", "b_id").collect()
+    val out = Dedup.propagateClusters(pairs, "a_id", "b_id").collect()
     assert(out.length == 201)
     assert(out.forall(_.getLong(1) == 0L), "all nodes must label to min node 0")
     assert(out.count(_.getBoolean(2)) == 1, "exactly one canonical survivor")
@@ -46,8 +46,67 @@ class DedupClusterSpec extends AnyFunSuite {
     val pairs = (0 until 40).map(i => (i.toLong, i + 1L)).toDF("a_id", "b_id")
     // maxIters=1 cannot settle a 40-chain even with jumping
     val err = intercept[IllegalStateException](
-      Dedup.duplicateClusters(pairs, "a_id", "b_id", maxIters = 1).collect())
+      Dedup.propagateClusters(pairs, "a_id", "b_id", maxIters = 1).collect())
     assert(err.getMessage.contains("not converged"), err.getMessage)
+  }
+
+  // --- driver union-find vs distributed propagation -----------------------
+
+  /** Order-free rows plus the schema. */
+  private def image(df: org.apache.spark.sql.DataFrame) =
+    (df.schema, df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
+
+  /** The entry's driver path, the distributed propagation, and the entry
+    * with the broadcast threshold disabled (which must take the
+    * distributed path) all give the same rows and schema.
+    */
+  private def assertPathsAgree(pairs: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val driver = image(Dedup.duplicateClusters(pairs, "a_id", "b_id"))
+    assert(driver == image(Dedup.propagateClusters(pairs, "a_id", "b_id")), what)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try assert(driver == image(Dedup.duplicateClusters(pairs, "a_id", "b_id")),
+      s"$what (threshold disabled)")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("union-find parity: random graphs, chain, star, disjoint components") {
+    import spark.implicits._
+    for (seed <- Seq(1L, 2L, 3L)) {
+      val rng = new scala.util.Random(seed)
+      // duplicate edges and self-loops included
+      val edges = Seq.fill(90)((rng.nextInt(70).toLong, rng.nextInt(70).toLong))
+      assertPathsAgree(edges.toDF("a_id", "b_id"), s"random graph seed=$seed")
+    }
+    assertPathsAgree((0 until 200).map(i => (i + 1L, i.toLong)).toDF("a_id", "b_id"), "chain")
+    assertPathsAgree((1 until 50).map(i => (i.toLong * 3, 77L)).toDF("a_id", "b_id"), "star")
+    assertPathsAgree(Seq((5, 4), (4, 3), (30, 31), (9, 9), (31, 12)).toDF("a_id", "b_id"),
+      "disjoint int components")
+  }
+
+  test("union-find parity: string ids take the minimum by UTF-8 bytes") {
+    import spark.implicits._
+    // U+FF21 sorts below U+1F600 in UTF-8 (EF.. < F0..) but above it in
+    // UTF-16 code units (FF21 > D83D): Spark's minimum is the fullwidth A
+    val emoji = "\uD83D\uDE00"
+    val fullA = "\uFF21"
+    val pairs = Seq((emoji, fullA), (emoji + "x", emoji), ("b", "a"), ("c", "b"))
+      .toDF("a_id", "b_id")
+    assertPathsAgree(pairs, "string ids")
+    val labels = Dedup.duplicateClusters(pairs, "a_id", "b_id")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels(emoji) == fullA && labels(emoji + "x") == fullA, labels)
+    assert(labels("c") == "a")
+  }
+
+  test("a small graph's clusters cost at most two Spark jobs") {
+    import spark.implicits._
+    val pairs = (0 until 50).map(i => (i.toLong, (i / 3).toLong)).toDF("a_id", "b_id")
+    val (rows, prof) = graft.core.Telemetry.profile(spark, "clusters")(
+      Dedup.duplicateClusters(pairs, "a_id", "b_id").collect())
+    assert(rows.length == 50)
+    assert(prof.jobs.size <= 2, s"${prof.jobs.size} jobs: ${prof.json}")
   }
 
   // --- Bloom-pruned incremental dedup: the sketch must be invisible -------

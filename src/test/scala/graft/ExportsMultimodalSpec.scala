@@ -10,7 +10,7 @@ import graft.operators.Multimodal
 import graft.sources.Exports
 import graft.tools.AskEval
 
-class ExportsMultimodalSpec extends AnyFunSuite {
+class ExportsMultimodalSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -44,7 +44,7 @@ class ExportsMultimodalSpec extends AnyFunSuite {
     assert(m1.getAs[String]("content_sha256") == m2.getAs[String]("content_sha256"))
 
     // JSONL write path (S15/S16)
-    val out = Files.createTempDirectory("export").resolve("doc").toString
+    val out = scratchDir("export").resolve("doc").toString
     Exports.exportChunks(chunkDf, "docA").coalesce(1).write.json(out)
     val lines = spark.read.json(out)
     assert(lines.count() == 2)
@@ -99,7 +99,7 @@ class ExportsMultimodalSpec extends AnyFunSuite {
   }
 
   test("multimodal: batched stub decode over binary rows; resize + frames") {
-    val dir = Files.createTempDirectory("media")
+    val dir = scratchDir("media")
     Files.write(dir.resolve("pic.png"), Array[Byte](1, 2, 3, 4))
     Files.write(dir.resolve("clip.mp3"), Array[Byte](9, 9, 9))
     val media = Multimodal.readMedia(spark, dir.toString)
@@ -132,7 +132,7 @@ class ExportsMultimodalSpec extends AnyFunSuite {
 
   test("zip archive: jsonl + manifest + original source file (S17/J3)") {
     import java.util.zip.ZipInputStream
-    val dir = Files.createTempDirectory("arch-dz")
+    val dir = scratchDir("arch-dz")
     Files.writeString(dir.resolve("doc.txt"), "the original bytes of the document")
     val chunks = graft.sources.FileIngest.ingestDirectory(spark, dir.toString, 200, 40)
     val docId = chunks.select("document_id").head().getString(0)

@@ -16,7 +16,7 @@ import graft.sources.{ChunkStore, FileIngest}
   * test_parse_json_unit.py); idempotency mirrors smoke_golden.py's
   * double-run invariant.
   */
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -52,7 +52,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   private lazy val dropzone: Path = {
-    val d = Files.createTempDirectory("graft-dropzone")
+    val d = scratchDir("graft-dropzone")
     writeFixtures(d)
     d
   }
@@ -131,7 +131,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("store upsert is idempotent; changed files replace their chunks") {
-    val store = Files.createTempDirectory("graft-store").resolve("chunks").toString
+    val store = scratchDir("graft-store").resolve("chunks").toString
     ChunkStore.upsert(ingested, store, numBuckets = 8)
     val first = ChunkStore.read(spark, store)
     val n1 = first.count()
@@ -591,7 +591,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("skip ledger: image-only (DCT) PDFs and empty files are observable drops") {
-    val dz = Files.createTempDirectory("graft-skipledger")
+    val dz = scratchDir("graft-skipledger")
     // a scanned page: one DCTDecode image XObject, the content stream only
     // draws it — no text operators, so extraction (like pypdf's) yields ""
     val jpeg = Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte, 0xD9.toByte)
@@ -632,7 +632,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("ST6 read-while-write: upsert rewrites only the touched buckets") {
     import java.nio.file.{Files, Paths}
-    val store = Files.createTempDirectory("rw").resolve("chunks").toString
+    val store = scratchDir("rw").resolve("chunks").toString
     ChunkStore.upsert(ingested, store, numBuckets = 8)
 
     def partFiles(): Map[String, Seq[String]] = {
@@ -664,9 +664,9 @@ class IngestSpec extends AnyFunSuite {
 
   test("ST3 skip-unchanged: re-ingest of an unchanged dropzone is a no-op delta") {
     import java.nio.file.{Files, Paths}
-    val dz = Files.createTempDirectory("incr-dz")
+    val dz = scratchDir("incr-dz")
     writeFixtures(dz)
-    val store = Files.createTempDirectory("incr-store").resolve("chunks").toString
+    val store = scratchDir("incr-store").resolve("chunks").toString
 
     // first ingest: everything is new
     val first = FileIngest.ingestDirectoryIncremental(
@@ -712,9 +712,9 @@ class IngestSpec extends AnyFunSuite {
 
   test("S18 reindex: read store, write new store, identical content") {
     import java.nio.file.Files
-    val s1 = Files.createTempDirectory("reix1").resolve("chunks").toString
+    val s1 = scratchDir("reix1").resolve("chunks").toString
     ChunkStore.upsert(ingested, s1, numBuckets = 4)
-    val s2 = Files.createTempDirectory("reix2").resolve("chunks").toString
+    val s2 = scratchDir("reix2").resolve("chunks").toString
     ChunkStore.upsert(ChunkStore.read(spark, s1).drop("doc_bucket"), s2, numBuckets = 16)
     val a = ChunkStore.read(spark, s1).select("id").collect().map(_.getString(0)).sorted.toSeq
     val b = ChunkStore.read(spark, s2).select("id").collect().map(_.getString(0)).sorted.toSeq

@@ -13,7 +13,7 @@ import graft.sources.ManifestStore
   * shards are never rewritten, and the incrementally-folded signatures
   * equal a full recompute over the combined span set.
   */
-class ManifestStoreSpec extends AnyFunSuite {
+class ManifestStoreSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -25,7 +25,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     seqLen = 16L, shards = 4L)
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("manifeststore-spec").toString
+    scratchDir("manifeststore-spec").toString
 
   private def docsDF(rows: Seq[(Long, String)]) = {
     import spark.implicits._

@@ -32,7 +32,7 @@ import graft.queries.Catalog
   * corpus first has at sf0.1 (8 duplicate classes, 1 in the video slot) —
   * those two families run there; the rest run at sf0.01.
   */
-class MutationAuditSpec extends AnyFunSuite {
+class MutationAuditSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -180,8 +180,7 @@ class MutationAuditSpec extends AnyFunSuite {
     // deliveries to the wrong micro-batch must hash-mismatch even though
     // the classified file set is identical.
     def build(parity0: Int) = {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-mut-dzledger-$parity0").toString
+      val root = scratchDir(s"graft-mut-dzledger-$parity0").toString
       Seq(0, 1).foreach { b =>
         Dropzone.processBatch(spark,
           IngestCatalog.ledgerFiles(spark, Sf01,
@@ -2320,8 +2319,8 @@ class MutationAuditSpec extends AnyFunSuite {
     val docs = docsWide(Sf01).select(col("doc_id"), col("text"))
     val held = Seq(8L, 245L, 45L)
     val base = docs.filter(!col("doc_id").isin(held: _*))
-    val bandTmp = java.nio.file.Files.createTempDirectory("f59-bands").toString
-    val clTmp = java.nio.file.Files.createTempDirectory("f59-clusters").toString
+    val bandTmp = scratchDir("f59-bands").toString
+    val clTmp = scratchDir("f59-clusters").toString
     BandStore.write(base, "doc_id", "text", bandTmp, 32, 8)
     ClusterStore.write(base, BandStore.read(spark, bandTmp, 32, 8),
       "doc_id", "text", clTmp)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pushdown, broadcasts, or top-k short-circuits fails here, not in
   * production.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with ScratchDirs {
 
   private val Sf = "/root/testdata/sf0.001"
 
@@ -105,7 +105,7 @@ class PlanSpec extends AnyFunSuite {
     // The anti-join's store side must prune to the two key columns —
     // text/vector bytes of a 100 TB corpus must not ride the probe.
     import org.apache.spark.sql.functions._
-    val dz = java.nio.file.Files.createTempDirectory("plan-dz")
+    val dz = scratchDir("plan-dz")
     java.nio.file.Files.writeString(dz.resolve("a.txt"), "alpha beta gamma delta")
     val store = dz.resolve("store").toString
     graft.sources.ChunkStore.upsert(

@@ -14,7 +14,7 @@ import graft.operators.QualityModel
   * oracle row pins end-to-end value parity; these tests pin the state
   * machine.)
   */
-class QualityModelSpec extends AnyFunSuite {
+class QualityModelSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -41,9 +41,7 @@ class QualityModelSpec extends AnyFunSuite {
     * isolated artifact.
     */
   private def freshSfDir(tag: String, docs: DataFrame): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-qc-spec-$tag").toFile
-    dir.deleteOnExit()
+    val dir = scratchDir(s"graft-qc-spec-$tag").toFile
     docs.coalesce(1).write.parquet(new java.io.File(dir, "documents.parquet").toString)
     dir.toString
   }

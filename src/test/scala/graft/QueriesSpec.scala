@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools/oracle_check.py for the dev loop); these tests pin structural
   * invariants the oracle can't see.
   */
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with ScratchDirs {
 
   private val Sf = "/root/testdata/sf0.001"
 
@@ -339,7 +339,7 @@ class QueriesSpec extends AnyFunSuite {
     // the FRONT (cum_before=0, selected=true for the worst doc) and
     // diverge from the oracle's NULLS LAST; the explicit 0.0 pin ranks
     // it strictly below every real doc in BOTH engines.
-    val dir = java.nio.file.Files.createTempDirectory("q109zero").toString
+    val dir = scratchDir("q109zero").toString
     Seq(
       (0L, "the quick brown fox jumps over the lazy dog repeatedly today"),
       (1L, "   "), // whitespace-only: tokens = [], n_tok = 0
@@ -675,7 +675,7 @@ class QueriesSpec extends AnyFunSuite {
     // doc 0 fills sequence 0 EXACTLY, doc 2 is empty, and the total is
     // exactly 3·512 so the last sequence has zero fill.
     def words(n: Int) = (1 to n).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("q112edge").toString
+    val dir = scratchDir("q112edge").toString
     Seq(
       (0L, words(512)), // ends exactly on the first cut
       (1L, words(100)),
@@ -708,7 +708,7 @@ class QueriesSpec extends AnyFunSuite {
     import spark.implicits._
     // an all-whitespace source would make epochs 0/0 — Spark says NaN,
     // DuckDB disagrees; the blend must exclude what it cannot sample
-    val dir = java.nio.file.Files.createTempDirectory("q113zero").toString
+    val dir = scratchDir("q113zero").toString
     Seq(
       (0L, "the quick brown fox jumps over a lazy dog", "real"),
       (1L, "a second plain document with simple words here", "real"),
@@ -732,7 +732,7 @@ class QueriesSpec extends AnyFunSuite {
     // q113 engine-divergence class — and the per-source report must be
     // empty. Pins the degradation mode so corpus drift can't turn it
     // into a crash.
-    val dir = java.nio.file.Files.createTempDirectory("q120num").toString
+    val dir = scratchDir("q120num").toString
     Seq(
       (0L, "123 456 789 0.5% $100", "nums"),
       (1L, "2026-08-15 12:00:00 +0000", "nums")
@@ -1090,7 +1090,7 @@ class QueriesSpec extends AnyFunSuite {
     val real = graft.core.Tables.eventsMicros(spark, Sf)
       .select(col("event_id"), col("ts"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-long")
+    val dir = scratchDir("graft-events-long")
     spark.read.parquet(s"$Sf/events.parquet")
       .withColumn("ts",
         unix_micros(col("ts").cast("timestamp")) * lit(1000L))
@@ -1238,7 +1238,7 @@ class QueriesSpec extends AnyFunSuite {
     import graft.queries.PipelineCatalog
     // the artifact is keyed on the table's absolute path: a private copy
     // of the corpus keeps this test's artifacts its own
-    val dir = Files.createTempDirectory("graft-bpe-artifact")
+    val dir = scratchDir("graft-bpe-artifact")
     Files.list(Paths.get(Sf)).forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
     val d = dir.toString
     def listing(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
@@ -1971,7 +1971,7 @@ class QueriesSpec extends AnyFunSuite {
     // WITH positive weight, never resurrect the dropped one. "zz" sorts
     // last but every doc is junk (no stopwords, avg token length 15 →
     // q22 score ≈ 0.08 < 0.5); "alpha" is stopword-dense and kept.
-    val dir = java.nio.file.Files.createTempDirectory("q141drop").toString
+    val dir = scratchDir("q141drop").toString
     val good = Seq.fill(12)("the of and to in a is it on at").mkString(" ")
     val junk = Seq.fill(40)("x" * 15).mkString(" ")
     Seq(

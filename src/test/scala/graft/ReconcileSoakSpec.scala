@@ -24,7 +24,7 @@ import graft.streaming.Dropzone
   *    grain Structured Streaming executes (foreachBatch serializes batches;
   *    a reconcile runs between them, never inside one).
   */
-class ReconcileSoakSpec extends AnyFunSuite {
+class ReconcileSoakSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -44,8 +44,8 @@ class ReconcileSoakSpec extends AnyFunSuite {
   }
 
   test("interleaved batches + reconciles keep every artifact equal to the live listing") {
-    val dropzone: Path = Files.createTempDirectory("graft-soak-dz")
-    val root = Files.createTempDirectory("graft-soak-store")
+    val dropzone: Path = scratchDir("graft-soak-dz")
+    val root = scratchDir("graft-soak-store")
     val store = root.resolve("chunks").toString
     val tindex = root.resolve("tindex").toString
     val vstore = root.resolve("vstore").toString

@@ -17,7 +17,7 @@ import graft.streaming.Dropzone
   * the same blind spot and ships manual cleanup tooling instead
   * (scripts/dev/tools/cleanup_kind.py:53-123, qdrant_delete_by_ids.py).
   */
-class ReconcileSpec extends AnyFunSuite {
+class ReconcileSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -37,12 +37,12 @@ class ReconcileSpec extends AnyFunSuite {
   }
 
   test("a deleted file leaves chunk store, BM25, ANN, PQ and band serving; replay no-op; survives compaction") {
-    val dropzone: Path = Files.createTempDirectory("graft-rec-dz")
-    val store = Files.createTempDirectory("graft-rec-store").resolve("chunks").toString
-    val tindex = Files.createTempDirectory("graft-rec-ti").resolve("idx").toString
-    val vstore = Files.createTempDirectory("graft-rec-vs").resolve("idx").toString
-    val pstore = Files.createTempDirectory("graft-rec-pq").resolve("idx").toString
-    val bstore = Files.createTempDirectory("graft-rec-bs").resolve("idx").toString
+    val dropzone: Path = scratchDir("graft-rec-dz")
+    val store = scratchDir("graft-rec-store").resolve("chunks").toString
+    val tindex = scratchDir("graft-rec-ti").resolve("idx").toString
+    val vstore = scratchDir("graft-rec-vs").resolve("idx").toString
+    val pstore = scratchDir("graft-rec-pq").resolve("idx").toString
+    val bstore = scratchDir("graft-rec-bs").resolve("idx").toString
 
     Files.writeString(dropzone.resolve("keep.txt"),
       "spark join engine shuffles rows by key and builds hash tables " * 3)
@@ -113,9 +113,9 @@ class ReconcileSpec extends AnyFunSuite {
   }
 
   test("chat-export documents die with their source file (virtual paths, sig-matched)") {
-    val dropzone: Path = Files.createTempDirectory("graft-rec-chat-dz")
-    val store = Files.createTempDirectory("graft-rec-chat-store").resolve("chunks").toString
-    val tindex = Files.createTempDirectory("graft-rec-chat-ti").resolve("idx").toString
+    val dropzone: Path = scratchDir("graft-rec-chat-dz")
+    val store = scratchDir("graft-rec-chat-store").resolve("chunks").toString
+    val tindex = scratchDir("graft-rec-chat-ti").resolve("idx").toString
 
     val exportJson =
       """[
@@ -194,7 +194,7 @@ class ReconcileSpec extends AnyFunSuite {
       .toDF("id", "text")
 
     // --- BandStore
-    val bstore = Files.createTempDirectory("graft-regrow-bs").resolve("idx").toString
+    val bstore = scratchDir("graft-regrow-bs").resolve("idx").toString
     BandStore.write(docs, "id", "text", bstore, 32, 8)
     BandStore.upsert(spark, noDocs, "id", "text",
       Seq("d1", "d2").toDF("id"), bstore, 32, 8)
@@ -214,7 +214,7 @@ class ReconcileSpec extends AnyFunSuite {
       s"empty vs partitioned schema diverged:\n${bandEmpty.schema}\n${bandRegrown.schema}")
 
     // --- TextIndex
-    val tindex = Files.createTempDirectory("graft-regrow-ti").resolve("idx").toString
+    val tindex = scratchDir("graft-regrow-ti").resolve("idx").toString
     TextIndex.write(docs, "id", "text", tindex)
     TextIndex.upsert(spark, noDocs, "id", "text",
       Seq("d1", "d2").toDF("id"), tindex)
@@ -227,7 +227,7 @@ class ReconcileSpec extends AnyFunSuite {
     assert(ti.n == 1L, "regrown index stats must count only the new doc")
 
     // --- VectorStore (vectors layout; codes shares the codepath)
-    val vstore = Files.createTempDirectory("graft-regrow-vs").resolve("idx").toString
+    val vstore = scratchDir("graft-regrow-vs").resolve("idx").toString
     val vecs = Seq(
       (1L, Array(1.0, 0.0, 0.0, 0.0)),
       (2L, Array(0.0, 1.0, 0.0, 0.0))).toDF("vec_id", "embedding")
@@ -251,7 +251,7 @@ class ReconcileSpec extends AnyFunSuite {
     // deleteDocuments' survivors frame can be EMPTY for a bucket; a bare
     // dynamic overwrite would silently keep the old files in that case
     import spark.implicits._
-    val store = Files.createTempDirectory("graft-rec-empty").resolve("chunks").toString
+    val store = scratchDir("graft-rec-empty").resolve("chunks").toString
     val chunks = Seq(
       ("c1", "d1", "a.txt", "body one"),
       ("c2", "d2", "b.txt", "body two"))

@@ -11,7 +11,7 @@ import graft.sources.TextIndex
   * must equal the inline BM25 bit for bit over any maintenance history,
   * and reciprocal-rank fusion must give the exact Σ 1/(60+rank).
   */
-class ServeOpsSpec extends AnyFunSuite {
+class ServeOpsSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -52,7 +52,7 @@ class ServeOpsSpec extends AnyFunSuite {
       vocab)
 
     var model: Map[Long, String] = (0 until 60).map(i => i.toLong -> text(i)).toMap
-    val path = java.nio.file.Files.createTempDirectory("graft-serve-ops").resolve("idx").toString
+    val path = scratchDir("graft-serve-ops").resolve("idx").toString
     TextIndex.write(docsDF(model.toSeq), "doc_id", "text", path,
       policy = TextIndex.Policy(maxSegments = 100L, maxDeadFraction = 1.1))
 

@@ -12,10 +12,12 @@ import graft.sources.{BandStore, ChunkStore, ClusterStore, FileIngest, GenStore,
 /** The store-open path ([[GenStore.open]]): the schema read from one
   * committed footer must be exactly what Spark's inference gives for
   * every persisted layout, with the same rows; a torn uncommitted segment
-  * must stay invisible; and the opens a serve pays must not submit the
-  * schema-inference job.
+  * must stay invisible; and the opens a serve pays must submit neither
+  * the schema-inference job nor a file-listing job. The bucketed write
+  * path ([[GenStore.writeBucketed]]) is pinned here too: one file per
+  * bucket, written by more than one task.
   */
-class StoreOpenSpec extends AnyFunSuite {
+class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -24,7 +26,7 @@ class StoreOpenSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-open-spec-$tag").resolve("store").toString
+    scratchDir(s"graft-open-spec-$tag").resolve("store").toString
 
   private def docsDF(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
@@ -56,7 +58,7 @@ class StoreOpenSpec extends AnyFunSuite {
   private val corpus: Seq[(Long, String)] = (0 until 40).map(i => (i.toLong, text(i, 12)))
 
   private def chunkStore(files: Int): String = {
-    val dz: Path = Files.createTempDirectory("graft-open-spec-dz")
+    val dz: Path = scratchDir("graft-open-spec-dz")
     (0 until files).foreach(i => Files.writeString(dz.resolve(s"f$i.txt"), s"document $i body ${text(i, 8)}"))
     val store = tmp("chunks")
     ChunkStore.upsert(FileIngest.ingestDirectory(spark, dz.toString, 200, 40), store)
@@ -149,7 +151,7 @@ class StoreOpenSpec extends AnyFunSuite {
     (r, prof.jobs.size)
   }
 
-  test("serve opens: TextIndex.read submits no job, ChunkStore.read at most the listing") {
+  test("serve opens submit no job: TextIndex.read, ChunkStore.read and BandStore.read") {
     val store = chunkStore(120)
     val buckets = Files.list(java.nio.file.Paths.get(store))
       .filter(_.getFileName.toString.startsWith("doc_bucket=")).count()
@@ -161,11 +163,71 @@ class StoreOpenSpec extends AnyFunSuite {
       graft.operators.SearchOps.bm25ScoresIndexed(idx, Seq("w1", "w2")).queryExecution.executedPlan)
     assert(bmJobs == 0, s"planning the indexed BM25 submitted $bmJobs jobs")
     val (_, csJobs) = jobsDuring(ChunkStore.read(spark, store).schema)
-    assert(csJobs <= 1, s"ChunkStore.read submitted $csJobs jobs")
+    assert(csJobs == 0, s"ChunkStore.read submitted $csJobs jobs")
+
+    val bs = tmp("serve-bands")
+    BandStore.write(docsDF(corpus), "doc_id", "text", bs, 32, 8)
+    BandStore.upsert(spark, docsDF(Seq(1L -> text(2, 12))), "doc_id", "text", ids(7L), bs, 32, 8)
+    val bandBuckets = Files.list(java.nio.file.Paths.get(GenStore.tableDir(bs, "bands"), "gen=0"))
+      .filter(_.getFileName.toString.startsWith("bh_bucket=")).count()
+    assert(bandBuckets > 32, s"only $bandBuckets band buckets: below the parallel-listing threshold")
+    val (_, bsJobs) = jobsDuring(BandStore.read(spark, bs, 32, 8).rows.queryExecution.executedPlan)
+    assert(bsJobs == 0, s"BandStore.read submitted $bsJobs jobs")
+  }
+
+  /** Every `<bucketPrefix>=` directory under `dir` (at any depth). */
+  private def bucketDirs(dir: String, bucketPrefix: String): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$bucketPrefix="))
+      .toSeq
+  }
+
+  /** Asserts each bucket directory holds exactly one data file and that
+    * every stage writing the shuffled rows ran on more than one task. A
+    * write stage is a result stage (it writes no shuffle) that reads at
+    * least one shuffled row per bucket directory; AQE names stages after
+    * its own thread, so the stage name cannot tell.
+    */
+  private def assertSpreadWrite(what: String, prof: graft.core.Telemetry.Profile,
+      tables: Seq[(String, String)]): Unit = {
+    val dirCounts = tables.map { case (dir, prefix) =>
+      val dirs = bucketDirs(dir, prefix)
+      assert(dirs.size > 8, s"$what: only ${dirs.size} $prefix directories under $dir")
+      dirs.foreach { d =>
+        val files = Files.list(d).filter(_.getFileName.toString.endsWith(".parquet")).count()
+        assert(files == 1, s"$what: $d holds $files parquet files")
+      }
+      dirs.size
+    }
+    val writes = prof.stages.filter(st => st.writeRecords == 0 && st.readRecords >= dirCounts.min)
+    assert(writes.size >= tables.size, s"$what: no shuffled write stage in ${prof.json}")
+    writes.foreach(st =>
+      assert(st.tasks > 1, s"$what: write stage ${st.id} ran ${st.tasks} task(s): ${prof.json}"))
+  }
+
+  test("bucketed writes: one file per bucket, written by more than one task") {
+    val dz: Path = scratchDir("graft-open-spec-wdz")
+    (0 until 120).foreach(i => Files.writeString(dz.resolve(s"f$i.txt"), s"document $i body ${text(i, 8)}"))
+    val chunks = tmp("write-chunks")
+    val (_, up) = graft.core.Telemetry.profile(spark, "upsert")(
+      ChunkStore.upsert(FileIngest.ingestDirectory(spark, dz.toString, 200, 40), chunks))
+    assertSpreadWrite("ChunkStore.upsert", up, Seq(chunks -> "doc_bucket"))
+
+    val ti = tmp("write-tindex")
+    val (_, tw) = graft.core.Telemetry.profile(spark, "text index")(
+      TextIndex.write(docsDF(corpus), "doc_id", "text", ti))
+    assertSpreadWrite("TextIndex.write", tw, Seq(GenStore.tableDir(ti, "postings") -> "term_bucket",
+      GenStore.tableDir(ti, "doclens") -> "doc_bucket"))
+
+    val bs = tmp("write-bands")
+    val (_, bw) = graft.core.Telemetry.profile(spark, "bands")(
+      BandStore.write(docsDF(corpus), "doc_id", "text", bs, 32, 8))
+    assertSpreadWrite("BandStore.write", bw, Seq(GenStore.tableDir(bs, "bands") -> "bh_bucket"))
   }
 
   test("a store file without Spark's schema key fails loudly, naming the file") {
-    val dir = Files.createTempDirectory("graft-open-spec-foreign").resolve("t")
+    val dir = scratchDir("graft-open-spec-foreign").resolve("t")
     spark.range(3).write.parquet(dir.toString)
     val f = Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get()
     // rewrite one file through parquet-hadoop directly: no Spark metadata

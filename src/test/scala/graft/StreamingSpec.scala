@@ -12,7 +12,7 @@ import graft.streaming.Dropzone
 /** Streaming dropzone: files land → micro-batch → idempotent store upsert
   * (SURVEY §2.9 ST1-ST4).
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,9 +22,9 @@ class StreamingSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("files are ingested as they arrive; re-dropped files replace themselves") {
-    val dropzone: Path = Files.createTempDirectory("graft-stream-dz")
-    val store = Files.createTempDirectory("graft-stream-store").resolve("chunks").toString
-    val checkpoint = Files.createTempDirectory("graft-stream-ckpt").toString
+    val dropzone: Path = scratchDir("graft-stream-dz")
+    val store = scratchDir("graft-stream-store").resolve("chunks").toString
+    val checkpoint = scratchDir("graft-stream-ckpt").toString
 
     Files.writeString(dropzone.resolve("a.txt"), "first document body")
 
@@ -53,10 +53,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("skip ledger accumulates across micro-batches; replays stay idempotent") {
-    val dropzone: Path = Files.createTempDirectory("graft-ledger-dz")
-    val store = Files.createTempDirectory("graft-ledger-store").resolve("chunks").toString
-    val checkpoint = Files.createTempDirectory("graft-ledger-ckpt").toString
-    val ledger = Files.createTempDirectory("graft-ledger-out").resolve("ledger").toString
+    val dropzone: Path = scratchDir("graft-ledger-dz")
+    val store = scratchDir("graft-ledger-store").resolve("chunks").toString
+    val checkpoint = scratchDir("graft-ledger-ckpt").toString
+    val ledger = scratchDir("graft-ledger-out").resolve("ledger").toString
 
     // batch 1: one kept file, one whitespace-only (empty_file), one
     // tag-only html (extraction_empty)
@@ -100,8 +100,8 @@ class StreamingSpec extends AnyFunSuite {
     // attempt's skip row in batch=N forever; the unconditional write is
     // the deletion
     import org.apache.spark.sql.DataFrame
-    val store = Files.createTempDirectory("graft-replay-store").resolve("chunks").toString
-    val ledger = Files.createTempDirectory("graft-replay-ledger").resolve("ledger").toString
+    val store = scratchDir("graft-replay-store").resolve("chunks").toString
+    val ledger = scratchDir("graft-replay-ledger").resolve("ledger").toString
     def files(body: String): DataFrame = {
       import spark.implicits._
       Seq(("dz/x.txt", body.getBytes("UTF-8")))
@@ -169,12 +169,12 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming ingest maintains the BM25 serving index per micro-batch") {
     import graft.sources.{BandStore, TextIndex, VectorStore}
-    val dropzone: Path = Files.createTempDirectory("graft-stream-tidz")
-    val store = Files.createTempDirectory("graft-stream-tistore").resolve("chunks").toString
-    val checkpoint = Files.createTempDirectory("graft-stream-tickpt").toString
-    val tindex = Files.createTempDirectory("graft-stream-tindex").resolve("idx").toString
-    val vstore = Files.createTempDirectory("graft-stream-vstore").resolve("idx").toString
-    val bstore = Files.createTempDirectory("graft-stream-bstore").resolve("idx").toString
+    val dropzone: Path = scratchDir("graft-stream-tidz")
+    val store = scratchDir("graft-stream-tistore").resolve("chunks").toString
+    val checkpoint = scratchDir("graft-stream-tickpt").toString
+    val tindex = scratchDir("graft-stream-tindex").resolve("idx").toString
+    val vstore = scratchDir("graft-stream-vstore").resolve("idx").toString
+    val bstore = scratchDir("graft-stream-bstore").resolve("idx").toString
 
     Files.writeString(dropzone.resolve("a.txt"), "spark join engine")
     Files.writeString(dropzone.resolve("a2.txt"), "filter scan pushdown code")
@@ -230,7 +230,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.sources.TextIndex
-    val path = Files.createTempDirectory("graft-tindex-replay").resolve("idx").toString
+    val path = scratchDir("graft-tindex-replay").resolve("idx").toString
     val b0 = Seq(("a", "spark join")).toDF("doc_id", "text")
     TextIndex.write(b0, "doc_id", "text", path, batchId = 0L)
     val b1 = Seq(("b", "hash probe")).toDF("doc_id", "text")
@@ -252,9 +252,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ST4: restart from checkpoint resumes without duplicating processed files") {
-    val dropzone: Path = Files.createTempDirectory("graft-restart-dz")
-    val store = Files.createTempDirectory("graft-restart-store").resolve("chunks").toString
-    val checkpoint = Files.createTempDirectory("graft-restart-ckpt").toString
+    val dropzone: Path = scratchDir("graft-restart-dz")
+    val store = scratchDir("graft-restart-store").resolve("chunks").toString
+    val checkpoint = scratchDir("graft-restart-ckpt").toString
 
     Files.writeString(dropzone.resolve("one.txt"), "first file before the crash")
     val q1 = Dropzone.start(spark, dropzone.toString, store, checkpoint,
@@ -277,7 +277,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("ST3: micro-batch skips files already stored with identical content") {
     import org.apache.spark.sql.DataFrame
-    val store = Files.createTempDirectory("graft-st3-store").resolve("chunks").toString
+    val store = scratchDir("graft-st3-store").resolve("chunks").toString
     def files(body: String): DataFrame = {
       import spark.implicits._
       Seq(("dz/a.txt", body.getBytes("UTF-8")))
@@ -311,7 +311,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("unchanged re-delivery short-circuits: no empty generation lands in any artifact") {
     import org.apache.spark.sql.DataFrame
-    val root = Files.createTempDirectory("graft-st3b")
+    val root = scratchDir("graft-st3b")
     val store = root.resolve("chunks").toString
     val tindex = root.resolve("tindex").toString
     val bstore = root.resolve("bands").toString
@@ -355,7 +355,7 @@ class StreamingSpec extends AnyFunSuite {
     // silently renumbering published sequences.
     import org.apache.spark.sql.DataFrame
     import graft.sources.ManifestStore
-    val root = Files.createTempDirectory("graft-stream-manifest")
+    val root = scratchDir("graft-stream-manifest")
     val store = root.resolve("chunks").toString
     val mstore = root.resolve("manifest").toString
     val P = ManifestStore.Params(epochs = 2, buckets = 4, seqLen = 16, shards = 2)
@@ -395,7 +395,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(ManifestStore.readStats(mstore) == statsAfter)
 
     // stream path ≡ direct-call path (the q149 two-phase discipline)
-    val ref = Files.createTempDirectory("graft-stream-manifest-ref").toString
+    val ref = scratchDir("graft-stream-manifest-ref").toString
     ManifestStore.write(files(base).select(
         regexp_extract(col("path"), "(\\d+)", 1).cast("long").as("doc_id"),
         decode(col("content"), "UTF-8").as("text")),
@@ -425,7 +425,7 @@ class StreamingSpec extends AnyFunSuite {
     // candidate re-shingling, replays are watermark no-ops.
     import org.apache.spark.sql.DataFrame
     import graft.sources.ClusterStore
-    val root = Files.createTempDirectory("graft-stream-clusters")
+    val root = scratchDir("graft-stream-clusters")
     val store = root.resolve("chunks").toString
     val bands = root.resolve("bands").toString
     val clusters = root.resolve("clusters").toString
@@ -481,8 +481,8 @@ class StreamingSpec extends AnyFunSuite {
     // index diverges from the chunk store (r6 advice)
     import org.apache.spark.sql.DataFrame
     import graft.sources.VectorStore
-    val store = Files.createTempDirectory("graft-shrink-store").resolve("chunks").toString
-    val vstore = Files.createTempDirectory("graft-shrink-vstore").resolve("idx").toString
+    val store = scratchDir("graft-shrink-store").resolve("chunks").toString
+    val vstore = scratchDir("graft-shrink-vstore").resolve("idx").toString
     def files(body: String): DataFrame = {
       import spark.implicits._
       Seq(("dz/a.txt", body.getBytes("UTF-8")))
@@ -508,8 +508,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("store compaction preserves content and reduces file count") {
-    val dropzone: Path = Files.createTempDirectory("graft-compact-dz")
-    val store = Files.createTempDirectory("graft-compact-store").resolve("chunks").toString
+    val dropzone: Path = scratchDir("graft-compact-dz")
+    val store = scratchDir("graft-compact-store").resolve("chunks").toString
     // several upserts -> several file sets per bucket
     for (i <- 1 to 4) {
       Files.writeString(dropzone.resolve(s"f$i.txt"), s"document number $i body")
@@ -555,9 +555,9 @@ class StreamingSpec extends AnyFunSuite {
     // -> skip-unchanged -> upsert. An unchanged re-trigger must rewrite
     // nothing; a re-dropped CHANGED audio file must replace its chunks.
     import graft.operators.MediaService
-    val dropzone: Path = Files.createTempDirectory("graft-med-dz")
-    val store = Files.createTempDirectory("graft-med-store").resolve("chunks").toString
-    val checkpoint = Files.createTempDirectory("graft-med-ckpt").toString
+    val dropzone: Path = scratchDir("graft-med-dz")
+    val store = scratchDir("graft-med-store").resolve("chunks").toString
+    val checkpoint = scratchDir("graft-med-ckpt").toString
     val mustNotCall = new MediaService.Transport {
       override def post(paths: Seq[String], payloads: Seq[Array[Byte]]): String =
         throw new IllegalStateException("dev mode must not call the media service")

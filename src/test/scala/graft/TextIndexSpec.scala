@@ -12,7 +12,7 @@ import graft.sources.TextIndex
   * serving values. (q77 pins end-to-end value parity against the DuckDB
   * inline-BM25 oracle; these tests pin the state machine.)
   */
-class TextIndexSpec extends AnyFunSuite {
+class TextIndexSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -31,9 +31,7 @@ class TextIndexSpec extends AnyFunSuite {
   }
 
   private def freshPath(tag: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-tindex-spec-$tag").toFile
-    dir.deleteOnExit()
+    val dir = scratchDir(s"graft-tindex-spec-$tag").toFile
     new java.io.File(dir, "idx").toString
   }
 

@@ -13,7 +13,7 @@ import graft.sources.VectorStore
   * pin end-to-end value parity against the DuckDB replays; these tests
   * pin the state machine.)
   */
-class VectorStoreIncSpec extends AnyFunSuite {
+class VectorStoreIncSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -29,9 +29,7 @@ class VectorStoreIncSpec extends AnyFunSuite {
   }
 
   private def freshPath(tag: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-vstore-spec-$tag").toFile
-    dir.deleteOnExit()
+    val dir = scratchDir(s"graft-vstore-spec-$tag").toFile
     new java.io.File(dir, "idx").toString
   }
 
@@ -244,8 +242,7 @@ class VectorStoreIncSpec extends AnyFunSuite {
   }
 
   test("pq codebook quality: distribution shift triggers retrainPqIfStale") {
-    val sfRoot = java.nio.file.Files.createTempDirectory("graft-pqq-sf").toFile
-    sfRoot.deleteOnExit()
+    val sfRoot = scratchDir("graft-pqq-sf").toFile
     val sfDir = sfRoot.toString
     // base corpus: two tight clusters living entirely in the FIRST half of
     // the dims — subspace 1's codebook trains on (near-)zero slices
@@ -306,8 +303,7 @@ class VectorStoreIncSpec extends AnyFunSuite {
   }
 
   test("pq quality accounting is replay-idempotent with the upsert") {
-    val sfRoot = java.nio.file.Files.createTempDirectory("graft-pqq-rp").toFile
-    sfRoot.deleteOnExit()
+    val sfRoot = scratchDir("graft-pqq-rp").toFile
     val sfDir = sfRoot.toString
     val base = (1L to 6L).map(i => i -> v(1, 0.1 * i, 0, 0))
     vecsDF(base: _*).write.mode("overwrite")

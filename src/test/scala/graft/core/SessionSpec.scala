@@ -71,4 +71,16 @@ class SessionSpec extends AnyFunSuite {
     assert(hits == Set("graft/core/Session.scala"),
       s"session builders outside the factory: ${hits - "graft/core/Session.scala"}")
   }
+
+  test("Tables: every table opens with inference's schema and submits no job") {
+    // events.ts included: the session reads TIMESTAMP(NANOS) as long
+    val sf = "/root/testdata/sf0.001"
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val (opened, prof) = Telemetry.profile(spark, "tables")(
+      Tables.names.map(n => n -> Tables(spark, sf, n).schema))
+    assert(prof.jobs.isEmpty, s"loading the tables submitted ${prof.jobs.size} jobs: ${prof.json}")
+    opened.foreach { case (n, schema) =>
+      assert(schema == spark.read.parquet(s"$sf/$n.parquet").schema, s"$n: schema differs")
+    }
+  }
 }

@@ -4,13 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ScratchDirs
+
 /** The relational mirror round-trips against a REAL JDBC engine
   * (embedded Derby — the one in /opt/spark/jars): bootstrap DDL, delta
   * upsert (stage + set-wise publish), replacement by key, and FK-cascade
   * document deletion, all verified by reading back through
   * `spark.read.jdbc`.
   */
-class JdbcMirrorSpec extends AnyFunSuite {
+class JdbcMirrorSpec extends AnyFunSuite with ScratchDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,7 +22,7 @@ class JdbcMirrorSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def freshTarget(tag: String): JdbcMirror.Target = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-jdbc-$tag")
+    val dir = scratchDir(s"graft-jdbc-$tag")
     JdbcMirror.Target(s"jdbc:derby:$dir/db;create=true")
   }
 
@@ -198,7 +200,7 @@ class JdbcMirrorSpec extends AnyFunSuite {
     // ledger-optional branch, and the embedded-session guard (main must
     // not stop a session it did not create)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mirrorpub")
+    val dir = scratchDir("graft-mirrorpub")
     val store = dir.resolve("chunks").toString
     ChunkStore.upsert(Seq(
         ("c1", "d1", "a.txt", "text", 0, "alpha body"),
