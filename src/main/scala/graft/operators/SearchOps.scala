@@ -343,7 +343,7 @@ object SearchOps {
   /** BM25 over the persisted [[graft.sources.TextIndex]] — the SERVING
     * path: literal query terms map to their portable term-hash buckets in
     * the JVM, and only those buckets' postings directories are opened
-    * (≤|terms| of 64 per generation), with a `term IN (…)` pushed filter
+    * (≤|terms| of the index's bucket count per generation), with a `term IN (…)` pushed filter
     * that parquet row-group min/max stats resolve against the
     * in-partition term sort. One pass: df is the distinct-doc count over
     * the same live tf rows (a window by term), and the corpus stats are
@@ -353,7 +353,7 @@ object SearchOps {
     */
   def bm25ScoresIndexed(index: graft.sources.TextIndex.Index,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val buckets = terms.map(graft.sources.TextIndex.bucketOf).distinct
+    val buckets = terms.map(index.bucketOf).distinct
     // the opened roots already hold only these buckets; the partition
     // filter keeps that pruning visible in the plan
     val tf = index.postingsOfBuckets(buckets)

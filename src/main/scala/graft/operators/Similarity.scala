@@ -60,14 +60,6 @@ object Similarity {
       .orderBy(col("score").desc)
       .limit(k)
 
-  /** IVF (inverted-file) index: k-means centroids over the corpus, each
-    * vector assigned to its nearest centroid's cell. A query probes only
-    * the `nProbe` cells whose centroids are closest — the classic
-    * coarse-quantization ANN layout. Centroid training is one MLlib fit
-    * (sampleable at 100 TB); assignment is one `transform` pass computed
-    * at write time and persisted/partitioned on, so a search scans
-    * ~nProbe/k of the corpus.
-    */
   private def l2Normalize(v: Array[Double]): Array[Double] = {
     var n = 0.0
     var i = 0
@@ -76,31 +68,133 @@ object Similarity {
     v.map(_ * inv)
   }
 
-  def ivfIndex(
-      corpus: DataFrame, vecCol: String, k: Int, seed: Long = 42L):
-      (org.apache.spark.ml.clustering.KMeansModel, DataFrame) = {
-    import org.apache.spark.ml.functions.array_to_vector
+  /** At most this many training rows per centroid (FAISS's default cap):
+    * a k-means fit trains on at most `256·k` rows at any input size.
+    */
+  val SampleRowsPerCentroid = 256
+
+  /** The training sample of a `k`-centroid fit: the non-null values of
+    * `vec` (as `array<double>`) first in `(xxhash64(seed, v), v)` order, at
+    * most [[SampleRowsPerCentroid]]`·k` of them — every row below the cap.
+    * One job (a per-partition top-k merged on the driver), and the same
+    * rows in the same order whatever the frame's partitioning.
+    */
+  def trainingSample(df: DataFrame, vec: Column, k: Int, seed: Long): Array[Array[Double]] =
+    df.select(vec.cast("array<double>").as("v"))
+      .filter(col("v").isNotNull)
+      .orderBy(xxhash64(lit(seed), col("v")), col("v"))
+      .limit(SampleRowsPerCentroid * k)
+      .collect().map(_.getSeq[Double](0).toArray)
+
+  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < a.length) { val d = a(j) - b(j); s += d * d; j += 1 }
+    s
+  }
+
+  /** Index of the centroid minimizing `‖c‖² − 2·x·c` (the [[graft.functions
+    * .VectorKernels.nearestCell]] / PqEncode arithmetic); ties go to the
+    * lower index.
+    */
+  private def nearest(x: Array[Double], cs: Array[Array[Double]], cn2: Array[Double]): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < cs.length) {
+      val cc = cs(c)
+      var dot = 0.0
+      var j = 0
+      while (j < x.length) { dot += x(j) * cc(j); j += 1 }
+      val d = cn2(c) - 2.0 * dot
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Seeded k-means on the driver: k-means++ seeding, then at most
+    * `maxIter` Lloyd rounds (fewer once no point changes cell). A centroid
+    * is the mean of its members; an empty cluster keeps its centroid.
+    * Fewer distinct points than `k` return the distinct points, in sample
+    * order. Pure arithmetic over `points`: the same points give the same
+    * centroids, bit for bit.
+    */
+  def kMeans(points: Array[Array[Double]], k: Int, seed: Long,
+      maxIter: Int = 5): Array[Array[Double]] = {
+    val distinct = points.map(_.toSeq).distinct
+    if (distinct.length <= k) return distinct.map(_.toArray)
+    val rnd = new java.util.Random(seed)
+    val n = points.length
+    val centers = new Array[Array[Double]](k)
+    centers(0) = points(rnd.nextInt(n)).clone()
+    // k-means++: each next seed is drawn with probability ∝ D², the squared
+    // distance to the nearest seed so far
+    val d2 = Array.fill(n)(Double.PositiveInfinity)
+    for (c <- 1 until k) {
+      var i = 0
+      while (i < n) { d2(i) = math.min(d2(i), sqDist(points(i), centers(c - 1))); i += 1 }
+      val r = rnd.nextDouble() * d2.sum
+      var acc = 0.0
+      var pick = -1
+      i = 0
+      while (pick < 0 && i < n) {
+        acc += d2(i)
+        if (d2(i) > 0.0 && acc > r) pick = i
+        i += 1
+      }
+      // rounding can leave the draw past the last positive weight
+      if (pick < 0) pick = d2.indices.maxBy(d2)
+      centers(c) = points(pick).clone()
+    }
+    val dim = centers(0).length
+    val cell = Array.fill(n)(-1)
+    var round = 0
+    var moved = true
+    while (round < maxIter && moved) {
+      val cn2 = graft.functions.VectorFunctions.centroidNorm2(centers)
+      moved = false
+      var i = 0
+      while (i < n) {
+        val c = nearest(points(i), centers, cn2)
+        if (c != cell(i)) { cell(i) = c; moved = true }
+        i += 1
+      }
+      if (moved) {
+        val sums = Array.ofDim[Double](k, dim)
+        val counts = new Array[Long](k)
+        i = 0
+        while (i < n) {
+          val s = sums(cell(i))
+          val p = points(i)
+          var j = 0
+          while (j < dim) { s(j) += p(j); j += 1 }
+          counts(cell(i)) += 1
+          i += 1
+        }
+        for (c <- 0 until k if counts(c) > 0)
+          centers(c) = sums(c).map(_ / counts(c))
+      }
+      round += 1
+    }
+    centers
+  }
+
+  /** IVF (inverted-file) centroids: spherical k-means over the corpus, so
+    * a query probes only the `nProbe` cells whose centroids are closest —
+    * the classic coarse-quantization ANN layout. Training is [[kMeans]] on
+    * the driver over the L2-normalized [[trainingSample]] (one job, at
+    * most 256·k rows); callers assign rows to cells with the portable
+    * NearestCell kernel, once, at write time.
+    */
+  def ivfIndex(corpus: DataFrame, vecCol: String, k: Int,
+      seed: Long = 42L): Array[Array[Double]] =
     // Spherical k-means: L2-normalize before clustering so Euclidean cells
     // align with cosine neighbourhoods (‖a−b‖² = 2−2·cos on the unit
     // sphere) — unnormalized cells split by magnitude and cost recall.
-    // Codegen'd L2Normalize, not a HOF: this runs on every k-means pass.
-    val featured = corpus.withColumn("features",
-      array_to_vector(graft.functions.VectorFunctions.l2Normalize(
-        col(vecCol).cast("array<double>"))))
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k).setSeed(seed).setMaxIter(5)
-      .fit(featured)
-    // Assignment goes through the PORTABLE NearestCell kernel, not
-    // model.transform: MLlib's fastSquaredDistance is a JVM-private
-    // arithmetic path, while `1 + ‖c‖² − 2·(nv·c)` is replayable by any
-    // engine from the exported centroid literals — cell membership (and so
-    // every IVF probe result) becomes cross-engine deterministic.
-    val centroids = model.clusterCenters.map(_.toArray)
-    val assigned = corpus.withColumn("cell",
-      graft.functions.VectorFunctions.nearestCell(
-        col(vecCol).cast("array<double>"), centroids))
-    (model, assigned)
-  }
+    kMeans(trainingSample(corpus,
+      graft.functions.VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")),
+      k, seed), k, seed)
 
   /** Distance-on-the-unit-sphere from a (pre-normalized) query to each
     * centroid, with the SAME arithmetic as [[graft.functions.VectorKernels

@@ -535,8 +535,9 @@ object PipelineCatalog {
   // NearestCell identity (1 + ‖c‖² − 2·nv·c over exported centroid
   // literals), so the oracle replays assignment + probe selection + cosine
   // bit-for-bit in DuckDB: full hash-match, same contract as q25's planes.
-  // The centroids come out of the shared index build (seeded MLlib
-  // k-means, deterministic); the oracle reads them through [[ivfIndex]].
+  // The centroids come out of the shared index build (seeded driver
+  // k-means over a bounded sample, deterministic); the oracle reads them
+  // through [[ivfIndex]].
   // NOTE: the synthetic embeddings are near-uniform random vectors — the
   // worst case for ANY partition-pruning ANN (measured recall ~= scan
   // fraction; IvfTune sweep). nProbe=8/k=16 halves the scan for ~0.86

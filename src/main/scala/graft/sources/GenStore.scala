@@ -262,7 +262,8 @@ object GenStore {
     * carried the partition columns as LONG data columns where directory
     * inference yields INT, so the schema depended on write history).
     * r11: the empty case writes NO data file at all — only a
-    * `_graft_empty.json` sidecar recording the canonical post-partition
+    * `_graft_empty.json` sidecar, written when the write left no data
+    * file (no separate emptiness job), recording the canonical post-partition
     * schema (data columns in order, partition columns last as INT, the
     * exact shape a partitioned read infers). [[tableSchema]] falls back to
     * the sidecar when no data file exists, so the table opens as an empty
@@ -271,23 +272,15 @@ object GenStore {
     */
   def writeTable(df: org.apache.spark.sql.DataFrame, partitionCols: Seq[String],
       sortCols: Seq[String], path: String): Unit = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (cached.isEmpty) {
-        // clear any orphan data of a crashed prior attempt at this epoch
-        // number, then record emptiness + schema via the sidecar
-        val dir = new java.io.File(path)
-        if (dir.exists()) org.apache.commons.io.FileUtils.cleanDirectory(dir)
-        atomicWrite(java.nio.file.Paths.get(path, EmptyMarker),
-          s"""{"schema_ddl":${quoteJson(canonicalSchema(cached.schema, partitionCols).toDDL)}}""")
-      } else {
-        // static-mode overwrite truncates the whole table path first, so
-        // a stale empty-marker from a previous all-deleted state is gone
-        writeBucketed(cached, partitionCols, path,
-          mode = "overwrite", sortCols = sortCols)
-      }
-      CrashPoints.hit("table-written")
-    } finally cached.unpersist()
+    // static-mode overwrite truncates the whole table path first, so the
+    // orphan data of a crashed prior attempt at this epoch number and a
+    // stale empty-marker from a previous all-deleted state are both gone;
+    // an empty frame leaves the truncated path with no data file
+    writeBucketed(df, partitionCols, path, mode = "overwrite", sortCols = sortCols)
+    if (!hasParquetData(new java.io.File(path)))
+      atomicWrite(java.nio.file.Paths.get(path, EmptyMarker),
+        s"""{"schema_ddl":${quoteJson(canonicalSchema(df.schema, partitionCols).toDDL)}}""")
+    CrashPoints.hit("table-written")
   }
 
   /** The one bucket-partitioned write of every store: shuffle by the

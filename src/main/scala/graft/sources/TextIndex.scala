@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * corpus, and then maintains per delta batch:
   *
   *   path/postings/term_bucket=<b>/…  — (term, doc, dl, tf, gen),
-  *       partitioned by a 64-way portable term-hash bucket and sorted by
+  *       partitioned by a portable term-hash bucket and sorted by
   *       term within each file: a query's literal terms map to ≤|terms|
   *       buckets (partition pruning at the source) and the in-file sort
   *       gives parquet row-group min/max skipping on `term`. `gen` is the
@@ -28,6 +28,11 @@ import org.apache.spark.sql.functions._
   *   path/_graft_stats.json           — {n, sum_dl, gen} as EXACT
   *       integers, adjusted incrementally (avgdl derives as one double
   *       division, identical to the inline path's sum/count).
+  *   path/postings/e<K>/_graft_buckets.json — {buckets}: the term and doc
+  *       bucket count of epoch K, sized by [[write]] to its documents
+  *       ([[bucketsFor]]) and kept by upsert and compaction. It lives in
+  *       the epoch it describes and is written before the pointer flip,
+  *       so a reader never pairs a layout with another epoch's count.
   *
   * Epoch pointer, (doc, gen) tombstones + the size-gated liveRows filter,
   * crash-redo of partial segments, policy-triggered compaction, the
@@ -50,8 +55,34 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  val TermBuckets = 64
-  val DocBuckets = 64
+  /** Bucket count of an epoch written before the count was recorded. */
+  private val LegacyBuckets = 64
+
+  /** Documents per bucket a full write aims at, and the most buckets. */
+  private val DocsPerBucket = 4096L
+  private val MaxBuckets = 64
+
+  /** Term and doc buckets of a full write over `n` documents: the smallest
+    * power of two giving at most 4096 documents per bucket, at most 64. A
+    * few hundred documents get one bucket, so one file per table, where a
+    * fixed 64 wrote 128 files of a few rows each.
+    */
+  private[graft] def bucketsFor(n: Long): Int = {
+    var b = 1
+    while (b < MaxBuckets && b * DocsPerBucket < n) b *= 2
+    b
+  }
+
+  private def bucketsPath(path: String, epoch: Long) =
+    java.nio.file.Paths.get(path, "postings", s"e$epoch", "_graft_buckets.json")
+
+  private def writeBuckets(path: String, epoch: Long, buckets: Int): Unit =
+    GenStore.atomicWrite(bucketsPath(path, epoch), s"""{"buckets":$buckets}""")
+
+  private def readBuckets(path: String, epoch: Long): Int =
+    GenStore.readSidecar(bucketsPath(path, epoch))
+      .map(GenStore.jLong(_, "buckets", LegacyBuckets.toLong).toInt)
+      .getOrElse(LegacyBuckets)
 
   /** A committed index as [[read]] found it: the exact-integer stats, the
     * epoch and the committed generation, all from metadata. The tables
@@ -60,8 +91,11 @@ object TextIndex {
     * the serving open that lists only the query's term buckets.
     */
   final class Index private[TextIndex] (spark: SparkSession, path: String,
-      epoch: Long, maxGen: Long, val n: Long, val sumDl: Long) {
+      epoch: Long, maxGen: Long, val n: Long, val sumDl: Long, val buckets: Int) {
     def avgdl: Double = sumDl.toDouble / n
+
+    /** The term bucket `term`'s postings live in, in this index's layout. */
+    def bucketOf(term: String): Long = TextIndex.bucketOf(term, buckets)
 
     private def postingsDir = s"$path/postings/e$epoch"
 
@@ -106,16 +140,17 @@ object TextIndex {
   type Policy = GenStore.Policy
   val Policy: GenStore.Policy.type = GenStore.Policy
 
-  /** Portable term bucket: first 60 bits of sha256, mod 64 — the same
-    * `hash60` family every other persisted layout uses, JVM-computable
-    * for literal query terms ([[bucketOf]]) so probes are plain literals.
+  /** Portable term bucket: first 60 bits of sha256, mod `buckets` — the
+    * same `hash60` family every other persisted layout uses,
+    * JVM-computable for literal query terms ([[bucketOf]]) so probes are
+    * plain literals.
     */
-  def termBucketCol(term: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(graft.operators.TextAnalytics.hash60(term), lit(TermBuckets.toLong))
+  def termBucketCol(term: org.apache.spark.sql.Column, buckets: Int): org.apache.spark.sql.Column =
+    pmod(graft.operators.TextAnalytics.hash60(term), lit(buckets.toLong))
 
-  def bucketOf(term: String): Long = {
+  def bucketOf(term: String, buckets: Int): Long = {
     val h = graft.functions.Sha256.hash60(term.getBytes("UTF-8"))
-    java.lang.Math.floorMod(h, TermBuckets.toLong)
+    java.lang.Math.floorMod(h, buckets.toLong)
   }
 
   /** Doc-id bucket for the doclens bookkeeping table: an upsert's
@@ -123,8 +158,8 @@ object TextIndex {
     * pruning restricts the lookup to the buckets the delta actually
     * touches.
     */
-  def docBucketCol(doc: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(graft.operators.TextAnalytics.hash60(doc.cast("string")), lit(DocBuckets.toLong))
+  def docBucketCol(doc: org.apache.spark.sql.Column, buckets: Int): org.apache.spark.sql.Column =
+    pmod(graft.operators.TextAnalytics.hash60(doc.cast("string")), lit(buckets.toLong))
 
   def indexPath(sfDir: String): String =
     GenStore.artifactPath(sfDir, "documents.parquet", "_graft_text_index",
@@ -138,7 +173,8 @@ object TextIndex {
     // so a crashed upsert's partial segment is deletable wholesale — the
     // piece that makes the batch-replay guard crash-atomic
     // seg-v5: tables live under an atomic-pointer-committed epoch dir
-    s"""{"source_stamp":"$stamp","term_buckets":$TermBuckets,"tokenize":"ws-split-v2","layout":"seg-v5"}"""
+    // seg-v6: bucket count sized to the documents, recorded per epoch
+    s"""{"source_stamp":"$stamp","tokenize":"ws-split-v2","layout":"seg-v6"}"""
   }
 
   // --- stats sidecar (exact integers; gen = last segment written;
@@ -201,28 +237,28 @@ object TextIndex {
     * lineage (test-guarded: an index update must not scan the base
     * postings or the unchanged corpus).
     */
-  private[graft] def segmentPostings(withDl: DataFrame, gen: Long): DataFrame =
+  private[graft] def segmentPostings(withDl: DataFrame, gen: Long, buckets: Int): DataFrame =
     withDl
       .select(col("doc"), col("dl"), explode(col("toks")).as("term"))
       .groupBy(col("term"), col("doc"), col("dl"))
       .agg(count(lit(1)).as("tf"))
       .withColumn("gen", lit(gen))
-      .withColumn("term_bucket", termBucketCol(col("term")))
+      .withColumn("term_bucket", termBucketCol(col("term"), buckets))
 
-  private def segmentDoclens(withDl: DataFrame, gen: Long): DataFrame =
+  private def segmentDoclens(withDl: DataFrame, gen: Long, buckets: Int): DataFrame =
     withDl.select(col("doc"), col("dl"))
       .withColumn("gen", lit(gen))
-      .withColumn("doc_bucket", docBucketCol(col("doc")))
+      .withColumn("doc_bucket", docBucketCol(col("doc"), buckets))
 
   private def writeSegment(withDl: DataFrame, gen: Long, path: String,
-      mode: String, epoch: Long): Unit = {
+      mode: String, epoch: Long, buckets: Int): Unit = {
     // overwrite here means FULL replace — pin static per-writer so a
     // session-level dynamic overwrite mode cannot leave dead partitions
-    GenStore.writeBucketed(segmentPostings(withDl, gen),
+    GenStore.writeBucketed(segmentPostings(withDl, gen, buckets),
       Seq("gen", "term_bucket"), s"$path/postings/e$epoch", mode,
       sortCols = Seq("term_bucket", "term"))
     GenStore.CrashPoints.hit("postings-segment-written")
-    GenStore.writeBucketed(segmentDoclens(withDl, gen),
+    GenStore.writeBucketed(segmentDoclens(withDl, gen, buckets),
       Seq("gen", "doc_bucket"), s"$path/doclens/e$epoch", mode)
   }
 
@@ -236,8 +272,8 @@ object TextIndex {
     */
   private[graft] def liveAffectedDoclens(spark: SparkSession, path: String,
       affected: DataFrame): DataFrame = {
-    val keyed = affected.select(col("doc"))
-      .withColumn("doc_bucket", docBucketCol(col("doc")))
+    val keyed = affected.select(col("doc")).withColumn("doc_bucket",
+      docBucketCol(col("doc"), readBuckets(path, GenStore.epochOf(path))))
     liveTable(spark, path, "doclens")
       .join(broadcast(keyed), Seq("doc_bucket", "doc"))
   }
@@ -255,15 +291,21 @@ object TextIndex {
     // pointer flip — a crash mid-rebuild leaves the old epoch serving,
     // and the flip retires old segments AND old tombstones together
     val next = GenStore.epochOf(path) + 1
+    // tokenize once: the stats job fills the cache, both writes read it
     val withDl = tokenized(docs, idCol, textCol)
-    val stats = withDl.agg(
-      count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
-    writeSegment(withDl, gen = 0L, path, mode = "overwrite", epoch = next)
-    GenStore.setEpoch(path, next)
-    GenStore.writePolicy(path, policy)
-    writeStats(path, stats.getLong(0), stats.getLong(1), gen = 0L,
-      if (batchId >= 0) batchId else prevLast)
-    GenStore.gcEpochs(path, Seq("postings", "doclens", "tombstones"), next)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val stats = withDl.agg(
+        count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
+      val buckets = bucketsFor(stats.getLong(0))
+      writeSegment(withDl, gen = 0L, path, mode = "overwrite", epoch = next, buckets)
+      writeBuckets(path, next, buckets)
+      GenStore.setEpoch(path, next)
+      GenStore.writePolicy(path, policy)
+      writeStats(path, stats.getLong(0), stats.getLong(1), gen = 0L,
+        if (batchId >= 0) batchId else prevLast)
+      GenStore.gcEpochs(path, Seq("postings", "doclens", "tombstones"), next)
+    } finally withDl.unpersist()
   }
 
   /** Incremental maintenance: merge a delta of new/changed documents and
@@ -314,8 +356,8 @@ object TextIndex {
     // carry, so the new version survives the strictly-below filter
     GenStore.appendTombstones(path, liveOld.select(col("doc")),
       tombCol = "doc", gen = nextGen)
-    writeSegment(withDl, nextGen, path, mode = "append",
-      epoch = GenStore.epochOf(path))
+    val epoch = GenStore.epochOf(path)
+    writeSegment(withDl, nextGen, path, mode = "append", epoch, readBuckets(path, epoch))
     writeStats(path,
       n0 - rStats.getLong(0) + dStats.getLong(0),
       sumDl0 - rStats.getLong(1) + dStats.getLong(1),
@@ -336,7 +378,8 @@ object TextIndex {
     */
   def compact(spark: SparkSession, path: String): Unit = {
     val (n, sumDl, _, lastBatch) = readStats(path)
-    val next = GenStore.epochOf(path) + 1
+    val epoch = GenStore.epochOf(path)
+    val next = epoch + 1
     val live = liveTable(spark, path, "postings").localCheckpoint()
     val doclens = liveTable(spark, path, "doclens").localCheckpoint()
     // writeTable keeps a fully-emptied index readable (GenStore r10 note)
@@ -346,6 +389,8 @@ object TextIndex {
     GenStore.writeTable(doclens.withColumn("gen", lit(0L)),
       Seq("gen", "doc_bucket"),
       Nil, s"$path/doclens/e$next")
+    // the folded rows keep their stored buckets, so the count carries over
+    writeBuckets(path, next, readBuckets(path, epoch))
     GenStore.setEpoch(path, next)
     writeStats(path, n, sumDl, gen = 0L, lastBatch)
     GenStore.gcEpochs(path, Seq("postings", "doclens", "tombstones"), next)
@@ -356,8 +401,9 @@ object TextIndex {
     */
   def read(spark: SparkSession, path: String): Index = {
     val (n, sumDl, _, _) = readStats(path)
-    new Index(spark, path, GenStore.epochOf(path),
-      GenStore.committedGen(statsPath(path)), n, sumDl)
+    val epoch = GenStore.epochOf(path)
+    new Index(spark, path, epoch, GenStore.committedGen(statsPath(path)), n, sumDl,
+      readBuckets(path, epoch))
   }
 
   /** Load the index for a corpus, building it first if absent or stale —

@@ -16,7 +16,9 @@ import graft.operators.Similarity
   * The reference's vector store similarly indexes at upsert time, not
   * query time (reference: worker/app/qdrant_init.py:32-43 creates the
   * collection index once; queries only search it). Index build here is one
-  * k-means fit (sampleable at scale) + one narrow labelling pass.
+  * sample job (at most 256·k rows), one k-means fit on the driver
+  * ([[Similarity.ivfIndex]]) and one narrow labelling pass, over an input
+  * computed once and cached for the length of the write.
   *
   * Lifecycle (epoch pointer, gen segments, (id, gen) tombstones + the
   * size-gated liveRows filter, crash-redo, policy compaction triggers,
@@ -56,7 +58,9 @@ object VectorStore {
     // v4: tables live under an epoch directory committed by the atomic
     //     `_graft_epoch` pointer — compaction/retrain rewrites are
     //     crash-atomic too (see GenStore's epoch section)
-    s"""{"source_stamp":"$stamp","planes":$planes,"dim":$dim,"k":$k,"assign":"portable-v4"}"""
+    // v5: centroids from the driver k-means over a bounded sample
+    //     (Similarity.kMeans) instead of MLlib's KMeans
+    s"""{"source_stamp":"$stamp","planes":$planes,"dim":$dim,"k":$k,"assign":"portable-v5"}"""
   }
 
   /** Write-time indexing: label every vector with `cell` (IVF) and
@@ -70,31 +74,30 @@ object VectorStore {
   def write(emb: DataFrame, vecCol: String, path: String,
       planes: Int = 8, dim: Int = 64, k: Int = 16, seed: Long = 42L,
       batchId: Long = -1L, policy: Policy = Policy()): Unit = {
-    val (model, indexed) = Similarity.ivfIndex(emb, vecCol, k, seed)
-    // full rebuilds land in the NEXT epoch and commit via the atomic
-    // pointer flip: a crash mid-rebuild leaves the old epoch serving
-    val next = GenStore.epochOf(path) + 1
-    val rows = indexed.drop("features")
-      .withColumn("bucket",
-        Similarity.bucketCol(col(vecCol).cast("array<double>"), planes, dim))
-      .withColumn("gen", lit(0L))
-    GenStore.writeBucketed(rows, Seq("gen", "cell"), s"$path/vectors/e$next",
-      mode = "overwrite", sortCols = Seq("cell", "bucket"))
-    val json = model.clusterCenters
-      .map(_.toArray.mkString("[", ",", "]")).mkString("[", ",", "]")
-    GenStore.atomicWrite(
-      java.nio.file.Paths.get(path, "_graft_centroids.json"), json)
-    GenStore.setEpoch(path, next) // commit: retires old vectors AND old tombstones
-    // a rebuild (ensure on a changed source, retrain) must not reset the
-    // streaming replay watermark: with no explicit batchId, carry the
-    // stored one forward so a restarted stream cannot re-apply a
-    // delivered batch to the fresh artifact
-    val prevLast = readIncStats(path)._4
-    GenStore.writePolicy(path, policy)
-    writeIncStats(path,
-      GenStore.open(emb.sparkSession, s"$path/vectors/e$next").count(), 0L, 0L,
-      if (batchId >= 0) batchId else prevLast)
-    GenStore.gcEpochs(path, Seq("vectors", "tombstones"), next)
+    // the input is computed once: the training sample fills the cache and
+    // the labelled write reads it
+    val cached = emb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val centroids = Similarity.ivfIndex(cached, vecCol, k, seed)
+      // full rebuilds land in the NEXT epoch and commit via the atomic
+      // pointer flip: a crash mid-rebuild leaves the old epoch serving
+      val next = GenStore.epochOf(path) + 1
+      GenStore.writeBucketed(assignDelta(cached, vecCol, centroids, planes, dim, 0L),
+        Seq("gen", "cell"), s"$path/vectors/e$next",
+        mode = "overwrite", sortCols = Seq("cell", "bucket"))
+      GenStore.atomicWrite(java.nio.file.Paths.get(path, "_graft_centroids.json"),
+        centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
+      GenStore.setEpoch(path, next) // commit: retires old vectors AND old tombstones
+      // a rebuild (ensure on a changed source, retrain) must not reset the
+      // streaming replay watermark: with no explicit batchId, carry the
+      // stored one forward so a restarted stream cannot re-apply a
+      // delivered batch to the fresh artifact
+      val prevLast = readIncStats(path)._4
+      GenStore.writePolicy(path, policy)
+      writeIncStats(path, cached.count(), 0L, 0L,
+        if (batchId >= 0) batchId else prevLast)
+      GenStore.gcEpochs(path, Seq("vectors", "tombstones"), next)
+    } finally cached.unpersist()
   }
 
   // Existence is keyed on the COMMITTED epoch, not the pre-commit
@@ -321,67 +324,66 @@ object VectorStore {
     // the segment generation (incremental-upsert layout); manifest pins
     // the k-means seed + the exact centroid set
     // v5: gen is a top-level partition directory (crash-atomic replay,
-    // see GenStore.dropPartialGen); v6: epoch-pointer committed rewrites
+    // see GenStore.dropPartialGen); v6: epoch-pointer committed rewrites;
+    // v7: codebooks from the driver k-means over a bounded sample
     s"""{"source_stamp":"$stamp","m":$m,"ksub":$ksub,"seed":$seed,""" +
-      s""""centroid_fp":"$cfp","assign":"pq-portable-v6"}"""
+      s""""centroid_fp":"$cfp","assign":"pq-portable-v7"}"""
   }
 
-  /** Train per-subspace spherical sub-codebooks (seeded MLlib k-means over
-    * the L2-normalized vector's m equal slices) and persist every vector's
-    * codes. One fit per subspace — each over dsub-dim points, sampleable
-    * at scale — then ONE narrow labelling pass through the portable
-    * [[graft.functions.PqEncode]] argmin (`‖c‖² − 2·sub·c`), so code
-    * assignment is replayable from the exported codebook literals.
+  /** Train per-subspace sub-codebooks and persist every vector's codes.
+    * One [[Similarity.trainingSample]] of the L2-normalized vectors (one
+    * job, at most 256·ksub rows) gives the dimension and, sliced into the
+    * m equal subspaces, the points of m driver [[Similarity.kMeans]] fits
+    * (seed + subspace index). Then ONE narrow labelling pass through the
+    * portable [[graft.functions.PqEncode]] argmin (`‖c‖² − 2·sub·c`), so
+    * code assignment is replayable from the exported codebook literals.
     */
   def writePq(emb: DataFrame, vecCol: String, path: String,
       m: Int = 8, ksub: Int = 16, seed: Long = 42L,
       centroids: Array[Array[Double]], policy: Policy = Policy()): Unit = {
-    import org.apache.spark.ml.functions.array_to_vector
     val next = GenStore.epochOf(path) + 1
     val nv = emb.withColumn("nv",
-      graft.functions.VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")))
-    val dim = nv.select(size(col("nv"))).head().getInt(0)
-    require(dim % m == 0, s"PQ: dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val codebooks = Array.tabulate(m) { mi =>
-      val sub = nv.select(
-        array_to_vector(slice(col("nv"), mi * dsub + 1, dsub)).as("features"))
-      new org.apache.spark.ml.clustering.KMeans()
-        .setK(ksub).setSeed(seed + mi).setMaxIter(5)
-        .fit(sub).clusterCenters.map(_.toArray)
-    }
-    // IVF-PQ layout: codes partitioned by the SAME portable cell
-    // assignment as the vector store, so a probed search prunes code
-    // partitions at the source before any ADC arithmetic
-    GenStore.writeBucketed(
-      nv.withColumn("codes",
-          graft.functions.VectorFunctions.pqEncode(col("nv"), codebooks))
-        .withColumn("cell", graft.functions.VectorFunctions.nearestCell(
-          col(vecCol).cast("array<double>"), centroids))
-        .drop("nv", vecCol)
-        .withColumn("gen", lit(0L)),
-      Seq("gen", "cell"), s"$path/codes/e$next", mode = "overwrite")
-    val json = codebooks.map(_.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-    GenStore.atomicWrite(
-      java.nio.file.Paths.get(path, "_graft_pq_codebooks.json"), json)
-    GenStore.setEpoch(path, next)
-    // an ensurePq-triggered rebuild must not erase the streaming replay
-    // watermark (retrainIfDrifted restores it explicitly; this path now
-    // preserves it by default)
-    val prevLast = readIncStats(path)._4
-    GenStore.writePolicy(path, policy)
-    writeIncStats(path,
-      GenStore.open(emb.sparkSession, s"$path/codes/e$next").count(), 0L, 0L, prevLast)
-    // training-time mean reconstruction error — the denominator the
-    // quality-drift ratio compares every future delta against
-    val baseQerr = {
-      val r = nv.agg(avg(
+        graft.functions.VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val sample = Similarity.trainingSample(nv, col("nv"), ksub, seed)
+      require(sample.nonEmpty, "PQ: no vectors to train on")
+      val dim = sample.head.length
+      require(dim % m == 0, s"PQ: dim $dim not divisible by m=$m subspaces")
+      val dsub = dim / m
+      val codebooks = Array.tabulate(m) { mi =>
+        Similarity.kMeans(sample.map(_.slice(mi * dsub, (mi + 1) * dsub)), ksub, seed + mi)
+      }
+      // IVF-PQ layout: codes partitioned by the SAME portable cell
+      // assignment as the vector store, so a probed search prunes code
+      // partitions at the source before any ADC arithmetic
+      GenStore.writeBucketed(
+        nv.withColumn("codes",
+            graft.functions.VectorFunctions.pqEncode(col("nv"), codebooks))
+          .withColumn("cell", graft.functions.VectorFunctions.nearestCell(
+            col(vecCol).cast("array<double>"), centroids))
+          .drop("nv", vecCol)
+          .withColumn("gen", lit(0L)),
+        Seq("gen", "cell"), s"$path/codes/e$next", mode = "overwrite")
+      val json = codebooks.map(_.map(_.mkString("[", ",", "]"))
+        .mkString("[", ",", "]")).mkString("[", ",", "]")
+      GenStore.atomicWrite(
+        java.nio.file.Paths.get(path, "_graft_pq_codebooks.json"), json)
+      GenStore.setEpoch(path, next)
+      // an ensurePq-triggered rebuild must not erase the streaming replay
+      // watermark (retrainIfDrifted restores it explicitly; this path now
+      // preserves it by default)
+      val prevLast = readIncStats(path)._4
+      GenStore.writePolicy(path, policy)
+      // training-time row count and mean reconstruction error (the
+      // denominator the quality-drift ratio compares every future delta
+      // against), in one aggregate over the cached frame
+      val r = nv.agg(count(lit(1)), avg(
         graft.functions.VectorFunctions.pqRecError(col("nv"), codebooks))).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    writePqQuality(path, baseQerr, 0.0, 0L)
-    GenStore.gcEpochs(path, Seq("codes", "tombstones"), next)
+      writeIncStats(path, r.getLong(0), 0L, 0L, prevLast)
+      writePqQuality(path, if (r.isNullAt(1)) 0.0 else r.getDouble(1), 0.0, 0L)
+      GenStore.gcEpochs(path, Seq("codes", "tombstones"), next)
+    } finally nv.unpersist()
   }
 
   // --- PQ codebook quality ---------------------------------------------

@@ -30,13 +30,15 @@ object IvfTune {
         .sortBy(-_._2).take(10).map(_._1).toSet
 
     for (k <- Seq(8, 16)) {
-      val (model, indexed) = Similarity.ivfIndex(corpus, "embedding", k)
+      val centroids = Similarity.ivfIndex(corpus, "embedding", k)
+      val indexed = corpus.withColumn("cell", graft.functions.VectorFunctions.nearestCell(
+        col("embedding").cast("array<double>"), centroids))
       indexed.cache().count()
       for (nProbe <- Seq(2, 3, 4, 6, 8)) {
         val recalls = queryIds.map { qid =>
           val q = all(qid)
           val got = Similarity.ivfTopK(indexed.filter(col("vec_id") =!= qid),
-            "embedding", model.clusterCenters.map(_.toArray), q, 10, nProbe)
+            "embedding", centroids, q, 10, nProbe)
             .select("vec_id").collect().map(_.getLong(0)).toSet
           (exactTop10(q, qid) & got).size / 10.0
         }

@@ -297,7 +297,7 @@ class PlanSpec extends AnyFunSuite with ScratchDirs {
       .select(col("doc_id").as("doc"),
         graft.operators.TextAnalytics.tokens(col("text")).as("toks"))
       .select(col("doc"), col("toks"), size(col("toks")).cast("long").as("dl"))
-    val segPlan = graft.sources.TextIndex.segmentPostings(delta, gen = 9L)
+    val segPlan = graft.sources.TextIndex.segmentPostings(delta, gen = 9L, buckets = 1)
       .queryExecution.executedPlan.toString
     assert(!segPlan.contains("postings") && !segPlan.contains("parquet"),
       "delta segment build reads stored state")

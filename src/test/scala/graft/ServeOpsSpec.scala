@@ -36,25 +36,31 @@ class ServeOpsSpec extends AnyFunSuite with ScratchDirs {
   private def scores(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
-  test("bm25ScoresIndexed equals bm25Scores exactly after write, replace, delete and compact") {
-    val usedBuckets = vocab.map(TextIndex.bucketOf).toSet
-    // a term absent from the corpus whose bucket directory exists, and one
-    // whose bucket directory does not
-    val absentSharing = Iterator.from(0).map(i => s"zz$i")
-      .find(t => usedBuckets.contains(TextIndex.bucketOf(t))).get
-    val absentNoDir = Iterator.from(0).map(i => s"zz$i")
-      .find(t => !usedBuckets.contains(TextIndex.bucketOf(t))).get
-    val queries = Seq(
-      Seq("t1", "t7", "t13"),
-      Seq("t2", absentSharing, "t2"),
-      Seq("t5", absentNoDir),
-      Seq(absentNoDir),
-      vocab)
-
+  /** Write → replace-upsert → delete-upsert → compact over one index,
+    * checking indexed against inline BM25 after every step. `legacy`
+    * starts from the 64-bucket layout with no count record
+    * ([[LegacyTextIndex]]) instead of the sized one.
+    */
+  private def bm25Parity(legacy: Boolean): Unit = {
     var model: Map[Long, String] = (0 until 60).map(i => i.toLong -> text(i)).toMap
     val path = scratchDir("graft-serve-ops").resolve("idx").toString
     TextIndex.write(docsDF(model.toSeq), "doc_id", "text", path,
       policy = TextIndex.Policy(maxSegments = 100L, maxDeadFraction = 1.1))
+    if (legacy) LegacyTextIndex.rewrite(spark, path)
+    val index = TextIndex.read(spark, path)
+    assert(index.buckets == (if (legacy) 64 else 1))
+
+    val usedBuckets = vocab.map(index.bucketOf).toSet
+    // a term absent from the corpus whose bucket directory exists, and one
+    // whose bucket directory does not (only possible with several buckets)
+    val absent = (0 until 1000).map(i => s"zz$i")
+    val absentSharing = absent.find(t => usedBuckets.contains(index.bucketOf(t))).get
+    val absentNoDir = absent.find(t => !usedBuckets.contains(index.bucketOf(t)))
+    assert(absentNoDir.isDefined == legacy)
+    val queries = Seq(
+      Seq("t1", "t7", "t13"),
+      Seq("t2", absentSharing, "t2"),
+      vocab) ++ absentNoDir.toSeq.flatMap(t => Seq(Seq("t5", t), Seq(t)))
 
     def check(stage: String): Unit = queries.foreach { terms =>
       val indexed = scores(SearchOps.bm25ScoresIndexed(TextIndex.read(spark, path), terms))
@@ -75,6 +81,15 @@ class ServeOpsSpec extends AnyFunSuite with ScratchDirs {
 
     TextIndex.compact(spark, path)
     check("compact")
+    assert(TextIndex.read(spark, path).buckets == index.buckets)
+  }
+
+  test("bm25ScoresIndexed equals bm25Scores exactly after write, replace, delete and compact") {
+    bm25Parity(legacy = false)
+  }
+
+  test("bm25 parity holds on the 64-bucket layout with no count record") {
+    bm25Parity(legacy = true)
   }
 
   private def rankings(rs: Seq[Seq[String]]): Seq[DataFrame] = {

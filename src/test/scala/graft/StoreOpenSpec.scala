@@ -134,7 +134,7 @@ class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
       Files.write(torn.resolve("part-00000-torn.c000.snappy.parquet"), bytes.take(bytes.length / 2))
     }
     plantTorn("tombstones", "gen=10")
-    plantTorn("postings", s"gen=10/term_bucket=${TextIndex.bucketOf("w1")}")
+    plantTorn("postings", s"gen=10/term_bucket=${before.bucketOf("w1")}")
 
     val tombDir = GenStore.tableDir(path, "tombstones")
     intercept[Exception](GenStore.tableSchema(spark, tombDir)) // the ungated walk hits the torn footer
@@ -214,9 +214,14 @@ class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
       ChunkStore.upsert(FileIngest.ingestDirectory(spark, dz.toString, 200, 40), chunks))
     assertSpreadWrite("ChunkStore.upsert", up, Seq(chunks -> "doc_bucket"))
 
+    // the text index sizes its buckets to the documents (one per 4096):
+    // 40,000 short documents give it 16
     val ti = tmp("write-tindex")
+    val manyDocs = spark.range(40000).select(col("id").as("doc_id"),
+      concat_ws(" ", Seq(7L, 13L, 31L).map(m =>
+        concat(lit("w"), pmod(col("id") * m, lit(60L)).cast("string"))): _*).as("text"))
     val (_, tw) = graft.core.Telemetry.profile(spark, "text index")(
-      TextIndex.write(docsDF(corpus), "doc_id", "text", ti))
+      TextIndex.write(manyDocs, "doc_id", "text", ti))
     assertSpreadWrite("TextIndex.write", tw, Seq(GenStore.tableDir(ti, "postings") -> "term_bucket",
       GenStore.tableDir(ti, "doclens") -> "doc_bucket"))
 

@@ -213,4 +213,68 @@ class TextIndexSpec extends AnyFunSuite with ScratchDirs {
       s"only $compactions compactions in 60 cycles — trigger not firing")
     assert(liveState(path) == expectedState(), "final serving state diverged")
   }
+  private def bucketDirs(path: String, table: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get(graft.sources.GenStore.tableDir(path, table))
+    java.nio.file.Files.walk(dir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.contains("_bucket=")).toSet
+  }
+
+  private val words = (0 until 40).map(i => s"w$i")
+  private def corpus(n: Int): Seq[(Long, String)] =
+    (0 until n).map(i => i.toLong -> (0 until 3 + i % 5).map(j => words((i * 7 + j * j) % 40)).mkString(" "))
+
+  test("bucketsFor: a power of two, one bucket per 4096 documents, at most 64") {
+    assert(Seq(0L, 1L, 300L, 4096L, 4097L, 8192L, 8193L, 36864L, 1L << 30)
+      .map(TextIndex.bucketsFor) == Seq(1, 1, 1, 1, 2, 2, 4, 16, 64))
+  }
+
+  test("a 300-document index writes one term and one doc bucket; upsert and compact keep the count") {
+    val path = freshPath("sized")
+    TextIndex.write(docsDF(corpus(300): _*), "doc_id", "text", path,
+      policy = TextIndex.Policy(maxSegments = 100L, maxDeadFraction = 1.1))
+    assert(TextIndex.read(spark, path).buckets == 1)
+    assert(bucketDirs(path, "postings") == Set("term_bucket=0"))
+    assert(bucketDirs(path, "doclens") == Set("doc_bucket=0"))
+    TextIndex.upsert(spark, docsDF(5L -> "w1 w2 fresh", 900L -> "w3 new"),
+      "doc_id", "text", ids(6L), path)
+    assert(TextIndex.read(spark, path).buckets == 1)
+    assert(bucketDirs(path, "postings") == Set("term_bucket=0"))
+    assert(bucketDirs(path, "doclens") == Set("doc_bucket=0"))
+    val before = liveState(path)
+    val e = graft.sources.GenStore.epochOf(path)
+    TextIndex.compact(spark, path)
+    assert(graft.sources.GenStore.epochOf(path) == e + 1)
+    assert(TextIndex.read(spark, path).buckets == 1)
+    assert(bucketDirs(path, "postings") == Set("term_bucket=0"))
+    assert(liveState(path) == before)
+  }
+
+  test("an index in the 64-bucket layout with no count record opens, scores and maintains unchanged") {
+    val sized = freshPath("sized-twin")
+    val legacy = freshPath("legacy")
+    Seq(sized, legacy).foreach(p => TextIndex.write(docsDF(corpus(300): _*), "doc_id", "text", p,
+      policy = TextIndex.Policy(maxSegments = 100L, maxDeadFraction = 1.1)))
+    LegacyTextIndex.rewrite(spark, legacy)
+    assert(TextIndex.read(spark, legacy).buckets == 64)
+    assert(bucketDirs(legacy, "postings").size > 16)
+    assert(bucketDirs(legacy, "doclens").size > 16)
+    val queries = Seq(Seq("w1"), Seq("w3", "w7", "w11"), words, Seq("absent", "w2"))
+    def scores(p: String): Seq[Map[Long, Double]] = queries.map(t =>
+      graft.operators.SearchOps.bm25ScoresIndexed(TextIndex.read(spark, p), t).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    def same(stage: String): Unit = {
+      assert(liveState(legacy) == liveState(sized), stage)
+      assert(scores(legacy) == scores(sized), stage)
+    }
+    same("write")
+    Seq(sized, legacy).foreach(p => TextIndex.upsert(spark,
+      docsDF(5L -> "w1 w2 fresh", 900L -> "w3 new"), "doc_id", "text", ids(6L, 7L), p))
+    same("upsert")
+    assert(TextIndex.read(spark, legacy).buckets == 64)
+    Seq(sized, legacy).foreach(p => TextIndex.compact(spark, p))
+    same("compact")
+    assert(TextIndex.read(spark, legacy).buckets == 64)
+    assert(bucketDirs(legacy, "postings").size > 16)
+  }
 }
