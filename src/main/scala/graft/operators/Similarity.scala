@@ -113,15 +113,16 @@ object Similarity {
     best
   }
 
+  private val LloydRounds = 5
+
   /** Seeded k-means on the driver: k-means++ seeding, then at most
-    * `maxIter` Lloyd rounds (fewer once no point changes cell). A centroid
+    * [[LloydRounds]] Lloyd rounds (fewer once no point changes cell). A centroid
     * is the mean of its members; an empty cluster keeps its centroid.
     * Fewer distinct points than `k` return the distinct points, in sample
     * order. Pure arithmetic over `points`: the same points give the same
     * centroids, bit for bit.
     */
-  def kMeans(points: Array[Array[Double]], k: Int, seed: Long,
-      maxIter: Int = 5): Array[Array[Double]] = {
+  def kMeans(points: Array[Array[Double]], k: Int, seed: Long): Array[Array[Double]] = {
     val distinct = points.map(_.toSeq).distinct
     if (distinct.length <= k) return distinct.map(_.toArray)
     val rnd = new java.util.Random(seed)
@@ -151,7 +152,7 @@ object Similarity {
     val cell = Array.fill(n)(-1)
     var round = 0
     var moved = true
-    while (round < maxIter && moved) {
+    while (round < LloydRounds && moved) {
       val cn2 = graft.functions.VectorFunctions.centroidNorm2(centers)
       moved = false
       var i = 0

@@ -540,10 +540,19 @@ object PipelineCatalog {
   // through [[ivfIndex]].
   // NOTE: the synthetic embeddings are near-uniform random vectors — the
   // worst case for ANY partition-pruning ANN (measured recall ~= scan
-  // fraction; IvfTune sweep). nProbe=8/k=16 halves the scan for ~0.86
-  // recall here; clustered real-world embeddings fare far better at much
-  // lower probe ratios.
+  // fraction; IvfTune sweep); clustered real-world embeddings fare far
+  // better at much lower probe ratios.
   // -------------------------------------------------------------------------
+
+  /** Cells an embeddings-store IVF query probes, of the store's k = 16
+    * (q27, q62, q76, q78, q151). The k-means cells are near equal in size
+    * on this data, so recall follows the scanned share: recall@10 with
+    * every vector as a query is 0.923 at sf0.01 and 0.911 at sf0.1,
+    * scanning 70% and 69% of the corpus. MLlib's k-means|| cells (1 to 62
+    * members at sf0.01) gave 0.915 and 0.826 at 8 probes, scanning 75%
+    * and 55%; 8 probes of these cells give 0.817 and 0.799 at 51% and 50%.
+    */
+  private[graft] val IvfProbes = 11
 
   val q27AnnIvf: Q = (s, d) => {
     val emb = tbl(s, d, "embeddings")
@@ -553,15 +562,15 @@ object PipelineCatalog {
     // once per sfDir); the query only selects nProbe cells and scans those
     // partitions — no training job inside query wall-time.
     val store = ivfIndex(s, d)
-    Similarity.ivfTopK(store.vectors, "embedding", store.centroids, qv, 10, nProbe = 8)
+    Similarity.ivfTopK(store.vectors, "embedding", store.centroids, qv, 10, nProbe = IvfProbes)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
   }
 
   /** DuckDB replay of the whole IVF path from centroid literals:
     * normalize → per-cell distance identity → first-min cell assignment →
-    * 8-probe selection for the query → exact cosine top-10 within probed
-    * cells. Every arithmetic step mirrors the engine kernels
+    * `IvfProbes`-probe selection for the query → exact cosine top-10
+    * within probed cells. Every arithmetic step mirrors the engine kernels
     * (VectorKernels.nearestCell / Similarity.cellDistances) op-for-op.
     */
   private def q27Sql(cs: Array[Array[Double]]): String = {
@@ -585,7 +594,7 @@ object PipelineCatalog {
          SELECT i AS cell FROM (
            SELECT unnest(range(${cs.length})) AS i, unnest(ds) AS dd
            FROM d WHERE vec_id = 0)
-         ORDER BY dd, i LIMIT 8
+         ORDER BY dd, i LIMIT $IvfProbes
        ), q AS (
          SELECT v AS qv FROM e WHERE vec_id = 0
        ), hits AS (
@@ -1513,7 +1522,7 @@ object PipelineCatalog {
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
     val store = graft.sources.VectorStore.read(
       s, q78EnsureIncremental(s, d), planes = 8, dim = 64)
-    Similarity.ivfTopK(store.vectors, "embedding", store.centroids, qv, 10, nProbe = 8)
+    Similarity.ivfTopK(store.vectors, "embedding", store.centroids, qv, 10, nProbe = IvfProbes)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
   }
@@ -1558,7 +1567,7 @@ object PipelineCatalog {
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("qv"))
     Similarity.ivfBatchTopK(store.vectors, "embedding", store.centroids,
-        queries, k = 10, nProbe = 8)
+        queries, k = 10, nProbe = IvfProbes)
       .select(col("query_id"), col("rank"), col("vec_id"), col("label"),
         rnd(col("score"), 6).as("score"))
       .orderBy(col("query_id"), col("rank"))
@@ -1592,7 +1601,7 @@ object PipelineCatalog {
          SELECT query_id, qv, i AS cell FROM (
            SELECT query_id, qv, unnest(range(${cs.length})) AS i, unnest(ds) AS dd
            FROM q)
-         QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dd, i) <= 8
+         QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dd, i) <= $IvfProbes
        ), hits AS (
          SELECT p.query_id, a.vec_id, a.label,
                 list_cosine_similarity(a.v, p.qv) AS s,
@@ -2956,7 +2965,7 @@ object PipelineCatalog {
     val pq = pqIndex(s, d)
     Similarity.ivfPqTopK(pq.codes, pq.codebooks, store.centroids,
         emb.filter(col("vec_id") =!= 0), "embedding", qv,
-        k = 10, nProbe = 8, rerank = 50)
+        k = 10, nProbe = IvfProbes, rerank = 50)
       .select(col("vec_id"), col("label"), rnd(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
   }
@@ -3004,7 +3013,7 @@ object PipelineCatalog {
          SELECT i AS cell FROM (
            SELECT unnest(range(${cs.length})) AS i, unnest(ds) AS dd
            FROM d WHERE vec_id = 0)
-         ORDER BY dd, i LIMIT 8
+         ORDER BY dd, i LIMIT $IvfProbes
        ), q AS (
          SELECT v AS qv, nv AS qn FROM n WHERE vec_id = 0
        ), c AS (
@@ -9085,14 +9094,14 @@ object PipelineCatalog {
   // -------------------------------------------------------------------------
   // q151: the PRODUCTION hybrid serving shape (r16 Next #3) — q61's
   // dense+sparse RRF fusion with the dense arm served APPROXIMATELY from
-  // the persisted IVF store (nProbe=8 cell pruning, the q27 serving
+  // the persisted IVF store (`IvfProbes` cell pruning, the q27 serving
   // path) and the sparse arm from the persisted TextIndex. q61 keeps the
   // exact-rank contract (its dense arm deliberately scans the corpus
   // vectors — correct for a rank-pinned oracle); THIS query is what a
   // 100 TB serving tier actually runs: both arms are store reads with
   // partition pruning, no corpus text scan, no full-vector scan. The
   // oracle replays the whole fused ranking from the trained centroid
-  // LITERALS (q27's centroid-literal technique): assignment → 8-probe
+  // LITERALS (q27's centroid-literal technique): assignment → probe
   // selection → in-probe cosine top-50 over document vectors → rank,
   // fused with the BM25 top-50 replay by 1/(60+rank) — rational
   // arithmetic over engine-exact integer ranks, so the fusion
@@ -9101,10 +9110,8 @@ object PipelineCatalog {
   // discipline: never trust a pruned index without its recall curve.
   // -------------------------------------------------------------------------
 
-  private val HybridNProbe = 8
-
   /** The store-served fused ranking, parameterized by the dense arm's
-    * probe budget — q151 is the `HybridNProbe` instance; tools/HybridAgree
+    * probe budget — q151 is the `IvfProbes` instance; tools/HybridAgree
     * sweeps the budget to measure rank agreement vs exact q61.
     */
   private[graft] def hybridServed(s: SparkSession, d: String,
@@ -9140,7 +9147,7 @@ object PipelineCatalog {
       .orderBy(col("rrf").desc, col("doc_id"))
   }
 
-  val q151HybridServed: Q = (s, d) => hybridServed(s, d, HybridNProbe)
+  val q151HybridServed: Q = (s, d) => hybridServed(s, d, IvfProbes)
 
   /** The fused replay: q27's centroid-literal IVF chain restricted to
     * document vectors → in-probe cosine rank top-50, q60's BM25 CTE
@@ -9172,7 +9179,7 @@ object PipelineCatalog {
          SELECT i AS cell FROM (
            SELECT unnest(range(${cs.length})) AS i, unnest(ds) AS dd
            FROM dc WHERE vec_id = 0)
-         ORDER BY dd, i LIMIT $HybridNProbe
+         ORDER BY dd, i LIMIT $IvfProbes
        ), q AS (
          SELECT v AS qv FROM e WHERE vec_id = 0
        ), dh AS (

@@ -29,10 +29,10 @@ import org.apache.spark.sql.functions._
   *       integers, adjusted incrementally (avgdl derives as one double
   *       division, identical to the inline path's sum/count).
   *   path/postings/e<K>/_graft_buckets.json — {buckets}: the term and doc
-  *       bucket count of epoch K, sized by [[write]] to its documents
-  *       ([[bucketsFor]]) and kept by upsert and compaction. It lives in
-  *       the epoch it describes and is written before the pointer flip,
-  *       so a reader never pairs a layout with another epoch's count.
+  *       bucket count of epoch K, sized to its documents ([[bucketsFor]])
+  *       by [[write]] and [[compact]] and kept by upsert. It lives in the
+  *       epoch it describes and is written before the pointer flip, so a
+  *       reader never pairs a layout with another epoch's count.
   *
   * Epoch pointer, (doc, gen) tombstones + the size-gated liveRows filter,
   * crash-redo of partial segments, policy-triggered compaction, the
@@ -62,10 +62,15 @@ object TextIndex {
   private val DocsPerBucket = 4096L
   private val MaxBuckets = 64
 
-  /** Term and doc buckets of a full write over `n` documents: the smallest
-    * power of two giving at most 4096 documents per bucket, at most 64. A
-    * few hundred documents get one bucket, so one file per table, where a
-    * fixed 64 wrote 128 files of a few rows each.
+  /** Term and doc buckets of a full write or a compaction over `n`
+    * documents: the smallest power of two giving at most 4096 documents
+    * per bucket, at most 64. Measured on 4 cores
+    * (docs/textindex_buckets.json): the serving latency of
+    * `bm25ScoresIndexed` does not move with the bucket count from 300 to
+    * 20,000 documents (per query, 0.99–1.01× the 64-bucket time at
+    * 20,000), while the write is fastest with one bucket at 300
+    * documents and with 4–16 at 5,000–20,000; 64 buckets wrote 19–113%
+    * slower than the best count at every size.
     */
   private[graft] def bucketsFor(n: Long): Int = {
     var b = 1
@@ -378,19 +383,23 @@ object TextIndex {
     */
   def compact(spark: SparkSession, path: String): Unit = {
     val (n, sumDl, _, lastBatch) = readStats(path)
-    val epoch = GenStore.epochOf(path)
-    val next = epoch + 1
+    val next = GenStore.epochOf(path) + 1
+    // the fold rewrites every live row, so it re-sizes the layout to the
+    // documents the index holds now: an index first written from a small
+    // batch gets more buckets as upserts grow it
+    val buckets = bucketsFor(n)
     val live = liveTable(spark, path, "postings").localCheckpoint()
     val doclens = liveTable(spark, path, "doclens").localCheckpoint()
     // writeTable keeps a fully-emptied index readable (GenStore r10 note)
-    GenStore.writeTable(live.withColumn("gen", lit(0L)),
+    GenStore.writeTable(live.withColumn("gen", lit(0L))
+        .withColumn("term_bucket", termBucketCol(col("term"), buckets)),
       Seq("gen", "term_bucket"),
       Seq("term_bucket", "term"), s"$path/postings/e$next")
-    GenStore.writeTable(doclens.withColumn("gen", lit(0L)),
+    GenStore.writeTable(doclens.withColumn("gen", lit(0L))
+        .withColumn("doc_bucket", docBucketCol(col("doc"), buckets)),
       Seq("gen", "doc_bucket"),
       Nil, s"$path/doclens/e$next")
-    // the folded rows keep their stored buckets, so the count carries over
-    writeBuckets(path, next, readBuckets(path, epoch))
+    writeBuckets(path, next, buckets)
     GenStore.setEpoch(path, next)
     writeStats(path, n, sumDl, gen = 0L, lastBatch)
     GenStore.gcEpochs(path, Seq("postings", "doclens", "tombstones"), next)

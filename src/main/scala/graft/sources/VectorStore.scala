@@ -75,8 +75,11 @@ object VectorStore {
       planes: Int = 8, dim: Int = 64, k: Int = 16, seed: Long = 42L,
       batchId: Long = -1L, policy: Policy = Policy()): Unit = {
     // the input is computed once: the training sample fills the cache and
-    // the labelled write reads it
-    val cached = emb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the labelled write reads it. A plan the caller already cached is
+    // used as it is and left cached.
+    import org.apache.spark.storage.StorageLevel
+    val owned = emb.storageLevel == StorageLevel.NONE
+    val cached = if (owned) emb.persist(StorageLevel.MEMORY_AND_DISK) else emb
     try {
       val centroids = Similarity.ivfIndex(cached, vecCol, k, seed)
       // full rebuilds land in the NEXT epoch and commit via the atomic
@@ -97,7 +100,7 @@ object VectorStore {
       writeIncStats(path, cached.count(), 0L, 0L,
         if (batchId >= 0) batchId else prevLast)
       GenStore.gcEpochs(path, Seq("vectors", "tombstones"), next)
-    } finally cached.unpersist()
+    } finally if (owned) cached.unpersist()
   }
 
   // Existence is keyed on the COMMITTED epoch, not the pre-commit

@@ -12,7 +12,7 @@ import graft.sources.VectorStore
   * ([[Similarity.kMeans]] over [[Similarity.trainingSample]]): its output
   * depends on the rows only, it recovers planted clusters, it trains on a
   * bounded sample, and the two store writers that use it submit a small,
-  * fixed number of Spark jobs.
+  * fixed number of Spark jobs and leave the caller's caches as they were.
   */
 class KMeansSpec extends AnyFunSuite with ScratchDirs {
 
@@ -101,5 +101,20 @@ class KMeansSpec extends AnyFunSuite with ScratchDirs {
       VectorStore.writePq(emb, "embedding", root.resolve("pq").toString, centroids = centroids))
     info(s"VectorStore.writePq: ${pq.jobs.size} jobs")
     assert(pq.jobs.size <= 8, s"VectorStore.writePq submitted ${pq.jobs.size} jobs: ${pq.json}")
+  }
+
+  test("VectorStore.write leaves a frame the caller cached cached, and caches nothing of its own") {
+    import org.apache.spark.storage.StorageLevel
+    val emb = spark.read.parquet(s"$Sf/embeddings.parquet")
+    val root = scratchDir("graft-kmeans-cache")
+    VectorStore.write(emb, "embedding", root.resolve("a").toString)
+    assert(emb.storageLevel == StorageLevel.NONE, "the write left its input cached")
+    val mine = emb.persist(StorageLevel.MEMORY_ONLY)
+    mine.count()
+    VectorStore.write(emb, "embedding", root.resolve("b").toString)
+    assert(mine.storageLevel == StorageLevel.MEMORY_ONLY, "the write dropped the caller's cache")
+    assert(VectorStore.readCentroids(root.resolve("a").toString).map(_.toSeq).toSeq ==
+      VectorStore.readCentroids(root.resolve("b").toString).map(_.toSeq).toSeq)
+    mine.unpersist()
   }
 }

@@ -189,8 +189,13 @@ class PlanSpec extends AnyFunSuite with ScratchDirs {
     val codesRoot = graft.sources.VectorStore.pqPath(Sf).replace("\\", "")
     val codesScan = p.linesIterator.filter(l =>
       l.contains(codesRoot) && l.contains("PartitionFilters")).mkString
-    assert(codesScan.contains("cell#") && codesScan.contains(" IN ("),
-      "probe set lost partition pruning on the codes table")
+    // the probe set is a partition filter on `cell`, printed as IN (…) up
+    // to 10 values and as INSET above (Spark's OptimizeIn)
+    val probed = """cell#\d+ (?:IN \(([^)]*)\)|INSET ([\d, ]+))""".r
+      .findFirstMatchIn(codesScan)
+      .map(m => Option(m.group(1)).getOrElse(m.group(2)).split(",").map(_.trim.toInt).toSet)
+    assert(probed.map(_.size).contains(graft.queries.PipelineCatalog.IvfProbes),
+      s"probe set lost partition pruning on the codes table: $probed")
     assert(codesScan.contains("ReadSchema: struct<vec_id:bigint,codes:array<tinyint>>"),
       "ADC stage reads more than (vec_id, codes)")
     assert(p.contains("BroadcastHashJoin"), "rerank ids not broadcast")

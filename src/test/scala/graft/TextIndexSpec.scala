@@ -272,9 +272,36 @@ class TextIndexSpec extends AnyFunSuite with ScratchDirs {
       docsDF(5L -> "w1 w2 fresh", 900L -> "w3 new"), "doc_id", "text", ids(6L, 7L), p))
     same("upsert")
     assert(TextIndex.read(spark, legacy).buckets == 64)
+    // compaction re-sizes the legacy layout to its documents
     Seq(sized, legacy).foreach(p => TextIndex.compact(spark, p))
     same("compact")
-    assert(TextIndex.read(spark, legacy).buckets == 64)
-    assert(bucketDirs(legacy, "postings").size > 16)
+    assert(TextIndex.read(spark, legacy).buckets == 1)
+    assert(bucketDirs(legacy, "postings") == Set("term_bucket=0"))
+  }
+
+  test("compaction re-sizes a one-bucket index that upserts grew past one bucket's documents") {
+    val path = freshPath("regrow")
+    val policy = TextIndex.Policy(maxSegments = 100L, maxDeadFraction = 1.1)
+    TextIndex.write(docsDF(corpus(300): _*), "doc_id", "text", path, policy = policy)
+    assert(TextIndex.read(spark, path).buckets == 1)
+    // the first document count that bucketsFor gives more than one bucket
+    val grown = Iterator.iterate(1L)(_ * 2).find(TextIndex.bucketsFor(_) > 1).get
+    val delta = spark.range(300L, grown).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("w1"), concat(lit("w"), (col("id") % 40).cast("string")), lit("grown")).as("text"))
+    TextIndex.upsert(spark, delta, "doc_id", "text", ids(), path)
+    assert(TextIndex.read(spark, path).n == grown)
+    assert(TextIndex.read(spark, path).buckets == 1, "upsert keeps the epoch's count")
+    val queries = Seq(Seq("w1"), Seq("w3", "grown"), Seq("w17", "absent"))
+    def scores(): Seq[Map[Long, Double]] = queries.map(t =>
+      graft.operators.SearchOps.bm25ScoresIndexed(TextIndex.read(spark, path), t).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    val (before, beforeScores) = (liveState(path), scores())
+    TextIndex.compact(spark, path)
+    val buckets = TextIndex.read(spark, path).buckets
+    assert(buckets == TextIndex.bucketsFor(grown) && buckets > 1)
+    assert(bucketDirs(path, "postings") == (0 until buckets).map(b => s"term_bucket=$b").toSet)
+    assert(bucketDirs(path, "doclens") == (0 until buckets).map(b => s"doc_bucket=$b").toSet)
+    assert(liveState(path) == before)
+    assert(scores() == beforeScores)
   }
 }
