@@ -341,7 +341,8 @@ object Dedup {
   /** Internal form that also returns the (persisted) batch band frame so
     * the composing operator can unpersist it once the candidates are
     * checkpointed. The batch fingerprint feeds TWO consumers — the
-    * bucket-prune collect and the probe join — and without the persist
+    * bucket-prune collect (on a store of more than one bucket) and the
+    * probe join — and without the persist
     * each one re-ran band_minhash over the whole delta (r10: the probe
     * fingerprinted the batch twice; the delta must be fingerprinted ONCE
     * for the O(delta + collisions) claim to hold with the honest constant).
@@ -365,17 +366,21 @@ object Dedup {
     // columns, so the at-scale case for the distinct form is weak too.
     // Kept: n_sh projected out of the persisted band frame (dead weight).
     val bb0 = graft.sources.BandStore
-      .bandRows(batch, idCol, textCol, store.numHashes, bands)
+      .bandRows(batch, idCol, textCol, store.numHashes, bands, store.buckets)
       .withColumnRenamed("c_id", "b_id")
       .select(col("b_id"), col("bhs"), col("band"), col("bh"), col("bh_bucket"))
     val bb =
       if (persistBands)
         bb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else bb0
-    val buckets = bb.select(col("bh_bucket")).distinct()
-      .collect().map(_.getLong(0)) // ≤ BandStore.Buckets values
-    val probed = store.rows
-      .filter(col("bh_bucket").isin(buckets.toIndexedSeq: _*))
+    // a one-bucket store has nothing to prune: no collect job
+    val probed =
+      if (store.buckets == 1) store.rows
+      else {
+        val buckets = bb.select(col("bh_bucket")).distinct()
+          .collect().map(_.getLong(0)) // ≤ store.buckets values
+        store.rows.filter(col("bh_bucket").isin(buckets.toIndexedSeq: _*))
+      }
 
     def bandEqual(i: Int): Column =
       element_at(col("bhs_b"), i + 1) === element_at(col("bhs_c"), i + 1)

@@ -10,10 +10,18 @@ import org.apache.spark.sql.functions._
   * re-shingles and re-hashes everything per run; a daily pipeline instead
   * banding-fingerprints the corpus ONCE, persists the (doc, band, bucket)
   * rows, and probes each day's delta against the store. Rows are
-  * partitioned by `bh_bucket = pmod(bh, Buckets)`, so a probe prunes to
+  * partitioned by `bh_bucket = pmod(bh, buckets)`, so a probe prunes to
   * exactly the partitions its own band hashes can collide with — the
   * TextIndex/VectorStore at-rest discipline applied to dedup. Probing
   * reads O(collisions); the corpus is never re-fingerprinted.
+  *
+  * The bucket count is sized to the band rows ([[GenStore.bucketsFor]],
+  * [[RowsPerBucket]] rows per bucket, at most 64) by [[write]] and
+  * [[compact]], and kept by [[upsert]]. It is recorded in
+  * `bands/e<K>/_graft_buckets.json`, inside the epoch it describes and
+  * before the pointer flip, so no reader pairs a layout with another
+  * epoch's count; an epoch without the record has 64 buckets, the count
+  * of every store written before sizing.
   *
   * Lifecycle (epoch pointer, gen segments, (doc, gen) tombstones, policy
   * compaction, crash-redo, replay watermark) is [[GenStore]]'s — this
@@ -29,10 +37,18 @@ import org.apache.spark.sql.functions._
   */
 object BandStore {
 
-  /** bh partitions — bounds probe-side partition pruning lists. */
-  val Buckets = 64
+  /** Band rows per bucket ([[GenStore.bucketsFor]]). Measured on 4 cores
+    * (docs/store_buckets.json): from 300 to 20,000 band rows one bucket
+    * gives the fastest q96-style probe (a whole-corpus batch collides
+    * with every bucket, so pruning saves nothing) and a write within its
+    * spread of the best; 64 buckets probe 20-33% slower.
+    */
+  private[graft] val RowsPerBucket = 32768L
 
-  final case class Store(rows: DataFrame, numHashes: Int, nBands: Int)
+  /** The live band rows and the layout they are bucketed with: a probe
+    * buckets its batch with the same `buckets`.
+    */
+  final case class Store(rows: DataFrame, numHashes: Int, nBands: Int, buckets: Int)
 
   /** Compaction triggers — the shared [[GenStore.Policy]] record; this
     * store arms the segment-count and tombstone-byte triggers.
@@ -46,14 +62,21 @@ object BandStore {
 
   private def manifest(sfDir: String, numHashes: Int, bands: Int): String = {
     val stamp = GenStore.sourceStamp(new java.io.File(s"$sfDir/documents.parquet"))
-    s"""{"layout":"bands-v2-gen","src":"$stamp","num_hashes":$numHashes,"bands":$bands,"buckets":$Buckets,"hash_family":"sha256-affine-2^60","tokenizer":"v1-frozen"}"""
+    s"""{"layout":"bands-v3-gen","src":"$stamp","num_hashes":$numHashes,"bands":$bands,"hash_family":"sha256-affine-2^60","tokenizer":"v1-frozen"}"""
   }
 
   /** One row per (doc, band): the band's fold hash `bh`, the doc's full
     * band array (for emit-once against probes), and its shingle count
-    * (similarity upper bounds / stats without re-reading the doc).
+    * (similarity upper bounds / stats without re-reading the doc), in
+    * bucket `pmod(bh, buckets)`.
     */
   def bandRows(docs: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, bands: Int, buckets: Int): DataFrame =
+    fingerprints(docs, idCol, textCol, numHashes, bands)
+      .withColumn("bh_bucket", pmod(col("bh"), lit(buckets.toLong)))
+
+  /** [[bandRows]] without the bucket column. */
+  private def fingerprints(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int): DataFrame = {
     // pre-filter on the CHEAP token count, not size(shingles): the two
     // are equivalent (the kernel returns empty below 3 v1 tokens, nulls
@@ -68,7 +91,30 @@ object BandStore {
         graft.functions.BandMinhash.bandMinhash(col("shingles"), numHashes, bands).as("bhs"))
       .select(col("c_id"), col("n_sh"), col("bhs"),
         posexplode(col("bhs")).as(Seq("band", "bh")))
-      .withColumn("bh_bucket", pmod(col("bh"), lit(Buckets.toLong)))
+  }
+
+  private def bucketsPath(path: String, epoch: Long) =
+    java.nio.file.Paths.get(path, "bands", s"e$epoch", "_graft_buckets.json")
+
+  private def readBuckets(path: String, epoch: Long): Int =
+    GenStore.readSidecar(bucketsPath(path, epoch))
+      .map(GenStore.jLong(_, "buckets", GenStore.MaxBuckets.toLong).toInt)
+      .getOrElse(GenStore.MaxBuckets)
+
+  /** Writes `rows` (band rows at gen 0 of any bucketing) as epoch `next`,
+    * bucketed by their count, and records the count in it; the caller
+    * flips the pointer.
+    */
+  private def writeEpoch(rows: DataFrame, path: String, next: Long): Unit = {
+    val buckets = GenStore.bucketsFor(rows.count(), RowsPerBucket)
+    // writeTable: an all-short corpus (every doc under the shingle width)
+    // fingerprints to ZERO rows, and a bare partitionBy write would
+    // commit an unreadable store (GenStore r10 note)
+    GenStore.writeTable(
+      rows.withColumn("gen", lit(0L))
+        .withColumn("bh_bucket", pmod(col("bh"), lit(buckets.toLong))),
+      Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
+    GenStore.atomicWrite(bucketsPath(path, next), s"""{"buckets":$buckets}""")
   }
 
   // --- stats sidecar (gen = last segment written; last_batch = streaming
@@ -108,13 +154,10 @@ object BandStore {
       batchId: Long = -1L): Unit = {
     val prevLast = readStats(path)._2
     val next = GenStore.epochOf(path) + 1
-    // writeTable: an all-short corpus (every doc under the shingle width)
-    // fingerprints to ZERO rows, and a bare partitionBy write would
-    // commit an unreadable store (GenStore r10 note)
-    GenStore.writeTable(
-      bandRows(docs, idCol, textCol, numHashes, bands)
-        .withColumn("gen", lit(0L)),
-      Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
+    // fingerprint once: the count fills the cache, the write reads it
+    val rows = fingerprints(docs, idCol, textCol, numHashes, bands)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try writeEpoch(rows, path, next) finally rows.unpersist()
     GenStore.setEpoch(path, next)
     GenStore.writePolicy(path, policy)
     writeStats(path, gen = 0L,
@@ -145,7 +188,8 @@ object BandStore {
     // files and every later probe paid the listing+open tax (q97's store
     // read measured 1.16 s vs 0.24 s for the compact store)
     GenStore.writeBucketed(
-      bandRows(delta, idCol, textCol, numHashes, bands).withColumn("gen", lit(nextGen)),
+      bandRows(delta, idCol, textCol, numHashes, bands, readBuckets(path, GenStore.epochOf(path)))
+        .withColumn("gen", lit(nextGen)),
       Seq("gen", "bh_bucket"), GenStore.tableDir(path, "bands"))
     writeStats(path, nextGen, if (batchId >= 0) batchId else lastBatch)
     maybeCompact(spark, path)
@@ -159,9 +203,8 @@ object BandStore {
   def compact(spark: SparkSession, path: String): Unit = {
     val (_, lastBatch) = readStats(path)
     val next = GenStore.epochOf(path) + 1
-    val live = liveBands(spark, path).localCheckpoint()
-    GenStore.writeTable(live.withColumn("gen", lit(0L)),
-      Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
+    // the fold rewrites every live row, so it re-sizes the layout to them
+    writeEpoch(liveBands(spark, path).localCheckpoint(), path, next)
     GenStore.setEpoch(path, next)
     writeStats(path, gen = 0L, lastBatch = lastBatch)
     GenStore.gcEpochs(path, Seq("bands", "tombstones"), next)
@@ -176,7 +219,7 @@ object BandStore {
   }
 
   def read(spark: SparkSession, path: String, numHashes: Int, bands: Int): Store =
-    Store(liveBands(spark, path), numHashes, bands)
+    Store(liveBands(spark, path), numHashes, bands, readBuckets(path, GenStore.epochOf(path)))
 
   /** Load the store for `docs`, building it if absent/stale — index at
     * ingest: Verify/Bench build once per sfDir, probes only read.

@@ -11,22 +11,50 @@ import org.apache.spark.sql.functions._
   * (reference: worker/app/services/qdrant_client.py:410-433,
   * docs/invariants.md:12-18). On Spark that becomes:
   *
-  *  - partition the table by `doc_bucket = pmod(xxhash64(document_id), N)`
+  *  - partition the table by `doc_bucket = pmod(xxhash64(document_id), b)`
   *    — co-locates a document's chunks, bounds rewrite scope;
   *  - upsert = read ONLY the buckets hit by the incoming batch (partition
   *    pruning), anti-join out the incoming document_ids (the "delete"),
   *    union the new rows, and dynamically overwrite just those bucket
   *    partitions.
   *
-  * At 100 TB with N≈8192 buckets a re-ingest of one document rewrites
-  * 1/8192 of the table, not the whole thing; a full-corpus re-ingest is a
-  * no-op content-wise (same ids, same rows). On a Delta/Iceberg deployment
-  * the same call maps to MERGE; plain parquet keeps this library
-  * dependency-free.
+  * The bucket count `b` is sized to the rows ([[GenStore.bucketsFor]],
+  * [[RowsPerBucket]] rows per bucket, at most 64) and recorded in the
+  * plain-int `_graft_buckets` file; a store without the record has 64,
+  * the count every store had before sizing.
+  *
+  *  - Create: the first write caches its input, counts it, records
+  *    `bucketsFor(n)` and then writes the buckets, so a store with data
+  *    always has its record.
+  *  - Grow: after an upsert's own write, when the row count its file
+  *    footers give exceeds `b × RowsPerBucket`, the store grows to
+  *    `b' = bucketsFor(n)`, a multiple of `b`, so a row only moves from
+  *    bucket `i` to a bucket `≡ i (mod b)`. A growth marker holding `b'`
+  *    is written first; then (1) the rows whose new bucket is `≥ b` are
+  *    written into the new directories, (2) buckets `0..b−1` are
+  *    rewritten with the rows that stay and any bucket left empty is
+  *    deleted, and last the record takes `b'` and the marker goes. No row
+  *    is missing between the writes (moved rows are briefly visible
+  *    twice). Every writer that finds the marker (upsert, delete,
+  *    compact) redoes the growth first: step 1 recomputes the moved rows
+  *    from the old buckets and step 2 is idempotent. Growth is by
+  *    doublings, so a stream that starts from one small micro-batch pays
+  *    an amortized O(1) rewrite per row. The count never shrinks.
+  *
+  * A re-ingest of one document rewrites one bucket, 1/b of the table; a
+  * full-corpus re-ingest is a no-op content-wise (same ids, same rows).
+  * On a Delta/Iceberg deployment the same call maps to MERGE; plain
+  * parquet keeps this library dependency-free.
   */
 object ChunkStore {
 
-  val DefaultBuckets = 64
+  /** Rows per bucket ([[GenStore.bucketsFor]]). Measured on 4 cores
+    * (docs/store_buckets.json): one bucket is best at 300 rows, four at
+    * 4,700, and four to sixteen at 19,000, where one bucket scans and
+    * serves the dense step about 1.2-1.5× slower and 64 buckets write
+    * 20% slower; 2048 gives 1, 4 and 16 at those sizes.
+    */
+  private[graft] val RowsPerBucket = 2048L
 
   private def withBucket(chunks: DataFrame, numBuckets: Int): DataFrame =
     chunks.withColumn("doc_bucket", pmod(xxhash64(col("document_id")), lit(numBuckets)))
@@ -38,77 +66,67 @@ object ChunkStore {
     GenStore.open(spark, path)
 
   /** The bucket count is a TABLE property: replace-by-document only works
-    * if every writer buckets identically, so the count chosen at creation
-    * is persisted beside the data and later upserts ignore their own
-    * parameter in favor of it. (Found the hard way: a second writer with a
-    * different count writes the "replacement" into different partitions —
-    * silent duplicates.)
+    * if every writer buckets identically, so the count is persisted beside
+    * the data and every writer buckets with it. (Found the hard way: a
+    * second writer with a different count writes the "replacement" into
+    * different partitions — silent duplicates.)
     */
-  private def bucketMetaPath(path: String) = new org.apache.hadoop.fs.Path(path, "_graft_buckets")
+  private def bucketsPath(path: String) = java.nio.file.Paths.get(path, "_graft_buckets")
 
-  private def readTableBuckets(spark: SparkSession, path: String): Option[Int] = {
-    val p = bucketMetaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toInt)
-      finally in.close()
-    }
+  /** The growth in progress: the bucket count a crashed growth was headed for. */
+  private def growPath(path: String) = java.nio.file.Paths.get(path, "_graft_grow")
+
+  private[graft] def tableBuckets(path: String): Int = {
+    val p = bucketsPath(path)
+    if (!java.nio.file.Files.exists(p)) GenStore.MaxBuckets
+    else java.nio.file.Files.readString(p).trim.toInt
   }
 
-  private def writeTableBuckets(spark: SparkSession, path: String, n: Int): Unit = {
-    val p = bucketMetaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private def writeTableBuckets(path: String, n: Int): Unit =
+    GenStore.atomicWrite(bucketsPath(path), n.toString)
+
+  private def growingTo(path: String): Option[Int] =
+    GenStore.readSidecar(growPath(path)).map(GenStore.jLong(_, "buckets", 0L).toInt)
+
+  private def hasData(path: String): Boolean =
+    GenStore.hasParquetData(new java.io.File(path))
 
   /** The stored chunks of `docIds` (a frame with a `document_id` column)
     * ONLY: the same isin bucket pruning the upsert's survivor scan uses,
     * so a delta-sized lookup of existing state reads the delta's buckets,
-    * never the table. Callers that will overwrite the store afterwards
-    * must snapshot (localCheckpoint) the result first.
+    * never the table. Over an interrupted growth it reads the buckets of
+    * both counts and keeps one copy of each moved row. Callers that will
+    * overwrite the store afterwards must snapshot (localCheckpoint) the
+    * result first.
     */
   def chunksOfDocuments(spark: SparkSession, path: String,
       docIds: DataFrame): DataFrame = {
-    val n = readTableBuckets(spark, path).getOrElse(DefaultBuckets)
-    val keyed = withBucket(docIds.select(col("document_id")).distinct(), n)
-    val buckets = keyed.select("doc_bucket").distinct()
-      .collect().map(_.getLong(0)) // small: ≤ n values
+    val counts = tableBuckets(path) +: growingTo(path).toSeq
+    val ids = docIds.select(col("document_id")).distinct()
+    val buckets = counts.flatMap(n => withBucket(ids, n).select("doc_bucket").distinct()
+      .collect().map(_.getLong(0))).distinct // small: ≤ n values per count
     if (buckets.isEmpty) read(spark, path).limit(0)
-    else read(spark, path)
-      .filter(col("doc_bucket").isin(buckets.toIndexedSeq: _*))
-      .join(broadcast(keyed.select(col("document_id"))),
-        Seq("document_id"), "left_semi")
+    else {
+      val rows = read(spark, path)
+        .filter(col("doc_bucket").isin(buckets: _*))
+        .join(broadcast(ids), Seq("document_id"), "left_semi")
+      if (counts.size > 1) rows.dropDuplicates("id") else rows
+    }
   }
 
   /** Idempotent replace-by-document upsert. */
-  def upsert(chunks: DataFrame, path: String, numBuckets: Int = DefaultBuckets): Unit = {
+  def upsert(chunks: DataFrame, path: String): Unit = {
     val spark = chunks.sparkSession
-
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p)
-    }
-    val buckets0 = if (exists) readTableBuckets(spark, path).getOrElse(numBuckets) else numBuckets
-    val incoming = withBucket(chunks, buckets0)
-
     // per-WRITER option, never session conf: a session-level "dynamic"
     // would leak into every later overwrite in the same session (a static
     // compaction rewrite under leaked dynamic mode silently KEEPS the
     // partitions it meant to drop)
-    if (!exists) {
-      // one file per bucket per write (GenStore.writeBucketed) — the
-      // sf0.1 streaming chunk store had accumulated 3,025 files when every
-      // write task wrote into every bucket, and every read paid for it
-      GenStore.writeBucketed(incoming, Seq("doc_bucket"), path,
-        mode = "overwrite", partitionOverwriteMode = "dynamic")
-      writeTableBuckets(spark, path, buckets0)
-    } else {
+    if (!hasData(path)) create(chunks, path)
+    else {
+      finishGrowth(spark, path)
+      val incoming = withBucket(chunks, tableBuckets(path))
       val buckets = incoming.select("doc_bucket").distinct()
-        .collect().map(_.getLong(0)) // small: ≤ numBuckets values
+        .collect().map(_.getLong(0)) // small: ≤ bucket-count values
       // empty batch (e.g. an incremental re-ingest of an unchanged corpus)
       // must be a literal no-op: zero partitions rewritten, not an empty
       // dynamic overwrite
@@ -123,8 +141,81 @@ object ChunkStore {
         .localCheckpoint()
       GenStore.writeBucketed(survivors.unionByName(incoming),
         Seq("doc_bucket"), path, mode = "overwrite", partitionOverwriteMode = "dynamic")
-      writeTableBuckets(spark, path, buckets0) // re-assert, cheap
+      maybeGrow(spark, path)
     }
+  }
+
+  /** First write: the input is computed once (cached for the count and
+    * the write), the count recorded, then the buckets written — one file
+    * per bucket ([[GenStore.writeBucketed]]).
+    */
+  private def create(chunks: DataFrame, path: String): Unit = {
+    val owned = chunks.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val cached =
+      if (owned) chunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else chunks
+    try {
+      val n = GenStore.bucketsFor(cached.count(), RowsPerBucket)
+      // a crashed create leaves the record without data, which reads as
+      // no store; both are rewritten by the next write
+      writeTableBuckets(path, n)
+      GenStore.writeBucketed(withBucket(cached, n), Seq("doc_bucket"), path,
+        mode = "overwrite", partitionOverwriteMode = "dynamic")
+      GenStore.CrashPoints.hit("chunks-created")
+    } finally if (owned) cached.unpersist()
+  }
+
+  /** Grow when the stored rows exceed the count's capacity. */
+  private def maybeGrow(spark: SparkSession, path: String): Unit = {
+    val b = tableBuckets(path)
+    if (b < GenStore.MaxBuckets) {
+      val target = GenStore.bucketsFor(GenStore.footerRows(spark, path), RowsPerBucket)
+      if (target > b) {
+        GenStore.atomicWrite(growPath(path), s"""{"buckets":$target}""")
+        grow(spark, path, b, target)
+      }
+    }
+  }
+
+  /** Redo a growth a crash interrupted, if the marker says there is one. */
+  private def finishGrowth(spark: SparkSession, path: String): Unit =
+    growingTo(path).foreach(target => grow(spark, path, tableBuckets(path), target))
+
+  /** Split every bucket of `b` into its buckets of `target` (a multiple of
+    * `b`): the two writes, then the record, then the marker's removal.
+    */
+  private def grow(spark: SparkSession, path: String, b: Int, target: Int): Unit = {
+    if (target > b) {
+      val old = read(spark, path).filter(col("doc_bucket") < b)
+        .drop("doc_bucket")
+        .withColumn("doc_bucket", pmod(xxhash64(col("document_id")), lit(target)))
+      // (1) moved rows into the new buckets: the old buckets still hold
+      // them, so a redo recomputes the same rows for every new bucket
+      // whose old bucket step 2 has not rewritten yet
+      GenStore.writeBucketed(old.filter(col("doc_bucket") >= b), Seq("doc_bucket"), path,
+        mode = "overwrite", partitionOverwriteMode = "dynamic")
+      GenStore.CrashPoints.hit("chunks-grow-moved")
+      // (2) the old buckets keep the rows that stay
+      val stay = old.filter(col("doc_bucket") < b).localCheckpoint()
+      val kept = stay.select(col("doc_bucket")).distinct().collect().map(_.getLong(0)).toSet
+      GenStore.writeBucketed(stay, Seq("doc_bucket"), path,
+        mode = "overwrite", partitionOverwriteMode = "dynamic")
+      dropBuckets(spark, path, (0L until b).filterNot(kept))
+      GenStore.CrashPoints.hit("chunks-grow-kept")
+      writeTableBuckets(path, target)
+      GenStore.CrashPoints.hit("chunks-grown")
+    }
+    java.nio.file.Files.deleteIfExists(growPath(path))
+  }
+
+  /** Delete bucket directories: a dynamic overwrite only rewrites the
+    * partitions PRESENT in the written data, so a bucket left with no rows
+    * would silently keep serving its old files.
+    */
+  private def dropBuckets(spark: SparkSession, path: String, buckets: Seq[Long]): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    buckets.foreach(b => fs.delete(new org.apache.hadoop.fs.Path(root, s"doc_bucket=$b"), true))
+    spark.catalog.refreshByPath(path)
   }
 
   /** Delete every chunk of `docIds` (a frame with a `document_id`
@@ -137,16 +228,12 @@ object ChunkStore {
     */
   def deleteDocuments(spark: SparkSession, path: String,
       docIds: DataFrame): Unit = {
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (!exists) return
-    val n = readTableBuckets(spark, path).getOrElse(DefaultBuckets)
-    val keyed = withBucket(docIds.select(col("document_id")).distinct(), n)
+    if (!hasData(path)) return
+    finishGrowth(spark, path)
+    val keyed = withBucket(docIds.select(col("document_id")).distinct(), tableBuckets(path))
       .localCheckpoint()
     val buckets = keyed.select("doc_bucket").distinct()
-      .collect().map(_.getLong(0)) // small: ≤ n values
+      .collect().map(_.getLong(0)) // small: ≤ bucket-count values
     if (buckets.isEmpty) return
     val survivors = read(spark, path)
       .filter(col("doc_bucket").isin(buckets.toIndexedSeq: _*))
@@ -159,35 +246,24 @@ object ChunkStore {
     if (survivorBuckets.nonEmpty)
       GenStore.writeBucketed(survivors, Seq("doc_bucket"), path,
         mode = "overwrite", partitionOverwriteMode = "dynamic")
-    // a dynamic overwrite only rewrites partitions PRESENT in the written
-    // data — a bucket whose every row was deleted has no survivors and
-    // would silently keep serving its old files; drop those partition
-    // directories explicitly
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    buckets.filterNot(survivorBuckets).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"doc_bucket=$b"), true)
-    }
-    spark.catalog.refreshByPath(path)
+    dropBuckets(spark, path, buckets.filterNot(survivorBuckets).toSeq)
     // a FULLY emptied table is schemaless parquet (unreadable); collapse
     // it to the clean "no store yet" state every caller already handles
-    if (!graft.sources.GenStore.hasParquetData(new java.io.File(path)))
-      fs.delete(root, true)
-    else writeTableBuckets(spark, path, n) // re-assert, cheap
+    if (!hasData(path)) {
+      val root = new org.apache.hadoop.fs.Path(path)
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+    }
   }
 
   /** Compact the store: streaming upserts leave one file set per
     * micro-batch per touched bucket; this rewrites every bucket partition
-    * to `filesPerBucket` files. Content-preserving (same rows, same
-    * bucketing); run periodically like any table-maintenance OPTIMIZE.
+    * to one file ([[GenStore.writeBucketed]]). Content-preserving (same
+    * rows, same bucket count); run periodically like any
+    * table-maintenance OPTIMIZE.
     */
-  def compact(spark: SparkSession, path: String, filesPerBucket: Int = 1): Unit = {
-    val buckets = readTableBuckets(spark, path).getOrElse(DefaultBuckets)
-    val all = read(spark, path).localCheckpoint()
-    all
-      .repartition(buckets * filesPerBucket, col("doc_bucket"))
-      .write.partitionBy("doc_bucket").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(path)
-    writeTableBuckets(spark, path, buckets)
+  def compact(spark: SparkSession, path: String): Unit = {
+    finishGrowth(spark, path)
+    GenStore.writeBucketed(read(spark, path).localCheckpoint(), Seq("doc_bucket"), path,
+      mode = "overwrite", partitionOverwriteMode = "dynamic")
   }
 }

@@ -306,6 +306,38 @@ object GenStore {
       .partitionBy(partitionCols: _*).parquet(path)
   }
 
+  /** The most buckets a bucketed store table gets; every table written
+    * before counts were sized has this many.
+    */
+  val MaxBuckets = 64
+
+  /** The one bucket rule of every bucketed store: the smallest power of
+    * two giving at most `rowsPerBucket` of `rows` rows per bucket, at most
+    * [[MaxBuckets]]. A power of two, so a store that grows by this rule
+    * only ever splits a bucket `i` of `b` into buckets `≡ i (mod b)`.
+    */
+  def bucketsFor(rows: Long, rowsPerBucket: Long): Int = {
+    var b = 1
+    while (b < MaxBuckets && b * rowsPerBucket < rows) b *= 2
+    b
+  }
+
+  /** Rows in the parquet data files under `dir`, summed from their
+    * footers on the driver: no Spark job, one footer read per file.
+    */
+  def footerRows(spark: SparkSession, dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) 0L
+    else leafFiles(fs, p).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      Probe.inc("footer_read")
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
   /** Sidecar recording that a table was last written EMPTY, carrying the
     * canonical schema so reads stay layout-independent. Underscore-
     * prefixed, so parquet file listings ignore it once real data lands.

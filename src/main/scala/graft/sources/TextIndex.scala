@@ -55,28 +55,18 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  /** Bucket count of an epoch written before the count was recorded. */
-  private val LegacyBuckets = 64
-
-  /** Documents per bucket a full write aims at, and the most buckets. */
+  /** Documents per term and doc bucket ([[GenStore.bucketsFor]]). */
   private val DocsPerBucket = 4096L
-  private val MaxBuckets = 64
 
   /** Term and doc buckets of a full write or a compaction over `n`
-    * documents: the smallest power of two giving at most 4096 documents
-    * per bucket, at most 64. Measured on 4 cores
-    * (docs/textindex_buckets.json): the serving latency of
-    * `bm25ScoresIndexed` does not move with the bucket count from 300 to
-    * 20,000 documents (per query, 0.99–1.01× the 64-bucket time at
-    * 20,000), while the write is fastest with one bucket at 300
-    * documents and with 4–16 at 5,000–20,000; 64 buckets wrote 19–113%
-    * slower than the best count at every size.
+    * documents. Measured on 4 cores (docs/textindex_buckets.json): the
+    * serving latency of `bm25ScoresIndexed` does not move with the bucket
+    * count from 300 to 20,000 documents (per query, 0.99–1.01× the
+    * 64-bucket time at 20,000), while the write is fastest with one
+    * bucket at 300 documents and with 4–16 at 5,000–20,000; 64 buckets
+    * wrote 19–113% slower than the best count at every size.
     */
-  private[graft] def bucketsFor(n: Long): Int = {
-    var b = 1
-    while (b < MaxBuckets && b * DocsPerBucket < n) b *= 2
-    b
-  }
+  private[graft] def bucketsFor(n: Long): Int = GenStore.bucketsFor(n, DocsPerBucket)
 
   private def bucketsPath(path: String, epoch: Long) =
     java.nio.file.Paths.get(path, "postings", s"e$epoch", "_graft_buckets.json")
@@ -86,8 +76,8 @@ object TextIndex {
 
   private def readBuckets(path: String, epoch: Long): Int =
     GenStore.readSidecar(bucketsPath(path, epoch))
-      .map(GenStore.jLong(_, "buckets", LegacyBuckets.toLong).toInt)
-      .getOrElse(LegacyBuckets)
+      .map(GenStore.jLong(_, "buckets", GenStore.MaxBuckets.toLong).toInt)
+      .getOrElse(GenStore.MaxBuckets)
 
   /** A committed index as [[read]] found it: the exact-integer stats, the
     * epoch and the committed generation, all from metadata. The tables

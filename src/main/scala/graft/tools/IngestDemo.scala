@@ -48,9 +48,9 @@ object IngestDemo {
         Transcript.confidence(col("text"), col("path")).as("transcript_conf"))
       .distinct().show(10, 40)
 
-    ChunkStore.upsert(chunks, store, numBuckets = 8)
+    ChunkStore.upsert(chunks, store)
     println(s"== store rows after first upsert: ${ChunkStore.read(spark, store).count()}")
-    ChunkStore.upsert(chunks, store, numBuckets = 8)
+    ChunkStore.upsert(chunks, store)
     println(s"== store rows after SECOND upsert (must be identical): ${ChunkStore.read(spark, store).count()}")
 
     println("== search: 'broadcast joins small table'")

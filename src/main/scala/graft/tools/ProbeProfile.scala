@@ -44,7 +44,7 @@ object ProbeProfile {
         .as("text"))
     time("q96 store.rows read")(materialize(store.rows))
     time("q96 batch fingerprint")(materialize(graft.sources.BandStore.bandRows(
-      batch96, "doc_id", "text", 32, 8)))
+      batch96, "doc_id", "text", 32, 8, store.buckets)))
     time("q96 candidates (eager probe)") {
       graft.operators.Dedup.nearDupCandidates(batch96, store, "doc_id", "text").count()
     }
@@ -63,7 +63,7 @@ object ProbeProfile {
         .as("text"))
     time("q97 store.rows read")(materialize(store97.rows))
     time("q97 batch fingerprint")(materialize(graft.sources.BandStore.bandRows(
-      batch97, "doc", "text", 32, 8)))
+      batch97, "doc", "text", 32, 8, store97.buckets)))
     time("q97 candidates (eager probe)") {
       graft.operators.Dedup.nearDupCandidates(batch97, store97, "doc", "text").count()
     }

@@ -107,7 +107,7 @@ class BandStoreSpec extends AnyFunSuite with ScratchDirs {
       .select("c_id", "band", "bh").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val fresh = BandStore.bandRows(
-        docsDF(expected.toSeq), "doc_id", "text", 32, 8)
+        docsDF(expected.toSeq), "doc_id", "text", 32, 8, 1)
       .select("c_id", "band", "bh").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(live == fresh, "compacted live rows must equal a fresh fingerprint")

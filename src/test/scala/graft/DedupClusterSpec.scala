@@ -182,7 +182,7 @@ class DedupClusterSpec extends AnyFunSuite {
       (10 until 20).map(i => (1000L + i, text(40)))).toDF("doc_id", "text")
 
     val store = BandStore.Store(
-      BandStore.bandRows(corpus, "doc_id", "text", 32, 8), 32, 8)
+      BandStore.bandRows(corpus, "doc_id", "text", 32, 8, 64), 32, 8, 64)
     val inc = Dedup.incrementalNearDuplicates(batch, corpus, store, "doc_id", "text", 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 

@@ -132,13 +132,13 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
 
   test("store upsert is idempotent; changed files replace their chunks") {
     val store = scratchDir("graft-store").resolve("chunks").toString
-    ChunkStore.upsert(ingested, store, numBuckets = 8)
+    ChunkStore.upsert(ingested, store)
     val first = ChunkStore.read(spark, store)
     val n1 = first.count()
     val ids1 = first.select("id").collect().map(_.getString(0)).sorted.toSeq
 
     // double-run must be a no-op (smoke_golden.py:61-88)
-    ChunkStore.upsert(ingested, store, numBuckets = 8)
+    ChunkStore.upsert(ingested, store)
     val second = ChunkStore.read(spark, store)
     assert(second.count() == n1)
     assert(second.select("id").collect().map(_.getString(0)).sorted.toSeq == ids1)
@@ -152,7 +152,7 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
     val reIngested = FileIngest.ingestDirectory(
       spark, dropzone.toString, chunkSize = 200, chunkOverlap = 40)
       .filter(col("path") === "notes.txt")
-    ChunkStore.upsert(reIngested, store, numBuckets = 8)
+    ChunkStore.upsert(reIngested, store)
     val third = ChunkStore.read(spark, store)
     assert(third.count() == n1) // one short doc -> still one chunk
     val newText = third.filter(col("path") === "notes.txt").select("text")
@@ -633,7 +633,7 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
   test("ST6 read-while-write: upsert rewrites only the touched buckets") {
     import java.nio.file.{Files, Paths}
     val store = scratchDir("rw").resolve("chunks").toString
-    ChunkStore.upsert(ingested, store, numBuckets = 8)
+    ChunkStore.upsert(ingested, store)
 
     def partFiles(): Map[String, Seq[String]] = {
       val root = Paths.get(store)
@@ -672,7 +672,7 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
     val first = FileIngest.ingestDirectoryIncremental(
       spark, dz.toString, store, chunkSize = 200, chunkOverlap = 40)
     assert(!first.isEmpty)
-    ChunkStore.upsert(first, store, numBuckets = 8)
+    ChunkStore.upsert(first, store)
     val total = ChunkStore.read(spark, store).count()
 
     def partFiles(): Map[String, Seq[String]] = {
@@ -691,7 +691,7 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
     val unchanged = FileIngest.ingestDirectoryIncremental(
       spark, dz.toString, store, chunkSize = 200, chunkOverlap = 40)
     assert(unchanged.isEmpty, "unchanged corpus must produce an empty delta")
-    ChunkStore.upsert(unchanged, store, numBuckets = 8)
+    ChunkStore.upsert(unchanged, store)
     assert(partFiles() == before, "no-op upsert must not touch any bucket")
     assert(ChunkStore.read(spark, store).count() == total)
 
@@ -703,7 +703,7 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
     val deltaPaths = delta.select("path").distinct()
       .collect().map(_.getString(0)).toSet
     assert(deltaPaths == Set("notes.txt", "fresh.txt"))
-    ChunkStore.upsert(delta, store, numBuckets = 8)
+    ChunkStore.upsert(delta, store)
     val stored = ChunkStore.read(spark, store)
     assert(stored.filter(col("path") === "notes.txt")
       .head().getAs[String]("text").contains("just changed"))
@@ -713,9 +713,9 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
   test("S18 reindex: read store, write new store, identical content") {
     import java.nio.file.Files
     val s1 = scratchDir("reix1").resolve("chunks").toString
-    ChunkStore.upsert(ingested, s1, numBuckets = 4)
+    ChunkStore.upsert(ingested, s1)
     val s2 = scratchDir("reix2").resolve("chunks").toString
-    ChunkStore.upsert(ChunkStore.read(spark, s1).drop("doc_bucket"), s2, numBuckets = 16)
+    ChunkStore.upsert(ChunkStore.read(spark, s1).drop("doc_bucket"), s2)
     val a = ChunkStore.read(spark, s1).select("id").collect().map(_.getString(0)).sorted.toSeq
     val b = ChunkStore.read(spark, s2).select("id").collect().map(_.getString(0)).sorted.toSeq
     assert(a == b && a.nonEmpty)

@@ -427,10 +427,17 @@ class PlanSpec extends AnyFunSuite with ScratchDirs {
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
     val store = graft.sources.BandStore.ensure(spark, docs, "doc_id", "text", Sf)
     val batch = docs.select((col("doc_id") + 500000).as("doc_id"), col("text"))
-    val probe = graft.operators.Dedup
-      .nearDupCandidates(batch, store, "doc_id", "text")
+    def probePlan(s: graft.sources.BandStore.Store): String = graft.operators.Dedup
+      .nearDupCandidates(batch, s, "doc_id", "text")
       .queryExecution.executedPlan.toString
-    assert(probe.contains("PartitionFilters") && probe.contains("bh_bucket"),
+    val probe = probePlan(store)
+    // a store of more than one bucket prunes its scan to the batch's
+    // buckets (this corpus is sized to one; the 64-bucket layout is not)
+    val multi = scratchDir("plan-bands").resolve("bands").toString
+    graft.sources.BandStore.write(docs, "doc_id", "text", multi, 32, 8)
+    LegacyStores.bandStore(spark, multi)
+    val pruned = probePlan(graft.sources.BandStore.read(spark, multi, 32, 8))
+    assert(pruned.contains("PartitionFilters") && pruned.contains("bh_bucket"),
       "store probe lost bh_bucket partition pruning")
     assert(probe.contains(graft.sources.BandStore.storePath(Sf)),
       "candidates must come from the persisted store")

@@ -256,7 +256,10 @@ class ReconcileSpec extends AnyFunSuite with ScratchDirs {
       ("c1", "d1", "a.txt", "body one"),
       ("c2", "d2", "b.txt", "body two"))
       .toDF("id", "document_id", "path", "text")
-    ChunkStore.upsert(chunks, store, numBuckets = 2)
+    // the 64-bucket layout puts d1 and d2 in buckets of their own
+    LegacyStores.chunkStore(chunks, store)
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(store))
+      .filter(_.getFileName.toString.startsWith("doc_bucket=")).count() == 2)
     ChunkStore.deleteDocuments(spark, store,
       Seq("d1", "d2").toDF("document_id"))
     // a fully-emptied table collapses to the clean "no store yet" state
@@ -264,7 +267,7 @@ class ReconcileSpec extends AnyFunSuite with ScratchDirs {
     assert(!new java.io.File(store).exists(),
       "emptied store must not keep serving its old files")
     // partial deletion keeps the other bucket's rows serving
-    ChunkStore.upsert(chunks, store, numBuckets = 2)
+    LegacyStores.chunkStore(chunks, store)
     ChunkStore.deleteDocuments(spark, store, Seq("d1").toDF("document_id"))
     assert(ChunkStore.read(spark, store)
       .select("id").collect().map(_.getString(0)).toSet == Set("c2"))

@@ -57,11 +57,15 @@ class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
     (0 until n).map(j => vocab((i * 7 + j * 3) % vocab.size)).mkString(" ")
   private val corpus: Seq[(Long, String)] = (0 until 40).map(i => (i.toLong, text(i, 12)))
 
-  private def chunkStore(files: Int): String = {
+  /** A chunk store over `files` small files: sized to its rows, or in
+    * the 64-bucket layout every store had before sizing.
+    */
+  private def chunkStore(files: Int, legacy: Boolean = false): String = {
     val dz: Path = scratchDir("graft-open-spec-dz")
     (0 until files).foreach(i => Files.writeString(dz.resolve(s"f$i.txt"), s"document $i body ${text(i, 8)}"))
     val store = tmp("chunks")
-    ChunkStore.upsert(FileIngest.ingestDirectory(spark, dz.toString, 200, 40), store)
+    val chunks = FileIngest.ingestDirectory(spark, dz.toString, 200, 40)
+    if (legacy) LegacyStores.chunkStore(chunks, store) else ChunkStore.upsert(chunks, store)
     store
   }
 
@@ -152,7 +156,8 @@ class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
   }
 
   test("serve opens submit no job: TextIndex.read, ChunkStore.read and BandStore.read") {
-    val store = chunkStore(120)
+    // the 64-bucket layouts: a small input is sized to one bucket
+    val store = chunkStore(120, legacy = true)
     val buckets = Files.list(java.nio.file.Paths.get(store))
       .filter(_.getFileName.toString.startsWith("doc_bucket=")).count()
     assert(buckets > 32, s"only $buckets buckets: the store must exceed the parallel-listing threshold")
@@ -167,6 +172,7 @@ class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
 
     val bs = tmp("serve-bands")
     BandStore.write(docsDF(corpus), "doc_id", "text", bs, 32, 8)
+    LegacyStores.bandStore(spark, bs)
     BandStore.upsert(spark, docsDF(Seq(1L -> text(2, 12))), "doc_id", "text", ids(7L), bs, 32, 8)
     val bandBuckets = Files.list(java.nio.file.Paths.get(GenStore.tableDir(bs, "bands"), "gen=0"))
       .filter(_.getFileName.toString.startsWith("bh_bucket=")).count()
@@ -207,15 +213,19 @@ class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
   }
 
   test("bucketed writes: one file per bucket, written by more than one task") {
-    val dz: Path = scratchDir("graft-open-spec-wdz")
-    (0 until 120).foreach(i => Files.writeString(dz.resolve(s"f$i.txt"), s"document $i body ${text(i, 8)}"))
+    // every store sizes its buckets to its rows: ten buckets' worth of
+    // rows gives 16
     val chunks = tmp("write-chunks")
+    val manyChunks = spark.range(ChunkStore.RowsPerBucket * 10).select(
+      concat(lit("c"), col("id").cast("string")).as("id"),
+      concat(lit("d"), (col("id") / 3).cast("long").cast("string")).as("document_id"),
+      concat(lit("body "), col("id").cast("string")).as("text"))
     val (_, up) = graft.core.Telemetry.profile(spark, "upsert")(
-      ChunkStore.upsert(FileIngest.ingestDirectory(spark, dz.toString, 200, 40), chunks))
+      ChunkStore.upsert(manyChunks, chunks))
     assertSpreadWrite("ChunkStore.upsert", up, Seq(chunks -> "doc_bucket"))
 
-    // the text index sizes its buckets to the documents (one per 4096):
-    // 40,000 short documents give it 16
+    // the text index: one bucket per 4096 documents, so 40,000 short
+    // documents give it 16
     val ti = tmp("write-tindex")
     val manyDocs = spark.range(40000).select(col("id").as("doc_id"),
       concat_ws(" ", Seq(7L, 13L, 31L).map(m =>
@@ -225,9 +235,11 @@ class StoreOpenSpec extends AnyFunSuite with ScratchDirs {
     assertSpreadWrite("TextIndex.write", tw, Seq(GenStore.tableDir(ti, "postings") -> "term_bucket",
       GenStore.tableDir(ti, "doclens") -> "doc_bucket"))
 
+    // the band store: 8 band rows per document
     val bs = tmp("write-bands")
+    val bandDocs = (0 until (BandStore.RowsPerBucket * 10 / 8).toInt).map(i => (i.toLong, text(i, 12)))
     val (_, bw) = graft.core.Telemetry.profile(spark, "bands")(
-      BandStore.write(docsDF(corpus), "doc_id", "text", bs, 32, 8))
+      BandStore.write(docsDF(bandDocs), "doc_id", "text", bs, 32, 8))
     assertSpreadWrite("BandStore.write", bw, Seq(GenStore.tableDir(bs, "bands") -> "bh_bucket"))
   }
 

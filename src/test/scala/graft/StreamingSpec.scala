@@ -516,7 +516,7 @@ class StreamingSpec extends AnyFunSuite with ScratchDirs {
       spark.catalog.refreshByPath(dropzone.toString)
       graft.sources.ChunkStore.upsert(
         graft.sources.FileIngest.ingestDirectory(spark, dropzone.toString, 200, 40),
-        store, numBuckets = 4)
+        store)
     }
     // data files of the bucket partitions only: a parquet sidecar beside
     // them is not chunk data and must not count
@@ -541,12 +541,12 @@ class StreamingSpec extends AnyFunSuite with ScratchDirs {
     graft.sources.ChunkStore.compact(spark, store)
     val after = ChunkStore.read(spark, store).select("id").collect().map(_.getString(0)).sorted.toSeq
     assert(after == before)
-    // compact()'s own contract: exactly filesPerBucket (default 1) data
-    // files inside every doc_bucket directory — not merely "no worse than
+    // compact()'s own contract: exactly one data file inside every
+    // doc_bucket directory — not merely "no worse than
     // before" (r17's <= let a no-op compact pass silently).
     val perBucket = bucketFiles.groupBy(_.getParent).view.mapValues(_.size).toMap
     assert(perBucket.nonEmpty && perBucket.values.forall(_ == 1),
-      s"compact(filesPerBucket=1) must leave one file per bucket, got $perBucket")
+      s"compact() must leave one file per bucket, got $perBucket")
   }
 
   test("streaming media ingest: micro-batches route STT/caption in dev mode + skip unchanged") {

@@ -206,7 +206,7 @@ class JdbcMirrorSpec extends AnyFunSuite with ScratchDirs {
         ("c1", "d1", "a.txt", "text", 0, "alpha body"),
         ("c2", "d2", "b.pdf", "pdf", 0, "gamma body"))
       .toDF("id", "document_id", "path", "kind", "idx", "text"),
-      store, numBuckets = 2)
+      store)
     val ledgerDir = dir.resolve("ledger").toString
     Seq(("blank/1.txt", "text", 2L, "empty_file", 0L))
       .toDF("path", "kind", "bytes", "reason", "batch")
