@@ -93,13 +93,8 @@ object BandStore {
         posexplode(col("bhs")).as(Seq("band", "bh")))
   }
 
-  private def bucketsPath(path: String, epoch: Long) =
-    java.nio.file.Paths.get(path, "bands", s"e$epoch", "_graft_buckets.json")
-
   private def readBuckets(path: String, epoch: Long): Int =
-    GenStore.readSidecar(bucketsPath(path, epoch))
-      .map(GenStore.jLong(_, "buckets", GenStore.MaxBuckets.toLong).toInt)
-      .getOrElse(GenStore.MaxBuckets)
+    GenStore.epochBuckets(path, "bands", epoch)
 
   /** Writes `rows` (band rows at gen 0 of any bucketing) as epoch `next`,
     * bucketed by their count, and records the count in it; the caller
@@ -114,7 +109,7 @@ object BandStore {
       rows.withColumn("gen", lit(0L))
         .withColumn("bh_bucket", pmod(col("bh"), lit(buckets.toLong))),
       Seq("gen", "bh_bucket"), Nil, s"$path/bands/e$next")
-    GenStore.atomicWrite(bucketsPath(path, next), s"""{"buckets":$buckets}""")
+    GenStore.writeEpochBuckets(path, "bands", next, buckets)
   }
 
   // --- stats sidecar (gen = last segment written; last_batch = streaming

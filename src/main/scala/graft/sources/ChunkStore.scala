@@ -76,17 +76,18 @@ object ChunkStore {
   /** The growth in progress: the bucket count a crashed growth was headed for. */
   private def growPath(path: String) = java.nio.file.Paths.get(path, "_graft_grow")
 
-  private[graft] def tableBuckets(path: String): Int = {
-    val p = bucketsPath(path)
-    if (!java.nio.file.Files.exists(p)) GenStore.MaxBuckets
-    else java.nio.file.Files.readString(p).trim.toInt
-  }
+  /** Both files hold a plain int. */
+  private def readCount(p: java.nio.file.Path): Option[Int] =
+    if (!java.nio.file.Files.exists(p)) None
+    else Some(java.nio.file.Files.readString(p).trim.toInt)
+
+  private[graft] def tableBuckets(path: String): Int =
+    readCount(bucketsPath(path)).getOrElse(GenStore.MaxBuckets)
 
   private def writeTableBuckets(path: String, n: Int): Unit =
     GenStore.atomicWrite(bucketsPath(path), n.toString)
 
-  private def growingTo(path: String): Option[Int] =
-    GenStore.readSidecar(growPath(path)).map(GenStore.jLong(_, "buckets", 0L).toInt)
+  private def growingTo(path: String): Option[Int] = readCount(growPath(path))
 
   private def hasData(path: String): Boolean =
     GenStore.hasParquetData(new java.io.File(path))
@@ -170,7 +171,7 @@ object ChunkStore {
     if (b < GenStore.MaxBuckets) {
       val target = GenStore.bucketsFor(GenStore.footerRows(spark, path), RowsPerBucket)
       if (target > b) {
-        GenStore.atomicWrite(growPath(path), s"""{"buckets":$target}""")
+        GenStore.atomicWrite(growPath(path), target.toString)
         grow(spark, path, b, target)
       }
     }

@@ -322,6 +322,24 @@ object GenStore {
     b
   }
 
+  /** Where `table`'s epoch `epoch` records its bucket count: inside the
+    * epoch, written before the pointer flip, so no reader pairs a layout
+    * with another epoch's count.
+    */
+  private def epochBucketsPath(path: String, table: String, epoch: Long) =
+    java.nio.file.Paths.get(path, table, s"e$epoch", "_graft_buckets.json")
+
+  def writeEpochBuckets(path: String, table: String, epoch: Long, buckets: Int): Unit =
+    atomicWrite(epochBucketsPath(path, table, epoch), s"""{"buckets":$buckets}""")
+
+  /** The bucket count recorded in `table`'s epoch `epoch`; an epoch
+    * without the record has [[MaxBuckets]].
+    */
+  def epochBuckets(path: String, table: String, epoch: Long): Int =
+    readSidecar(epochBucketsPath(path, table, epoch))
+      .map(jLong(_, "buckets", MaxBuckets.toLong).toInt)
+      .getOrElse(MaxBuckets)
+
   /** Rows in the parquet data files under `dir`, summed from their
     * footers on the driver: no Spark job, one footer read per file.
     */

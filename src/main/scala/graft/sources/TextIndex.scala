@@ -68,16 +68,9 @@ object TextIndex {
     */
   private[graft] def bucketsFor(n: Long): Int = GenStore.bucketsFor(n, DocsPerBucket)
 
-  private def bucketsPath(path: String, epoch: Long) =
-    java.nio.file.Paths.get(path, "postings", s"e$epoch", "_graft_buckets.json")
-
-  private def writeBuckets(path: String, epoch: Long, buckets: Int): Unit =
-    GenStore.atomicWrite(bucketsPath(path, epoch), s"""{"buckets":$buckets}""")
-
+  /** The epoch's term and doc bucket count, recorded with the postings. */
   private def readBuckets(path: String, epoch: Long): Int =
-    GenStore.readSidecar(bucketsPath(path, epoch))
-      .map(GenStore.jLong(_, "buckets", GenStore.MaxBuckets.toLong).toInt)
-      .getOrElse(GenStore.MaxBuckets)
+    GenStore.epochBuckets(path, "postings", epoch)
 
   /** A committed index as [[read]] found it: the exact-integer stats, the
     * epoch and the committed generation, all from metadata. The tables
@@ -294,7 +287,7 @@ object TextIndex {
         count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
       val buckets = bucketsFor(stats.getLong(0))
       writeSegment(withDl, gen = 0L, path, mode = "overwrite", epoch = next, buckets)
-      writeBuckets(path, next, buckets)
+      GenStore.writeEpochBuckets(path, "postings", next, buckets)
       GenStore.setEpoch(path, next)
       GenStore.writePolicy(path, policy)
       writeStats(path, stats.getLong(0), stats.getLong(1), gen = 0L,
@@ -389,7 +382,7 @@ object TextIndex {
         .withColumn("doc_bucket", docBucketCol(col("doc"), buckets)),
       Seq("gen", "doc_bucket"),
       Nil, s"$path/doclens/e$next")
-    writeBuckets(path, next, buckets)
+    GenStore.writeEpochBuckets(path, "postings", next, buckets)
     GenStore.setEpoch(path, next)
     writeStats(path, n, sumDl, gen = 0L, lastBatch)
     GenStore.gcEpochs(path, Seq("postings", "doclens", "tombstones"), next)

@@ -633,7 +633,8 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
   test("ST6 read-while-write: upsert rewrites only the touched buckets") {
     import java.nio.file.{Files, Paths}
     val store = scratchDir("rw").resolve("chunks").toString
-    ChunkStore.upsert(ingested, store)
+    // the 64-bucket layout: this small input alone is sized to one bucket
+    LegacyStores.chunkStore(ingested, store)
 
     def partFiles(): Map[String, Seq[String]] = {
       val root = Paths.get(store)
@@ -647,6 +648,7 @@ class IngestSpec extends AnyFunSuite with ScratchDirs {
         }.toMap
     }
     val before = partFiles()
+    assert(before.size > 1, s"only $before: the store must span several buckets")
 
     // replace ONE document; only its bucket partition may change
     val one = ingested.filter(col("path") === "notes.txt")
