@@ -38,12 +38,17 @@ import org.apache.spark.sql.functions._
 object BandStore {
 
   /** Band rows per bucket ([[GenStore.bucketsFor]]). Measured on 4 cores
-    * (docs/store_buckets.json): from 300 to 20,000 band rows one bucket
-    * gives the fastest q96-style probe (a whole-corpus batch collides
-    * with every bucket, so pruning saves nothing) and a write within its
-    * spread of the best; 64 buckets probe 20-33% slower.
+    * (docs/store_buckets.json) from 296 to 320,088 band rows: one bucket
+    * is the fastest layout, or within the spread of it, for the write, a
+    * whole-corpus q96-style probe, and the upsert and probe of a one- and
+    * a ten-document delta. Nothing above 320,088 rows is measured, so the
+    * rule reaches the 64 buckets every store had before sizing by then:
+    * 10,000 is the largest round count that does (1 bucket up to 10,000
+    * rows, 64 above 320,000). Between, it gives 4 buckets at 20,088 rows
+    * (the q96 probe 14% slower than one bucket) and 16 at 80,088 (the
+    * small-delta upserts and probes 15-42% slower).
     */
-  private[graft] val RowsPerBucket = 32768L
+  private[graft] val RowsPerBucket = 10000L
 
   /** The live band rows and the layout they are bucketed with: a probe
     * buckets its batch with the same `buckets`.

@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   *    written into the new directories, (2) buckets `0..b−1` are
   *    rewritten with the rows that stay and any bucket left empty is
   *    deleted, and last the record takes `b'` and the marker goes. No row
-  *    is missing between the writes (moved rows are briefly visible
-  *    twice). Every writer that finds the marker (upsert, delete,
+  *    is missing between the writes; a moved row sits in two buckets
+  *    until step 2, and while the marker is there [[read]] keeps one copy
+  *    of each. Every writer that finds the marker (upsert, delete,
   *    compact) redoes the growth first: step 1 recomputes the moved rows
   *    from the old buckets and step 2 is idempotent. Growth is by
   *    doublings, so a stream that starts from one small micro-batch pays
@@ -50,9 +51,11 @@ object ChunkStore {
 
   /** Rows per bucket ([[GenStore.bucketsFor]]). Measured on 4 cores
     * (docs/store_buckets.json): one bucket is best at 300 rows, four at
-    * 4,700, and four to sixteen at 19,000, where one bucket scans and
-    * serves the dense step about 1.2-1.5× slower and 64 buckets write
-    * 20% slower; 2048 gives 1, 4 and 16 at those sizes.
+    * 4,700, four to sixteen at 19,000, where one bucket scans and serves
+    * the dense step about 1.2-1.5× slower and 64 buckets write 20%
+    * slower, and sixteen to 64 at 61,670, where one bucket scans 1.8×
+    * slower; 2048 gives 1, 4, 16 and 32 at those sizes and 64 above
+    * 65,536 rows.
     */
   private[graft] val RowsPerBucket = 2048L
 
@@ -61,9 +64,23 @@ object ChunkStore {
 
   /** The stored chunks, opened with the schema of one data file's footer
     * ([[GenStore.open]]): no schema-inference job, only the file listing.
+    * Over an interrupted growth each moved row is kept once.
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    GenStore.open(spark, path)
+    untorn(path, GenStore.open(spark, path))
+
+  /** A growth marker means moved rows may sit in both their old and their
+    * new bucket (identical but for `doc_bucket`): keep one copy of each.
+    */
+  private def untorn(path: String, rows: DataFrame): DataFrame =
+    if (growingTo(path).isDefined) rows.dropDuplicates("id") else rows
+
+  /** True when the store holds data. A crashed first write can leave the
+    * directory with only its count record; that is no store, and the next
+    * [[upsert]] creates it.
+    */
+  def exists(path: String): Boolean =
+    GenStore.hasParquetData(new java.io.File(path))
 
   /** The bucket count is a TABLE property: replace-by-document only works
     * if every writer buckets identically, so the count is persisted beside
@@ -89,30 +106,25 @@ object ChunkStore {
 
   private def growingTo(path: String): Option[Int] = readCount(growPath(path))
 
-  private def hasData(path: String): Boolean =
-    GenStore.hasParquetData(new java.io.File(path))
-
   /** The stored chunks of `docIds` (a frame with a `document_id` column)
     * ONLY: the same isin bucket pruning the upsert's survivor scan uses,
     * so a delta-sized lookup of existing state reads the delta's buckets,
-    * never the table. Over an interrupted growth it reads the buckets of
-    * both counts and keeps one copy of each moved row. Callers that will
-    * overwrite the store afterwards must snapshot (localCheckpoint) the
-    * result first.
+    * never the table. Over an interrupted growth to `b'` it also reads
+    * each id's bucket of `b'` (its old bucket is that one mod the
+    * recorded count) and keeps each moved row once, as [[read]] does.
+    * Callers that will overwrite the store afterwards must snapshot
+    * (localCheckpoint) the result first.
     */
   def chunksOfDocuments(spark: SparkSession, path: String,
       docIds: DataFrame): DataFrame = {
-    val counts = tableBuckets(path) +: growingTo(path).toSeq
+    val b = tableBuckets(path)
     val ids = docIds.select(col("document_id")).distinct()
-    val buckets = counts.flatMap(n => withBucket(ids, n).select("doc_bucket").distinct()
-      .collect().map(_.getLong(0))).distinct // small: ≤ n values per count
+    val buckets = withBucket(ids, growingTo(path).getOrElse(b)).select("doc_bucket").distinct()
+      .collect().map(_.getLong(0)) // small: ≤ bucket-count values
     if (buckets.isEmpty) read(spark, path).limit(0)
-    else {
-      val rows = read(spark, path)
-        .filter(col("doc_bucket").isin(buckets: _*))
-        .join(broadcast(ids), Seq("document_id"), "left_semi")
-      if (counts.size > 1) rows.dropDuplicates("id") else rows
-    }
+    else untorn(path, GenStore.open(spark, path)
+      .filter(col("doc_bucket").isin((buckets ++ buckets.map(_ % b)).distinct: _*))
+      .join(broadcast(ids), Seq("document_id"), "left_semi"))
   }
 
   /** Idempotent replace-by-document upsert. */
@@ -122,7 +134,7 @@ object ChunkStore {
     // would leak into every later overwrite in the same session (a static
     // compaction rewrite under leaked dynamic mode silently KEEPS the
     // partitions it meant to drop)
-    if (!hasData(path)) create(chunks, path)
+    if (!exists(path)) create(chunks, path)
     else {
       finishGrowth(spark, path)
       val incoming = withBucket(chunks, tableBuckets(path))
@@ -156,8 +168,8 @@ object ChunkStore {
       if (owned) chunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else chunks
     try {
       val n = GenStore.bucketsFor(cached.count(), RowsPerBucket)
-      // a crashed create leaves the record without data, which reads as
-      // no store; both are rewritten by the next write
+      // a crashed create leaves the record without data, which is no
+      // store to `exists` and `upsert`; both are rewritten by the next write
       writeTableBuckets(path, n)
       GenStore.writeBucketed(withBucket(cached, n), Seq("doc_bucket"), path,
         mode = "overwrite", partitionOverwriteMode = "dynamic")
@@ -186,7 +198,8 @@ object ChunkStore {
     */
   private def grow(spark: SparkSession, path: String, b: Int, target: Int): Unit = {
     if (target > b) {
-      val old = read(spark, path).filter(col("doc_bucket") < b)
+      // raw, not read: the rows in the old buckets, moved copies included
+      val old = GenStore.open(spark, path).filter(col("doc_bucket") < b)
         .drop("doc_bucket")
         .withColumn("doc_bucket", pmod(xxhash64(col("document_id")), lit(target)))
       // (1) moved rows into the new buckets: the old buckets still hold
@@ -229,7 +242,7 @@ object ChunkStore {
     */
   def deleteDocuments(spark: SparkSession, path: String,
       docIds: DataFrame): Unit = {
-    if (!hasData(path)) return
+    if (!exists(path)) return
     finishGrowth(spark, path)
     val keyed = withBucket(docIds.select(col("document_id")).distinct(), tableBuckets(path))
       .localCheckpoint()
@@ -250,7 +263,7 @@ object ChunkStore {
     dropBuckets(spark, path, buckets.filterNot(survivorBuckets).toSeq)
     // a FULLY emptied table is schemaless parquet (unreadable); collapse
     // it to the clean "no store yet" state every caller already handles
-    if (!hasData(path)) {
+    if (!exists(path)) {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
     }

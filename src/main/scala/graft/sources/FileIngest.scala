@@ -469,10 +469,7 @@ object FileIngest {
       embedDim: Int = 64,
       ingestedAt: java.time.Instant = java.time.Instant.now()): DataFrame = {
     val docs = parseDirectoryWithChat(spark, dropzone)
-    val storeExists = {
-      val p = new org.apache.hadoop.fs.Path(storePath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
+    val storeExists = ChunkStore.exists(storePath)
     val delta =
       if (storeExists) skipUnchanged(docs, ChunkStore.read(spark, storePath))
       else docs

@@ -119,10 +119,7 @@ object Dropzone {
         FileIngest.routeDocumentsWithMedia(scanned, stt, caption)
       case None => FileIngest.routeDocuments(scanned)
     }
-    val storeExists = {
-      val p = new org.apache.hadoop.fs.Path(storePath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
+    val storeExists = ChunkStore.exists(storePath)
     val delta =
       (if (skipUnchangedFiles && storeExists)
         FileIngest.skipUnchanged(docs, ChunkStore.read(spark, storePath))
@@ -336,11 +333,7 @@ object Dropzone {
       bandStorePath: Option[String] = None,
       embedDim: Int = 64,
       batchId: Long = -1L): Long = {
-    val storeExists = {
-      val p = new org.apache.hadoop.fs.Path(storePath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (!storeExists) return 0L
+    if (!ChunkStore.exists(storePath)) return 0L
     val listing = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")

@@ -130,6 +130,23 @@ class ChunkStoreSpec extends AnyFunSuite with ScratchDirs {
     assert(replaced.filter(r => r._2 == "d0" || r._2 == "d1").forall(_._3.startsWith("v2 ")))
   }
 
+  test("a directory holding only the count record is no store: the incremental ingest heals it") {
+    val path = tmp("record-only")
+    val dz = scratchDir("graft-chunkstore-dz")
+    Files.writeString(dz.resolve("a.txt"), "alpha beta gamma delta epsilon zeta eta theta")
+    Files.writeString(dz.resolve("b.txt"), "iota kappa lambda mu nu xi omicron pi rho")
+    // what a create killed between its record and its data leaves
+    Files.createDirectories(Paths.get(path))
+    Files.writeString(Paths.get(path, "_graft_buckets"), "1")
+    assert(!ChunkStore.exists(path))
+    val first = graft.sources.FileIngest.ingestDirectoryIncremental(spark, dz.toString, path)
+    assert(first.select("path").distinct().count() == 2)
+    ChunkStore.upsert(first, path)
+    assert(ChunkStore.exists(path))
+    assert(rows(path).map(_._1).toSet == first.select("id").collect().map(_.getString(0)).toSet)
+    assert(graft.sources.FileIngest.ingestDirectoryIncremental(spark, dz.toString, path).isEmpty)
+  }
+
   test("a band-store epoch with no count record reads as 64; a sized one as its count") {
     import spark.implicits._
     val vocab = (0 until 60).map(i => s"w$i")

@@ -171,8 +171,8 @@ class CrashFuzzSpec extends AnyFunSuite with ScratchDirs {
     }
     assert(completed && n > 2, s"expected >=1 creation crash point, saw ${n - 2}")
 
-    // growth: no row is missing while the growth is torn, a lookup by
-    // document sees each row once, and the replayed upsert finishes it
+    // growth: while the growth is torn a read has every row once, so does
+    // a lookup by document, and the replayed upsert finishes it
     n = 1
     completed = false
     var growthPoints = 0
@@ -182,8 +182,11 @@ class CrashFuzzSpec extends AnyFunSuite with ScratchDirs {
       val crashed = crashAt(n)(ChunkStore.upsert(grow, path))
       if (!crashed) completed = true
       else {
-        val ids = chunkState(path).map(_._1).toSet
-        assert(ids == preIds || ids == post.map(_._1).toSet, s"kill at point $n lost rows")
+        val ids = chunkState(path).map(_._1)
+        val repeated = ids.diff(ids.distinct)
+        assert(repeated.isEmpty, s"kill at point $n: a read repeats ${repeated.size} rows")
+        assert(ids.toSet == preIds || ids.toSet == post.map(_._1).toSet,
+          s"kill at point $n lost rows")
         if (java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_graft_grow"))) {
           growthPoints += 1
           val looked = ChunkStore.chunksOfDocuments(spark, path,
